@@ -1,36 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    graft.util.Scratch.sweepStaleRuns(SparkEntry.runScratch)
-    graft.util.Scratch.claim(SparkEntry.runScratch)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // SPARK_GRAFT_EVENTLOG=/dir enables the Spark event log for
-    // offline stage/task analysis (guide §7.1 without a live UI); off
-    // by default so timed runs pay nothing
-    val eventLogDir = sys.env.get("SPARK_GRAFT_EVENTLOG")
-    val builder0 = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    val spark = eventLogDir.fold(builder0)(d => builder0
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.compress", "false")
-        .config("spark.eventLog.dir", s"file://$d"))
-      // TIMESTAMP_NTZ event columns cast through the session TZ; pin it
-      // so bench plans match Verify/oracle (epoch_ms parity)
-      .config("spark.sql.session.timeZone", "UTC")
-      // the default 100-entry codegen class cache evicts the dedup/ANN
-      // stages this main warms up below before their timed queries run
-      // (~10 generated stages per query × 40+ queries): an evicted stage
-      // recompiles as a NEW class and re-enters interpreted/C1 code, which
-      // is exactly the cold-start the warmup exists to pay down (r6: q16
-      // measured 15.7 s in-suite vs ~4 s steady). Static conf — must be
-      // set before the session exists.
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    LocalSession.claimRunScratch()
+    val spark = LocalSession()
     // JVM/JIT + parquet-footer warmup so the first timed query doesn't
     // carry one-time session costs
     spark.range(1000000).selectExpr("sum(id)").collect()
@@ -77,8 +50,8 @@ object Bench {
       // time (the MinhashPhases probe measures q16 at 13.7 s on its
       // first execution in a fresh JVM and ~4 s steady-state; the r6
       // DRIVER suite measured 15.7 s in-suite — same phenomenon, the
-      // extra coming from codegen-cache eviction, fixed by the
-      // maxEntries raise in the session builder above). Replaying each
+      // extra coming from codegen-cache eviction, fixed by
+      // LocalSession's codegen cache size). Replaying each
       // pipeline on a 50-row slice with the SAME parameterization as its
       // timed query compiles the same generated classes (constants are
       // inlined into the stage source, so the parameters must match; the
@@ -199,13 +172,7 @@ object Bench {
     // relational timings
     // SPARK_GRAFT_ONLY=q07_kcore,q41_transe_recs — substring-matched
     // subset for targeted perf iteration; absent = full suite
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').map(_.trim).filter(_.nonEmpty))
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.exists(name.contains)) }
-    // a typo'd filter silently timing zero queries would masquerade as a
-    // massive speedup — fail loudly instead
-    require(only.isEmpty || selected.nonEmpty,
-      s"SPARK_GRAFT_ONLY=${only.get.mkString(",")} matched no query name")
+    val selected = LocalSession.select(SparkEntry.queries)
     // FIXED-WORK CALIBRATION ANCHOR: a deterministic CPU-bound fold
     // (xxhash64 over spark.range(4e9), no shuffle, no IO) runs FIRST
     // and LAST in every draw and both walls land in the JSON. Two
@@ -339,15 +306,16 @@ object Bench {
     val calibPost = calibSec()
     val calib = math.min(calibPre, calibPost)
     val json = s"""{"metric":"total","value":$total,"unit":"sec","calib_sec":$calib,"calib_pre_sec":$calibPre,"calib_post_sec":$calibPost,"queries":$qs,"queriesCpuSec":$qsCpu,"queriesGcMs":$qsGc,"failed":$failedJson,"headline":$hl,"baseline_transe_fold_sec":23.94,"sf":"$sfDir"}"""
-    println(json)
-    // sbt's logger prefixes both stdout ("[info] ") and stderr
-    // ("[error] "), which broke the driver's JSON parse (BENCH_r01
-    // recorded parsed:null) — emit on stderr too for non-sbt launchers,
-    // but the FILE below is the canonical machine-readable copy (see
-    // README "Bench output contract").
-    System.err.println(json)
+    // the JSON goes out last, after stop, so no shutdown log line can
+    // land after it. The FILE is the canonical machine-readable copy
+    // (see README "Bench output contract"); stderr carries it for
+    // launchers that prefix or drop stdout.
+    spark.stop()
     val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json")
     java.nio.file.Files.writeString(java.nio.file.Path.of(out), json + "\n")
-    spark.stop()
+    System.err.println(json)
+    System.err.flush()
+    println(json)
+    System.out.flush()
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Regenerates a golden-parquet oracle in `goldens/` from the current
@@ -22,12 +21,7 @@ object GoldenGen {
     require(args.length >= 2, "usage: GoldenGen <query_name> <sfdir> [<sfdir> ...]")
     val name = args.head
     val dirs = args.tail.toSeq
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     val all = dirs.map { dir =>
       val n = Tables.ratings(spark, dir).count()
       SparkEntry.queries(name)(spark, dir).withColumn("n_ratings", lit(n))

@@ -1,11 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Optimization-round tooling: dump `.explain("formatted")` for each
   * declared query to `<outDir>/<name>.txt` — the plan evidence the
-  * judge checks against OPTIMIZATION_rNN.md claims. Same session conf
-  * as Bench so the plans are the ones the bench actually runs.
+  * judge checks against OPTIMIZATION_rNN.md claims. The session comes
+  * from [[LocalSession]], as Bench's does, so the plans are the ones
+  * the bench actually runs.
   *
   * Usage: runMain graft.PlanDump <sfDir> <outDir>
   * SPARK_GRAFT_ONLY=q108,q142 selects a subset (substring match).
@@ -13,23 +13,10 @@ import java.nio.file.{Files, Paths}
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    graft.util.Scratch.sweepStaleRuns(SparkEntry.runScratch)
-    graft.util.Scratch.claim(SparkEntry.runScratch)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    LocalSession.claimRunScratch()
+    val spark = LocalSession()
     Files.createDirectories(Paths.get(outDir))
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').map(_.trim).filter(_.nonEmpty))
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.exists(name.contains)) }
-    require(only.isEmpty || selected.nonEmpty, "SPARK_GRAFT_ONLY matched no queries")
-    selected.foreach { case (name, fn) =>
+    LocalSession.select(SparkEntry.queries).foreach { case (name, fn) =>
       try {
         val df = fn(spark, sfDir)
         val plan = df.queryExecution.explainString(

@@ -296,31 +296,17 @@ object SparkEntry {
       Tables.ratings(s, dir), minCount = 2L, k = 5))
 
   // q37 and q76 consume the identical minhash-LSH pair set and its
-  // GraphX connected components; build the cc view once per
-  // (session, dir) — same memo/re-persist doctrine as popRecs
+  // connected components; build the cc view once per (session, dir)
   private val dedupCcMemo =
     scala.collection.concurrent.TrieMap.empty[(Int, String), DataFrame]
-  private def dedupCc(s: SparkSession, dir: String): DataFrame = {
-    val key = (System.identityHashCode(s), dir)
-    dedupCcMemo.get(key).filter(_.sparkSession eq s).map { df =>
-      if (df.storageLevel == org.apache.spark.storage.StorageLevel.NONE) {
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        df.count()
-      }
-      df
-    }.getOrElse {
+  private def dedupCc(s: SparkSession, dir: String): DataFrame =
+    memoDf(dedupCcMemo, s, dir) {
       val docs = T(s, dir, "documents")
       val pairs = Dedup.minhashLsh(s, docs, 8, 3, 0.8)
       val cc = Dedup.clusters(s, docs, pairs) // materializes cc persisted
       pairs.unpersist(blocking = false)
-      dedupCcMemo.putIfAbsent(key, cc) match {
-        case Some(prev) if prev.sparkSession eq s =>
-          cc.unpersist(blocking = false); prev
-        case Some(_) => dedupCcMemo.put(key, cc); cc
-        case None => cc
-      }
+      cc
     }
-  }
 
   // ---- bench memo-release registry (r15) -------------------------------
 

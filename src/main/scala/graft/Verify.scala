@@ -1,33 +1,16 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    graft.util.Scratch.sweepStaleRuns(SparkEntry.runScratch)
-    graft.util.Scratch.claim(SparkEntry.runScratch)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // see Bench: 65 queries compile >400 generated stages; the default
-      // 100-entry codegen cache thrashes and recompiles shared shapes
-      .config("spark.sql.codegen.cache.maxEntries", "10000")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    LocalSession.claimRunScratch()
+    val spark = LocalSession()
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_ONLY=q16,q37 — substring-matched subset for targeted
     // iteration (same contract as Bench); absent = full dump
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(',').map(_.trim).filter(_.nonEmpty))
-    val selected = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.exists(name.contains)) }
-    require(only.isEmpty || selected.nonEmpty,
-      s"SPARK_GRAFT_ONLY=${only.get.mkString(",")} matched no queries")
-    selected.foreach { case (name, fn) =>
+    LocalSession.select(SparkEntry.queries).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -32,12 +32,7 @@ object DataIntegration {
     val dataset = arg("-d").getOrElse(sys.error("usage: DataIntegration -d <dataset> -i <in> -o <out> [-ci -cu -cr -cs -map -enrich -w N]"))
     val in = arg("-i").getOrElse(sys.error("-i input path required"))
     val out = arg("-o").getOrElse(sys.error("-o output path required"))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     run(spark, dataset, in, out,
       convertItem = flag("-ci"), convertUser = flag("-cu"),
       convertRating = flag("-cr"), convertSocial = flag("-cs"),

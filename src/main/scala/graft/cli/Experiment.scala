@@ -44,13 +44,7 @@ object Experiment {
   def main(args: Array[String]): Unit = {
     val configPath = args.sliding(2).collectFirst { case Array("-c", p) => p }
       .getOrElse(sys.error("usage: Experiment -c config.yml"))
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
     run(spark, configPath)
     spark.stop()
   }

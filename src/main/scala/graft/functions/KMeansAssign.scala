@@ -16,8 +16,8 @@ import org.apache.spark.sql.types._
   *
   * The composable form — `aggregate(transform(cents, ct ->
   * struct(aggregate(zip_with(qvec, ct.v, ...)), ct.c)), ...)` —
-  * allocates a zipped array AND a struct per (row, centroid):
-  * [[graft.perf.GraphProbe]] measured the 100k x 400-centroid
+  * allocates a zipped array AND a struct per (row, centroid): a
+  * one-off graph probe measured the 100k x 400-centroid
   * assignment at ~2,600 process-CPU seconds, dominated by those
   * allocations (same phenomenon as [[CharInterleave]]'s per-char
   * split). This expression is one fused integer loop inside

@@ -194,14 +194,6 @@ object Scc {
     val S = StorageLevel.MEMORY_AND_DISK
     val minL = (a: Long, b: Long) => math.min(a, b)
 
-    val dbg = sys.env.get("GRAFT_SCC_VERBOSE").contains("1")
-    var tMark = System.nanoTime()
-    def lap(label: String): Unit = if (dbg) {
-      val now = System.nanoTime()
-      println(f"[scc] $label%-28s ${(now - tMark) / 1e9}%.2f s")
-      tMark = now
-    }
-
     def keySet(r: RDD[(Long, Long)]): RDD[(Long, Null)] =
       r.mapPartitions(_.map { case (k, _) => (k, null: Null) },
         preservesPartitioning = true).reduceByKey(P, (a, _) => a)
@@ -249,7 +241,6 @@ object Scc {
           eRem = eNext
         } else { keep.unpersist(false); trimming = false }
       }
-      lap(s"round $round trim")
 
       if (remCount > 0) {
         // 2. forward min-coloring to fixpoint, frontier form: stream
@@ -295,7 +286,6 @@ object Scc {
           colored = nCh == 0
           it += 1
         }
-        lap(s"round $round color ($it iters)")
         require(colored,
           s"scc: coloring did not converge in $maxColorIters iterations")
 
@@ -307,7 +297,6 @@ object Scc {
             if (cs == ct) Iterator((t, s)) else Iterator.empty }
           .partitionBy(P).persist(S)
         eLab.count()
-        lap(s"round $round eLab build")
 
         // 3. backward reach from each color pivot (pivot = its own
         // color) over a flagged reach-state — the same zipPartitions
@@ -347,7 +336,6 @@ object Scc {
           }
           bit += 1
         }
-        lap(s"round $round bwreach ($bit iters)")
         require(!growing,
           s"scc: backward reach did not converge in $maxColorIters iterations")
 
@@ -370,7 +358,6 @@ object Scc {
         if (backing != null) backing.unpersist(false)
         eLab.unpersist(false)
         bBacking.unpersist(false)
-        lap(s"round $round teardown")
       }
       round += 1
     }

@@ -102,19 +102,20 @@ object Pca {
       .select(quantizedMilli(col(embCol)).as("q"))
       .agg(agg(col("q")).as("m"))
     // unpack [n | s | G-upper] into (i, j, n, sum_i, sum_j, gram) rows
-    // with one literal index map — pure projection, no second pass
-    val pairs = for { i <- 0 until d; j <- i until d } yield (i, j)
-    val structs = pairs.zipWithIndex.map { case ((i, j), t) =>
-      struct(lit(i).as("i"), lit(j).as("j"),
-        element_at(col("m"), 1).as("n"),
-        element_at(col("m"), 2 + i).as("sum_i"),
-        element_at(col("m"), 2 + j).as("sum_j"),
-        element_at(col("m"), 2 + d + t).as("gram"))
-    }
-    val out = one.select(explode(array(structs: _*)).as("e")).select("e.*")
+    // by exploding ONE literal (i, j, t) pair index against the buffer
+    // row — pure projection, no second pass. The index must stay a
+    // single literal: d(d+1)/2 per-pair struct expressions generate a
+    // class whose Janino compile alone exhausts a 10g heap at d = 64.
+    val pairs = (for { i <- 0 until d; j <- i until d } yield (i, j))
+      .zipWithIndex.map { case ((i, j), t) => (i, j, t) }
     // a fully-empty input yields a zero buffer: keep the d(d+1)/2 rows
     // with n = 0 — the oracle's cross-join shape mirrors this
-    out
+    one.select(col("m"), explode(typedLit(pairs)).as("p"))
+      .select(col("p._1").as("i"), col("p._2").as("j"),
+        element_at(col("m"), 1).as("n"),
+        element_at(col("m"), col("p._1") + 2).as("sum_i"),
+        element_at(col("m"), col("p._2") + 2).as("sum_j"),
+        element_at(col("m"), col("p._3") + (2 + d)).as("gram"))
   }
 
   /** Probe the embedding width off one row (loud on empty input). */

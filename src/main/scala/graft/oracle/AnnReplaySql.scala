@@ -10,7 +10,7 @@ package graft.oracle
   * dim=64) — independent of the data — so the four random unit vectors
   * are carried here as full-precision constants (extracted from the
   * fitted model's randMatrix on Spark 4.1.2; regenerate with
-  * `Test/runMain graft.perf.LshPlanes` if the embedding dim or Spark's
+  * `Test/runMain graft.oracle.LshPlanes` if the embedding dim or Spark's
   * RNG ever changes). Everything downstream — normalize, bucket ids
   * floor(u·v / 0.25), the any-table candidate join, the Euclidean
   * admission d ≤ sqrt(2 − 2·targetCos), score 1 − d²/2, the per-query
