@@ -70,7 +70,10 @@ object DataIntegration {
       val items = TypedCsv.read(spark, s"$outputDir/item.csv")
       val mapped = mapItems(spark, ds, items, endpoint, parallelism, transport)
       TypedCsv.write(mapped.select(col("item_id"), col("URI")), s"$outputDir/map.csv")
-      report = Some(SparqlSource.matchRate(mapped.withColumnRenamed("URI", "uri")))
+      // the report reads the written file: the mapping (one SPARQL query
+      // per item) runs once, and the report agrees with map.csv
+      report = Some(SparqlSource.matchRate(
+        TypedCsv.read(spark, s"$outputDir/map.csv").withColumnRenamed("URI", "uri")))
       report.foreach(_.show(false)) // dataset.py:238-241 mapping statistics
     }
     if (enrichData) {

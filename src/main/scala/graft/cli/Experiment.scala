@@ -295,18 +295,27 @@ object Experiment {
       ((train, testDf), foldIdx) <- foldsWithVal.zipWithIndex
     } yield {
       val t0 = System.nanoTime()
-      val rec = Recommenders.registry(modelName)(cfgMap)
-        .train(spark, train, propertyEdges, bundle.socialEdges)
+      // every Spark job of a phase is labelled "<model> fold <i>: <phase>";
+      // the caller's own job description comes back afterwards
+      def phase[T](name: String)(body: => T): T = {
+        val previous = spark.sparkContext.getLocalProperty("spark.job.description")
+        spark.sparkContext.setJobDescription(s"$modelName fold ${foldIdx + 1}: $name")
+        try body finally spark.sparkContext.setJobDescription(previous)
+      }
+      val rec = phase("train")(Recommenders.registry(modelName)(cfgMap)
+        .train(spark, train, propertyEdges, bundle.socialEdges))
       // materialize once: the recommendation lineage ends in a wide
       // users×candidates ranking window — recomputing it per metric
-      // doubles the most expensive stage of the whole experiment
-      val recs = rec.recommend(k).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      // doubles the most expensive stage of the whole experiment (the
+      // ranking itself runs inside the eval job)
+      val recs = phase("recommend")(
+        rec.recommend(k).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       // one fused job computes both means (Metrics.meansAtK) — the
       // sequential per-metric loop cost one full pass over the cached
       // ranking per metric
       metricNames.foreach(mn => require(mn == "MAP" || mn == "nDCG",
         s"Metric $mn is not implemented."))
-      val mm = Metrics.meansAtK(recs, testDf, k, relThr).first()
+      val mm = phase("eval")(Metrics.meansAtK(recs, testDf, k, relThr).first())
       val vals = metricNames.map {
         case "MAP" => "MAP" -> mm.getDouble(mm.fieldIndex("map"))
         case "nDCG" => "nDCG" -> mm.getDouble(mm.fieldIndex("ndcg"))

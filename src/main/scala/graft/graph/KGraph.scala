@@ -1,6 +1,6 @@
 package graft.graph
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** The heterogeneous user-item-property graph as two immutable
@@ -113,6 +113,93 @@ object KGraph {
     out.count()
     d.unpersist(blocking = false)
     out
+  }
+
+  /** Most label-edge rows a recommender collects to train one fold on
+    * the driver; past it the fold trains distributed. The walk
+    * kernels' local-adjacency bound ([[graft.walk.RandomWalks]]'s
+    * `maxLocalAdjEntries`) uses the same figure. */
+  val MaxDriverEdges: Long = 5000000L
+
+  /** The string columns `cols` of `df` on the driver, one array per
+    * column — or None when `df` has more than `maxRows` rows.
+    *
+    * The bound holds for the whole frame before any row leaves an
+    * executor: a partition ships its rows only if they are at most its
+    * share `maxRows / partitions`, and otherwise only its row count. So
+    * one job never ships more than `maxRows` rows. When the counts sum
+    * to at most `maxRows`, a second job fetches the partitions that went
+    * over their share; an evenly partitioned frame needs one job. Equal
+    * labels share one String instance per partition, so a task ships
+    * each distinct label once. */
+  def collectColumns(df: DataFrame, cols: Seq[String], maxRows: Long): Option[Array[Array[String]]] = {
+    val width = cols.size
+    val rows = df.select(cols.map(col): _*).rdd
+    val share = maxRows / math.max(1, rows.getNumPartitions)
+    // (rows seen, columns): the columns are null past `keep` rows, and
+    // counting stops once the partition alone is over `maxRows`
+    val scan = (keep: Long) => (it: Iterator[Row]) => {
+      val interned = new java.util.HashMap[String, String]()
+      val out = Array.fill(width)(scala.collection.mutable.ArrayBuffer.empty[String])
+      var n = 0L
+      while (it.hasNext && n <= maxRows) {
+        val r = it.next()
+        var c = 0
+        while (n < keep && c < width) {
+          val s = r.getString(c)
+          val prev = if (s == null) null else interned.putIfAbsent(s, s)
+          out(c) += (if (prev == null) s else prev)
+          c += 1
+        }
+        n += 1
+      }
+      (n, if (n > keep) null else out.map(_.toArray))
+    }
+    val first = rows.mapPartitions(it => Iterator.single(scan(share)(it))).collect()
+    if (first.iterator.map(_._1).sum > maxRows) None
+    else {
+      val over = first.indices.filter(p => first(p)._2 == null)
+      val refetched = if (over.isEmpty) Map.empty[Int, Array[Array[String]]]
+        else over.zip(rows.sparkContext.runJob(rows, (it: Iterator[Row]) => scan(maxRows)(it)._2, over)).toMap
+      val parts = first.indices.map(p => refetched.getOrElse(p, first(p)._2))
+      // null only if a partition grew between the two jobs
+      if (parts.contains(null)) None
+      else Some(Array.tabulate(width)(c => parts.flatMap(_(c)).toArray))
+    }
+  }
+
+  /** [[relabel]] on the driver: the distinct labels of `columns` in
+    * Spark's string order, so a label's index is the `node_id`
+    * [[relabel]] would give it. Spark orders strings by their UTF-8
+    * bytes (`UTF8String.compareTo`), which differs from
+    * `String.compareTo`'s UTF-16 order once a label holds a character
+    * above U+FFFF. */
+  def localRelabel(columns: Array[String]*): Array[String] = {
+    import org.apache.spark.unsafe.types.UTF8String
+    val distinct = new java.util.HashSet[String]()
+    columns.foreach(_.foreach(distinct.add))
+    val keyed = distinct.toArray(new Array[String](0)).map(s => (UTF8String.fromString(s), s))
+    java.util.Arrays.sort(keyed,
+      (a: (UTF8String, String), b: (UTF8String, String)) => a._1.compareTo(b._1))
+    keyed.map(_._2)
+  }
+
+  /** Replaces each label of a column by its index in `dictionary`. */
+  def localEncoder(dictionary: Array[String]): Array[String] => Array[Int] = {
+    val ids = new java.util.HashMap[String, Integer](dictionary.length * 2)
+    dictionary.indices.foreach(i => ids.put(dictionary(i), i))
+    column => column.map(label => ids.get(label).intValue)
+  }
+
+  /** `regexp_extract(label, "^<prefix>\((.*)\)$", 1)`, evaluated on the
+    * driver: the id inside a `User(..)`/`Item(..)` label, or "" when the
+    * pattern does not match. */
+  def labelIdExtractor(prefix: String): String => String = {
+    val pattern = java.util.regex.Pattern.compile(s"^$prefix\\((.*)\\)$$")
+    label => {
+      val m = pattern.matcher(label)
+      if (m.find()) Option(m.group(1)).getOrElse("") else ""
+    }
   }
 
   /** Edge-endpoint validation (J4, graph.py:293-302,309-314): keep only

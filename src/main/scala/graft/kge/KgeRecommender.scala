@@ -18,6 +18,14 @@ import org.apache.spark.sql.functions._
   * config_files/test_transE.yml:66-74), scoring_fct_norm (1|2 — the
   * translational trio's distance norm, reference default 1;
   * transE/model.py:24).
+  *
+  * A fold whose labelled triples collect to the driver (at most
+  * [[KGraph.MaxDriverEdges]] rows) and whose model is at most
+  * `driver_max_params` floats trains in the driver regime: one Spark
+  * job, then vocabulary, encoding, [[KgeTrainer.fitLocal]] and the
+  * embedding split-back on driver arrays. Other folds train in the
+  * distributed regime: relabel joins and [[KgeTrainer.fitDistributed]],
+  * which keeps every embedding row in Spark.
   */
 class KgeRecommender(cfg: Map[String, String] = Map.empty) extends Recommender {
   private def i(key: String, d: Int) = cfg.get(key).map(_.toInt).getOrElse(d)
@@ -70,18 +78,88 @@ class KgeRecommender(cfg: Map[String, String] = Map.empty) extends Recommender {
     // (often split-derived) lineage isn't re-derived per consumer —
     // released in release(), mirroring PopularityRecommender
     this.train = trainRatings.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dim = i("embedding_dim", defaultDim) // reference defaults (model.py:23 per model)
 
     // M5 triple export: `triples: all | ratings` — reference default
     // "all" (transE/model.py:34): property edges fold into the vocabulary
-    // whenever the graph has them
+    // whenever the graph has them. Rating rows also carry the string
+    // user/item ids the embedding sides are keyed by.
+    val ratingRows = trainRatings.select(lit("rating").as("kind"),
+      KGraph.userLabel(col("user_id")).as("head"),
+      KGraph.ratingRelation(col("rating")).as("relation"),
+      KGraph.itemLabel(col("item_id")).as("tail"),
+      col("user_id").cast("string").as("user"), col("item_id").cast("string").as("item"))
     val triples = (cfg.getOrElse("triples", "all"), propertyEdges) match {
       case ("all", Some(p)) =>
-        KGraph.ratingTriples(trainRatings).unionByName(
-          p.select(col("src_label").as("head"), col("relation"), col("dst_label").as("tail")))
-      case _ => KGraph.ratingTriples(trainRatings)
+        ratingRows.unionByName(p.select(lit("property").as("kind"), col("src_label").as("head"),
+          col("relation"), col("dst_label").as("tail"),
+          lit(null).cast("string").as("user"), lit(null).cast("string").as("item")))
+      case _ => ratingRows
     }
 
+    // scoring_fct_norm (transE/model.py:24): the translational trio
+    // defaults to L1 exactly as the reference's pykeen models do;
+    // other models ignore the norm (pykeen parity)
+    val fctNorm = i("scoring_fct_norm",
+      if (Set("transE", "transH", "transR")(model)) 1 else 2)
+    val trainer = new KgeTrainer(model, dim, i("epochs", 5), f("learning_rate", 0.05),
+      f("margin", 1.0), i("seed", 42).toLong, fctNorm = fctNorm,
+      pinOrder = cfg.get("pin_order").contains("true"))
+    val driverMaxParams = cfg.get("driver_max_params").map(_.toLong).getOrElse(50000000L)
+
+    // a fold whose triples collect as labels and whose model fits the
+    // driver trains there start to finish; otherwise fully distributed
+    val local = for {
+      c <- KGraph.collectColumns(triples,
+        Seq("kind", "head", "relation", "tail", "user", "item"), KGraph.MaxDriverEdges)
+      entities = KGraph.localRelabel(c(1), c(3))
+      relations = KGraph.localRelabel(c(2))
+      if trainer.nParams(entities.length, relations.length) <= driverMaxParams
+    } yield (c, entities, relations)
+    local match {
+      case Some((c, entities, relations)) =>
+        trainDriver(spark, trainer, c, entities, relations)
+      case None =>
+        trainDistributed(spark, trainer, trainRatings, triples)
+    }
+    this
+  }
+
+  private def dim: Int = i("embedding_dim", defaultDim) // reference defaults (model.py:23 per model)
+
+  /** The driver regime: encode, fit and split the embeddings back on
+    * driver arrays; `c` holds the collected (kind, head, relation, tail,
+    * user, item) columns. */
+  private def trainDriver(spark: SparkSession, trainer: KgeTrainer, c: Array[Array[String]],
+                          entities: Array[String], relations: Array[String]): Unit = {
+    val entityIds = KGraph.localEncoder(entities)
+    val (ent, _) = trainer.fitLocal(entityIds(c(1)), KGraph.localEncoder(relations)(c(2)),
+      entityIds(c(3)), entities.length, relations.length, spark.sparkContext.defaultParallelism)
+    val isRating = c(0).map(_ == "rating")
+    val zeros = Array.fill(dim)(0.0)
+
+    // split back to user/item spaces: every distinct train id, joined to
+    // the real component (F13) of the entity whose label carries it, or
+    // zero-filled when none does (F14)
+    def side(prefix: String, ids: Array[String]): DataFrame = {
+      val extract = KGraph.labelIdExtractor(prefix)
+      val vecs = entities.indices.filter(e => entities(e).startsWith(s"$prefix("))
+        .groupBy(e => extract(entities(e)))
+        .map { case (id, es) => id -> es.map(e => ent(e).iterator.take(dim).map(_.toDouble).toArray) }
+      DeepWalkRecommender.embeddingTable(spark,
+        ids.indices.filter(isRating).map(ids).distinct.flatMap { id =>
+          val found = if (id == null) None else vecs.get(id)
+          found.getOrElse(Seq(zeros)).map(id -> _)
+        })
+    }
+    userEmb = side("User", c(4))
+    itemEmb = side("Item", c(5))
+  }
+
+  /** The distributed regime: relabel and encode with joins, then
+    * [[KgeTrainer.fitDistributed]]. */
+  private def trainDistributed(spark: SparkSession, trainer: KgeTrainer, trainRatings: DataFrame,
+                               labelled: DataFrame): Unit = {
+    val triples = labelled.select("head", "relation", "tail")
     // entity/relation vocab: dense ids by canonical label (entity_to_id analogue)
     val entities = KGraph.relabel(
       triples.select(col("head").as("label")).union(triples.select(col("tail").as("label"))))
@@ -99,19 +177,7 @@ class KgeRecommender(cfg: Map[String, String] = Map.empty) extends Recommender {
       .withColumnRenamed("node_id", "t")
       .select("h", "r", "t")
 
-    // scoring_fct_norm (transE/model.py:24): the translational trio
-    // defaults to L1 exactly as the reference's pykeen models do;
-    // other models ignore the norm (pykeen parity)
-    val fctNorm = i("scoring_fct_norm",
-      if (Set("transE", "transH", "transR")(model)) 1 else 2)
-    val trainer = new KgeTrainer(model, dim, i("epochs", 5), f("learning_rate", 0.05),
-      f("margin", 1.0), i("seed", 42).toLong, fctNorm = fctNorm,
-      pinOrder = cfg.get("pin_order").contains("true"))
-    // fitEmb dispatches driver-resident vs fully distributed training by
-    // parameter count; either way the embeddings arrive as a DataFrame
-    // and the driver never materializes the entity dimension here
-    val (entEmb, _) = trainer.fitEmb(spark, encoded, nE, nR,
-      cfg.get("driver_max_params").map(_.toLong).getOrElse(50000000L))
+    val (entEmb, _) = trainer.fitDistributed(spark, encoded, nE, nR)
 
     // embedding table: node_id -> real-component vector (F13)
     val embDf = entEmb
@@ -137,7 +203,6 @@ class KgeRecommender(cfg: Map[String, String] = Map.empty) extends Recommender {
     userEmb.count(); itemEmb.count()
     entities.unpersist(blocking = false)
     relations.unpersist(blocking = false)
-    this
   }
 
   override def recommend(k: Int): DataFrame =

@@ -16,14 +16,13 @@ import scala.util.hashing.MurmurHash3
   * scoring functions, and the identical recommendation path (entity
   * embeddings -> cosine kNN).
   *
-  * Execution model: parameter arrays live on the driver (entities ×
-  * dim floats — ml-100k scale is a few MB; broadcastable up to ~1e7
-  * entities × 64). Each epoch broadcasts the current parameters, maps
-  * triple partitions to sparse gradient maps (genuine per-partition
-  * imperative math — the sanctioned RDD use), treeAggregates them, and
-  * applies one SGD step. Negative sampling and the reference's internal
-  * 95/5 triples split (`transE/model.py:163-174`) are seeded-hash
-  * deterministic.
+  * Execution model: below `driverMaxParams` floats the parameter
+  * arrays and the int-encoded triples live on the driver
+  * (`KgeTrainer.fitLocal`: full-batch gradients over per-core chunks,
+  * one SGD step per epoch, no Spark job); above it
+  * `KgeTrainer.fitDistributed` keeps parameters as DataFrame rows.
+  * Negative sampling and the reference's internal 95/5 triples split
+  * (`transE/model.py:163-174`) are seeded-hash deterministic.
   */
 object KgeModels {
   /** Per-model embedding widths: (entityFloats, relationFloats) as a
@@ -356,89 +355,129 @@ class KgeTrainer(val model: String, val dim: Int, val epochs: Int, val lr: Doubl
   }
 
   /** triples: (h, r, t) dense int ids. Returns entity embeddings
-    * (nEntities × entityFloats) and relation embeddings. */
+    * (nEntities × entityFloats) and relation embeddings. One job
+    * collects the triples; [[fitLocal]] trains on the driver. */
   def fit(spark: SparkSession, triples: DataFrame, nEntities: Int, nRelations: Int):
       (Array[Array[Float]], Array[Array[Float]]) = {
+    val rows = triples.select(col("h").cast("int"), col("r").cast("int"), col("t").cast("int"))
+      .collect()
+    fitLocal(rows.map(_.getInt(0)), rows.map(_.getInt(1)), rows.map(_.getInt(2)),
+      nEntities, nRelations, spark.sparkContext.defaultParallelism)
+  }
+
+  /** Driver-resident training over triples `(h(i), r(i), t(i))`.
+    *
+    * The reference's internal 95/5/0 split (transE/model.py:163-174)
+    * keeps `trainFraction` of the triples, chosen by the same
+    * `pmod(xxhash64(int h, int r, int t, long seed), 10000)` predicate
+    * [[fitDistributed]] evaluates in Spark. Kept triples are visited in
+    * sorted (h, r, t) order. Each epoch sums one full-batch gradient and
+    * applies one SGD step. Gradient values are float sums whose rounding
+    * depends on accumulation order, so the order is fixed: with
+    * `pinOrder` every triple accumulates into one gradient in sorted
+    * order (the q41 golden layout); otherwise `threads` contiguous
+    * chunks of the sorted triples accumulate in parallel and merge in
+    * chunk order. Either way the fit is a pure function of its inputs
+    * and `threads`. */
+  def fitLocal(h: Array[Int], r: Array[Int], t: Array[Int], nEntities: Int, nRelations: Int,
+               threads: Int): (Array[Array[Float]], Array[Array[Float]]) = {
     val (ent, rel) = initArrays(nEntities, nRelations)
-
-    // the reference's internal 95/5/0 split (transE/model.py:163-174):
-    // train on `trainFraction` of triples, selected by seeded hash
-    val dataRaw = triples.select(col("h").cast("int"), col("r").cast("int"), col("t").cast("int"))
-      .filter(pmod(xxhash64(col("h"), col("r"), col("t"), lit(seed)), lit(10000L))
-        < lit((trainFraction * 10000).toLong))
-      .rdd.map(row => (row.getInt(0), row.getInt(1), row.getInt(2)))
-    // pinOrder: gradient VALUES per key are a full-batch sum whose float
-    // rounding depends on accumulation order (partition layout +
-    // treeReduce arrival order). Sorting onto ONE partition fixes the
-    // iteration order completely, making the fit bit-exact across
-    // sessions (golden-parquet oracle, q41) — only sensible for bounded
-    // driver-path training; the default stays fully parallel.
-    val data = (if (pinOrder) dataRaw.sortBy(identity, numPartitions = 1)
-                else dataRaw).persist()
-    val n = data.count().toDouble
-    val mdl = model; val d = dim; val m = margin; val nE = nEntities; val fn = fctNorm
-    val corrupt = corruptFn
-
-    for (epoch <- 0 until epochs) {
-      val bcE = spark.sparkContext.broadcast(ent)
-      val bcR = spark.sparkContext.broadcast(rel)
-      val (entGrad, relGrad) = data.mapPartitions { it =>
-        val e = bcE.value; val r = bcR.value
-        val ge = mutable.HashMap.empty[Int, Array[Float]]
-        val gr = mutable.HashMap.empty[Int, Array[Float]]
-        def accE(i: Int) = ge.getOrElseUpdate(i, new Array[Float](e(i).length))
-        def accR(i: Int) = gr.getOrElseUpdate(i, new Array[Float](r(i).length))
-        val core = if (mdl == "tuckER") r(r.length - 1) else null
-        def gcore = if (mdl == "tuckER") accR(r.length - 1) else null
-        it.foreach { case (h, rr, t) =>
-          val (nh, nt) = corrupt(h, rr, t, epoch, nE)
-          val sPos = KgeModels.score(mdl, d, e(h), r(rr), e(t), core, fn)
-          val sNeg = KgeModels.score(mdl, d, e(nh), r(rr), e(nt), core, fn)
-          if (m + sNeg - sPos > 0) { // hinge active: raise sPos, lower sNeg
-            KgeModels.addGrad(mdl, d, e(h), r(rr), e(t), 1.0, accE(h), accR(rr), accE(t), core, gcore, fn)
-            KgeModels.addGrad(mdl, d, e(nh), r(rr), e(nt), -1.0, accE(nh), accR(rr), accE(nt), core, gcore, fn)
-          }
-        }
-        Iterator.single((ge, gr))
-      }.treeReduce { (a, b) =>
-        def merge(x: mutable.HashMap[Int, Array[Float]], y: mutable.HashMap[Int, Array[Float]]) = {
-          y.foreach { case (k, v) =>
-            x.get(k) match {
-              case Some(acc) => var i = 0; while (i < v.length) { acc(i) += v(i); i += 1 }
-              case None      => x.update(k, v)
-            }
-          }
-          x
-        }
-        (merge(a._1, b._1), merge(a._2, b._2))
+    val byTriple: Ordering[Int] = (a, b) => {
+      val c = Integer.compare(h(a), h(b))
+      if (c != 0) c else {
+        val c2 = Integer.compare(r(a), r(b))
+        if (c2 != 0) c2 else Integer.compare(t(a), t(b))
       }
-      val step = (lr / math.max(1.0, n / 10000.0)).toFloat // scale step with batch size
-      def clip(x: Float): Float = math.max(-1.0f, math.min(1.0f, x)) // per-component update cap
-      entGrad.foreach { case (k, g) =>
-        val v = ent(k); var i = 0; while (i < v.length) { v(i) += clip(step * g(i)); i += 1 }
-      }
-      relGrad.foreach { case (k, g) =>
-        val v = rel(k); var i = 0; while (i < v.length) { v(i) += clip(step * g(i)); i += 1 }
-      }
-      bcE.destroy(); bcR.destroy()
     }
-    data.unpersist()
+    val kept = h.indices.filter(i => inTrainSplit(h(i), r(i), t(i))).toArray.sorted(byTriple)
+    val n = kept.length
+    val chunks = if (pinOrder) 1 else math.max(1, math.min(threads, n))
+    val bounds = Array.tabulate(chunks + 1)(c => (n.toLong * c / chunks).toInt)
+    val corrupt = corruptFn
+    val core = if (model == "tuckER") rel(rel.length - 1) else null
+    type Grads = mutable.HashMap[Int, Array[Float]]
+
+    /** The hinge gradients of kept triples [lo, hi) at `epoch`. */
+    def gradients(epoch: Int, lo: Int, hi: Int): (Grads, Grads) = {
+      val ge: Grads = mutable.HashMap.empty
+      val gr: Grads = mutable.HashMap.empty
+      def accE(i: Int) = ge.getOrElseUpdate(i, new Array[Float](ent(i).length))
+      def accR(i: Int) = gr.getOrElseUpdate(i, new Array[Float](rel(i).length))
+      def gcore = if (core != null) accR(rel.length - 1) else null
+      var j = lo
+      while (j < hi) {
+        val i = kept(j)
+        val (hh, rr, tt) = (h(i), r(i), t(i))
+        val (nh, nt) = corrupt(hh, rr, tt, epoch, nEntities)
+        val sPos = KgeModels.score(model, dim, ent(hh), rel(rr), ent(tt), core, fctNorm)
+        val sNeg = KgeModels.score(model, dim, ent(nh), rel(rr), ent(nt), core, fctNorm)
+        if (margin + sNeg - sPos > 0) { // hinge active: raise sPos, lower sNeg
+          KgeModels.addGrad(model, dim, ent(hh), rel(rr), ent(tt), 1.0,
+            accE(hh), accR(rr), accE(tt), core, gcore, fctNorm)
+          KgeModels.addGrad(model, dim, ent(nh), rel(rr), ent(nt), -1.0,
+            accE(nh), accR(rr), accE(nt), core, gcore, fctNorm)
+        }
+        j += 1
+      }
+      (ge, gr)
+    }
+    def merge(x: Grads, y: Grads): Unit = y.foreach { case (k, v) =>
+      x.get(k) match {
+        case Some(acc) => var i = 0; while (i < v.length) { acc(i) += v(i); i += 1 }
+        case None      => x.update(k, v)
+      }
+    }
+    val pool = if (chunks > 1) java.util.concurrent.Executors.newFixedThreadPool(chunks) else null
+    try {
+      for (epoch <- 0 until epochs) {
+        val parts =
+          if (pool == null) Seq(gradients(epoch, 0, n))
+          else (0 until chunks)
+            .map(c => pool.submit(new java.util.concurrent.Callable[(Grads, Grads)] {
+              def call(): (Grads, Grads) = gradients(epoch, bounds(c), bounds(c + 1))
+            }))
+            .map(_.get())
+        val (entGrad, relGrad) = parts.head
+        parts.tail.foreach { case (e, g) => merge(entGrad, e); merge(relGrad, g) }
+        val step = (lr / math.max(1.0, n / 10000.0)).toFloat // scale step with batch size
+        def clip(x: Float): Float = math.max(-1.0f, math.min(1.0f, x)) // per-component update cap
+        entGrad.foreach { case (k, g) =>
+          val v = ent(k); var i = 0; while (i < v.length) { v(i) += clip(step * g(i)); i += 1 }
+        }
+        relGrad.foreach { case (k, g) =>
+          val v = rel(k); var i = 0; while (i < v.length) { v(i) += clip(step * g(i)); i += 1 }
+        }
+      }
+    } finally if (pool != null) pool.shutdown()
     (ent, rel)
+  }
+
+  /** Whether a triple falls in the `trainFraction` share: the driver
+    * replay of `pmod(xxhash64(int h, int r, int t, long seed), 10000) <
+    * trainFraction·10000`, the filter [[fitDistributed]] applies. */
+  private[graft] def inTrainSplit(h: Int, r: Int, t: Int): Boolean = {
+    import org.apache.spark.sql.catalyst.expressions.XXH64
+    val hash = XXH64.hashLong(seed, XXH64.hashInt(t, XXH64.hashInt(r, XXH64.hashInt(h, 42L))))
+    math.floorMod(hash, 10000L) < (trainFraction * 10000).toLong
+  }
+
+  /** Floats the model holds for this vocabulary — the quantity the
+    * driver-vs-distributed gate compares with `driverMaxParams`. */
+  def nParams(nEntities: Int, nRelations: Int): Long = {
+    val (ed, rd) = KgeModels.dims(model, dim)
+    nEntities.toLong * ed + nRelations.toLong * rd +
+      (if (model == "tuckER") dim.toLong * dim * dim else 0L)
   }
 
   /** Embedding tables as DataFrames `(id: int, vec: array<float>)`,
     * choosing the physical strategy by parameter count: below
     * `driverMaxParams` total floats the driver-resident [[fit]] runs
-    * (fastest at ml-100k scale — one broadcast + treeReduce per epoch);
-    * above it, [[fitDistributed]] keeps every parameter row distributed
-    * and the driver never holds an embedding. This is the dispatch the
-    * recommenders call — none of them touch driver arrays. */
+    * (one job collects the triples, no job per epoch); above it,
+    * [[fitDistributed]] keeps every parameter row distributed and the
+    * driver never holds an embedding. */
   def fitEmb(spark: SparkSession, triples: DataFrame, nEntities: Int, nRelations: Int,
              driverMaxParams: Long = 50000000L): (DataFrame, DataFrame) = {
-    val (ed, rd) = KgeModels.dims(model, dim)
-    val nParams = nEntities.toLong * ed + nRelations.toLong * rd +
-      (if (model == "tuckER") dim.toLong * dim * dim else 0L)
-    if (nParams <= driverMaxParams) {
+    if (nParams(nEntities, nRelations) <= driverMaxParams) {
       val (ent, rel) = fit(spark, triples, nEntities, nRelations)
       def wrap(arr: Array[Array[Float]]): DataFrame = {
         import org.apache.spark.sql.types._

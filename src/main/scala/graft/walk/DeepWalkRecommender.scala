@@ -1,12 +1,15 @@
 package graft.walk
 
+import graft.graph.KGraph
 import graft.knn.CosineKnn
 import graft.model.Recommender
 import org.apache.spark.ml.feature.Word2Vec
 import org.apache.spark.ml.functions.vector_to_array
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** DeepWalk / node2vec recommender (SURVEY §2.8 M1-M3, M6): random
   * walks over the user-item(-property) graph, skip-gram embeddings, and
@@ -25,6 +28,15 @@ import org.apache.spark.sql.functions._
   * reference wrapper's (model.py:20-29): window_size 3, learning_rate
   * 0.05, min_count 1 (all-kept, as gensim min_count=1), workers =
   * local parallelism (`w2v_threads` remains an explicit alias).
+  *
+  * A fold trains in the driver regime when its walks are
+  * class-sampling walks and its graph is small (see `train`): one Spark
+  * job collects the label edges, and relabel, adjacency, walks and
+  * [[SkipGram.fitLocal]] run on driver arrays. The driver walks are
+  * generated in (start, walk_idx) order, so `pin_order` is implied
+  * there, and an unpinned run with `w2v_threads: 1` is bit-exact too.
+  * Other folds train in the distributed regime: Spark walks, then
+  * [[SkipGram.fitDistributed]] or MLlib Word2Vec.
   */
 class DeepWalkRecommender(cfg: Map[String, String] = Map.empty) extends Recommender {
   private def i(key: String, d: Int) = cfg.get(key).map(_.toInt).getOrElse(d)
@@ -46,13 +58,15 @@ class DeepWalkRecommender(cfg: Map[String, String] = Map.empty) extends Recommen
   override def train(spark: SparkSession, trainRatings: DataFrame,
                      propertyEdges: Option[DataFrame],
                      socialEdges: Option[DataFrame]): Recommender = {
+    val impl = cfg.getOrElse("w2v_impl", "auto")
+    val aliasWalks = biased && cfg.get("walk_impl").contains("alias")
+    require(!(impl == "local" && aliasWalks),
+      "w2v_impl: local trains on driver walks; walk_impl: alias needs w2v_impl: distributed or mllib")
     this.spark = spark
     // persist: train feeds the walk edges here plus the maxRated agg and
     // anti-join in recommend() — without this the (split-derived) lineage
     // re-derives per consumer; released in release()
     this.train = trainRatings.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val seed = i("seed", 42)
-    import graft.graph.KGraph
 
     // label-space edges: user-item rating edges, optional
     // (src_label, dst_label) property edges, and optional User–User
@@ -64,6 +78,72 @@ class DeepWalkRecommender(cfg: Map[String, String] = Map.empty) extends Recommen
     val labelEdges = (propertyEdges.toSeq ++ socialEdges.toSeq)
       .map(_.select("src_label", "dst_label"))
       .foldLeft(ratingEdges)(_ unionByName _)
+
+    // regime dispatch on `w2v_impl`: `local` forces the driver regime
+    // past every size gate, `distributed`/`mllib` force the distributed
+    // one, and `auto` trains on the driver when the label edges, the
+    // adjacency and the SkipGram model and corpus all fit there
+    val onDriver = impl match {
+      case "local" => true
+      case "distributed" | "mllib" => false
+      case _ => !aliasWalks
+    }
+    val bound = if (impl == "local") Long.MaxValue else KGraph.MaxDriverEdges
+    val local = for {
+      Array(src, dst) <- if (!onDriver) None
+        else KGraph.collectColumns(labelEdges, Seq("src_label", "dst_label"), bound)
+      labels = KGraph.localRelabel(src, dst)
+      encode = KGraph.localEncoder(labels)
+      adj = RandomWalks.driverAdjacency(labels.length, encode(src), encode(dst))
+      if impl == "local" || (labels.length + adj.iterator.map(_.length.toLong).sum <= bound &&
+        skipGramFitsDriver(labels.length))
+    } yield (labels, adj)
+    local match {
+      case Some((labels, adj)) => trainDriver(labels, adj)
+      case None                => trainDistributed(labelEdges)
+    }
+    this
+  }
+
+  private def seed: Int = i("seed", 42)
+  private def biased: Boolean = cfg.get("biased").contains("true")
+
+  /** The driver SkipGram gate: ≤5e7 model params (same bound as KGE)
+    * and ≤1e8 corpus tokens (~400 MB of ints on the driver). */
+  private def skipGramFitsDriver(nNodes: Long): Boolean =
+    2L * nNodes * i("embedding_size", 64) <= 50000000L &&
+      nNodes * i("n_walks", 10).toLong * i("walk_len", 10).toLong <= 100000000L
+
+  /** The driver regime. Walks run from every node in (start, walk_idx)
+    * order — the corpus order `pin_order` gives the distributed regime — with
+    * the step functions of [[RandomWalks.randomWalks]] /
+    * [[RandomWalks.biasedWalks]], so the walks are theirs. */
+  private def trainDriver(labels: Array[String], adj: Array[Array[Long]]): Unit = {
+    val stepFn =
+      if (biased) RandomWalks.biasedStep(f("p", 1.0), f("q", 1.0), seed)
+      else RandomWalks.uniformStep(seed)
+    val sentences = RandomWalks.driverWalks(adj, i("n_walks", 10), i("walk_len", 10), stepFn)
+      .map(_.map(_.toInt))
+    val vecs = SkipGram.fitLocal(sentences, labels.length,
+      dim = i("embedding_size", 64), window = i("window_size", 3),
+      epochs = i("epochs", 1), lr = f("learning_rate", 0.05),
+      negative = i("negative", 5), minCount = i("min_count", 1), seed = seed,
+      threads = i("w2v_threads", i("workers", spark.sparkContext.defaultParallelism)))
+    // ids stay strings: the reference schema types them string (§1.2)
+    def side(prefix: String): DataFrame = {
+      val extract = KGraph.labelIdExtractor(prefix)
+      DeepWalkRecommender.embeddingTable(spark, labels.indices
+        .filter(v => vecs(v) != null && labels(v).startsWith(s"$prefix("))
+        .map(v => extract(labels(v)) -> vecs(v).map(_.toDouble)))
+    }
+    userEmb = side("User")
+    itemEmb = side("Item")
+  }
+
+  /** The distributed regime: relabel and adjacency as DataFrames, walks
+    * by [[RandomWalks]], then [[SkipGram.fitDistributed]] or, with
+    * `w2v_impl: mllib`, MLlib Word2Vec. */
+  private def trainDistributed(labelEdges: DataFrame): Unit = {
     val nodes = KGraph.relabel(
       labelEdges.select(col("src_label").as("label"))
         .union(labelEdges.select(col("dst_label").as("label"))))
@@ -77,7 +157,7 @@ class DeepWalkRecommender(cfg: Map[String, String] = Map.empty) extends Recommen
     val adj = RandomWalks.adjacency(intEdges).cache()
     val starts = nodes.select(col("node_id").as("node"))
     val walksRaw =
-      if (cfg.get("biased").contains("true"))
+      if (biased)
         // walk_impl: alias — the extreme-scale per-edge-alias-table
         // kernel (O(1) steps, shuffle-joined tables, nothing broadcast);
         // default stays the class-sampling kernels the q42 golden pins
@@ -93,37 +173,17 @@ class DeepWalkRecommender(cfg: Map[String, String] = Map.empty) extends Recommen
     // key so the SGNS kernel consumes sentences in a partitioning-
     // independent order — walk CONTENT is already seed-deterministic
     // (q42/q45 goldens), but collect order is partition order, and SGD
-    // is order-sensitive. With w2v_threads=1 this makes the embedding
-    // fit bit-exact across sessions (golden-parquet oracle, q40).
+    // is order-sensitive.
     val walks = if (cfg.get("pin_order").contains("true"))
       walksRaw.orderBy("start", "walk_idx") else walksRaw
 
-    // trainer dispatch (mirrors KgeTrainer.fitAuto): below the gate the
-    // corpus is collected once and trained shared-memory on the driver
-    // ([[SkipGram.fit]] — the gensim-shaped kernel, ~5× faster than a
-    // broadcast-replica-average cycle at headline scale); above it the
-    // corpus stays an RDD and [[SkipGram.fitDistributed]] trains
+    // the corpus stays an RDD: [[SkipGram.fitDistributed]] trains
     // partition replicas + token-weighted averaging — the unbounded-
-    // corpus path (model stays driver-sized, as in MLlib). Gate: ≤5e7
-    // model params (same bound as KGE) and ≤1e8 corpus tokens (~400 MB
-    // of ints on the driver). `w2v_impl` forces a path explicitly
-    // (`mllib` keeps the stock MLlib Word2Vec for comparison).
+    // corpus path (model stays driver-sized, as in MLlib); `mllib`
+    // keeps the stock MLlib Word2Vec for comparison
     val nNodes = nodes.count()
-    val estTokens = nNodes * i("n_walks", 10).toLong * i("walk_len", 10).toLong
-    val impl = cfg.getOrElse("w2v_impl", "auto")
-    val useLocal = impl match {
-      case "local" => true
-      case "mllib" | "distributed" => false
-      case _ => 2L * nNodes * i("embedding_size", 64) <= 50000000L && estTokens <= 100000000L
-    }
     val nodeVecs =
-      if (useLocal)
-        SkipGram.fit(spark, walks, vocabSize = nNodes.toInt,
-          dim = i("embedding_size", 64), window = i("window_size", 3),
-          epochs = i("epochs", 1), lr = f("learning_rate", 0.05),
-          negative = i("negative", 5), minCount = i("min_count", 1), seed = seed,
-          threads = i("w2v_threads", i("workers", spark.sparkContext.defaultParallelism)))
-      else if (impl != "mllib")
+      if (!cfg.get("w2v_impl").contains("mllib"))
         SkipGram.fitDistributed(spark, walks, vocabSize = nNodes.toInt,
           dim = i("embedding_size", 64), window = i("window_size", 3),
           epochs = i("epochs", 1), lr = f("learning_rate", 0.05),
@@ -152,7 +212,6 @@ class DeepWalkRecommender(cfg: Map[String, String] = Map.empty) extends Recommen
 
     // J9 relabel join-back: embeddings keyed by original label
     val emb = nodeVecs.join(nodes, Seq("node_id"))
-    // ids stay strings: the reference schema types them string (§1.2)
     userEmb = emb.filter(col("label").startsWith("User("))
       .select(regexp_extract(col("label"), "^User\\((.*)\\)$", 1).as("id"), col("vec"))
       .cache()
@@ -164,7 +223,6 @@ class DeepWalkRecommender(cfg: Map[String, String] = Map.empty) extends Recommen
     userEmb.count(); itemEmb.count()
     adj.unpersist(blocking = false)
     nodes.unpersist(blocking = false) // relabel returns it persisted
-    this
   }
 
   override def recommend(k: Int): DataFrame =
@@ -190,6 +248,13 @@ object DeepWalkRecommender {
     // configs mostly use, biased == first-order.
     "deepwalk_based" -> (cfg => new DeepWalkRecommender(cfg + ("biased" -> "true")))
   )
+
+  /** An `(id: string, vec: array<double>)` embedding table, the shape
+    * [[knnRecommend]] reads, from driver rows. */
+  private[graft] def embeddingTable(spark: SparkSession, rows: Seq[(String, Array[Double])]): DataFrame =
+    spark.createDataFrame(rows.map { case (id, v) => Row(id, v.toSeq) }.asJava, StructType(Seq(
+      StructField("id", StringType),
+      StructField("vec", ArrayType(DoubleType, containsNull = false)))))
 
   /** Shared kNN recommendation path (J6 + J5 + W7): score k' =
     * min(max_user_rated + k, n_items) nearest items per user

@@ -1,5 +1,6 @@
 package graft.walk
 
+import graft.graph.KGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -164,40 +165,116 @@ object RandomWalks {
     org.apache.spark.sql.types.StructField("path",
       org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, containsNull = false))))
 
+  /** A node's neighbours, sorted ascending; empty when it has none. */
+  private[graft] type Neighbours = Long => Array[Long]
+
+  /** One walk step: `(nbrs, start, walkIdx, step, cur, prev)` to the
+    * next node, or None when the walk stops (walker.py:37-39). `prev` is
+    * -1 before the first step. */
+  private[graft] type StepFn = (Neighbours, Long, Long, Int, Long, Long) => Option[Long]
+
+  /** Walk `walkIdx` from `start`: the start node, then up to
+    * `walkLen - 1` steps of `stepFn`. */
+  private def walk(nbrs: Neighbours, start: Long, walkIdx: Long, walkLen: Int,
+                   stepFn: StepFn): Array[Long] = {
+    val path = scala.collection.mutable.ArrayBuilder.make[Long]
+    path += start
+    var cur = start
+    var prev = -1L // sentinel: no previous node
+    var step = 1
+    var alive = true
+    while (alive && step < walkLen) {
+      stepFn(nbrs, start, walkIdx, step, cur, prev) match {
+        case Some(nxt) => path += nxt; prev = cur; cur = nxt
+        case None      => alive = false
+      }
+      step += 1
+    }
+    path.result()
+  }
+
+  /** [[adjacency]] of int edges over nodes `0 until n`, on driver
+    * arrays: per node, its distinct neighbours ascending. */
+  private[graft] def driverAdjacency(n: Int, src: Array[Int], dst: Array[Int]): Array[Array[Long]] = {
+    val nbrs = Array.fill(n)(new java.util.TreeSet[java.lang.Long]())
+    src.indices.foreach { e => nbrs(src(e)).add(dst(e).toLong); nbrs(dst(e)).add(src(e).toLong) }
+    nbrs.map(set => set.stream().mapToLong(_.longValue).toArray)
+  }
+
+  /** `nWalks` walks from every node of `adj`, on the driver, in
+    * (start, walk_idx) order: the rows [[randomWalks]] / [[biasedWalks]]
+    * return for the same step function, sorted by that key. */
+  private[graft] def driverWalks(adj: Array[Array[Long]], nWalks: Int, walkLen: Int,
+                                 stepFn: StepFn): Array[Array[Long]] = {
+    val nbrs: Neighbours = node => adj(node.toInt)
+    val paths = new Array[Array[Long]](adj.length * nWalks)
+    java.util.stream.IntStream.range(0, paths.length).parallel().forEach { s =>
+      paths(s) = walk(nbrs, (s / nWalks).toLong, (s % nWalks).toLong, walkLen, stepFn)
+    }
+    paths
+  }
+
   /** One mapPartitions pass computes every step of every walk against a
     * broadcast adjacency — no per-step joins, no intermediate state
-    * DataFrames. `stepFn(start, walkIdx, step, path, cur, prev)` returns
-    * the next node or None (walk stops, walker.py:37-39). */
+    * DataFrames. */
   private def localWalks(spark: SparkSession, adj: DataFrame, nodes: DataFrame, nWalks: Int,
-                         walkLen: Int)(
-      stepFn: (scala.collection.Map[Long, Array[Long]], Long, Long, Int, Long, Long) => Option[Long])
-      : DataFrame = {
+                         walkLen: Int, stepFn: StepFn): DataFrame = {
     val bc = spark.sparkContext.broadcast(collectAdj(adj))
     val starts = nodes.select(col("node").cast("long"))
       .repartition(spark.sparkContext.defaultParallelism)
     val rows = starts.rdd.mapPartitions { it =>
       val adjMap = bc.value
+      val nbrs: Neighbours = n => adjMap.getOrElse(n, Array.emptyLongArray)
       it.flatMap { r =>
         val start = r.getLong(0)
         (0L until nWalks.toLong).iterator.map { w =>
-          val path = scala.collection.mutable.ArrayBuffer[Long](start)
-          var cur = start
-          var prev = -1L // sentinel: no previous node
-          var step = 1
-          var alive = true
-          while (alive && step < walkLen) {
-            stepFn(adjMap, start, w, step, cur, prev) match {
-              case Some(nxt) => path += nxt; prev = cur; cur = nxt
-              case None      => alive = false
-            }
-            step += 1
-          }
-          org.apache.spark.sql.Row(start, w, path.toSeq)
+          org.apache.spark.sql.Row(start, w, walk(nbrs, start, w, walkLen, stepFn).toSeq)
         }
       }
     }
     spark.createDataFrame(rows, walkSchema)
   }
+
+  /** The uniform step of [[randomWalks]]: a hash-drawn neighbour. */
+  private[graft] def uniformStep(seed: Long): StepFn = { (nbrsOf, start, w, step, cur, _) =>
+    val nbrs = nbrsOf(cur)
+    if (nbrs.isEmpty) None
+    else Some(nbrs(pmodL(stepHash(start, w, step, seed), nbrs.length.toLong).toInt))
+  }
+
+  /** The second-order step of [[biasedWalks]] — see [[biasedWalksJoins]]
+    * for the class-sampling scheme. p == q == 1 collapses to
+    * [[uniformStep]] (every class weight is 1). */
+  private[graft] def biasedStep(p: Double, q: Double, seed: Long): StepFn =
+    if (p == 1.0 && q == 1.0) uniformStep(seed)
+    else { (nbrsOf, start, w, step, cur, prev) =>
+      val nbrs = nbrsOf(cur)
+      if (nbrs.isEmpty) None
+      else if (step == 1) {
+        // first step: no previous node — uniform over all neighbors
+        // (w_back = w_common = 0 in the join kernel's formulation)
+        val idx = pmodL(stepHash(start, w, step, seed + 1), 1000000007L)
+        Some(nbrs((idx % math.max(nbrs.length, 1)).toInt))
+      } else {
+        val prevSet = nbrsOf(prev).toSet
+        // array_intersect keeps first-array order; array_remove(prev)
+        val common = nbrs.filter(x => x != prev && prevSet.contains(x))
+        val commonSet = common.toSet
+        // array_except(array_remove(nbrs, prev), common)
+        val far = nbrs.filter(x => x != prev && !commonSet.contains(x))
+        val wBack = if (nbrs.contains(prev)) 1.0 / p else 0.0
+        val wCommon = common.length.toDouble
+        val wFar = far.length.toDouble * (1.0 / q)
+        val r = pmodL(stepHash(start, w, step, seed), 1000000007L).toDouble / 1000000007.0
+        val draw = r * (wBack + wCommon + wFar)
+        val idx = pmodL(stepHash(start, w, step, seed + 1), 1000000007L)
+        if (draw < wBack) Some(prev)
+        else if (draw < wBack + wCommon)
+          Some(common((idx % math.max(common.length, 1)).toInt))
+        else if (far.nonEmpty) Some(far((idx % far.length).toInt))
+        else None // element_at past an empty class -> null -> walk stops
+      }
+    }
 
   /** Uniform walks. nodes: (node) — every start node (walks from
     * isolated nodes are the single-node path, matching walker.py:30-39).
@@ -210,14 +287,10 @@ object RandomWalks {
     * either way (same hash chain). */
   def randomWalks(spark: SparkSession, adj: DataFrame, nodes: DataFrame,
                   nWalks: Int, walkLen: Int, seed: Long,
-                  maxLocalAdjEntries: Long = 5000000L): DataFrame = {
+                  maxLocalAdjEntries: Long = KGraph.MaxDriverEdges): DataFrame = {
     if (adjEntries(adj) > maxLocalAdjEntries)
       return randomWalksJoins(spark, adj, nodes, nWalks, walkLen, seed)
-    localWalks(spark, adj, nodes, nWalks, walkLen) { (adjMap, start, w, step, cur, _) =>
-      adjMap.get(cur).filter(_.nonEmpty).map { nbrs =>
-        nbrs(pmodL(stepHash(start, w, step, seed), nbrs.length.toLong).toInt)
-      }
-    }
+    localWalks(spark, adj, nodes, nWalks, walkLen, uniformStep(seed))
   }
 
   /** Second-order (node2vec) walks — see [[biasedWalksJoins]] for the
@@ -226,40 +299,12 @@ object RandomWalks {
     * entirely. Same local-vs-join dispatch as [[randomWalks]]. */
   def biasedWalks(spark: SparkSession, adj: DataFrame, nodes: DataFrame,
                   nWalks: Int, walkLen: Int, p: Double, q: Double, seed: Long,
-                  maxLocalAdjEntries: Long = 5000000L): DataFrame = {
+                  maxLocalAdjEntries: Long = KGraph.MaxDriverEdges): DataFrame = {
     if (p == 1.0 && q == 1.0)
       return randomWalks(spark, adj, nodes, nWalks, walkLen, seed, maxLocalAdjEntries)
     if (adjEntries(adj) > maxLocalAdjEntries)
       return biasedWalksJoins(spark, adj, nodes, nWalks, walkLen, p, q, seed)
-    localWalks(spark, adj, nodes, nWalks, walkLen) { (adjMap, start, w, step, cur, prev) =>
-      adjMap.get(cur).filter(_.nonEmpty).flatMap { nbrs =>
-        if (step == 1) {
-          // first step: no previous node — uniform over all neighbors
-          // (w_back = w_common = 0 in the join kernel's formulation)
-          val idx = pmodL(stepHash(start, w, step, seed + 1), 1000000007L)
-          Some(nbrs((idx % math.max(nbrs.length, 1)).toInt))
-        } else {
-          val prevNbrs = adjMap.getOrElse(prev, Array.empty[Long])
-          val prevSet = prevNbrs.toSet
-          // array_intersect keeps first-array order; array_remove(prev)
-          val common = nbrs.filter(x => x != prev && prevSet.contains(x))
-          val commonSet = common.toSet
-          // array_except(array_remove(nbrs, prev), common)
-          val far = nbrs.filter(x => x != prev && !commonSet.contains(x))
-          val wBack = if (nbrs.contains(prev)) 1.0 / p else 0.0
-          val wCommon = common.length.toDouble
-          val wFar = far.length.toDouble * (1.0 / q)
-          val r = pmodL(stepHash(start, w, step, seed), 1000000007L).toDouble / 1000000007.0
-          val draw = r * (wBack + wCommon + wFar)
-          val idx = pmodL(stepHash(start, w, step, seed + 1), 1000000007L)
-          if (draw < wBack) Some(prev)
-          else if (draw < wBack + wCommon)
-            Some(common((idx % math.max(common.length, 1)).toInt))
-          else if (far.nonEmpty) Some(far((idx % far.length).toInt))
-          else None // element_at past an empty class -> null -> walk stops
-        }
-      }
-    }
+    localWalks(spark, adj, nodes, nWalks, walkLen, biasedStep(p, q, seed))
   }
 
   // ---- alias-table kernel (extreme-scale biased walks) ----------------

@@ -13,11 +13,13 @@ import org.apache.spark.sql.functions._
   * replica + average cycle that cost ~30 s on the headline graph — 88%
   * of a node2vec fold. Two paths share one training kernel here:
   *
-  *  - [[fit]] (driver-local): walk corpora are tiny relative to their
-  *    training cost (the headline corpus is ~10M ints ≈ 80 MB), so
-  *    below [[DeepWalkRecommender]]'s size gate the sentences are
-  *    collected once and trained shared-memory Hogwild on the driver —
-  *    the gensim plan shape, with walk GENERATION still distributed.
+  *  - [[fitLocal]] / [[fit]] (driver-local): walk corpora are tiny
+  *    relative to their training cost (the headline corpus is ~10M ints
+  *    ≈ 80 MB), so below [[DeepWalkRecommender]]'s size gate the
+  *    sentences are trained shared-memory Hogwild on the driver — the
+  *    gensim plan shape. The recommender's driver regime generates the
+  *    walks on the driver too; [[fit]] collects a Spark corpus (the
+  *    front door Item2Vec uses).
   *  - [[fitDistributed]]: the unbounded-corpus path — sentences stay an
   *    RDD; each epoch broadcasts the model, trains a replica per
   *    partition, and parameter-averages the replicas (the same
@@ -36,11 +38,14 @@ import org.apache.spark.sql.functions._
   * string hashing anywhere.
   *
   * Determinism: with `threads = 1` [[fitLocal]] is bit-exact for a
-  * fixed seed (specs pin this); more threads Hogwild-race by design (as
-  * gensim with workers > 1), and the distributed path's tree-reduce
-  * averaging order is scheduler-dependent. Embedding VALUES are
-  * seed-sensitive everywhere (SURVEY §7), so q40/q41 stay rows-only
-  * regardless.
+  * fixed seed and sentence order (specs pin this); more threads
+  * Hogwild-race by design (as gensim with workers > 1), and the
+  * distributed path's tree-reduce averaging order is
+  * scheduler-dependent. [[DeepWalkRecommender]]'s driver regime calls
+  * [[fitLocal]] on walks it generates in (start, walk_idx) order, so
+  * `pin_order` is implied there: an unpinned single-thread run is as
+  * deterministic as a pinned one. Embedding VALUES are seed-sensitive
+  * everywhere (SURVEY §7), so q40/q41 stay rows-only regardless.
   */
 object SkipGram {
 

@@ -180,4 +180,33 @@ class DatasetsSpec extends AnyFunSuite {
     assert(enriched.getSeq[String](enriched.fieldIndex("producer")) == Seq("P1", "P2"))
     assert(enriched.getAs[String]("abstract") == "A 1995 film")
   }
+
+  test("map_URIs queries each item once, and its report counts match map.csv") {
+    val in = dir("dmi")
+    val out = dir("dmo")
+    val genres = Seq.fill(19)("0").mkString("|")
+    write(in, "u.item", Seq("Toy Story (1995)", "Heat (1995)", "Babe (1995)").zipWithIndex
+      .map { case (t, i) => s"${i + 1}|$t|01-Jan-1995|||$genres\n" }.mkString, "ISO-8859-1")
+    val hit =
+      """{"results":{"bindings":[{"film":{"value":"http://dbpedia.org/resource/Toy_Story"}}]}}"""
+    val miss = """{"results":{"bindings":[]}}"""
+    MapQueryCount.calls.set(0)
+    val report = DataIntegration.run(spark, "ml-100k", in.toString, out.toString,
+      convertItem = true, mapUris = true,
+      transport = (_, q, _) => {
+        MapQueryCount.calls.incrementAndGet()
+        if (q.contains("Toy")) hit else miss
+      })
+    val rep = report.get.collect().head // a caller reading the report
+    assert(MapQueryCount.calls.get == 3, "one SPARQL query per item, whoever reads the result")
+    val file = graft.schema.TypedCsv.read(spark, s"$out/map.csv")
+    assert(rep.getLong(0) == file.count() && rep.getLong(0) == 3L)
+    assert(rep.getLong(1) == file.filter(org.apache.spark.sql.functions.col("URI").isNotNull).count())
+    assert(rep.getLong(1) == 1L)
+  }
+}
+
+/** Counts transport calls across the local executor threads. */
+object MapQueryCount {
+  val calls = new java.util.concurrent.atomic.AtomicInteger()
 }

@@ -102,4 +102,37 @@ class ExperimentRegistrySpec extends AnyFunSuite {
     assert(report.count(_.getDouble(1) > 0.0) >= 8,
       s"too few models with nonzero MAP: ${report.map(r => r.getString(0) -> r.getDouble(1)).mkString(", ")}")
   }
+
+  test("each fold phase's jobs carry a '<model> fold <i>: <phase>' description") {
+    val tmp = java.nio.file.Files.createTempDirectory("job_labels")
+    graft.util.Scratch.deleteOnExit(tmp)
+    val rows = for (u <- 1 to 20; i <- 1 to 10 if (u + i) % 3 != 0)
+      yield (u.toString, i.toString, ((u * i) % 5 + 1).toDouble)
+    graft.schema.TypedCsv.write(rows.toDF("user_id", "item_id", "rating"), s"$tmp/rating.csv")
+    java.nio.file.Files.writeString(java.nio.file.Path.of(s"$tmp/exp.yml"),
+      s"""experiment:
+         |  dataset: {ratings: $tmp/rating.csv}
+         |  split:
+         |    seed: 42
+         |    test: {method: random_by_ratio, p: 0.25, level: user}
+         |  models:
+         |    - {name: popularity, parameters: {}}
+         |    - {name: transE, parameters: {embedding_dim: 4, epochs: 1, seed: 42}}
+         |  evaluation: {k: 3, relevance_threshold: 3, metrics: [MAP]}
+         |""".stripMargin)
+    val sc = spark.sparkContext
+    var after: String = null
+    val labels = JobWatch.descriptions(spark) {
+      sc.setJobDescription("outer")
+      graft.cli.Experiment.run(spark, s"$tmp/exp.yml")
+      after = sc.getLocalProperty("spark.job.description")
+    }
+    assert(after == "outer", "the caller's job description was not restored")
+    for (m <- Seq("popularity", "transE"); phase <- Seq("recommend", "eval"))
+      assert(labels.contains(s"$m fold 1: $phase"), s"no job labelled '$m fold 1: $phase' in $labels")
+    assert(labels.contains("transE fold 1: train"), s"no transE train job in $labels")
+    // jobs outside the fold loop keep the caller's description
+    assert(labels.forall(l => l == "outer" || l.matches("(popularity|transE) fold 1: (train|recommend|eval)")),
+      s"unexpected job labels: ${labels.distinct}")
+  }
 }
