@@ -7,7 +7,7 @@ object Bench {
     // JVM/JIT + parquet-footer warmup so the first timed query doesn't
     // carry one-time session costs
     spark.range(1000000).selectExpr("sum(id)").collect()
-    SparkEntry.queries.get("q01_pricing_summary").foreach(fn => fn(spark, sfDir).count())
+    graft.queries.Registry.all.head(spark, sfDir).count() // the first query in bench order
     // model-loop JIT warmup: the KGE/SGNS SGD inner loops need thousands
     // of spins before C2 compiles them — a one-shot cold fold measures
     // ~2× CPU in interpreted/C1 code (38.6 s cold vs 16.5 s steady-state
@@ -113,13 +113,15 @@ object Bench {
             .filter(length(col("w")) > 0), "w", m = 30).count()
         spark.catalog.clearCache()
       }
-      // itemKNN-chain family (q123/q133/q137/q138/q139/q142) + LPA
-      // (q126): ~20 generated stages across seven timed queries, all
-      // sharing the chain. Rather than hand-replicating each pipeline
-      // (drift risk when parameters change), write a 50-user slice of
-      // the base TABLES and run the timed query functions themselves
-      // on it — same constants inlined into the same generated classes,
-      // scan stages included. Results discarded.
+      // The queries marked `warm` in the registry (the itemKNN chain,
+      // LPA, the ER blocking + scoring chain, the KG link-analysis
+      // family, ...) compile generated stages no other warm-up compiles
+      // (measured cold vs warm at sf0.1: the ER candidate count 20.1 s
+      // vs 3.9 s, q151 16.4 s vs 6.0 s). Rather than hand-replicating
+      // each pipeline (drift risk when parameters change), write a
+      // 50-user slice of the base TABLES and run the timed query
+      // functions themselves on it — same constants inlined into the
+      // same generated classes, scan stages included. Results discarded.
       locally {
         val wdir = graft.util.Scratch.deleteOnExit(java.nio.file.Files.createTempDirectory("graft_warmtbl"))
         val ord = Tables.t(spark, sfDir, "orders").filter(col("o_custkey") < 50)
@@ -136,27 +138,7 @@ object Bench {
         // same curation/line-dedup/budget/pack stages
         Tables.t(spark, sfDir, "documents").filter(col("doc_id") < 120)
           .write.mode("overwrite").parquet(s"$wdir/documents.parquet")
-        Seq("q123_itemknn_recs", "q126_lpa_communities", "q133_rrf_fusion",
-          "q137_rec_coverage", "q138_novelty_ild", "q139_mmr_diversify",
-          "q142_kfold_knn_eval",
-          // ER chain (q200/q202): the blocking-join + scoring stages
-          // compile ~20 s of one-time generated classes (ErMicro:
-          // candidates count 20.1 s cold vs 3.9 s warm on identical
-          // sf0.1 data) — replay on the 500-part slice
-          "q200_entity_resolution", "q202_er_unique_assign",
-          // r14 additions, same rationale (measured cold-vs-warm at
-          // sf0.1: q151 16.4 s cold vs 6.0 s steady-state — the
-          // userKNN double-cap windows and user-pair join are distinct
-          // generated stages no other warmed query compiles; q213's
-          // md5 replica ladder and q145's h-index round likewise)
-          "q108_pipeline_e2e", "q145_coreness", "q151_userknn_recs",
-          "q213_poisson_bootstrap",
-          // KG link-analysis family: the shared triple assembly +
-          // dictionary-encode + edge-cache build stages are NOT part
-          // of the 50-user PageRank/Hits warmups above (those run on
-          // plain rating edges) — replay the full queries on the slice
-          "q116_pagerank", "q122_personalized_pagerank", "q125_hits")
-          .foreach(n => SparkEntry.queries(n)(spark, wdir.toString).count())
+        graft.queries.Registry.all.filter(_.warm).foreach(q => q(spark, wdir.toString).count())
         // q219 reads embeddings (not sliced into wdir): replay the grid
         // DBSCAN on a 50-vector slice with the timed parameterization —
         // constants inline into the generated stage source
@@ -219,9 +201,8 @@ object Bench {
         }
         spark.sparkContext.setJobDescription(null)
         val rec = (name, (System.nanoTime() - t0) / 1e9, (cpuNanos - c0) / 1e9, gcMs - g0)
-        // UNTIMED post-query hygiene (r15, guide §5): the timed window
-        // above is byte-identical to r14. (a) drop family memos whose
-        // last consumer just ran; (b) a full GC so the ContextCleaner
+        // UNTIMED post-query hygiene (guide §5): (a) release the memos
+        // whose last declarer just ran; (b) a full GC so the ContextCleaner
         // reclaims the finished query's now-unreachable localCheckpoint
         // and persist blocks — without it they accumulate for the whole
         // 222-query draw (r14 measured the resident-block tax directly:
@@ -229,10 +210,8 @@ object Bench {
         // 31.8 to 8.4 s) and the suite's late queries run against a
         // loaded old gen. Results still compute from parquet every
         // draw — nothing here survives to the next query's plan.
-        SparkEntry.releaseFamilyMemosAfter(name, spark)
-        // SPARK_GRAFT_GC_SWEEP=0 disables the per-query full GC (A/B
-        // hook; the memo release above always runs)
-        if (!sys.env.get("SPARK_GRAFT_GC_SWEEP").contains("0")) System.gc()
+        graft.queries.Registry.releaseAfter(name, spark)
+        System.gc()
         rec
       }
     val qs = results.map { case (k, v, _, _) => s"\"" + k + "\":" + v }

@@ -78,6 +78,13 @@ object TokenLangStats {
     m
   }
 
+  /** The longest stopword in UTF-8 bytes: a longer token cannot be in
+    * [[langMask]], so [[compute]] skips its map probe. */
+  private[graft] val maxStopwordBytes: Int = {
+    import scala.jdk.CollectionConverters._
+    langMask.keySet.asScala.map(_.numBytes).max
+  }
+
   /** Called from both interpreted eval and generated code. */
   def compute(text: UTF8String): InternalRow = {
     val bytes = text.getBytes
@@ -97,8 +104,8 @@ object TokenLangStats {
           var p = start
           while (p < j) { if ((bytes(p) & 0xC0) != 0x80) chars += 1; p += 1 }
           sumlen += chars
-          // stopwords are 1-8 ASCII chars; skip the map probe otherwise
-          if (len <= 8) {
+          // no stopword is longer: skip the map probe
+          if (len <= maxStopwordBytes) {
             val mask = langMask.get(UTF8String.fromBytes(bytes, start, len))
             if (mask != null) {
               val m = mask.intValue()

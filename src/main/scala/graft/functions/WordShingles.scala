@@ -40,6 +40,16 @@ import org.apache.spark.unsafe.types.UTF8String
   * The caller passes `lower(col)` as the child, so lowercasing stays
   * Spark's own. doGenCode is a single static call — the surrounding
   * stage stays whole-stage-codegen'd.
+  *
+  * Aliasing contract: every gram of a row is a view into ONE byte array
+  * holding the whole document (the input's own array when it owns one
+  * exactly, else a copy), and a gram keeps that array alive. This is
+  * free while the consumer copies each gram out right away — `explode`
+  * and any UnsafeProjection do, which is how every caller here uses it.
+  * A consumer that keeps the array column itself (collect_list over it,
+  * caching it, sorting on it) would retain one whole document per
+  * retained gram, O(document size × grams) memory: explode first, or
+  * copy the grams (`UTF8String.clone`).
   */
 case class WordShingles(child: Expression, k: Int, distinct: Boolean,
                         stride: Int = 1, partialTail: Boolean = false)

@@ -81,15 +81,15 @@ object PageRank {
     * iterates over. Ranks depend only on graph STRUCTURE (the internal
     * ids cancel out of the integer arithmetic, and labels join back at
     * the end), so one encode can serve [[run]] AND [[personalized]]
-    * over the same edge set — q116/q122 share one via SparkEntry's
+    * over the same edge set — q116/q122 share one via the kgEncoded
     * memo instead of re-running the triple-assembly joins and the
     * dictionary build per query (guide §2.4: remove repeated subtrees).
     * Callers own the lifecycle: [[EncodedGraph.release]] when done. */
   final case class EncodedGraph(nid: DataFrame, nNodes: Long,
                                 eo: DataFrame, small: Boolean) {
     def release(): Unit = eo.unpersist(blocking = false)
-    /** Re-pin the eo cache after a session-wide clearCache (the memoDf
-      * doctrine); nid is a localCheckpoint, which clearCache cannot
+    /** Re-pin the eo cache after a session-wide clearCache ([[graft.util.Memo]]
+      * re-pins on a hit); nid is a localCheckpoint, which clearCache cannot
       * drop. */
     def repin(): Unit =
       if (eo.storageLevel == StorageLevel.NONE) {

@@ -354,17 +354,6 @@ class KgeTrainer(val model: String, val dim: Int, val epochs: Int, val lr: Doubl
     }
   }
 
-  /** triples: (h, r, t) dense int ids. Returns entity embeddings
-    * (nEntities × entityFloats) and relation embeddings. One job
-    * collects the triples; [[fitLocal]] trains on the driver. */
-  def fit(spark: SparkSession, triples: DataFrame, nEntities: Int, nRelations: Int):
-      (Array[Array[Float]], Array[Array[Float]]) = {
-    val rows = triples.select(col("h").cast("int"), col("r").cast("int"), col("t").cast("int"))
-      .collect()
-    fitLocal(rows.map(_.getInt(0)), rows.map(_.getInt(1)), rows.map(_.getInt(2)),
-      nEntities, nRelations, spark.sparkContext.defaultParallelism)
-  }
-
   /** Driver-resident training over triples `(h(i), r(i), t(i))`.
     *
     * The reference's internal 95/5/0 split (transE/model.py:163-174)
@@ -469,29 +458,6 @@ class KgeTrainer(val model: String, val dim: Int, val epochs: Int, val lr: Doubl
       (if (model == "tuckER") dim.toLong * dim * dim else 0L)
   }
 
-  /** Embedding tables as DataFrames `(id: int, vec: array<float>)`,
-    * choosing the physical strategy by parameter count: below
-    * `driverMaxParams` total floats the driver-resident [[fit]] runs
-    * (one job collects the triples, no job per epoch); above it,
-    * [[fitDistributed]] keeps every parameter row distributed and the
-    * driver never holds an embedding. */
-  def fitEmb(spark: SparkSession, triples: DataFrame, nEntities: Int, nRelations: Int,
-             driverMaxParams: Long = 50000000L): (DataFrame, DataFrame) = {
-    if (nParams(nEntities, nRelations) <= driverMaxParams) {
-      val (ent, rel) = fit(spark, triples, nEntities, nRelations)
-      def wrap(arr: Array[Array[Float]]): DataFrame = {
-        import org.apache.spark.sql.types._
-        val rows = spark.sparkContext
-          .parallelize(arr.toIndexedSeq.zipWithIndex, math.max(1, spark.sparkContext.defaultParallelism))
-          .map { case (v, id) => org.apache.spark.sql.Row(id, v.toIndexedSeq) }
-        spark.createDataFrame(rows, StructType(Seq(
-          StructField("id", IntegerType, nullable = false),
-          StructField("vec", ArrayType(FloatType, containsNull = false)))))
-      }
-      (wrap(ent), wrap(rel))
-    } else fitDistributed(spark, triples, nEntities, nRelations)
-  }
-
   /** Distributed-path parameter init: per-element hash, uniform in
     * [-bound, bound], reproducible under any partitioning (a retried
     * task recomputes identical numbers). TEST SEAM paired with
@@ -553,7 +519,7 @@ class KgeTrainer(val model: String, val dim: Int, val epochs: Int, val lr: Doubl
     *      update with the same step scaling and per-component clip;
     *   5. localCheckpoint to truncate the iterative lineage.
     *
-    * RNG deviations from [[fit]] (DEVIATIONS #5 covers RNG freedom):
+    * RNG deviations from [[fitLocal]] (DEVIATIONS #5 covers RNG freedom):
     * init and corruption use per-element seeded hashes instead of a
     * sequential driver RNG — order-free, so a retried or re-partitioned
     * epoch computes identical numbers. tuckER's d³ core stays a single
@@ -571,7 +537,7 @@ class KgeTrainer(val model: String, val dim: Int, val epochs: Int, val lr: Doubl
     var rel = relInit.persist()
     ent.count(); rel.count()
 
-    // the reference's internal 95/5 split, same predicate as fit()
+    // the reference's internal 95/5 split, same predicate as fitLocal()
     val data = triples.select(col("h").cast("int"), col("r").cast("int"), col("t").cast("int"))
       .filter(pmod(xxhash64(col("h"), col("r"), col("t"), lit(seed)), lit(10000L))
         < lit((trainFraction * 10000).toLong))

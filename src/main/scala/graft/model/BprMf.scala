@@ -32,7 +32,8 @@ import scala.util.hashing.MurmurHash3
   *    left-join-updates the tables with localCheckpoint lineage
   *    truncation. Init/negatives use order-free per-element hashes
   *    (retry-safe) — the RNG deviation DEVIATIONS #5 already covers.
-  *  - [[fitEmb]] dispatches on total parameter count, like KgeTrainer.
+  *  - [[fitEmb]] dispatches on total parameter count, like the KGE
+  *    regime gate in [[graft.kge.KgeRecommender]].
   *
   * Negative sampling collisions (j happens to be a positive, or j = i)
   * are kept, not resampled — a pure function of (u, i, epoch) is what

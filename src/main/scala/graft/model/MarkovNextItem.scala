@@ -42,7 +42,8 @@ object MarkovNextItem {
   /** [[recommend]] over a PREBUILT transition table — the shared-
     * materialization entry point (r15): q155/q157/q172 all need the
     * same `transitions(ratings, 2, 5)` and previously each rebuilt the
-    * full sorted-timeline aggregate; SparkEntry memoizes one. */
+    * full sorted-timeline aggregate; the query registry memoizes one
+    * (`graft.queries.Memos.markovT1`). */
   def recommendFrom(ratings: DataFrame, trans: DataFrame, k: Int): DataFrame = {
     val last = TopK.perGroup(
       ratings.select("user_id", "item_id", "ts"),

@@ -399,39 +399,7 @@ object Dedup {
           .otherwise(0L)).as(s"v$l"))
       val vecs = wc.join(broadcast(vIdx), Seq("w"))
         .groupBy("doc_id").agg(packCols.head, packCols.tail: _*)
-      def side(v: DataFrame, idCol: String, pre: String) =
-        v.select((col("doc_id").as(idCol) +:
-          (0 until nLongs).map(l => col(s"v$l").as(s"$pre$l"))): _*)
-      val niExpr = (0 until nLongs).flatMap(l => (0 until 16).map(k =>
-        s"least((a$l >> ${4 * k}) & 15L, (b$l >> ${4 * k}) & 15L)"))
-        .mkString(" + ")
-      // PUSHDOWN BARRIER between ni and its consumers: Catalyst
-      // substitutes derived columns into downstream predicates, so the
-      // wjaccard filter + round projection would inline the ~(5·V)-node
-      // ni expression THREE times — the generated filter method then
-      // blows past the JIT's huge-method limit and runs interpreted
-      // (micro-probe: 24.2 s for filter+round vs 0.9 s with ni
-      // evaluated once; perf/WeightedMinhashMicro). r14 pinned ni with
-      // a 12.3M-row MEMORY_AND_DISK persist — correct, but building
-      // that columnar cache cost ~3× the verification compute itself
-      // (perf/WeightedMinhashPhases r15: verify 18.1 s to a noop sink
-      // vs 55.7 s through the persist + checkpoint). The curationKept
-      // trick pins ni for FREE: a trivially-true nondeterministic
-      // guard keeps ni in its own projection — CollapseProject and
-      // filter pushdown cannot cross a nondeterministic expression —
-      // so ni evaluates exactly once per pair with NO materialization,
-      // and the checkpoint below holds only the threshold survivors.
-      val denseOut = pairs
-        .join(side(vecs, "doc_a", "a"), Seq("doc_a"))
-        .join(side(vecs, "doc_b", "b"), Seq("doc_b"))
-        .withColumn("ni",
-          when(monotonically_increasing_id() >= 0, expr(niExpr)).otherwise(lit(-1L)))
-        .select("doc_a", "doc_b", "na", "nb", "ni")
-        .withColumn("wjaccard", col("ni") * 1.0 / (col("na") + col("nb") - col("ni")))
-        .filter(col("wjaccard") >= threshold)
-        .select(col("doc_a"), col("doc_b"), round(col("wjaccard"), 6).as("wjaccard"))
-        .localCheckpoint(true)
-      denseOut
+      weightedDenseVerify(pairs, vecs, nLongs, threshold).localCheckpoint(true)
     } else {
       pairs
         .join(wc.select(col("doc_id").as("doc_a"), col("w"), col("c").as("ca")), Seq("doc_a"))
@@ -445,6 +413,47 @@ object Dedup {
     }
     wc.unpersist(blocking = false)
     out
+  }
+
+  /** The dense verification plan of [[weightedMinhashLsh]], before its
+    * checkpoint: candidate `pairs` (doc_a, doc_b, na, nb) joined to the
+    * nibble-packed count vectors `vecs` (doc_id, v0..v{nLongs-1}) on both
+    * sides, ni = Σ_nibbles least(a, b), then (doc_a, doc_b, wjaccard ≥
+    * threshold, round-6). PlanSpec pins that ni evaluates once, in its
+    * own projection. */
+  private[graft] def weightedDenseVerify(pairs: DataFrame, vecs: DataFrame, nLongs: Int,
+                                         threshold: Double): DataFrame = {
+    def side(v: DataFrame, idCol: String, pre: String) =
+      v.select((col("doc_id").as(idCol) +:
+        (0 until nLongs).map(l => col(s"v$l").as(s"$pre$l"))): _*)
+    val niExpr = (0 until nLongs).flatMap(l => (0 until 16).map(k =>
+      s"least((a$l >> ${4 * k}) & 15L, (b$l >> ${4 * k}) & 15L)"))
+      .mkString(" + ")
+    // PUSHDOWN BARRIER between ni and its consumers: Catalyst
+    // substitutes derived columns into downstream predicates, so the
+    // wjaccard filter + round projection would inline the ~(5·V)-node
+    // ni expression THREE times — the generated filter method then
+    // blows past the JIT's huge-method limit and runs interpreted
+    // (micro-probe: 24.2 s for filter+round vs 0.9 s with ni
+    // evaluated once). r14 pinned ni with
+    // a 12.3M-row MEMORY_AND_DISK persist — correct, but building
+    // that columnar cache cost ~3× the verification compute itself
+    // (r15: verify 18.1 s to a noop sink
+    // vs 55.7 s through the persist + checkpoint). The curationKept
+    // trick pins ni for FREE: a trivially-true nondeterministic
+    // guard keeps ni in its own projection — CollapseProject and
+    // filter pushdown cannot cross a nondeterministic expression —
+    // so ni evaluates exactly once per pair with NO materialization,
+    // and the caller's checkpoint holds only the threshold survivors.
+    pairs
+      .join(side(vecs, "doc_a", "a"), Seq("doc_a"))
+      .join(side(vecs, "doc_b", "b"), Seq("doc_b"))
+      .withColumn("ni",
+        when(monotonically_increasing_id() >= 0, expr(niExpr)).otherwise(lit(-1L)))
+      .select("doc_a", "doc_b", "na", "nb", "ni")
+      .withColumn("wjaccard", col("ni") * 1.0 / (col("na") + col("nb") - col("ni")))
+      .filter(col("wjaccard") >= threshold)
+      .select(col("doc_a"), col("doc_b"), round(col("wjaccard"), 6).as("wjaccard"))
   }
 
   /** [[weightedMinhashLsh]] dense-verification gate: vocabularies at or

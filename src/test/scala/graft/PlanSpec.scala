@@ -289,4 +289,30 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("BroadcastHashJoin"), "q222 class-marginal join should broadcast")
     assert(!p.contains("CartesianProduct"), "q222 unexpected cartesian (1-row crossJoin should broadcast)")
   }
+
+  test("weighted minhash (q210): ni evaluates once, in its own Project, behind the nondeterministic barrier") {
+    import org.apache.spark.sql.catalyst.expressions.{Expression, Least}
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    val sp = spark
+    import sp.implicits._
+    val nLongs = 2
+    val pairs = Seq((1L, 2L, 5L, 6L)).toDF("doc_a", "doc_b", "na", "nb")
+    val vecs = Seq((1L, 0x21L, 3L), (2L, 0x12L, 1L)).toDF("doc_id", "v0", "v1")
+    val df = graft.text.Dedup.weightedDenseVerify(pairs, vecs, nLongs, threshold = 0.1)
+    def leasts(e: Expression): Int = e.collect { case l: Least => l }.size
+    // every node of the optimized plan that holds any part of niExpr
+    val holders = df.queryExecution.optimizedPlan
+      .collect { case n => n -> n.expressions.map(leasts).sum }
+      .filter(_._2 > 0)
+    assert(holders.size == 1,
+      s"niExpr spread over ${holders.size} plan nodes: ${holders.map(_._1.nodeName)}")
+    val (node, n) = holders.head
+    assert(node.isInstanceOf[Project], s"niExpr sits in a ${node.nodeName}, not a Project")
+    assert(n == 16 * nLongs, s"niExpr's $n least() terms: inlined ${n / (16.0 * nLongs)} times")
+    assert(node.expressions.exists(!_.deterministic),
+      "the Project holding ni lost its nondeterministic guard")
+    // ni = min(1,2) + min(2,1) + min(3,1) = 3; 3 / (5 + 6 - 3)
+    assert(df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq ==
+      Seq((1L, 2L, 0.375)))
+  }
 }

@@ -36,6 +36,18 @@ class TokenLangStatsSpec extends AnyFunSuite {
     }
   }
 
+  test("the stopword probe bound is the longest stopword in UTF-8 bytes") {
+    val all = TextOps.EnStop ++ TextOps.DeStop ++ TextOps.FrStop ++ TextOps.EsStop
+    val longest = all.map(_.getBytes("UTF-8").length).max
+    assert(TokenLangStats.maxStopwordBytes == longest)
+    assert(longest == 5) // "nicht"
+    // a stopword of exactly the bound still counts; one byte past it is
+    // skipped, not probed
+    val st = Seq("nicht nichts").toDF("text")
+      .select(TokenLangStats.of(col("text")).as("st")).select("st.n", "st.de").head()
+    assert(st.getInt(0) == 2 && st.getInt(1) == 1)
+  }
+
   test("WordShingles.lines == transform+slice+concat_ws word grouping") {
     for (k <- Seq(1, 3, 5)) {
       val df = texts.toDF("text")

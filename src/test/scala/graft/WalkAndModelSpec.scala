@@ -10,6 +10,15 @@ class WalkAndModelSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
 
+  /** [[KgeTrainer.fitLocal]] over the collected rows of an (h, r, t)
+    * frame, one chunk per core. */
+  private def fitRows(tr: KgeTrainer, triples: org.apache.spark.sql.DataFrame,
+                      nEntities: Int, nRelations: Int) = {
+    val rows = triples.collect()
+    tr.fitLocal(rows.map(_.getInt(0)), rows.map(_.getInt(1)), rows.map(_.getInt(2)),
+      nEntities, nRelations, spark.sparkContext.defaultParallelism)
+  }
+
   test("model registry resolves every reference model2class name verbatim") {
     // the exact keys of model2class.py:1-42 — a reference config's
     // `name:` must resolve without edits (incl. 'rESCAL' spelling)
@@ -179,7 +188,7 @@ class WalkAndModelSpec extends AnyFunSuite {
     for (model <- Seq("transE", "transH", "transR", "transD", "distMult",
       "complEx", "rotatE", "rescal", "tuckER")) {
       val tr = new KgeTrainer(model, 8, 30, 0.1, 1.0, 42L, trainFraction = 1.0)
-      val (ent, rel) = tr.fit(spark, triples, 14, 1)
+      val (ent, rel) = fitRows(tr, triples, 14, 1)
       val d = 8
       val core = if (model == "tuckER") rel(rel.length - 1) else null
       val posScores = for (u <- 0 to 3; i <- 0 to 1)
@@ -194,7 +203,7 @@ class WalkAndModelSpec extends AnyFunSuite {
     // well on the translational trio — the KgeRecommender default path
     for (model <- Seq("transE", "transH", "transR")) {
       val tr = new KgeTrainer(model, 8, 30, 0.1, 1.0, 42L, trainFraction = 1.0, fctNorm = 1)
-      val (ent, rel) = tr.fit(spark, triples, 14, 1)
+      val (ent, rel) = fitRows(tr, triples, 14, 1)
       val d = 8
       val posScores = for (u <- 0 to 3; i <- 0 to 1)
         yield KgeModels.score(model, d, ent(u), rel(0), ent(10 + (u / 2) * 2 + i), null, 1)
@@ -233,21 +242,21 @@ class WalkAndModelSpec extends AnyFunSuite {
     def emb(parts: Int): Seq[Seq[Float]] = {
       val tr = new KgeTrainer("transE", 8, 3, 0.1, 1.0, 42L,
         trainFraction = 1.0, fctNorm = 1, pinOrder = true)
-      val (ent, _) = tr.fit(spark, triples.repartition(parts), 13, 1)
+      val (ent, _) = fitRows(tr, triples.repartition(parts), 13, 1)
       ent.toSeq.map(_.toSeq)
     }
     assert(emb(1) == emb(8))
   }
 
   test("distributed KGE trainer separates positives from corrupted (scale path)") {
-    // same bipartite 2-block graph; fitEmb with driverMaxParams=0 forces
-    // the fully distributed (DataFrame-parameter) path
+    // same bipartite 2-block graph through the fully distributed
+    // (DataFrame-parameter) trainer
     val triples = (for {
       u <- 0 to 3; i <- 0 to 1
     } yield (u, 0, 10 + (u / 2) * 2 + i)).toDF("h", "r", "t")
     for (model <- Seq("transE", "distMult", "tuckER")) { // one per gradient family
       val tr = new KgeTrainer(model, 8, 30, 0.1, 1.0, 42L, trainFraction = 1.0)
-      val (entDf, relDf) = tr.fitEmb(spark, triples, 14, 1, driverMaxParams = 0L)
+      val (entDf, relDf) = tr.fitDistributed(spark, triples, 14, 1)
       val ent = entDf.collect().map(r => r.getInt(0) -> r.getSeq[Float](1).toArray).toMap
       val rel = relDf.collect().map(r => r.getInt(0) -> r.getSeq[Float](1).toArray).toMap
       val d = 8
@@ -324,7 +333,7 @@ class WalkAndModelSpec extends AnyFunSuite {
         yield (u, 0, 6 + (u + i) % 4)).toDF("h", "r", "t")
       val nEnt = 10; val nRel = 1
       val tr1 = new PinnedTrainer
-      val (entArr, relArr) = tr1.fit(spark, triples, nEnt, nRel)
+      val (entArr, relArr) = fitRows(tr1, triples, nEnt, nRel)
       val (entDf, relDf) = new PinnedTrainer().fitDistributed(spark, triples, nEnt, nRel)
       def toMap(df: org.apache.spark.sql.DataFrame) =
         df.collect().map(r => r.getInt(0) -> r.getSeq[Float](1).toArray).toMap
@@ -343,15 +352,6 @@ class WalkAndModelSpec extends AnyFunSuite {
       entArr.indices.foreach(id => close(entArr(id), entD(id), s"ent[$id]"))
       relArr.indices.foreach(id => close(relArr(id), relD(id), s"rel[$id]"))
     }
-  }
-
-  test("fitEmb driver path wraps the same embeddings the arrays hold") {
-    val triples = Seq((0, 0, 2), (1, 0, 3)).toDF("h", "r", "t")
-    val tr = new KgeTrainer("transE", 4, 3, 0.1, 1.0, 42L, trainFraction = 1.0)
-    val (entArr, _) = tr.fit(spark, triples, 4, 1)
-    val (entDf, _) = tr.fitEmb(spark, triples, 4, 1) // small -> driver path
-    val fromDf = entDf.collect().map(r => r.getInt(0) -> r.getSeq[Float](1).toSeq).toMap
-    assert((0 until 4).forall(id => fromDf(id) == entArr(id).toSeq))
   }
 
   test("KGE gradients are finite-difference consistent (all 9 models)") {
