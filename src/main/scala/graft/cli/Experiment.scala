@@ -8,6 +8,7 @@ import graft.schema.TypedCsv
 import graft.split.EdgeSplits
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField}
 import org.yaml.snakeyaml.Yaml
 import scala.jdk.CollectionConverters._
 
@@ -295,24 +296,24 @@ object Experiment {
       ((train, testDf), foldIdx) <- foldsWithVal.zipWithIndex
     } yield {
       val t0 = System.nanoTime()
+      val phaseSecs = scala.collection.mutable.ArrayBuffer.empty[Double]
       // every Spark job of a phase is labelled "<model> fold <i>: <phase>";
-      // the caller's own job description comes back afterwards
+      // the caller's own job description comes back afterwards. The
+      // phase's seconds go to the report's fold-<i>_<phase>_s column.
       def phase[T](name: String)(body: => T): T = {
         val previous = spark.sparkContext.getLocalProperty("spark.job.description")
         spark.sparkContext.setJobDescription(s"$modelName fold ${foldIdx + 1}: $name")
-        try body finally spark.sparkContext.setJobDescription(previous)
+        val p0 = System.nanoTime()
+        try body finally {
+          phaseSecs += (System.nanoTime() - p0) / 1e9
+          spark.sparkContext.setJobDescription(previous)
+        }
       }
       val rec = phase("train")(Recommenders.registry(modelName)(cfgMap)
         .train(spark, train, propertyEdges, bundle.socialEdges))
-      // materialize once: the recommendation lineage ends in a wide
-      // users×candidates ranking window — recomputing it per metric
-      // doubles the most expensive stage of the whole experiment (the
-      // ranking itself runs inside the eval job)
-      val recs = phase("recommend")(
-        rec.recommend(k).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      // one fused job computes both means (Metrics.meansAtK) — the
-      // sequential per-metric loop cost one full pass over the cached
-      // ranking per metric
+      // recs is read once, by meansAtK: a lazy Spark ranking runs inside
+      // the eval phase, a driver-built local table costs no job at all
+      val recs = phase("recommend")(rec.recommend(k))
       metricNames.foreach(mn => require(mn == "MAP" || mn == "nDCG",
         s"Metric $mn is not implemented."))
       val mm = phase("eval")(Metrics.meansAtK(recs, testDf, k, relThr).first())
@@ -320,14 +321,13 @@ object Experiment {
         case "MAP" => "MAP" -> mm.getDouble(mm.fieldIndex("map"))
         case "nDCG" => "nDCG" -> mm.getDouble(mm.fieldIndex("ndcg"))
       }
-      recs.unpersist(blocking = false)
       rec.release() // per-fold embedding/vocab caches must not outlive the fold
       val secs = (System.nanoTime() - t0) / 1e9
       // report rows key on the model's verbose parameter-bearing name()
       // (experiment.py:88 `model_metrics[model.name()]`) — the config
       // `name:` alone cannot tell two parameterizations of one model
       // apart, and the reference's run1.csv relies on this distinction
-      (rec.name, foldIdx + 1, vals, secs)
+      (rec.name, foldIdx + 1, vals, secs +: phaseSecs.toSeq)
     }
 
     // the metric rows above are local Scala values — the run's shared
@@ -338,18 +338,16 @@ object Experiment {
 
     val dedupedRows = dedupLastWins(rows)
 
-    // mean±std report (experiment.py:93-106, report.py:31-63)
-    import spark.implicits._
-    val reports = metricNames.map { mn =>
-      val df = dedupedRows.map { case (model, fold, vals, _) =>
-        (model, fold, vals.toMap.apply(mn))
-      }.toDF("model", "fold", "value")
-      Reporter.foldPivot(df, folds.size, s"$mn@$k")
-    }
-    val times = dedupedRows.map { case (model, fold, _, secs) => (model, fold, secs) }
-      .toDF("model", "fold", "value")
-    val timeReport = Reporter.foldPivot(times, folds.size, "execution_time")
-    val report = (reports :+ timeReport).reduce((a, b) => a.join(b, Seq("model")))
+    // mean±std report (experiment.py:93-106, report.py:31-63): the
+    // metric and execution_time pivots side by side, then the per-phase
+    // seconds of each fold (fold-<i>_train_s, _recommend_s, _eval_s)
+    val withStats = metricNames.map(mn => s"$mn@$k") :+ "execution_time"
+    val report = Reporter.pivotTable(spark, StructField("model", StringType),
+      withStats.map(_ -> true) ++ Seq("train_s", "recommend_s", "eval_s").map(_ -> false),
+      dedupedRows.map { case (model, fold, vals, times) => (model, fold, vals.map(_._2) ++ times) },
+      folds.size)
+    val timeReport = report.select(report.columns.toSeq
+      .filter(c => c == "model" || c.contains("execution_time")).map(col): _*)
 
     for (r <- Option(sub(exp, "report")); f <- Option(str(r, "file"))) {
       // the FILE takes the reference's artifact shape (fold-major, no

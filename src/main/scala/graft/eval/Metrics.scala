@@ -1,8 +1,11 @@
 package graft.eval
 
-import org.apache.spark.sql.DataFrame
+import graft.graph.KGraph
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField, StructType}
 
 /** MAP@k and nDCG@k as distributed DataFrame aggregations, mirroring
   * `framework/evaluator/metrics/map.py` and `ndcg.py` plus the shared
@@ -120,15 +123,93 @@ object Metrics {
   def ndcgAtK(recs: DataFrame, test: DataFrame, k: Int, relevanceThreshold: Double): DataFrame =
     ndcgPerUser(recs, test, k, relevanceThreshold).agg(avg("ndcg").as("ndcg"))
 
-  /** MAP@k AND nDCG@k in ONE pass — both means ride a single join tree
-    * and one exchange over the (cached) recommendations, instead of the
-    * two separate jobs the sequential metric loop costs. Returns one row
-    * (map, ndcg). Value-identical to [[mapAtK]]/[[ndcgAtK]] (spec-pinned):
-    * the AP hit dedup (first occurrence by rank) and the un-deduped DCG
-    * graded relevance both match their standalone formulations. */
+  /** MAP@k AND nDCG@k in ONE pass. Returns one row (map, ndcg).
+    * Value-identical to [[mapAtK]]/[[ndcgAtK]] (spec-pinned): the AP hit
+    * dedup (first occurrence by rank) and the un-deduped DCG graded
+    * relevance both match their standalone formulations.
+    *
+    * When `recs` is a local table (a driver-regime fold's recommend)
+    * whose top-k rows, and the relevant test rows, are each within
+    * [[KGraph.MaxDriverEdges]] rows, the means are computed on the
+    * driver ([[driverMeans]]): recs are read where they are, the test
+    * rows come back in one bounded collect, and the result is a local
+    * table. Other inputs take the Spark plan, where both means ride a
+    * single join tree and one exchange over the recommendations; lazy
+    * recs are never collected, so their ranking runs once. */
   def meansAtK(recs: DataFrame, test: DataFrame, k: Int, relevanceThreshold: Double): DataFrame =
-    perUserAtK(recs, test, k, relevanceThreshold)
-      .agg(avg("ap").as("map"), avg("ndcg").as("ndcg"))
+    meansAtK(recs, test, k, relevanceThreshold, KGraph.MaxDriverEdges)
+
+  /** [[meansAtK]] with the driver bound `maxDriverRows`. */
+  private[graft] def meansAtK(recs: DataFrame, test: DataFrame, k: Int, relevanceThreshold: Double,
+                              maxDriverRows: Long): DataFrame =
+    driverMeans(recs, test, k, relevanceThreshold, maxDriverRows).getOrElse(
+      perUserAtK(recs, test, k, relevanceThreshold)
+        .agg(avg("ap").as("map"), avg("ndcg").as("ndcg")))
+
+  /** [[perUserAtK]]'s semantics on driver rows, averaged; None when
+    * `recs` is not a local table, the key types differ between `recs`
+    * and `test` (the Spark join would cast them) or an input is over
+    * `maxRows` rows. A rec row joins each relevant row of its (user,
+    * item); an item's first rec row by rank keeps the hit; cum_hits
+    * counts the hits at ranks up to the row's own (the window's RANGE
+    * frame); DCG sums every joined row; IDCG takes the k best relevant
+    * ratings. Users are averaged in a fixed order, so a result does not
+    * depend on partitioning. */
+  private def driverMeans(recs: DataFrame, test: DataFrame, k: Int, relevanceThreshold: Double,
+                          maxRows: Long): Option[DataFrame] = {
+    val keyTypes = Seq("user_id", "item_id").forall { c =>
+      val t = recs.schema(c).dataType
+      t == test.schema(c).dataType && Seq(StringType, IntegerType, LongType).contains(t)
+    }
+    val rankType = Seq(IntegerType, LongType).contains(recs.schema("rank").dataType)
+    val Seq(u, i, r) = Seq("user_id", "item_id", "rank").map(recs.schema.fieldIndex)
+    for {
+      rows <- Shim.localRows(recs) if keyTypes && rankType
+      top = rows.filter(row => !row.isNullAt(r) && row.getAs[Number](r).longValue <= k)
+        .map(row => Row(row.get(u), row.get(i), row.get(r)))
+      if top.size <= maxRows
+      rel <- KGraph.collectRows(relevant(test, relevanceThreshold)
+        .select(col("user_id"), col("item_id"), col("rating").cast("double")), maxRows)
+    } yield {
+      // null users join nothing; (user, ap, ndcg) per qualifying user
+      val relByUser = rel.toSeq.filter(!_.isNullAt(0)).groupBy(_.get(0))
+      val perUser = top.filter(!_.isNullAt(0)).groupBy(_.get(0)).toSeq.flatMap { case (user, rs) =>
+        relByUser.get(user).map(rels => user.toString -> userAtK(rs, rels, k))
+      }
+      val (aps, ndcgs) = perUser.sortBy(_._1).map(_._2).unzip
+      def mean(xs: Seq[Double]): Any = if (xs.isEmpty) null else xs.sum / xs.size
+      recs.sparkSession.createDataFrame(java.util.List.of(Row(mean(aps), mean(ndcgs))),
+        StructType(Seq(StructField("map", DoubleType), StructField("ndcg", DoubleType))))
+    }
+  }
+
+  /** One user's (AP@k, nDCG@k) from its top-k (user, item, rank) rows
+    * and its relevant (user, item, rating) rows, as [[perUserAtK]]
+    * computes them. */
+  private def userAtK(recs: Seq[Row], rels: Seq[Row], k: Int): (Double, Double) = {
+    def log2(x: Double): Double = StrictMath.log(x) / StrictMath.log(2) // Spark's Log2
+    val ratingsOf = rels.filter(!_.isNullAt(1)).groupBy(_.get(1)).map { case (i, rs) => i -> rs.map(_.getDouble(2)) }
+    // (item, rank, hit, rel_rating), one row per joined relevant row
+    val joined = recs.map(r => (r.get(1), r.getAs[Number](2).longValue))
+      .sortBy { case (item, rank) => (rank, String.valueOf(item)) }
+      .flatMap { case (item, rank) =>
+        ratingsOf.get(item).fold(Seq((item, rank, 0, 0.0)))(_.map(rating => (item, rank, 1, rating)))
+      }.toIndexedSeq
+    val hitSeen = scala.collection.mutable.HashSet.empty[Any]
+    val hits = joined.map { case (item, _, hit, _) => if (hit == 1 && hitSeen.add(item)) 1L else 0L }
+    // cum_hits: the hits at ranks up to each row's own, peers included
+    val ranks = joined.map(_._2)
+    val cumHits = hits.scanLeft(0L)(_ + _).tail.toArray
+    for (j <- ranks.indices.reverse.drop(1) if ranks(j) == ranks(j + 1)) cumHits(j) = cumHits(j + 1)
+    var apSum = 0.0; var dcg = 0.0
+    joined.indices.foreach { j =>
+      apSum += (hits(j) * cumHits(j)).toDouble / ranks(j).toDouble
+      dcg += joined(j)._4 / log2(ranks(j).toDouble + 1.0)
+    }
+    val idcg = rels.map(_.getDouble(2)).sortBy(-_).take(k).zipWithIndex
+      .map { case (rating, p) => rating / log2((p + 1).toDouble + 1.0) }.sum
+    (apSum / math.min(rels.size.toLong, k.toLong).toDouble, if (idcg > 0.0) dcg / idcg else 0.0)
+  }
 
   /** Per-user AP@k AND nDCG@k in ONE pass → (user_id, ap, ndcg) — the
     * [[meansAtK]] body before its final mean. Value-identical to

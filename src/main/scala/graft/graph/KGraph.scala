@@ -134,37 +134,53 @@ object KGraph {
     * each distinct label once. */
   def collectColumns(df: DataFrame, cols: Seq[String], maxRows: Long): Option[Array[Array[String]]] = {
     val width = cols.size
-    val rows = df.select(cols.map(col): _*).rdd
-    val share = maxRows / math.max(1, rows.getNumPartitions)
-    // (rows seen, columns): the columns are null past `keep` rows, and
-    // counting stops once the partition alone is over `maxRows`
-    val scan = (keep: Long) => (it: Iterator[Row]) => {
+    collectBounded(df.select(cols.map(col): _*), maxRows) { it =>
       val interned = new java.util.HashMap[String, String]()
       val out = Array.fill(width)(scala.collection.mutable.ArrayBuffer.empty[String])
-      var n = 0L
-      while (it.hasNext && n <= maxRows) {
-        val r = it.next()
+      it.foreach { r =>
         var c = 0
-        while (n < keep && c < width) {
+        while (c < width) {
           val s = r.getString(c)
           val prev = if (s == null) null else interned.putIfAbsent(s, s)
           out(c) += (if (prev == null) s else prev)
           c += 1
         }
-        n += 1
       }
-      (n, if (n > keep) null else out.map(_.toArray))
+      out.map(_.toArray)
+    }.map(parts => Array.tabulate(width)(c => parts.flatMap(_(c)).toArray))
+  }
+
+  /** The rows of `df` on the driver, under the same bound and in the same
+    * jobs as [[collectColumns]] — or None when `df` has more than
+    * `maxRows` rows. */
+  def collectRows(df: DataFrame, maxRows: Long): Option[Array[Row]] =
+    collectBounded(df, maxRows)(_.map(r => Row.fromSeq(r.toSeq)).toArray).map(_.flatten.toArray)
+
+  /** Each partition's rows packed by `pack`, or None past `maxRows` rows
+    * in all: the bounded scan behind [[collectColumns]]. */
+  private def collectBounded[P](df: DataFrame, maxRows: Long)(pack: Iterator[Row] => P): Option[Seq[P]] = {
+    val rows = df.rdd
+    val share = maxRows / math.max(1, rows.getNumPartitions)
+    // (rows seen, packed rows): nothing is packed past `keep` rows, and
+    // counting stops once the partition alone is over `maxRows`
+    val scan = (keep: Long) => (it: Iterator[Row]) => {
+      var n = 0L
+      val packed = pack(new Iterator[Row] {
+        def hasNext: Boolean = n < keep && it.hasNext
+        def next(): Row = { n += 1; it.next() }
+      })
+      while (it.hasNext && n <= maxRows) { it.next(); n += 1 }
+      (n, if (n > keep) None else Some(packed))
     }
     val first = rows.mapPartitions(it => Iterator.single(scan(share)(it))).collect()
     if (first.iterator.map(_._1).sum > maxRows) None
     else {
-      val over = first.indices.filter(p => first(p)._2 == null)
-      val refetched = if (over.isEmpty) Map.empty[Int, Array[Array[String]]]
+      val over = first.indices.filter(p => first(p)._2.isEmpty)
+      val refetched = if (over.isEmpty) Map.empty[Int, Option[P]]
         else over.zip(rows.sparkContext.runJob(rows, (it: Iterator[Row]) => scan(maxRows)(it)._2, over)).toMap
       val parts = first.indices.map(p => refetched.getOrElse(p, first(p)._2))
-      // null only if a partition grew between the two jobs
-      if (parts.contains(null)) None
-      else Some(Array.tabulate(width)(c => parts.flatMap(_(c)).toArray))
+      // None only if a partition grew between the two jobs
+      if (parts.exists(_.isEmpty)) None else Some(parts.flatten)
     }
   }
 

@@ -2,7 +2,7 @@ package graft.kge
 
 import graft.graph.KGraph
 import graft.model.Recommender
-import graft.walk.DeepWalkRecommender
+import graft.walk.{DriverFold, EmbeddingServing}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -23,11 +23,12 @@ import org.apache.spark.sql.functions._
   * [[KGraph.MaxDriverEdges]] rows) and whose model is at most
   * `driver_max_params` floats trains in the driver regime: one Spark
   * job, then vocabulary, encoding, [[KgeTrainer.fitLocal]] and the
-  * embedding split-back on driver arrays. Other folds train in the
+  * embedding split-back on driver arrays, and `recommend` ranks on
+  * those arrays ([[graft.walk.DriverFold]]). Other folds train in the
   * distributed regime: relabel joins and [[KgeTrainer.fitDistributed]],
   * which keeps every embedding row in Spark.
   */
-class KgeRecommender(cfg: Map[String, String] = Map.empty) extends Recommender {
+class KgeRecommender(cfg: Map[String, String] = Map.empty) extends EmbeddingServing {
   private def i(key: String, d: Int) = cfg.get(key).map(_.toInt).getOrElse(d)
   private def f(key: String, d: Double) = cfg.get(key).map(_.toDouble).getOrElse(d)
 
@@ -63,9 +64,7 @@ class KgeRecommender(cfg: Map[String, String] = Map.empty) extends Recommender {
     else s"$cap based model + cosine similarity;embedding_dim=$dim"
   }
 
-  private var train: DataFrame = _
-  private var userEmb: DataFrame = _
-  private var itemEmb: DataFrame = _
+  protected def allRecs: Boolean = cfg.get("all_recs").contains("true")
 
   // socialEdges are deliberately unused: the reference trains KGE on
   // get_all_triples(), which emits only rating/is/has triples — social
@@ -74,10 +73,10 @@ class KgeRecommender(cfg: Map[String, String] = Map.empty) extends Recommender {
                      propertyEdges: Option[DataFrame],
                      socialEdges: Option[DataFrame]): Recommender = {
     // train feeds triple export + both embedding sides here, then the
-    // maxRated agg and the anti-join in recommend(): persist once so the
-    // (often split-derived) lineage isn't re-derived per consumer —
-    // released in release(), mirroring PopularityRecommender
-    this.train = trainRatings.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // maxRated agg and the anti-join in a distributed fold's recommend():
+    // persist once so the (often split-derived) lineage isn't re-derived
+    // per consumer — released in release(), mirroring PopularityRecommender
+    beginTrain(spark, trainRatings)
 
     // M5 triple export: `triples: all | ratings` — reference default
     // "all" (transE/model.py:34): property edges fold into the vocabulary
@@ -117,7 +116,7 @@ class KgeRecommender(cfg: Map[String, String] = Map.empty) extends Recommender {
     } yield (c, entities, relations)
     local match {
       case Some((c, entities, relations)) =>
-        trainDriver(spark, trainer, c, entities, relations)
+        trainDriver(trainer, c, entities, relations)
       case None =>
         trainDistributed(spark, trainer, trainRatings, triples)
     }
@@ -129,7 +128,7 @@ class KgeRecommender(cfg: Map[String, String] = Map.empty) extends Recommender {
   /** The driver regime: encode, fit and split the embeddings back on
     * driver arrays; `c` holds the collected (kind, head, relation, tail,
     * user, item) columns. */
-  private def trainDriver(spark: SparkSession, trainer: KgeTrainer, c: Array[Array[String]],
+  private def trainDriver(trainer: KgeTrainer, c: Array[Array[String]],
                           entities: Array[String], relations: Array[String]): Unit = {
     val entityIds = KGraph.localEncoder(entities)
     val (ent, _) = trainer.fitLocal(entityIds(c(1)), KGraph.localEncoder(relations)(c(2)),
@@ -140,19 +139,18 @@ class KgeRecommender(cfg: Map[String, String] = Map.empty) extends Recommender {
     // split back to user/item spaces: every distinct train id, joined to
     // the real component (F13) of the entity whose label carries it, or
     // zero-filled when none does (F14)
-    def side(prefix: String, ids: Array[String]): DataFrame = {
+    def side(prefix: String, ids: Array[String]): Seq[(String, Array[Double])] = {
       val extract = KGraph.labelIdExtractor(prefix)
       val vecs = entities.indices.filter(e => entities(e).startsWith(s"$prefix("))
         .groupBy(e => extract(entities(e)))
         .map { case (id, es) => id -> es.map(e => ent(e).iterator.take(dim).map(_.toDouble).toArray) }
-      DeepWalkRecommender.embeddingTable(spark,
-        ids.indices.filter(isRating).map(ids).distinct.flatMap { id =>
-          val found = if (id == null) None else vecs.get(id)
-          found.getOrElse(Seq(zeros)).map(id -> _)
-        })
+      ids.indices.filter(isRating).map(ids).distinct.flatMap { id =>
+        val found = if (id == null) None else vecs.get(id)
+        found.getOrElse(Seq(zeros)).map(id -> _)
+      }
     }
-    userEmb = side("User", c(4))
-    itemEmb = side("Item", c(5))
+    val rating = c(0).indices.filter(isRating).toArray
+    serveOnDriver(new DriverFold(side("User", c(4)), side("Item", c(5)), rating.map(c(4)), rating.map(c(5))))
   }
 
   /** The distributed regime: relabel and encode with joins, then
@@ -205,16 +203,6 @@ class KgeRecommender(cfg: Map[String, String] = Map.empty) extends Recommender {
     relations.unpersist(blocking = false)
   }
 
-  override def recommend(k: Int): DataFrame =
-    DeepWalkRecommender.knnRecommend(train, userEmb, itemEmb, k,
-      allRecs = cfg.get("all_recs").contains("true"))
-
-  override def recommendUser(user: String, k: Int): DataFrame =
-    DeepWalkRecommender.knnRecommendUser(train, userEmb, itemEmb, user, k,
-      allRecs = cfg.get("all_recs").contains("true"))
-
-  override def release(): Unit =
-    Seq(train, userEmb, itemEmb).filter(_ != null).foreach(_.unpersist(blocking = false))
 }
 
 object KgeRecommender {

@@ -113,6 +113,60 @@ object CosineKnn {
     * `(list_id, center)` rows, read by the q52 oracle builder. */
   private[graft] val lastIvfCentroidsTl = new ThreadLocal[Array[(Int, Array[Double])]]
 
+  /** `sqrt(dot(v, v))`, accumulated left to right: the [[l2norm]] of the
+    * relational kernels. */
+  private[graft] def norm(v: Array[Double]): Double = {
+    var s = 0.0; var i = 0
+    while (i < v.length) { s += v(i) * v(i); i += 1 }
+    math.sqrt(s)
+  }
+
+  /** The one exact scoring loop, shared by the fused kernel and the
+    * driver recommend path ([[graft.walk.DriverFold]]): the cosine of `qv`
+    * against every item index not `skip`ped, scored exactly as the
+    * relational plan scores it (left-to-right dot, `norms` from [[norm]],
+    * zero vectors at the -2.0 sentinel), keeping the best `k` by (score
+    * desc, index asc) in a bounded worst-first heap. Scores at or above
+    * `ceiling` are rejected before the heap. Items sorted by id make the
+    * index tie-break the (score desc, item_id asc) one. Returns
+    * (score, index) pairs, best first. */
+  private[graft] def scoreTopK(qv: Array[Double], vecs: Array[Array[Double]], norms: Array[Double],
+                               k: Int, ceiling: Double, skip: Int => Boolean): Seq[(Double, Int)] = {
+    if (k <= 0) return Seq.empty
+    val qn = norm(qv)
+    val heap = new scala.collection.mutable.PriorityQueue[(Double, Int)]()(worseFirst)
+    var idx = 0
+    while (idx < vecs.length) {
+      if (!skip(idx)) {
+        val iv = vecs(idx)
+        val n = math.min(qv.length, iv.length)
+        var dot = 0.0; var j = 0
+        while (j < n) { dot += qv(j) * iv(j); j += 1 }
+        val denom = qn * norms(idx)
+        // zero vectors (F14 zero-fill) score below any true cosine
+        val score = if (denom > 0) dot / denom else -2.0
+        // ceiling rejection happens at scoring time, never in the heap
+        if (score < ceiling) {
+          if (heap.size < k) heap.enqueue((score, idx))
+          else if (worseFirst.compare((score, idx), heap.head) < 0) {
+            heap.dequeue(); heap.enqueue((score, idx))
+          }
+        }
+      }
+      idx += 1
+    }
+    heap.dequeueAll.reverse
+  }
+
+  // worst-kept-first ordering: the PQ dequeues its "greatest", which we
+  // define as the worst candidate under (score desc, idx asc)
+  private val worseFirst: Ordering[(Double, Int)] = new Ordering[(Double, Int)] {
+    def compare(a: (Double, Int), b: (Double, Int)): Int = {
+      val c = java.lang.Double.compare(b._1, a._1)
+      if (c != 0) c else java.lang.Integer.compare(a._2, b._2)
+    }
+  }
+
   private def topKCompute(queries: DataFrame, items: DataFrame, k: Int,
                           excludeSelf: Boolean,
                           idType: org.apache.spark.sql.types.DataType,
@@ -126,60 +180,21 @@ object CosineKnn {
     val itemRows = items.select(col("id"), col("vec")).orderBy("id").collect()
     val itemIds = itemRows.map(_.get(0))
     val itemVecs = itemRows.map(_.getSeq[Double](1).toArray)
-    val itemNorms = itemVecs.map { v =>
-      var s = 0.0; var i = 0; while (i < v.length) { s += v(i) * v(i); i += 1 }; math.sqrt(s)
-    }
+    val itemNorms = itemVecs.map(norm)
     val bc = spark.sparkContext.broadcast((itemIds, itemVecs, itemNorms))
     val sc = spark.sparkContext
     val parts = math.max(sc.defaultParallelism, queries.rdd.getNumPartitions)
     val q = queries.select(col("id").as("query_id"), col("vec").as("qv"))
       .repartition(parts, col("query_id"))
-    // worst-kept-first ordering: the PQ dequeues its "greatest", which we
-    // define as the worst candidate under (score desc, idx asc)
-    val worseGreater: Ordering[(Double, Int)] = new Ordering[(Double, Int)] {
-      def compare(a: (Double, Int), b: (Double, Int)): Int = {
-        val c = java.lang.Double.compare(b._1, a._1)
-        if (c != 0) c else java.lang.Integer.compare(a._2, b._2)
-      }
-    }
     // ceiling as a plain double so the hot loop carries no Option deref;
     // any true cosine is < +inf, so "no ceiling" admits everything
     val ceilV = scoreCeiling.getOrElse(Double.PositiveInfinity)
     val out = q.rdd.mapPartitions { it =>
       val (ids, vecs, norms) = bc.value
-      val m = ids.length
       it.flatMap { r =>
         val qid = r.get(0)
-        val qs = r.getSeq[Double](1)
-        val qv = new Array[Double](qs.length)
-        var i = 0; while (i < qv.length) { qv(i) = qs(i); i += 1 }
-        var qn = 0.0; i = 0; while (i < qv.length) { qn += qv(i) * qv(i); i += 1 }
-        qn = math.sqrt(qn)
-        val heap = new scala.collection.mutable.PriorityQueue[(Double, Int)]()(worseGreater)
-        var idx = 0
-        while (idx < m) {
-          if (!(excludeSelf && ids(idx) == qid)) {
-            val iv = vecs(idx)
-            val n = math.min(qv.length, iv.length)
-            var dot = 0.0; var j = 0
-            while (j < n) { dot += qv(j) * iv(j); j += 1 }
-            val denom = qn * norms(idx)
-            // zero vectors (F14 zero-fill) score below any true cosine
-            val score = if (denom > 0) dot / denom else -2.0
-            // ceiling rejection happens at scoring time, never in the heap
-            if (score < ceilV) {
-              if (heap.size < k) heap.enqueue((score, idx))
-              else {
-                val worst = heap.head
-                if (worseGreater.compare((score, idx), worst) < 0) {
-                  heap.dequeue(); heap.enqueue((score, idx))
-                }
-              }
-            }
-          }
-          idx += 1
-        }
-        val best: Seq[(Double, Int)] = heap.dequeueAll.reverse
+        val best = scoreTopK(r.getSeq[Double](1).toArray, vecs, norms, k, ceilV,
+          skip = idx => excludeSelf && ids(idx) == qid)
         best.iterator.zipWithIndex.map { case ((score, ix), rank) =>
           Row(qid, ids(ix), score, rank + 1)
         }

@@ -1,7 +1,9 @@
 package graft.report
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
+import scala.jdk.CollectionConverters._
 
 /** Fold-major report pivot (SURVEY §2.8 M9): the reference writes wide
   * CSVs `model, fold-{i}_{metric}, ..., {metric}_mean, {metric}_std`
@@ -11,16 +13,63 @@ import org.apache.spark.sql.functions._
 object Reporter {
 
   /** metrics: (model, fold, value) -> one row per model with
-    * fold-1..fold-k columns plus mean and stddev_pop. */
+    * fold-1..fold-k columns plus mean and stddev_pop: the values of
+    * `groupBy(model).pivot(fold, 1 to k).agg(round(first(value), 6))`
+    * joined on model to `round(avg(value), 6)` and
+    * `round(coalesce(stddev_pop(value), 0), 6)`, with their column
+    * names, types and nullability. A report holds one row per model, so
+    * this is computed on the driver from one collect of the rows and
+    * comes back as a local table. */
   def foldPivot(metrics: DataFrame, k: Int, metricName: String): DataFrame = {
-    val folds = metrics.groupBy("model").pivot("fold", 1 to k)
-      .agg(round(first("value"), 6))
-      .select(col("model") +: (1 to k).map(i =>
-        col(i.toString).as(s"fold-${i}_$metricName")): _*)
-    val stats = metrics.groupBy("model").agg(
-      round(avg("value"), 6).as(s"${metricName}_mean"),
-      round(coalesce(stddev_pop(col("value")), lit(0.0)), 6).as(s"${metricName}_std"))
-    folds.join(stats, Seq("model"))
+    val rows = metrics.select(col("model"), col("fold"), col("value").cast("double")).collect()
+      .map(r => (r.get(0), r.get(1), Seq(r.get(2))))
+    pivotTable(metrics.sparkSession, metrics.schema("model"), Seq(metricName -> true), rows.toSeq, k)
+  }
+
+  /** The [[foldPivot]] of several metrics side by side, one row per
+    * model, as joining their pivots on `model` lays them out — built on
+    * the driver as one local table. `rows` are (model, fold, one value
+    * per metric, in `metrics` order); a metric whose flag is false gets
+    * its fold columns only, without mean and std. A null model gets no
+    * row (the join on model drops it); models keep first-seen order. */
+  def pivotTable(spark: SparkSession, model: StructField, metrics: Seq[(String, Boolean)],
+                 rows: Seq[(Any, Any, Seq[Any])], k: Int): DataFrame = {
+    def round6(d: Double): Double =
+      if (d.isNaN || d.isInfinite) d
+      else java.math.BigDecimal.valueOf(d).setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
+    val byModel = rows.filter(_._1 != null).groupBy(_._1)
+    val out = rows.map(_._1).filter(_ != null).distinct.map { m =>
+      val group = byModel(m)
+      val cells = metrics.indices.flatMap { i =>
+        val vals = group.map(r => (r._2, r._3(i)))
+        // pivot: the first value of each fold, null when none
+        val folds = (1 to k).map(f => vals.collectFirst {
+          case (fold: Number, v) if fold.longValue == f => if (v == null) null else round6(v.asInstanceOf[Double])
+        }.orNull)
+        if (!metrics(i)._2) folds
+        else {
+          // avg and stddev_pop skip nulls; std by Spark's running
+          // (n, mean, m2) update
+          val xs = vals.collect { case (_, v: java.lang.Double) => v.doubleValue }
+          var mean = 0.0; var m2 = 0.0
+          xs.zipWithIndex.foreach { case (x, j) =>
+            val delta = x - mean
+            val deltaN = delta / (j + 1)
+            mean += deltaN
+            m2 += delta * (delta - deltaN)
+          }
+          if (xs.isEmpty) folds :+ null :+ 0.0
+          else folds :+ round6(xs.sum / xs.size) :+ round6(math.sqrt(m2 / xs.size))
+        }
+      }
+      Row.fromSeq(m +: cells)
+    }
+    val fields = metrics.flatMap { case (name, stats) =>
+      (1 to k).map(f => StructField(s"fold-${f}_$name", DoubleType)) ++
+        (if (stats) Seq(StructField(s"${name}_mean", DoubleType), StructField(s"${name}_std", DoubleType))
+         else Nil)
+    }
+    spark.createDataFrame(out.asJava, StructType(model +: fields))
   }
 
   /** CSV sink matching the reference's writer (S6, report.py:25-29):

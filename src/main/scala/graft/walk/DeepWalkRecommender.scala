@@ -5,11 +5,9 @@ import graft.knn.CosineKnn
 import graft.model.Recommender
 import org.apache.spark.ml.feature.Word2Vec
 import org.apache.spark.ml.functions.vector_to_array
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DoubleType, StringType, StructField, StructType}
-import scala.jdk.CollectionConverters._
 
 /** DeepWalk / node2vec recommender (SURVEY §2.8 M1-M3, M6): random
   * walks over the user-item(-property) graph, skip-gram embeddings, and
@@ -35,10 +33,11 @@ import scala.jdk.CollectionConverters._
   * [[SkipGram.fitLocal]] run on driver arrays. The driver walks are
   * generated in (start, walk_idx) order, so `pin_order` is implied
   * there, and an unpinned run with `w2v_threads: 1` is bit-exact too.
+  * Such a fold then recommends from its driver arrays ([[DriverFold]]).
   * Other folds train in the distributed regime: Spark walks, then
   * [[SkipGram.fitDistributed]] or MLlib Word2Vec.
   */
-class DeepWalkRecommender(cfg: Map[String, String] = Map.empty) extends Recommender {
+class DeepWalkRecommender(cfg: Map[String, String] = Map.empty) extends EmbeddingServing {
   private def i(key: String, d: Int) = cfg.get(key).map(_.toInt).getOrElse(d)
   private def f(key: String, d: Double) = cfg.get(key).map(_.toDouble).getOrElse(d)
 
@@ -50,10 +49,7 @@ class DeepWalkRecommender(cfg: Map[String, String] = Map.empty) extends Recommen
     "Node2Vec based model + cosine similarity" +
       s";q=${f("q", 1.0)};p=${f("p", 1.0)};embedding_size=${i("embedding_size", 64)}"
 
-  private var spark: SparkSession = _
-  private var train: DataFrame = _
-  private var userEmb: DataFrame = _ // (id, vec)
-  private var itemEmb: DataFrame = _
+  protected def allRecs: Boolean = cfg.get("all_recs").contains("true")
 
   override def train(spark: SparkSession, trainRatings: DataFrame,
                      propertyEdges: Option[DataFrame],
@@ -62,21 +58,24 @@ class DeepWalkRecommender(cfg: Map[String, String] = Map.empty) extends Recommen
     val aliasWalks = biased && cfg.get("walk_impl").contains("alias")
     require(!(impl == "local" && aliasWalks),
       "w2v_impl: local trains on driver walks; walk_impl: alias needs w2v_impl: distributed or mllib")
-    this.spark = spark
     // persist: train feeds the walk edges here plus the maxRated agg and
-    // anti-join in recommend() — without this the (split-derived) lineage
-    // re-derives per consumer; released in release()
-    this.train = trainRatings.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // anti-join in a distributed fold's recommend() — without this the
+    // (split-derived) lineage re-derives per consumer
+    beginTrain(spark, trainRatings)
 
     // label-space edges: user-item rating edges, optional
     // (src_label, dst_label) property edges, and optional User–User
     // social links (graph.py:304-314) — the walk graph takes ALL edge
-    // kinds; adjacency() symmetrizes, matching the undirected nx.Graph
-    val ratingEdges = trainRatings.select(
+    // kinds; adjacency() symmetrizes, matching the undirected nx.Graph.
+    // Rating rows also carry the string user/item ids recommend() drops
+    // as already rated.
+    val ratingEdges = trainRatings.select(lit("rating").as("kind"),
       KGraph.userLabel(col("user_id")).as("src_label"),
-      KGraph.itemLabel(col("item_id")).as("dst_label"))
+      KGraph.itemLabel(col("item_id")).as("dst_label"),
+      col("user_id").cast("string").as("user"), col("item_id").cast("string").as("item"))
     val labelEdges = (propertyEdges.toSeq ++ socialEdges.toSeq)
-      .map(_.select("src_label", "dst_label"))
+      .map(_.select(lit("edge").as("kind"), col("src_label"), col("dst_label"),
+        lit(null).cast("string").as("user"), lit(null).cast("string").as("item")))
       .foldLeft(ratingEdges)(_ unionByName _)
 
     // regime dispatch on `w2v_impl`: `local` forces the driver regime
@@ -90,17 +89,19 @@ class DeepWalkRecommender(cfg: Map[String, String] = Map.empty) extends Recommen
     }
     val bound = if (impl == "local") Long.MaxValue else KGraph.MaxDriverEdges
     val local = for {
-      Array(src, dst) <- if (!onDriver) None
-        else KGraph.collectColumns(labelEdges, Seq("src_label", "dst_label"), bound)
+      c @ Array(_, src, dst, _, _) <- if (!onDriver) None
+        else KGraph.collectColumns(labelEdges, Seq("kind", "src_label", "dst_label", "user", "item"), bound)
       labels = KGraph.localRelabel(src, dst)
       encode = KGraph.localEncoder(labels)
       adj = RandomWalks.driverAdjacency(labels.length, encode(src), encode(dst))
       if impl == "local" || (labels.length + adj.iterator.map(_.length.toLong).sum <= bound &&
         skipGramFitsDriver(labels.length))
-    } yield (labels, adj)
+    } yield (c, labels, adj)
     local match {
-      case Some((labels, adj)) => trainDriver(labels, adj)
-      case None                => trainDistributed(labelEdges)
+      case Some((c, labels, adj)) =>
+        val rating = c(0).indices.filter(r => c(0)(r) == "rating").toArray
+        trainDriver(labels, adj, rating.map(c(3)), rating.map(c(4)))
+      case None => trainDistributed(labelEdges.select("src_label", "dst_label"))
     }
     this
   }
@@ -118,7 +119,8 @@ class DeepWalkRecommender(cfg: Map[String, String] = Map.empty) extends Recommen
     * order — the corpus order `pin_order` gives the distributed regime — with
     * the step functions of [[RandomWalks.randomWalks]] /
     * [[RandomWalks.biasedWalks]], so the walks are theirs. */
-  private def trainDriver(labels: Array[String], adj: Array[Array[Long]]): Unit = {
+  private def trainDriver(labels: Array[String], adj: Array[Array[Long]],
+                          trainUsers: Array[String], trainItems: Array[String]): Unit = {
     val stepFn =
       if (biased) RandomWalks.biasedStep(f("p", 1.0), f("q", 1.0), seed)
       else RandomWalks.uniformStep(seed)
@@ -130,14 +132,13 @@ class DeepWalkRecommender(cfg: Map[String, String] = Map.empty) extends Recommen
       negative = i("negative", 5), minCount = i("min_count", 1), seed = seed,
       threads = i("w2v_threads", i("workers", spark.sparkContext.defaultParallelism)))
     // ids stay strings: the reference schema types them string (§1.2)
-    def side(prefix: String): DataFrame = {
+    def side(prefix: String): Seq[(String, Array[Double])] = {
       val extract = KGraph.labelIdExtractor(prefix)
-      DeepWalkRecommender.embeddingTable(spark, labels.indices
+      labels.indices
         .filter(v => vecs(v) != null && labels(v).startsWith(s"$prefix("))
-        .map(v => extract(labels(v)) -> vecs(v).map(_.toDouble)))
+        .map(v => extract(labels(v)) -> vecs(v).map(_.toDouble))
     }
-    userEmb = side("User")
-    itemEmb = side("Item")
+    serveOnDriver(new DriverFold(side("User"), side("Item"), trainUsers, trainItems))
   }
 
   /** The distributed regime: relabel and adjacency as DataFrames, walks
@@ -225,16 +226,6 @@ class DeepWalkRecommender(cfg: Map[String, String] = Map.empty) extends Recommen
     nodes.unpersist(blocking = false) // relabel returns it persisted
   }
 
-  override def recommend(k: Int): DataFrame =
-    DeepWalkRecommender.knnRecommend(train, userEmb, itemEmb, k,
-      allRecs = cfg.get("all_recs").contains("true"))
-
-  override def recommendUser(user: String, k: Int): DataFrame =
-    DeepWalkRecommender.knnRecommendUser(train, userEmb, itemEmb, user, k,
-      allRecs = cfg.get("all_recs").contains("true"))
-
-  override def release(): Unit =
-    Seq(train, userEmb, itemEmb).filter(_ != null).foreach(_.unpersist(blocking = false))
 }
 
 object DeepWalkRecommender {
@@ -248,13 +239,6 @@ object DeepWalkRecommender {
     // configs mostly use, biased == first-order.
     "deepwalk_based" -> (cfg => new DeepWalkRecommender(cfg + ("biased" -> "true")))
   )
-
-  /** An `(id: string, vec: array<double>)` embedding table, the shape
-    * [[knnRecommend]] reads, from driver rows. */
-  private[graft] def embeddingTable(spark: SparkSession, rows: Seq[(String, Array[Double])]): DataFrame =
-    spark.createDataFrame(rows.map { case (id, v) => Row(id, v.toSeq) }.asJava, StructType(Seq(
-      StructField("id", StringType),
-      StructField("vec", ArrayType(DoubleType, containsNull = false)))))
 
   /** Shared kNN recommendation path (J6 + J5 + W7): score k' =
     * min(max_user_rated + k, n_items) nearest items per user

@@ -164,5 +164,12 @@ class DriverTrainingSpec extends AnyFunSuite {
       rec.release()
       assert(spark.sparkContext.getPersistentRDDs.keySet == before)
     }
+
+    test(s"$name: a driver-regime fold holds no cache once train() returns") {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val rec = make().train(spark, ratings, edges, None)
+      try assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+      finally rec.release()
+    }
   }
 }

@@ -128,9 +128,12 @@ class ExperimentRegistrySpec extends AnyFunSuite {
       after = sc.getLocalProperty("spark.job.description")
     }
     assert(after == "outer", "the caller's job description was not restored")
-    for (m <- Seq("popularity", "transE"); phase <- Seq("recommend", "eval"))
+    // transE trains in the driver regime: one train job, one eval job
+    // (its relevant test rows), and none for its driver-built recs
+    for ((m, phase) <- Seq("popularity" -> "recommend", "popularity" -> "eval",
+      "transE" -> "train", "transE" -> "eval"))
       assert(labels.contains(s"$m fold 1: $phase"), s"no job labelled '$m fold 1: $phase' in $labels")
-    assert(labels.contains("transE fold 1: train"), s"no transE train job in $labels")
+    assert(!labels.contains("transE fold 1: recommend"), s"a driver-regime recommend started a job: $labels")
     // jobs outside the fold loop keep the caller's description
     assert(labels.forall(l => l == "outer" || l.matches("(popularity|transE) fold 1: (train|recommend|eval)")),
       s"unexpected job labels: ${labels.distinct}")
