@@ -116,10 +116,12 @@ object KGraph {
   }
 
   /** Most label-edge rows a recommender collects to train one fold on
-    * the driver; past it the fold trains distributed. The walk
-    * kernels' local-adjacency bound ([[graft.walk.RandomWalks]]'s
-    * `maxLocalAdjEntries`) uses the same figure. */
+    * the driver; past it the fold trains distributed. */
   val MaxDriverEdges: Long = 5000000L
+
+  /** Most model floats a fold trains on the driver (KGE, SkipGram and
+    * the MF trainers); past it the model trains distributed. */
+  val MaxDriverParams: Long = 50000000L
 
   /** The string columns `cols` of `df` on the driver, one array per
     * column — or None when `df` has more than `maxRows` rows.

@@ -21,10 +21,11 @@ import org.apache.spark.sql.functions._
   *
   * A fold whose labelled triples collect to the driver (at most
   * [[KGraph.MaxDriverEdges]] rows) and whose model is at most
-  * `driver_max_params` floats trains in the driver regime: one Spark
-  * job, then vocabulary, encoding, [[KgeTrainer.fitLocal]] and the
-  * embedding split-back on driver arrays, and `recommend` ranks on
-  * those arrays ([[graft.walk.DriverFold]]). Other folds train in the
+  * `driver_max_params` floats (default [[KGraph.MaxDriverParams]])
+  * trains in the driver regime: one Spark job, then vocabulary,
+  * encoding, [[KgeTrainer.fitLocal]] and the embedding split-back on
+  * driver arrays, and `recommend` ranks on those arrays
+  * ([[graft.walk.DriverFold]]). Other folds train in the
   * distributed regime: relabel joins and [[KgeTrainer.fitDistributed]],
   * which keeps every embedding row in Spark.
   */
@@ -103,7 +104,7 @@ class KgeRecommender(cfg: Map[String, String] = Map.empty) extends EmbeddingServ
     val trainer = new KgeTrainer(model, dim, i("epochs", 5), f("learning_rate", 0.05),
       f("margin", 1.0), i("seed", 42).toLong, fctNorm = fctNorm,
       pinOrder = cfg.get("pin_order").contains("true"))
-    val driverMaxParams = cfg.get("driver_max_params").map(_.toLong).getOrElse(50000000L)
+    val driverMaxParams = cfg.get("driver_max_params").map(_.toLong).getOrElse(KGraph.MaxDriverParams)
 
     // a fold whose triples collect as labels and whose model fits the
     // driver trains there start to finish; otherwise fully distributed

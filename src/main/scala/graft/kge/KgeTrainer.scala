@@ -16,7 +16,7 @@ import scala.util.hashing.MurmurHash3
   * scoring functions, and the identical recommendation path (entity
   * embeddings -> cosine kNN).
   *
-  * Execution model: below `driverMaxParams` floats the parameter
+  * Execution model: below `driver_max_params` floats the parameter
   * arrays and the int-encoded triples live on the driver
   * (`KgeTrainer.fitLocal`: full-batch gradients over per-core chunks,
   * one SGD step per epoch, no Spark job); above it
@@ -451,7 +451,7 @@ class KgeTrainer(val model: String, val dim: Int, val epochs: Int, val lr: Doubl
   }
 
   /** Floats the model holds for this vocabulary — the quantity the
-    * driver-vs-distributed gate compares with `driverMaxParams`. */
+    * driver-vs-distributed gate compares with `driver_max_params`. */
   def nParams(nEntities: Int, nRelations: Int): Long = {
     val (ed, rd) = KgeModels.dims(model, dim)
     nEntities.toLong * ed + nRelations.toLong * rd +

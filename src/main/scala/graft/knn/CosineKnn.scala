@@ -10,11 +10,10 @@ import org.apache.spark.sql.functions._
   *
   * The reference does brute-force cosine kNN with sklearn
   * (`deep_walk_based/model.py:54-80`, `transE/model.py:137-155`). The
-  * exact variant here is the distributed equivalent: broadcast the item
-  * side, score with a codegen'd higher-order-function dot product, rank
-  * per query with a window. The item side of a recommender is the small
-  * side (items << users at web scale); queries never shuffle — only the
-  * final per-query window partitions by query id.
+  * exact variant here is one scoring loop, [[scoreTopK]], which a
+  * driver-regime fold runs on its own arrays ([[graft.walk.DriverFold]]),
+  * and [[topK]]'s three value-identical Spark kernels, one per size
+  * band: relational, fused and shuffle-combine.
   *
   * [[approxTopK]] is the 100 TB path: BucketedRandomProjectionLSH over
   * L2-normalized vectors (Euclidean distance on the unit sphere is a
@@ -34,80 +33,73 @@ object CosineKnn {
   def l2norm(a: String): org.apache.spark.sql.Column =
     sqrt(graft.functions.ArrayDot(col(a), col(a)))
 
-  /** queries/items: (id, vec: array<double>). Output:
-    * (query_id, item_id, score, rank) with rank 1..k by cosine
+  /** queries/items: (id, vec: array<double>), both ids of one type among
+    * long, int, string and double (any other is rejected by name).
+    * Output: (query_id, item_id, score, rank) with rank 1..k by cosine
     * similarity desc, ties broken by item id (deterministic). Self-pairs
-    * are excluded when `excludeSelf`.
+    * are excluded when `excludeSelf`; scores at or above `scoreCeiling`
+    * are rejected at scoring time.
     *
-    * Physical strategy, size-gated three ways (all value-identical):
+    * [[kernel]] picks one of three value-identical Spark kernels from
+    * the item and query counts:
     *
-    *  - items above `collectMaxRows` (default 1M rows ≈ 1.2 GB of
-    *    150-dim doubles): NEVER collected to the driver — the scoring
-    *    cartesian feeds a map-side bounded-heap combine
-    *    ([[topKShuffleCombine]]), so the exchange carries at most
-    *    n_queries × n_partitions × k candidate rows, never the N×M
-    *    scored stream. At this scale [[approxTopK]] is still the
-    *    recommended path; this is the exact fallback that survives it.
-    *  - n_queries × n_items below `fusedMinPairs` (default 4M): the
-    *    relational form (crossJoin(broadcast) + ranking window) — at
-    *    small products the fused kernel's collect + RDD round-trip
-    *    costs more than the codegen'd join it replaces (q21 regressed
+    *  - items above 1M rows (≈ 1.2 GB of 150-dim doubles): NEVER
+    *    collected to the driver — the scoring cartesian feeds a map-side
+    *    bounded-heap combine ([[topKShuffleCombine]]), so the exchange
+    *    carries at most n_queries × n_partitions × k candidate rows,
+    *    never the N×M scored stream. At this scale [[approxTopK]] is
+    *    still the recommended path; this is the exact fallback that
+    *    survives it.
+    *  - n_queries × n_items below 4M: the relational form
+    *    ([[topKRelational]], crossJoin(broadcast) + ranking window) — at
+    *    small products the fused kernel's collect + RDD round-trip costs
+    *    more than the codegen'd join it replaces (q21 regressed
     *    0.8 s → 4.4 s in r2 for exactly this reason).
-    *  - otherwise: the fused kernel. The relational form would
-    *    materialize an N×M row stream where EVERY row carries both
-    *    dim-sized vectors — ~75 GB of row traffic for 1.5k users × 20k
-    *    items × 150 dims, memory-bandwidth-bound regardless of
+    *  - otherwise: the fused kernel ([[topKCompute]]). The relational
+    *    form would materialize an N×M row stream where EVERY row carries
+    *    both dim-sized vectors — ~75 GB of row traffic for 1.5k users ×
+    *    20k items × 150 dims, memory-bandwidth-bound regardless of
     *    parallelism. Instead the item matrix broadcasts as primitive
-    *    arrays and a fused score-and-select loop per query partition
-    *    (a bounded worst-first heap) emits only the top-k rows — same
-    *    accumulation order, same tie-break, bit-identical scores.
-    *
-    * Id types without a pinned ordering always take the relational plan.
+    *    arrays and [[scoreTopK]] runs per query partition, emitting only
+    *    the top-k rows — same accumulation order, same tie-break,
+    *    bit-identical scores.
     *
     * Dispatch runs `count()` on the inputs (items always, queries below
-    * the collect gate) — cache inputs with expensive lineage before
+    * the collect bound) — cache inputs with expensive lineage before
     * calling, as the recommenders do with their embedding tables, or
     * pass the sizes you already know via `knownItemCount` /
     * `knownQueryCount` (≥ 0) and the gating scan is skipped entirely.
     */
   def topK(queries: DataFrame, items: DataFrame, k: Int, excludeSelf: Boolean = false,
-           collectMaxRows: Long = 1000000L, fusedMinPairs: Long = 4000000L,
            knownItemCount: Long = -1L, knownQueryCount: Long = -1L,
            scoreCeiling: Option[Double] = None): DataFrame = {
     import org.apache.spark.sql.types._
-    val idType = queries.schema("id").dataType
-    val fastIdOk = idType == items.schema("id").dataType && (idType match {
+    val (qType, iType) = (queries.schema("id").dataType, items.schema("id").dataType)
+    require(qType == iType && (qType match {
       case LongType | IntegerType | StringType | DoubleType => true
       case _ => false
-    })
+    }), s"CosineKnn.topK: query and item ids must share one of the types bigint, int, " +
+      s"string, double; got ${qType.simpleString} and ${iType.simpleString}")
     val m = if (knownItemCount >= 0L) knownItemCount else items.count()
-    if (m > collectMaxRows) {
-      return if (fastIdOk) {
-        lastKernel = "shuffle-combine"
-        topKShuffleCombine(queries, items, k, excludeSelf, idType, scoreCeiling)
-      } else {
-        lastKernel = "relational-unbroadcast"
-        topKRelational(queries, items, k, excludeSelf, broadcastItems = false,
-          scoreCeiling = scoreCeiling)
-      }
-    }
-    val nQ = if (knownQueryCount >= 0L) knownQueryCount else queries.count()
-    if (!fastIdOk || nQ * m < fusedMinPairs) {
-      lastKernel = "relational"
-      topKRelational(queries, items, k, excludeSelf, scoreCeiling = scoreCeiling)
-    } else {
-      lastKernel = "fused"
-      topKCompute(queries, items, k, excludeSelf, idType, scoreCeiling)
+    kernel(m, if (knownQueryCount >= 0L) knownQueryCount else queries.count()) match {
+      case "shuffle-combine" => topKShuffleCombine(queries, items, k, excludeSelf, scoreCeiling)
+      case "relational" => topKRelational(queries, items, k, excludeSelf, scoreCeiling)
+      case _ => topKCompute(queries, items, k, excludeSelf, scoreCeiling)
     }
   }
 
-  /** Which kernel this thread's last [[topK]] call dispatched to —
-    * observable for plan-regression specs (the RDD-backed kernels are
-    * indistinguishable in the result's SQL plan string). Thread-local so
-    * concurrent callers cannot race each other's label. */
-  private[graft] val lastKernelTl = new ThreadLocal[String]
-  private[graft] def lastKernel: String = lastKernelTl.get()
-  private def lastKernel_=(v: String): Unit = lastKernelTl.set(v)
+  /** Most item rows the broadcast kernels collect to the driver. */
+  private val CollectMaxRows = 1000000L
+  /** Fewest query × item pairs the fused kernel takes. */
+  private val FusedMinPairs = 4000000L
+
+  /** The kernel [[topK]] runs for `nItems` items and `nQueries` queries:
+    * "shuffle-combine", "relational" or "fused". `nQueries` is only
+    * evaluated within the collect bound. */
+  private[graft] def kernel(nItems: Long, nQueries: => Long): String =
+    if (nItems > CollectMaxRows) "shuffle-combine"
+    else if (nQueries * nItems < FusedMinPairs) "relational"
+    else "fused"
 
   /** The centroids the last [[ivfTopK]] call on this thread fit —
     * `(list_id, center)` rows, read by the q52 oracle builder. */
@@ -167,13 +159,15 @@ object CosineKnn {
     }
   }
 
-  private def topKCompute(queries: DataFrame, items: DataFrame, k: Int,
-                          excludeSelf: Boolean,
-                          idType: org.apache.spark.sql.types.DataType,
-                          scoreCeiling: Option[Double] = None): DataFrame = {
+  /** The fused kernel: the item matrix broadcast as primitive arrays,
+    * [[scoreTopK]] per query partition. */
+  private[graft] def topKCompute(queries: DataFrame, items: DataFrame, k: Int,
+                                 excludeSelf: Boolean,
+                                 scoreCeiling: Option[Double] = None): DataFrame = {
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.Row
     val spark = queries.sparkSession
+    val idType = queries.schema("id").dataType
     // item matrix, pre-sorted by id so (score desc, index asc) ranks
     // exactly like (score desc, item_id asc) — Spark's orderBy uses the
     // same binary/numeric collation as the ranking window would
@@ -205,15 +199,13 @@ object CosineKnn {
       StructField("score", DoubleType), StructField("rank", IntegerType, nullable = false))))
   }
 
-  /** Relational fallback (also the reference plan shape for the docs):
-    * crossJoin(broadcast) + ranking window. Queries are spread and
-    * hash-partitioned by query_id so the window needs no exchange of the
-    * scored N×M rows. `broadcastItems = false` drops the hint for item
-    * sides too large to broadcast — AQE decides from actual sizes. */
+  /** The relational kernel, and the reference the other kernels are
+    * pinned against: crossJoin(broadcast) + ranking window. Queries are
+    * spread and hash-partitioned by query_id so the window needs no
+    * exchange of the scored N×M rows. */
   private[graft] def topKRelational(queries: DataFrame, items: DataFrame, k: Int,
-                                  excludeSelf: Boolean,
-                                  broadcastItems: Boolean = true,
-                                  scoreCeiling: Option[Double] = None): DataFrame = {
+                                    excludeSelf: Boolean,
+                                    scoreCeiling: Option[Double] = None): DataFrame = {
     val sc = queries.sparkSession.sparkContext
     val parts = math.max(sc.defaultParallelism, queries.rdd.getNumPartitions)
     val q = queries.select(col("id").as("query_id"), col("vec").as("qv"))
@@ -221,7 +213,7 @@ object CosineKnn {
       .withColumn("qn", l2norm("qv"))
     val it = items.select(col("id").as("item_id"), col("vec").as("iv"))
       .withColumn("in", l2norm("iv"))
-    val scored = q.crossJoin(if (broadcastItems) broadcast(it) else it)
+    val scored = q.crossJoin(broadcast(it))
       .filter(if (excludeSelf) col("query_id") =!= col("item_id") else lit(true))
       // zero vectors (F14 zero-fill) score below any true cosine (< -1)
       .withColumn("score",
@@ -254,13 +246,8 @@ object CosineKnn {
     * regardless of size). Zero vectors (score sentinel -2) rank last
     * as everywhere else. */
   def hardNegatives(queries: DataFrame, items: DataFrame, k: Int,
-                    simCeiling: Double,
-                    collectMaxRows: Long = 1000000L, fusedMinPairs: Long = 4000000L,
-                    knownItemCount: Long = -1L, knownQueryCount: Long = -1L): DataFrame =
-    topK(queries, items, k, excludeSelf = true,
-      collectMaxRows = collectMaxRows, fusedMinPairs = fusedMinPairs,
-      knownItemCount = knownItemCount, knownQueryCount = knownQueryCount,
-      scoreCeiling = Some(simCeiling))
+                    simCeiling: Double): DataFrame =
+    topK(queries, items, k, excludeSelf = true, scoreCeiling = Some(simCeiling))
 
   /** Exact top-k for item sides too large to broadcast OR collect: the
     * scoring cartesian is consumed in-stage by a map-side bounded-heap
@@ -272,11 +259,11 @@ object CosineKnn {
     * order, so results are deterministic under any partitioning. */
   private[graft] def topKShuffleCombine(queries: DataFrame, items: DataFrame, k: Int,
                                         excludeSelf: Boolean,
-                                        idType: org.apache.spark.sql.types.DataType,
                                         scoreCeiling: Option[Double] = None): DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val spark = queries.sparkSession
+    val idType = queries.schema("id").dataType
     val q = queries.select(col("id").as("query_id"), col("vec").as("qv"))
       .withColumn("qn", l2norm("qv"))
     val it = items.select(col("id").as("item_id"), col("vec").as("iv"))

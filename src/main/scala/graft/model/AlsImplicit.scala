@@ -192,7 +192,7 @@ class AlsImplicit(val dim: Int, val iters: Int, val lambda: Double,
 
   /** Dispatch by parameter count, like the other trainers. */
   def fitEmb(spark: SparkSession, ratings: DataFrame, nUsers: Int, nItems: Int,
-             driverMaxParams: Long = 50000000L): (DataFrame, DataFrame) = {
+             driverMaxParams: Long = graft.graph.KGraph.MaxDriverParams): (DataFrame, DataFrame) = {
     val nParams = (nUsers.toLong + nItems.toLong) * dim
     if (nParams <= driverMaxParams) {
       val (p, q) = fit(spark, ratings, nUsers, nItems)

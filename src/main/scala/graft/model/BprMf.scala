@@ -217,7 +217,7 @@ class BprMf(val dim: Int, val epochs: Int, val lr: Double, val reg: Double,
     * driver tier below `driverMaxParams` total floats, distributed
     * above — the dispatch serving paths call. */
   def fitEmb(spark: SparkSession, positives: DataFrame, nUsers: Int, nItems: Int,
-             driverMaxParams: Long = 50000000L): (DataFrame, DataFrame) = {
+             driverMaxParams: Long = graft.graph.KGraph.MaxDriverParams): (DataFrame, DataFrame) = {
     val nParams = nUsers.toLong * dim + nItems.toLong * (dim + 1)
     if (nParams <= driverMaxParams) {
       val (p, q) = fit(spark, positives, nUsers, nItems)

@@ -1,5 +1,6 @@
 package graft.model
 
+import graft.walk.SkipGram
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -18,9 +19,9 @@ import org.apache.spark.sql.functions._
   * size IS the paper's semantics and it matters: the windowed form
   * probed 20x worse MAP on the ml-100k-shaped fixture; cap basket
   * sizes upstream if the per-basket pair cost len^2 is a concern). Training reuses
-  * [[graft.walk.SkipGram]]'s two-tier kernel (driver-local
-  * multithreaded below the token/param gate, replica-averaged
-  * distributed above). Serving: the user vector is the MEAN of the
+  * [[graft.walk.SkipGram]]'s two regimes: the collected corpus through
+  * `fitLocal` within `SkipGram.fitsDriver`, replica-averaged
+  * `fitDistributed` past it. Serving: the user vector is the MEAN of the
   * user's positive item embeddings — computed as a sorted-list HOF
   * fold (left-to-right doubles, deterministic under any partitioning,
   * never a float-order-dependent groupBy avg) — then the shared
@@ -34,25 +35,25 @@ object Item2Vec {
     *         (the walk-family serving contract) */
   def recs(spark: SparkSession, ratings: DataFrame, minRating: Double,
            dim: Int, window: Int, epochs: Int, lr: Double, negative: Int,
-           seed: Long, k: Int, pinOrder: Boolean = false,
-           driverMaxTokens: Long = 100000000L,
-           driverMaxParams: Long = 50000000L): DataFrame = {
+           seed: Long, k: Int, pinOrder: Boolean = false): DataFrame = {
     val (pos, uIdx, iIdx, dense) = MfServing.denseIds(ratings, minRating)
     val nItems = iIdx.count().toInt
     val nTokens = dense.count()
     // baskets as sentences over dense item ids, sorted for a fixed
     // fold order; pinOrder additionally totals-orders the sentence
-    // list itself (SkipGram collects in partition order)
+    // list itself (the corpus is consumed in partition order)
     val sentsBase = dense.groupBy("u")
       .agg(sort_array(collect_list(col("i"))).as("path"))
     val sents = if (pinOrder) sentsBase.orderBy("u") else sentsBase
     val emb =
-      if (nTokens <= driverMaxTokens && 2L * nItems * dim <= driverMaxParams)
-        graft.walk.SkipGram.fit(spark, sents, nItems, dim, window, epochs, lr,
+      if (SkipGram.fitsDriver(nItems, dim, nTokens)) {
+        import spark.implicits._
+        val sentences = sents.select(col("path").cast("array<int>")).as[Array[Int]].collect()
+        SkipGram.embDF(spark, SkipGram.fitLocal(sentences, nItems, dim, window, epochs, lr,
           negative = negative, minCount = 0, seed = seed,
-          threads = if (pinOrder) 1 else Runtime.getRuntime.availableProcessors())
-      else
-        graft.walk.SkipGram.fitDistributed(spark, sents, nItems, dim, window,
+          threads = if (pinOrder) 1 else spark.sparkContext.defaultParallelism))
+      } else
+        SkipGram.fitDistributed(spark, sents, nItems, dim, window,
           epochs, lr, negative = negative, minCount = 0, seed = seed)
     val itemEmb = emb.join(iIdx, emb("node_id") === iIdx("i"))
       .select(col("item_id").cast("string").as("id"), col("vec"))

@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
   * graph (graph.py:168-179), `walker.random_walks`, gensim
   * Word2Vec(sg=1, hs=1), then brute kNN + anti-join + top-k cutoff
   * (model.py:54-97). Here: [[graft.graph.KGraph.relabel]],
-  * [[RandomWalks]], MLlib Word2Vec (also skip-gram + hierarchical
-  * softmax), [[CosineKnn.topK]].
+  * [[RandomWalks]], [[SkipGram]] (skip-gram with negative sampling;
+  * stock MLlib Word2Vec with `w2v_impl: mllib`), and exact cosine
+  * top-k ([[DriverFold]] or [[CosineKnn.topK]]).
   *
   * cfg keys (YAML `parameters` block, config_files/test.yml:67-74):
   * walk_len, n_walks, p, q, biased, embedding_size, window_size,
@@ -95,7 +96,8 @@ class DeepWalkRecommender(cfg: Map[String, String] = Map.empty) extends Embeddin
       encode = KGraph.localEncoder(labels)
       adj = RandomWalks.driverAdjacency(labels.length, encode(src), encode(dst))
       if impl == "local" || (labels.length + adj.iterator.map(_.length.toLong).sum <= bound &&
-        skipGramFitsDriver(labels.length))
+        SkipGram.fitsDriver(labels.length, i("embedding_size", 64),
+          labels.length.toLong * i("n_walks", 10) * i("walk_len", 10)))
     } yield (c, labels, adj)
     local match {
       case Some((c, labels, adj)) =>
@@ -108,12 +110,6 @@ class DeepWalkRecommender(cfg: Map[String, String] = Map.empty) extends Embeddin
 
   private def seed: Int = i("seed", 42)
   private def biased: Boolean = cfg.get("biased").contains("true")
-
-  /** The driver SkipGram gate: ≤5e7 model params (same bound as KGE)
-    * and ≤1e8 corpus tokens (~400 MB of ints on the driver). */
-  private def skipGramFitsDriver(nNodes: Long): Boolean =
-    2L * nNodes * i("embedding_size", 64) <= 50000000L &&
-      nNodes * i("n_walks", 10).toLong * i("walk_len", 10).toLong <= 100000000L
 
   /** The driver regime. Walks run from every node in (start, walk_idx)
     * order — the corpus order `pin_order` gives the distributed regime — with

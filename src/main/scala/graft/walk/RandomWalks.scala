@@ -1,10 +1,9 @@
 package graft.walk
 
-import graft.graph.KGraph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Distributed random-walk kernel (SURVEY §2.8 M1/M2).
+/** Random-walk kernels (SURVEY §2.8 M1/M2).
   *
   * The reference calls the `graph-walker` library (or its vendored
   * fallback `framework/recommender/utils/walker.py:12-55`): `n_walks`
@@ -13,11 +12,12 @@ import org.apache.spark.sql.functions._
   * node2vec variant (walker.py:103-185) biases step probabilities by
   * return parameter p and in-out parameter q.
   *
-  * Spark shape: adjacency lists `(node, nbrs: array)` built once
-  * (one shuffle); walk state is a DataFrame advanced by `walkLen - 1`
-  * broadcast-or-shuffle joins against the adjacency. Randomness is a
-  * pure function xxhash64(start, walkIdx, step, seed) — deterministic
-  * under retries and any partitioning (SURVEY §4.5).
+  * One step function per walk kind ([[uniformStep]], [[biasedStep]])
+  * runs in both regimes: [[driverWalks]] over driver arrays, and
+  * [[randomWalks]] / [[biasedWalks]] in tasks over a broadcast
+  * adjacency. Randomness is a pure function xxhash64(start, walkIdx,
+  * step, seed) — deterministic under retries and any partitioning
+  * (SURVEY §4.5) — so both regimes realize the same walks.
   *
   * The biased class-sampling step costs O(degree) set algebra per
   * extension; fine for the graph sizes the reference targets. The
@@ -44,101 +44,11 @@ object RandomWalks {
   private def hash01(cols: org.apache.spark.sql.Column*): org.apache.spark.sql.Column =
     (pmod(xxhash64(cols: _*), lit(1000000007L)).cast("double") / 1000000007.0)
 
-  /** Uniform walks. nodes: (node) — every start node (walks from
-    * isolated nodes are the single-node path, matching walker.py:30-39).
-    * Returns (start, walk_idx, path: array<long>). */
-  private[graft] def randomWalksJoins(spark: SparkSession, adj: DataFrame, nodes: DataFrame,
-                  nWalks: Int, walkLen: Int, seed: Long): DataFrame = {
-    // the node table often arrives single-partition (relabel's exact
-    // path); without a spread the ENTIRE walk loop — every step's
-    // broadcast join — runs in one task
-    var state = nodes.select(col("node").as("start"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .crossJoin(spark.range(nWalks).select(col("id").as("walk_idx")))
-      .withColumn("path", array(col("start")))
-      .withColumn("cur", col("start"))
-    for (step <- 1 until walkLen) {
-      state = state.join(broadcast(adj), state("cur") === adj("node"), "left")
-        .withColumn("nxt",
-          when(col("nbrs").isNotNull && size(col("nbrs")) > 0,
-            element_at(col("nbrs"),
-              (pmod(xxhash64(col("start"), col("walk_idx"), lit(step), lit(seed)),
-                size(col("nbrs")).cast("long")) + 1).cast("int"))))
-        .select(col("start"), col("walk_idx"),
-          when(col("nxt").isNotNull, concat(col("path"), array(col("nxt"))))
-            .otherwise(col("path")).as("path"),
-          col("nxt").as("cur"))
-      if (step % 4 == 0) state = state.localCheckpoint(eager = false)
-    }
-    state.select("start", "walk_idx", "path")
-  }
+  // ---- step-function kernel ------------------------------------------
 
-  /** Second-order (node2vec) walks: step weight 1/p back to the
-    * previous node, 1 to a neighbor of the previous node, 1/q otherwise
-    * (walker.py:148-155).
-    *
-    * Sampling trick: the weight vector only ever holds three values, so
-    * instead of an O(degree²) per-row prefix-sum over all neighbors we
-    * sample the CLASS (back / common / far) by its total mass, then
-    * pick uniformly inside the class — O(degree) set algebra per step,
-    * distribution-identical to the reference's piecewise weights. */
-  private[graft] def biasedWalksJoins(spark: SparkSession, adj: DataFrame, nodes: DataFrame,
-                  nWalks: Int, walkLen: Int, p: Double, q: Double, seed: Long): DataFrame = {
-    val prevAdj = adj.select(col("node").as("prev_node"), col("nbrs").as("prev_nbrs"))
-    // the node table often arrives single-partition (relabel's exact
-    // path); without a spread the ENTIRE walk loop — every step's
-    // broadcast join — runs in one task
-    var state = nodes.select(col("node").as("start"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .crossJoin(spark.range(nWalks).select(col("id").as("walk_idx")))
-      .withColumn("path", array(col("start")))
-      .withColumn("cur", col("start"))
-      .withColumn("prev", lit(null).cast("long"))
-    for (step <- 1 until walkLen) {
-      val r = hash01(col("start"), col("walk_idx"), lit(step), lit(seed))
-      val idx = pmod(xxhash64(col("start"), col("walk_idx"), lit(step), lit(seed + 1)), lit(1000000007L))
-      state = state
-        .join(broadcast(adj), state("cur") === adj("node"), "left")
-        .join(broadcast(prevAdj), state("prev") === prevAdj("prev_node"), "left")
-        // class decomposition of the neighbor set wrt the previous node
-        .withColumn("common",
-          when(col("prev").isNull, expr("array()"))
-            .otherwise(expr("array_remove(array_intersect(nbrs, coalesce(prev_nbrs, array())), prev)")))
-        .withColumn("far",
-          when(col("prev").isNull, col("nbrs"))
-            .otherwise(expr("array_except(array_remove(nbrs, prev), common)")))
-        .withColumn("w_back",
-          when(col("prev").isNotNull && expr("array_contains(nbrs, prev)"), lit(1.0 / p))
-            .otherwise(lit(0.0)))
-        .withColumn("w_common", when(col("prev").isNull, lit(0.0))
-          .otherwise(size(col("common")).cast("double")))
-        .withColumn("w_far", size(col("far")).cast("double") *
-          when(col("prev").isNull, lit(1.0)).otherwise(lit(1.0 / q)))
-        .withColumn("draw", r * (col("w_back") + col("w_common") + col("w_far")))
-        .withColumn("nxt",
-          when(col("nbrs").isNull || size(col("nbrs")) === 0, lit(null).cast("long"))
-            .when(col("draw") < col("w_back"), col("prev"))
-            .when(col("draw") < col("w_back") + col("w_common"),
-              element_at(col("common"), (idx % greatest(size(col("common")), lit(1)) + 1).cast("int")))
-            .otherwise(
-              element_at(col("far"), (idx % greatest(size(col("far")), lit(1)) + 1).cast("int"))))
-        .select(col("start"), col("walk_idx"),
-          when(col("nxt").isNotNull, concat(col("path"), array(col("nxt"))))
-            .otherwise(col("path")).as("path"),
-          col("nxt").as("cur"),
-          when(col("nxt").isNotNull, col("cur")).otherwise(lit(null).cast("long")).as("prev"))
-      if (step % 4 == 0) state = state.localCheckpoint(eager = false)
-    }
-    state.select("start", "walk_idx", "path")
-  }
-
-  // ---- broadcast-local kernel -----------------------------------------
-
-  /** SQL-chain-compatible xxhash64: the join kernels draw from
-    * `xxhash64(start, walk_idx, lit(step), lit(salt))` (long, long, int,
-    * long children, initial seed 42) — this replays the exact chain so
-    * both kernels realize IDENTICAL walks and the q42 golden is
-    * dispatch-independent. */
+  /** xxhash64(start, walk_idx, step, salt) as Spark SQL computes it for
+    * (long, long, int, long) children with initial seed 42 — the chain
+    * q42/q45's DuckDB oracles replay ([[graft.oracle.XxhWalkSql]]). */
   @inline private def stepHash(start: Long, walkIdx: Long, step: Int, salt: Long): Long = {
     import org.apache.spark.sql.catalyst.expressions.XXH64
     var h = 42L
@@ -149,15 +59,12 @@ object RandomWalks {
   }
   @inline private def pmodL(a: Long, b: Long): Long = { val m = a % b; if (m < 0) m + b else m }
 
-  /** Number of adjacency entries (nodes + directed edge slots) — the
-    * dispatch metric for local vs join execution. */
-  private def adjEntries(adj: DataFrame): Long =
-    adj.agg((count(lit(1)) + coalesce(sum(size(col("nbrs"))), lit(0L))).as("n"))
-      .first().getLong(0)
-
-  private def collectAdj(adj: DataFrame): scala.collection.Map[Long, Array[Long]] =
-    adj.select(col("node").cast("long"), col("nbrs")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Long](1).toArray).toMap
+  private def collectAdj(adj: DataFrame): Map[Long, Array[Long]] = {
+    import adj.sparkSession.implicits._
+    // typed decode: primitive neighbour arrays, no per-element boxing
+    adj.select(col("node").cast("long"), col("nbrs").cast("array<bigint>"))
+      .as[(Long, Array[Long])].collect().toMap
+  }
 
   private val walkSchema = org.apache.spark.sql.types.StructType(Seq(
     org.apache.spark.sql.types.StructField("start", org.apache.spark.sql.types.LongType, nullable = false),
@@ -242,9 +149,16 @@ object RandomWalks {
     else Some(nbrs(pmodL(stepHash(start, w, step, seed), nbrs.length.toLong).toInt))
   }
 
-  /** The second-order step of [[biasedWalks]] — see [[biasedWalksJoins]]
-    * for the class-sampling scheme. p == q == 1 collapses to
-    * [[uniformStep]] (every class weight is 1). */
+  /** The second-order (node2vec) step of [[biasedWalks]]: weight 1/p
+    * back to the previous node, 1 to a neighbor of the previous node,
+    * 1/q otherwise (walker.py:148-155).
+    *
+    * Sampling trick: the weight vector only ever holds three values, so
+    * instead of an O(degree²) prefix sum over all neighbors we sample
+    * the CLASS (back / common / far) by its total mass, then pick
+    * uniformly inside the class — O(degree) set algebra per step,
+    * distribution-identical to the reference's piecewise weights.
+    * p == q == 1 collapses to [[uniformStep]] (every class weight is 1). */
   private[graft] def biasedStep(p: Double, q: Double, seed: Long): StepFn =
     if (p == 1.0 && q == 1.0) uniformStep(seed)
     else { (nbrsOf, start, w, step, cur, prev) =>
@@ -252,15 +166,13 @@ object RandomWalks {
       if (nbrs.isEmpty) None
       else if (step == 1) {
         // first step: no previous node — uniform over all neighbors
-        // (w_back = w_common = 0 in the join kernel's formulation)
         val idx = pmodL(stepHash(start, w, step, seed + 1), 1000000007L)
         Some(nbrs((idx % math.max(nbrs.length, 1)).toInt))
       } else {
         val prevSet = nbrsOf(prev).toSet
-        // array_intersect keeps first-array order; array_remove(prev)
+        // class members keep nbrs order: the idx draw indexes into them
         val common = nbrs.filter(x => x != prev && prevSet.contains(x))
         val commonSet = common.toSet
-        // array_except(array_remove(nbrs, prev), common)
         val far = nbrs.filter(x => x != prev && !commonSet.contains(x))
         val wBack = if (nbrs.contains(prev)) 1.0 / p else 0.0
         val wCommon = common.length.toDouble
@@ -272,40 +184,23 @@ object RandomWalks {
         else if (draw < wBack + wCommon)
           Some(common((idx % math.max(common.length, 1)).toInt))
         else if (far.nonEmpty) Some(far((idx % far.length).toInt))
-        else None // element_at past an empty class -> null -> walk stops
+        else None // the far class is drawn but empty: the walk stops
       }
     }
 
   /** Uniform walks. nodes: (node) — every start node (walks from
     * isolated nodes are the single-node path, matching walker.py:30-39).
-    * Returns (start, walk_idx, path: array<long>).
-    *
-    * Dispatch: when the adjacency fits executor memory (the regime the
-    * join kernel ALREADY assumed by broadcasting it every step), a
-    * single mapPartitions pass computes all steps locally; larger graphs
-    * fall back to the per-step join kernel. Walks are bit-identical
-    * either way (same hash chain). */
+    * Returns (start, walk_idx, path: array<long>), computed in tasks
+    * over the broadcast adjacency with [[uniformStep]]. */
   def randomWalks(spark: SparkSession, adj: DataFrame, nodes: DataFrame,
-                  nWalks: Int, walkLen: Int, seed: Long,
-                  maxLocalAdjEntries: Long = KGraph.MaxDriverEdges): DataFrame = {
-    if (adjEntries(adj) > maxLocalAdjEntries)
-      return randomWalksJoins(spark, adj, nodes, nWalks, walkLen, seed)
+                  nWalks: Int, walkLen: Int, seed: Long): DataFrame =
     localWalks(spark, adj, nodes, nWalks, walkLen, uniformStep(seed))
-  }
 
-  /** Second-order (node2vec) walks — see [[biasedWalksJoins]] for the
-    * class-sampling scheme. p == q == 1 collapses to uniform sampling
-    * (every class weight is 1), which skips the per-step set algebra
-    * entirely. Same local-vs-join dispatch as [[randomWalks]]. */
+  /** Second-order (node2vec) walks: [[randomWalks]] with
+    * [[biasedStep]]. */
   def biasedWalks(spark: SparkSession, adj: DataFrame, nodes: DataFrame,
-                  nWalks: Int, walkLen: Int, p: Double, q: Double, seed: Long,
-                  maxLocalAdjEntries: Long = KGraph.MaxDriverEdges): DataFrame = {
-    if (p == 1.0 && q == 1.0)
-      return randomWalks(spark, adj, nodes, nWalks, walkLen, seed, maxLocalAdjEntries)
-    if (adjEntries(adj) > maxLocalAdjEntries)
-      return biasedWalksJoins(spark, adj, nodes, nWalks, walkLen, p, q, seed)
+                  nWalks: Int, walkLen: Int, p: Double, q: Double, seed: Long): DataFrame =
     localWalks(spark, adj, nodes, nWalks, walkLen, biasedStep(p, q, seed))
-  }
 
   // ---- alias-table kernel (extreme-scale biased walks) ----------------
 
@@ -320,7 +215,7 @@ object RandomWalks {
     // p=0 or q=0 would give 1/p = Infinity → all-NaN scaled weights →
     // a silently UNIFORM table (every slot lands on the `large` stack),
     // the opposite of the intended return-dominated distribution. The
-    // class kernels would diverge too (Inf draw mass); fail fast instead.
+    // class-sampling step would diverge too (Inf draw mass); fail fast instead.
     require(w.forall(v => java.lang.Double.isFinite(v) && v >= 0) &&
       java.lang.Double.isFinite(sum) && sum > 0,
       s"alias weights must be finite, non-negative, with positive mass (p/q must be > 0); got ${w.mkString(",")}")
@@ -376,11 +271,11 @@ object RandomWalks {
   /** Second-order walks via precomputed per-edge alias tables — the
     * extreme-scale biased kernel. Each step is O(1): slot = hash mod
     * degree, coin = hash01, next = if coin < prob(slot) nbrs(slot) else
-    * nbrs(alias(slot)). Distribution-identical to the class-sampling
-    * kernels (same piecewise weights), but a DIFFERENT seeded draw
+    * nbrs(alias(slot)). Distribution-identical to [[biasedStep]]'s class
+    * sampling (same piecewise weights), but a DIFFERENT seeded draw
     * sequence — walks are deterministic for a fixed seed yet not
-    * bit-equal to [[biasedWalks]]' output, so the default dispatch keeps
-    * the class kernels (the q42 golden pins those) and callers opt in
+    * bit-equal to [[biasedWalks]]' output, so the default keeps the
+    * class-sampling step (the q42 golden pins it) and callers opt in
     * where the per-step set algebra or the broadcast adjacency is the
     * bottleneck. */
   def biasedWalksAlias(spark: SparkSession, adj: DataFrame, nodes: DataFrame,
@@ -400,7 +295,7 @@ object RandomWalks {
       val stepped =
         if (step == 1)
           // no previous node yet: uniform over cur's neighbors (the same
-          // first-step rule as both class kernels)
+          // first-step rule as [[biasedStep]])
           state.join(adj, state("cur") === adj("node"), "left")
             .withColumn("nxt",
               when(col("nbrs").isNotNull && size(col("nbrs")) > 0,

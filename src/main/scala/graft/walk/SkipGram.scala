@@ -13,13 +13,12 @@ import org.apache.spark.sql.functions._
   * replica + average cycle that cost ~30 s on the headline graph — 88%
   * of a node2vec fold. Two paths share one training kernel here:
   *
-  *  - [[fitLocal]] / [[fit]] (driver-local): walk corpora are tiny
-  *    relative to their training cost (the headline corpus is ~10M ints
-  *    ≈ 80 MB), so below [[DeepWalkRecommender]]'s size gate the
-  *    sentences are trained shared-memory Hogwild on the driver — the
-  *    gensim plan shape. The recommender's driver regime generates the
-  *    walks on the driver too; [[fit]] collects a Spark corpus (the
-  *    front door Item2Vec uses).
+  *  - [[fitLocal]] (driver-local): walk corpora are tiny relative to
+  *    their training cost (the headline corpus is ~10M ints ≈ 80 MB),
+  *    so within [[fitsDriver]] the sentences are trained shared-memory
+  *    Hogwild on the driver — the gensim plan shape. DeepWalk's driver
+  *    regime generates the walks on the driver; Item2Vec collects its
+  *    basket corpus.
   *  - [[fitDistributed]]: the unbounded-corpus path — sentences stay an
   *    RDD; each epoch broadcasts the model, trains a replica per
   *    partition, and parameter-averages the replicas (the same
@@ -48,6 +47,15 @@ import org.apache.spark.sql.functions._
   * everywhere (SURVEY §7), so q40/q41 stay rows-only regardless.
   */
 object SkipGram {
+
+  /** Most corpus tokens [[fitLocal]] takes (~400 MB of ints). */
+  private val MaxDriverTokens = 100000000L
+
+  /** The driver gate of [[fitLocal]]: the model (syn0 + syn1, `2 · vocab
+    * · dim` floats) within [[graft.graph.KGraph.MaxDriverParams]] and
+    * the corpus within 1e8 tokens. Past it, [[fitDistributed]]. */
+  private[graft] def fitsDriver(vocab: Long, dim: Int, tokens: Long): Boolean =
+    2L * vocab * dim <= graft.graph.KGraph.MaxDriverParams && tokens <= MaxDriverTokens
 
   /** Sigmoid lookup: ExpTableSize entries over [-MaxExp, MaxExp]. */
   private val MaxExp = 6.0f
@@ -281,21 +289,6 @@ object SkipGram {
       else java.util.Arrays.copyOfRange(syn0, v * dim, v * dim + dim)
     }
 
-  /** DataFrame front door for the driver-local path: walks
-    * (path: array<long>) → (node_id: long, vec: array<double>) matching
-    * MLlib's `getVectors` + relabel join-back shape. One distributed
-    * scan collects the corpus; tokens are assumed dense in
-    * [0, vocabSize) — `KGraph.relabel`'s contract. */
-  def fit(spark: SparkSession, walks: DataFrame, vocabSize: Int, dim: Int, window: Int,
-          epochs: Int, lr: Double, negative: Int = 5, minCount: Int = 0, seed: Long = 42L,
-          threads: Int = Runtime.getRuntime.availableProcessors()): DataFrame = {
-    val sentences: Array[Array[Int]] = walks.select(col("path").cast("array<int>"))
-      .rdd.map(_.getSeq[Int](0).toArray).collect()
-    val emb = fitLocal(sentences, vocabSize, dim, window, epochs, lr, negative,
-      minCount, seed, threads)
-    embDF(spark, emb)
-  }
-
   /** Unbounded-corpus path: sentences stay distributed; each epoch
     * broadcasts the current model, trains an independent replica per
     * partition over its local slice, and averages the replicas weighted
@@ -376,7 +369,9 @@ object SkipGram {
     } finally sentences.unpersist(blocking = false)
   }
 
-  private def embDF(spark: SparkSession, emb: Array[Array[Float]]): DataFrame = {
+  /** [[fitLocal]]'s rows as (node_id: long, vec: array<double>), the
+    * shape [[fitDistributed]] returns; null (below-minCount) rows drop. */
+  private[graft] def embDF(spark: SparkSession, emb: Array[Array[Float]]): DataFrame = {
     val rows = emb.iterator.zipWithIndex.collect {
       case (v, id) if v != null => (id.toLong, v.map(_.toDouble))
     }.toSeq

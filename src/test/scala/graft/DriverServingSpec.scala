@@ -43,16 +43,17 @@ class DriverServingSpec extends AnyFunSuite {
   private def rows(df: DataFrame): Seq[(String, String, Int)] =
     df.collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSeq.sortBy(r => (r._1, r._3))
 
-  /** `knnRecommend`'s plan with the top-k kernel forced to `fused` or the
-    * relational one. */
+  /** `knnRecommend`'s plan with the top-k kernel called directly: the
+    * fused one or the relational one. */
   private def sparkRecs(fold: DriverFold, train: DataFrame, k: Int, allRecs: Boolean,
                         fused: Boolean): DataFrame = {
     val (users, items) = fold.tables(spark)
     val maxRated = train.groupBy("user_id").count().agg(max("count")).first().getLong(0)
     val nItems = items.count()
     val kPrime = if (allRecs) nItems.toInt else math.min(maxRated + k, nItems).toInt
-    val top = CosineKnn.topK(users, items, kPrime, fusedMinPairs = if (fused) 0L else Long.MaxValue)
-    assert(CosineKnn.lastKernel == (if (fused) "fused" else "relational"))
+    val top =
+      if (fused) CosineKnn.topKCompute(users, items, kPrime, excludeSelf = false)
+      else CosineKnn.topKRelational(users, items, kPrime, excludeSelf = false)
     val ranked = top.withColumnRenamed("query_id", "user_id")
       .join(train, Seq("user_id", "item_id"), "left_anti")
       .withColumn("rank", row_number().over(

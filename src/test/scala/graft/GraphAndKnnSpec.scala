@@ -84,11 +84,11 @@ class GraphAndKnnSpec extends AnyFunSuite {
     val vecs = (0 until 60).map { i =>
       (i.toLong, Seq(math.sin(i * 1.7), math.cos(i * 0.9), math.sin(i * 0.3) * 0.5))
     }.toDF("id", "vec")
-    // fusedMinPairs = 1 forces the compute kernel; collectMaxRows = 1
-    // forces shuffle-combine; default settings take the relational plan
-    val fused = CosineKnn.topK(vecs, vecs, 4, excludeSelf = true, fusedMinPairs = 1L)
+    // each kernel called directly; 60×60 pairs dispatch to the relational one
+    assert(CosineKnn.kernel(60, 60) == "relational")
+    val fused = CosineKnn.topKCompute(vecs, vecs, 4, excludeSelf = true)
       .orderBy("query_id", "rank").collect()
-    val comb = CosineKnn.topK(vecs, vecs, 4, excludeSelf = true, collectMaxRows = 1L)
+    val comb = CosineKnn.topKShuffleCombine(vecs, vecs, 4, excludeSelf = true)
       .orderBy("query_id", "rank").collect()
     val rel = CosineKnn.topK(vecs, vecs, 4, excludeSelf = true)
       .orderBy("query_id", "rank").collect()
@@ -101,6 +101,23 @@ class GraphAndKnnSpec extends AnyFunSuite {
       assert(f.getDouble(2) == r.getDouble(2)) // exact, not approximate
       assert(c.getDouble(2) == r.getDouble(2))
     }
+  }
+
+  test("topK kernel bands: the collect bound at 1M items, the fused bound at 4M pairs") {
+    assert(CosineKnn.kernel(1000000L, 1L) == "relational")
+    assert(CosineKnn.kernel(1000000L, 4L) == "fused")
+    assert(CosineKnn.kernel(1000001L, 1L) == "shuffle-combine")
+    assert(CosineKnn.kernel(2000L, 2000L) == "fused")
+    assert(CosineKnn.kernel(1999L, 2001L) == "relational") // 3,999,999 pairs
+    // past the collect bound the query side is never counted
+    assert(CosineKnn.kernel(1000001L, sys.error("query count read")) == "shuffle-combine")
+  }
+
+  test("topK rejects an id type outside long, int, string and double by name") {
+    val vecs = Seq((1L, Seq(1.0, 0.0)), (2L, Seq(0.0, 1.0))).toDF("id", "vec")
+      .select($"id".cast("decimal(10,0)").as("id"), $"vec")
+    val e = intercept[IllegalArgumentException](CosineKnn.topK(vecs, vecs, 1))
+    assert(e.getMessage.contains("decimal(10,0)"), e.getMessage)
   }
 
   test("approxTopK recall >= 0.9 against exact top-k on real embeddings") {
@@ -196,7 +213,7 @@ class GraphAndKnnSpec extends AnyFunSuite {
     ).toDF("id", "vec")
     val rel = CosineKnn.hardNegatives(vecs, vecs, 3, 0.95)
       .orderBy("query_id", "rank").collect()
-    assert(CosineKnn.lastKernel == "relational")
+    assert(CosineKnn.kernel(6, 6) == "relational")
     // query 0's neighbors: 1 excluded by ceiling, so 2 (0.8), 3 (0), 4 (< 0)
     val q0 = rel.filter(_.getLong(0) == 0L)
     assert(q0.map(_.getLong(1)).toSeq == Seq(2L, 3L, 4L))
@@ -204,12 +221,10 @@ class GraphAndKnnSpec extends AnyFunSuite {
     // the near-dup pair is absent in BOTH directions
     assert(!rel.exists(r => r.getLong(0) == 0L && r.getLong(1) == 1L))
     assert(!rel.exists(r => r.getLong(0) == 1L && r.getLong(1) == 0L))
-    val fused = CosineKnn.hardNegatives(vecs, vecs, 3, 0.95, fusedMinPairs = 1L)
+    val fused = CosineKnn.topKCompute(vecs, vecs, 3, excludeSelf = true, Some(0.95))
       .orderBy("query_id", "rank").collect()
-    assert(CosineKnn.lastKernel == "fused")
-    val comb = CosineKnn.hardNegatives(vecs, vecs, 3, 0.95, collectMaxRows = 1L)
+    val comb = CosineKnn.topKShuffleCombine(vecs, vecs, 3, excludeSelf = true, Some(0.95))
       .orderBy("query_id", "rank").collect()
-    assert(CosineKnn.lastKernel == "shuffle-combine")
     assert(fused.length == rel.length && comb.length == rel.length)
     fused.zip(rel).zip(comb).foreach { case ((f, r), c) =>
       assert(f.getLong(0) == r.getLong(0) && f.getLong(1) == r.getLong(1)
@@ -227,8 +242,8 @@ class GraphAndKnnSpec extends AnyFunSuite {
     // shuffle-combine (ExistingRDD = the RDD kernel's output scan)
     val vecs = (0 until 30).map(i =>
       (i.toLong, Seq(math.sin(i * 1.3), math.cos(i * 0.7), 0.2))).toDF("id", "vec")
-    val df = CosineKnn.hardNegatives(vecs, vecs, 2, 0.95, collectMaxRows = 1L)
-    assert(CosineKnn.lastKernel == "shuffle-combine")
+    assert(CosineKnn.kernel(1000001L, 30L) == "shuffle-combine")
+    val df = CosineKnn.topKShuffleCombine(vecs, vecs, 2, excludeSelf = true, Some(0.95))
     assert(df.queryExecution.executedPlan.toString.contains("ExistingRDD"))
   }
 }

@@ -78,19 +78,20 @@ class PlanSpec extends AnyFunSuite {
   test("topK dispatch: small products relational, large fused, huge item sides shuffle-combine (never collect)") {
     import spark.implicits._
     val emb = (1 to 50).map(i => (i.toLong, Seq.fill(4)(i * 0.1))).toDF("id", "vec")
-    // 50×50 = 2500 pairs < fusedMinPairs → relational: the plan is a
-    // codegen'd join, NOT a driver collect + RDD scan
-    val small = graft.knn.CosineKnn.topK(emb, emb, 3, excludeSelf = true)
-    assert(graft.knn.CosineKnn.lastKernel == "relational")
+    import graft.knn.CosineKnn
+    // 50×50 = 2500 pairs, under the fused bound → relational: the plan
+    // is a codegen'd join, NOT a driver collect + RDD scan
+    assert(CosineKnn.kernel(50, 50) == "relational")
+    val small = CosineKnn.topK(emb, emb, 3, excludeSelf = true)
     assert(!small.queryExecution.executedPlan.toString.contains("ExistingRDD"))
-    // forcing the fused regime shows the RDD-backed kernel
-    val fused = graft.knn.CosineKnn.topK(emb, emb, 3, excludeSelf = true, fusedMinPairs = 1L)
-    assert(graft.knn.CosineKnn.lastKernel == "fused")
+    // the fused band's kernel is the RDD-backed one
+    assert(CosineKnn.kernel(2000, 2000) == "fused")
+    val fused = CosineKnn.topKCompute(emb, emb, 3, excludeSelf = true)
     assert(fused.queryExecution.executedPlan.toString.contains("ExistingRDD"))
-    // above collectMaxRows: neither a driver collect nor an N×M window
+    // past the collect bound: neither a driver collect nor an N×M window
     // exchange — the map-side bounded-heap combine kernel runs
-    val gated = graft.knn.CosineKnn.topK(emb, emb, 3, excludeSelf = true, collectMaxRows = 10L)
-    assert(graft.knn.CosineKnn.lastKernel == "shuffle-combine")
+    assert(CosineKnn.kernel(1000001L, 50) == "shuffle-combine")
+    val gated = CosineKnn.topKShuffleCombine(emb, emb, 3, excludeSelf = true)
     assert(gated.orderBy("query_id", "rank").collect()
       .sameElements(small.orderBy("query_id", "rank").collect()))
   }

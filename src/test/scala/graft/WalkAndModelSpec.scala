@@ -125,21 +125,38 @@ class WalkAndModelSpec extends AnyFunSuite {
     assert(returns >= 15, s"only $returns/20 returned with p=1e-4")
   }
 
-  test("local walk kernel replays the join kernel's exact walks (uniform + biased)") {
+  test("walk kernels replay the pinned hash-chain walks (uniform + biased)") {
     import org.apache.spark.sql.functions.col
     import graft.walk.RandomWalks
-    val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 0L), (0L, 2L), (4L, 0L))
-      .toDF("src", "dst")
-    val adj = RandomWalks.adjacency(edges).cache()
+    val pairs = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 0L), (0L, 2L), (4L, 0L))
+    val adj = RandomWalks.adjacency(pairs.toDF("src", "dst")).cache()
     val nodes = adj.select(col("node"))
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2).toList)).toSet
-    // the broadcast-local kernel must realize bit-identical walks to the
-    // per-step join kernel — q42's SQL-replayed paths must not depend on dispatch
-    assert(canon(RandomWalks.randomWalks(spark, adj, nodes, 3, 6, 7L)) ==
-      canon(RandomWalks.randomWalksJoins(spark, adj, nodes, 3, 6, 7L)))
-    assert(canon(RandomWalks.biasedWalks(spark, adj, nodes, 3, 6, 0.5, 2.0, 7L)) ==
-      canon(RandomWalks.biasedWalksJoins(spark, adj, nodes, 3, 6, 0.5, 2.0, 7L)))
+    def sorted(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2).toList))
+        .sortBy(t => (t._1, t._2)).map(_._3).toList
+    // 3 walks of length 6 from each of nodes 0-4, in (start, walk_idx)
+    // order; recorded where the per-step SQL join kernels (xxhash64 in
+    // Catalyst) still ran beside these kernels and agreed with them
+    val uniform = List(
+      List(0L, 1, 2, 1, 0, 3), List(0L, 2, 0, 4, 0, 1), List(0L, 1, 0, 2, 0, 3),
+      List(1L, 2, 3, 0, 4, 0), List(1L, 0, 2, 3, 0, 4), List(1L, 2, 1, 2, 3, 0),
+      List(2L, 0, 2, 0, 1, 0), List(2L, 3, 0, 1, 0, 2), List(2L, 0, 2, 3, 2, 3),
+      List(3L, 0, 4, 0, 2, 0), List(3L, 2, 3, 2, 3, 2), List(3L, 0, 4, 0, 3, 0),
+      List(4L, 0, 2, 3, 2, 1), List(4L, 0, 2, 0, 2, 3), List(4L, 0, 4, 0, 2, 3))
+    val biased = List(
+      List(0L, 2, 0, 3, 0, 4), List(0L, 3, 0, 4, 0, 4), List(0L, 1, 0, 1, 0, 2),
+      List(1L, 0, 1, 0, 2, 3), List(1L, 0, 1, 0, 1, 2), List(1L, 2, 1, 2, 1, 2),
+      List(2L, 0, 2, 0, 1, 2), List(2L, 0, 3, 2, 3, 2), List(2L, 0, 3, 0, 3, 2),
+      List(3L, 0, 3, 2, 3, 2), List(3L, 0, 3, 2, 1, 2), List(3L, 2, 3, 2, 1, 2),
+      List(4L, 0, 4, 0, 4, 0), List(4L, 0, 4, 0, 3, 2), List(4L, 0, 4, 0, 4, 0))
+    assert(sorted(RandomWalks.randomWalks(spark, adj, nodes, 3, 6, 7L)) == uniform)
+    assert(sorted(RandomWalks.biasedWalks(spark, adj, nodes, 3, 6, 0.5, 2.0, 7L)) == biased)
+    val driverAdj = RandomWalks.driverAdjacency(5,
+      pairs.map(_._1.toInt).toArray, pairs.map(_._2.toInt).toArray)
+    assert(RandomWalks.driverWalks(driverAdj, 3, 6, RandomWalks.uniformStep(7L))
+      .map(_.toList).toList == uniform)
+    assert(RandomWalks.driverWalks(driverAdj, 3, 6, RandomWalks.biasedStep(0.5, 2.0, 7L))
+      .map(_.toList).toList == biased)
   }
 
   test("popularity recommender never recommends rated items, ranks by count (J5/W7)") {
