@@ -11,9 +11,10 @@ import org.apache.spark.sql.functions._
   * The reference does brute-force cosine kNN with sklearn
   * (`deep_walk_based/model.py:54-80`, `transE/model.py:137-155`). The
   * exact variant here is one scoring loop, [[scoreTopK]], which a
-  * driver-regime fold runs on its own arrays ([[graft.walk.DriverFold]]),
-  * and [[topK]]'s three value-identical Spark kernels, one per size
-  * band: relational, fused and shuffle-combine.
+  * driver-regime fold runs on its own arrays ([[graft.walk.DriverFold]])
+  * and the fused kernel runs per query partition, plus one Spark kernel
+  * per item-side band in [[topK]]: fused, and shuffle-combine for item
+  * sides too large to collect.
   *
   * [[approxTopK]] is the 100 TB path: BucketedRandomProjectionLSH over
   * L2-normalized vectors (Euclidean distance on the unit sphere is a
@@ -36,12 +37,12 @@ object CosineKnn {
   /** queries/items: (id, vec: array<double>), both ids of one type among
     * long, int, string and double (any other is rejected by name).
     * Output: (query_id, item_id, score, rank) with rank 1..k by cosine
-    * similarity desc, ties broken by item id (deterministic). Self-pairs
-    * are excluded when `excludeSelf`; scores at or above `scoreCeiling`
-    * are rejected at scoring time.
+    * similarity desc, ties broken by item id (deterministic). Self-pairs,
+    * and pairs with a null id, are excluded when `excludeSelf`; scores at
+    * or above `scoreCeiling` are rejected at scoring time.
     *
-    * [[kernel]] picks one of three value-identical Spark kernels from
-    * the item and query counts:
+    * [[kernel]] picks one of two value-identical Spark kernels from the
+    * item count:
     *
     *  - items above 1M rows (≈ 1.2 GB of 150-dim doubles): NEVER
     *    collected to the driver — the scoring cartesian feeds a map-side
@@ -50,29 +51,20 @@ object CosineKnn {
     *    never the N×M scored stream. At this scale [[approxTopK]] is
     *    still the recommended path; this is the exact fallback that
     *    survives it.
-    *  - n_queries × n_items below 4M: the relational form
-    *    ([[topKRelational]], crossJoin(broadcast) + ranking window) — at
-    *    small products the fused kernel's collect + RDD round-trip costs
-    *    more than the codegen'd join it replaces (q21 regressed
-    *    0.8 s → 4.4 s in r2 for exactly this reason).
-    *  - otherwise: the fused kernel ([[topKCompute]]). The relational
-    *    form would materialize an N×M row stream where EVERY row carries
-    *    both dim-sized vectors — ~75 GB of row traffic for 1.5k users ×
-    *    20k items × 150 dims, memory-bandwidth-bound regardless of
-    *    parallelism. Instead the item matrix broadcasts as primitive
-    *    arrays and [[scoreTopK]] runs per query partition, emitting only
-    *    the top-k rows — same accumulation order, same tie-break,
-    *    bit-identical scores.
+    *  - otherwise: the fused kernel ([[topKCompute]]). A relational
+    *    crossJoin + ranking window would materialize an N×M row stream
+    *    where EVERY row carries both dim-sized vectors — ~75 GB of row
+    *    traffic for 1.5k users × 20k items × 150 dims. Instead the item
+    *    matrix broadcasts as primitive arrays and [[scoreTopK]] runs per
+    *    query partition, emitting only the top-k rows.
     *
-    * Dispatch runs `count()` on the inputs (items always, queries below
-    * the collect bound) — cache inputs with expensive lineage before
-    * calling, as the recommenders do with their embedding tables, or
-    * pass the sizes you already know via `knownItemCount` /
-    * `knownQueryCount` (≥ 0) and the gating scan is skipped entirely.
+    * Dispatch runs `count()` on the item side — cache inputs with
+    * expensive lineage before calling, as the recommenders do with their
+    * embedding tables, or pass the size you already know via
+    * `knownItemCount` (≥ 0) and the gating scan is skipped entirely.
     */
   def topK(queries: DataFrame, items: DataFrame, k: Int, excludeSelf: Boolean = false,
-           knownItemCount: Long = -1L, knownQueryCount: Long = -1L,
-           scoreCeiling: Option[Double] = None): DataFrame = {
+           knownItemCount: Long = -1L, scoreCeiling: Option[Double] = None): DataFrame = {
     import org.apache.spark.sql.types._
     val (qType, iType) = (queries.schema("id").dataType, items.schema("id").dataType)
     require(qType == iType && (qType match {
@@ -80,33 +72,26 @@ object CosineKnn {
       case _ => false
     }), s"CosineKnn.topK: query and item ids must share one of the types bigint, int, " +
       s"string, double; got ${qType.simpleString} and ${iType.simpleString}")
-    val m = if (knownItemCount >= 0L) knownItemCount else items.count()
-    kernel(m, if (knownQueryCount >= 0L) knownQueryCount else queries.count()) match {
+    kernel(if (knownItemCount >= 0L) knownItemCount else items.count()) match {
       case "shuffle-combine" => topKShuffleCombine(queries, items, k, excludeSelf, scoreCeiling)
-      case "relational" => topKRelational(queries, items, k, excludeSelf, scoreCeiling)
       case _ => topKCompute(queries, items, k, excludeSelf, scoreCeiling)
     }
   }
 
-  /** Most item rows the broadcast kernels collect to the driver. */
+  /** Most item rows the fused kernel collects to the driver. */
   private val CollectMaxRows = 1000000L
-  /** Fewest query × item pairs the fused kernel takes. */
-  private val FusedMinPairs = 4000000L
 
-  /** The kernel [[topK]] runs for `nItems` items and `nQueries` queries:
-    * "shuffle-combine", "relational" or "fused". `nQueries` is only
-    * evaluated within the collect bound. */
-  private[graft] def kernel(nItems: Long, nQueries: => Long): String =
-    if (nItems > CollectMaxRows) "shuffle-combine"
-    else if (nQueries * nItems < FusedMinPairs) "relational"
-    else "fused"
+  /** The kernel [[topK]] runs for `nItems` items: "shuffle-combine" or
+    * "fused". */
+  private[graft] def kernel(nItems: Long): String =
+    if (nItems > CollectMaxRows) "shuffle-combine" else "fused"
 
   /** The centroids the last [[ivfTopK]] call on this thread fit —
     * `(list_id, center)` rows, read by the q52 oracle builder. */
   private[graft] val lastIvfCentroidsTl = new ThreadLocal[Array[(Int, Array[Double])]]
 
-  /** `sqrt(dot(v, v))`, accumulated left to right: the [[l2norm]] of the
-    * relational kernels. */
+  /** `sqrt(dot(v, v))`, accumulated left to right: the [[l2norm]] of
+    * [[topKShuffleCombine]]'s SQL scoring. */
   private[graft] def norm(v: Array[Double]): Double = {
     var s = 0.0; var i = 0
     while (i < v.length) { s += v(i) * v(i); i += 1 }
@@ -115,9 +100,9 @@ object CosineKnn {
 
   /** The one exact scoring loop, shared by the fused kernel and the
     * driver recommend path ([[graft.walk.DriverFold]]): the cosine of `qv`
-    * against every item index not `skip`ped, scored exactly as the
-    * relational plan scores it (left-to-right dot, `norms` from [[norm]],
-    * zero vectors at the -2.0 sentinel), keeping the best `k` by (score
+    * against every item index not `skip`ped, scored exactly as the SQL
+    * plan of [[topKShuffleCombine]] scores it (left-to-right dot, `norms`
+    * from [[norm]], zero vectors at the -2.0 sentinel), keeping the best `k` by (score
     * desc, index asc) in a bounded worst-first heap. Scores at or above
     * `ceiling` are rejected before the heap. Items sorted by id make the
     * index tie-break the (score desc, item_id asc) one. Returns
@@ -187,8 +172,10 @@ object CosineKnn {
       val (ids, vecs, norms) = bc.value
       it.flatMap { r =>
         val qid = r.get(0)
+        // a null id compares unknown under SQL's `=!=`, so excludeSelf
+        // drops its pairs, as the shuffle-combine kernel's filter does
         val best = scoreTopK(r.getSeq[Double](1).toArray, vecs, norms, k, ceilV,
-          skip = idx => excludeSelf && ids(idx) == qid)
+          skip = idx => excludeSelf && (qid == null || ids(idx) == null || ids(idx) == qid))
         best.iterator.zipWithIndex.map { case ((score, ix), rank) =>
           Row(qid, ids(ix), score, rank + 1)
         }
@@ -197,36 +184,6 @@ object CosineKnn {
     spark.createDataFrame(out, StructType(Seq(
       StructField("query_id", idType), StructField("item_id", idType),
       StructField("score", DoubleType), StructField("rank", IntegerType, nullable = false))))
-  }
-
-  /** The relational kernel, and the reference the other kernels are
-    * pinned against: crossJoin(broadcast) + ranking window. Queries are
-    * spread and hash-partitioned by query_id so the window needs no
-    * exchange of the scored N×M rows. */
-  private[graft] def topKRelational(queries: DataFrame, items: DataFrame, k: Int,
-                                    excludeSelf: Boolean,
-                                    scoreCeiling: Option[Double] = None): DataFrame = {
-    val sc = queries.sparkSession.sparkContext
-    val parts = math.max(sc.defaultParallelism, queries.rdd.getNumPartitions)
-    val q = queries.select(col("id").as("query_id"), col("vec").as("qv"))
-      .repartition(parts, col("query_id"))
-      .withColumn("qn", l2norm("qv"))
-    val it = items.select(col("id").as("item_id"), col("vec").as("iv"))
-      .withColumn("in", l2norm("iv"))
-    val scored = q.crossJoin(broadcast(it))
-      .filter(if (excludeSelf) col("query_id") =!= col("item_id") else lit(true))
-      // zero vectors (F14 zero-fill) score below any true cosine (< -1)
-      .withColumn("score",
-        when(col("qn") * col("in") > 0, dot("qv", "iv") / (col("qn") * col("in")))
-          .otherwise(lit(-2.0)))
-    // ceiling rejection BEFORE the ranking window — rejected rows never
-    // reach the per-query sort
-    val admitted = scoreCeiling.fold(scored)(c => scored.filter(col("score") < c))
-    admitted
-      .withColumn("rank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("score").desc, col("item_id"))))
-      .filter(col("rank") <= k)
-      .select("query_id", "item_id", "score", "rank")
   }
 
   /** Hard-negative mining for contrastive training: per query, the
@@ -238,13 +195,11 @@ object CosineKnn {
     *
     * Routes through the same size-gated [[topK]] dispatch as every
     * other exact-kNN entry point, with the ceiling pushed into each
-    * kernel at scoring time: the relational plan filters before the
-    * per-query window, the fused and shuffle-combine kernels reject
-    * before the bounded-heap insert — so an item side too large to
-    * broadcast takes the shuffle-combine path instead of OOMing a
-    * forced broadcast (the r9 plan hard-wired `broadcast(items)`
-    * regardless of size). Zero vectors (score sentinel -2) rank last
-    * as everywhere else. */
+    * kernel at scoring time: both kernels reject before the bounded-heap
+    * insert — so an item side too large to broadcast takes the
+    * shuffle-combine path instead of OOMing a forced broadcast (the r9
+    * plan hard-wired `broadcast(items)` regardless of size). Zero
+    * vectors (score sentinel -2) rank last as everywhere else. */
   def hardNegatives(queries: DataFrame, items: DataFrame, k: Int,
                     simCeiling: Double): DataFrame =
     topK(queries, items, k, excludeSelf = true, scoreCeiling = Some(simCeiling))
@@ -254,9 +209,13 @@ object CosineKnn {
     * combine (`aggregateByKey`), so the only exchange carries at most
     * n_queries × n_input_partitions × k (id, score) pairs — the N×M
     * scored stream never crosses the wire, and nothing touches the
-    * driver. Same tie-break as the other kernels: (score desc, item_id
+    * driver. Same tie-break as the fused kernel: (score desc, item_id
     * asc); merging bounded heaps is order-independent under that total
-    * order, so results are deterministic under any partitioning. */
+    * order, so results are deterministic under any partitioning.
+    *
+    * It scores in SQL ([[dot]] / [[l2norm]]), not through
+    * [[scoreTopK]], so the tests' fused == shuffle-combine pins compare
+    * two independent scorings. */
   private[graft] def topKShuffleCombine(queries: DataFrame, items: DataFrame, k: Int,
                                         excludeSelf: Boolean,
                                         scoreCeiling: Option[Double] = None): DataFrame = {
@@ -278,12 +237,17 @@ object CosineKnn {
     // ceiling rejection inside the codegen'd scoring stage — rejected
     // rows never reach the heap insert or the (already skinny) exchange
     val scored = scoreCeiling.fold(scoredAll)(c => scoredAll.filter(col("score") < c))
-    val cmpId: (Any, Any) => Int = idType match {
+    // the fused kernel's item order, Spark's ascending sort: nulls
+    // first, strings by UTF-8 bytes (not String.compareTo's UTF-16 units)
+    val cmpValue: (Any, Any) => Int = idType match {
       case LongType    => (a, b) => java.lang.Long.compare(a.asInstanceOf[Long], b.asInstanceOf[Long])
       case IntegerType => (a, b) => java.lang.Integer.compare(a.asInstanceOf[Int], b.asInstanceOf[Int])
       case DoubleType  => (a, b) => java.lang.Double.compare(a.asInstanceOf[Double], b.asInstanceOf[Double])
-      case _           => (a, b) => a.asInstanceOf[String].compareTo(b.asInstanceOf[String])
+      case _           => (a, b) =>
+        graft.walk.DriverFold.idOrder.compare(a.asInstanceOf[String], b.asInstanceOf[String])
     }
+    val cmpId: (Any, Any) => Int = (a, b) =>
+      if (a == null || b == null) java.lang.Boolean.compare(b == null, a == null) else cmpValue(a, b)
     // PQ dequeues its "greatest" = the WORST candidate under
     // (score desc, item asc) — identical to the fused kernel's ordering
     val worseGreater: Ordering[(Double, Any)] = new Ordering[(Double, Any)] {

@@ -163,10 +163,10 @@ class Als(val dim: Int, val iters: Int, val lambda: Double, val seed: Long,
   }
 
   /** Dispatch by parameter count, like the other trainers. */
-  def fitEmb(spark: SparkSession, ratings: DataFrame, nUsers: Int, nItems: Int,
-             driverMaxParams: Long = graft.graph.KGraph.MaxDriverParams): (DataFrame, DataFrame) = {
+  def fitEmb(spark: SparkSession, ratings: DataFrame, nUsers: Int, nItems: Int):
+      (DataFrame, DataFrame) = {
     val nParams = (nUsers.toLong + nItems.toLong) * dim
-    if (nParams <= driverMaxParams) {
+    if (nParams <= graft.graph.KGraph.MaxDriverParams) {
       val (p, q) = fit(spark, ratings, nUsers, nItems)
       def wrap(arr: Array[Array[Float]]): DataFrame = {
         import org.apache.spark.sql.types._

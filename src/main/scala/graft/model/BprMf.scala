@@ -213,13 +213,13 @@ class BprMf(val dim: Int, val epochs: Int, val lr: Double, val reg: Double,
     (p, q)
   }
 
-  /** Factor tables as DataFrames `(id: int, vec: array<float>)`,
-    * driver tier below `driverMaxParams` total floats, distributed
-    * above — the dispatch serving paths call. */
-  def fitEmb(spark: SparkSession, positives: DataFrame, nUsers: Int, nItems: Int,
-             driverMaxParams: Long = graft.graph.KGraph.MaxDriverParams): (DataFrame, DataFrame) = {
+  /** Factor tables as DataFrames `(id: int, vec: array<float>)`:
+    * driver tier up to [[graft.graph.KGraph.MaxDriverParams]] total
+    * floats, distributed above — the dispatch serving paths call. */
+  def fitEmb(spark: SparkSession, positives: DataFrame, nUsers: Int, nItems: Int):
+      (DataFrame, DataFrame) = {
     val nParams = nUsers.toLong * dim + nItems.toLong * (dim + 1)
-    if (nParams <= driverMaxParams) {
+    if (nParams <= graft.graph.KGraph.MaxDriverParams) {
       val (p, q) = fit(spark, positives, nUsers, nItems)
       def wrap(arr: Array[Array[Float]]): DataFrame = {
         import org.apache.spark.sql.types._
@@ -266,8 +266,8 @@ object BprMf {
     * against the broadcast item matrix (a bounded per-partition heap,
     * the [[graft.walk.DeepWalkRecommender]] k' trick), seen items
     * anti-joined away, final rank ≤ k. Serving is size-gated inside
-    * [[MfServing.topKRecs]]: catalogs above `collectMaxItems` route
-    * through the block-shuffle kernel and never touch the driver.
+    * [[MfServing.topKRecs]]: catalogs above 2M items route through
+    * the block-shuffle kernel and never touch the driver.
     *
     * @return (user_id, item_id, rank) with the (score desc, item_id)
     *         tie-break every recommender here uses */

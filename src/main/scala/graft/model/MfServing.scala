@@ -11,18 +11,18 @@ import scala.collection.mutable
   * (the [[graft.walk.DeepWalkRecommender]] k' trick guarantees ≥ k
   * unseen survivors), anti-join the seen pairs, rank ≤ k.
   *
-  * Physical strategy is size-gated two ways (value-identical — the
-  * dispatch spec pins bit-equality):
+  * [[kernel]] picks one of two value-identical kernels from the item
+  * count (MfServingSpec pins bit-equality by calling both directly):
   *
-  *  - item catalogs at or below `collectMaxItems` (default 2M rows ≈
-  *    136 MB at d=16 floats): collect + broadcast the item matrix,
+  *  - item catalogs up to 2M rows (≈ 136 MB at d=16 floats):
+  *    [[topKBroadcast]] collects and broadcasts the item matrix,
   *    fused score-and-select per user partition — users never shuffle,
   *    only the ≤ k'-per-user survivors do.
-  *  - larger catalogs: NEVER collected to the driver — a block
-  *    cartesian over glom'd factor partitions (each item block
-  *    deserializes once per block pair, not once per scored pair)
-  *    feeds per-user bounded heaps, merged order-independently under
-  *    the same (score desc, item asc) total order. The exchange
+  *  - larger catalogs: [[topKBlockShuffle]], NEVER collected to the
+  *    driver — a block cartesian over glom'd factor partitions (each
+  *    item block deserializes once per block pair, not once per scored
+  *    pair) feeds per-user bounded heaps, merged order-independently
+  *    under the same (score desc, item asc) total order. The exchange
   *    carries at most n_users × n_item_blocks × k' skinny rows; the
   *    N×M scored stream never crosses the wire. Float accumulation
   *    order per pair is identical to the broadcast kernel, so scores
@@ -35,12 +35,13 @@ import scala.collection.mutable
   */
 private[model] object MfServing {
 
-  /** Which kernel this thread's last [[topKRecs]] call dispatched to —
-    * observable for plan-regression specs (both kernels are RDD-backed
-    * and indistinguishable in the result's SQL plan string). */
-  private[graft] val lastKernelTl = new ThreadLocal[String]
-  private[graft] def lastKernel: String = lastKernelTl.get()
-  private def lastKernel_=(v: String): Unit = lastKernelTl.set(v)
+  /** Most item rows the broadcast kernel collects to the driver. */
+  private val CollectMaxItems = 2000000L
+
+  /** The kernel [[topKRecs]] runs for `nItems` items: "broadcast-heap"
+    * or "block-shuffle". */
+  private[graft] def kernel(nItems: Long): String =
+    if (nItems <= CollectMaxItems) "broadcast-heap" else "block-shuffle"
 
   /** @param pDf     user factors (id, vec)
     * @param qDf     item factors (id, vec) under dense ids 0..nItems-1
@@ -50,27 +51,21 @@ private[model] object MfServing {
     * @param dense   seen (u, i) pairs
     * @param uIdx    (user_id, u) dense user index
     * @param iIdx    (item_id, i) dense item index
-    * @param collectMaxItems largest catalog the broadcast kernel takes
     * @param knownItemCount  pass nItems when already known (≥ 0) and
     *                        the gating count() scan is skipped
     * @return (user_id, item_id, rank) — (score desc, item_id) tie-break */
   def topKRecs(spark: SparkSession, pDf: DataFrame, qDf: DataFrame,
                d: Int, bias: Boolean, dense: DataFrame,
                uIdx: DataFrame, iIdx: DataFrame, k: Int,
-               collectMaxItems: Long = 2000000L,
                knownItemCount: Long = -1L): DataFrame = {
     val nItems = if (knownItemCount >= 0L) knownItemCount else qDf.count()
     val maxRated = dense.groupBy("u").agg(count(lit(1)).as("c"))
       .agg(max("c")).first().getLong(0).toInt
     val kPrime = math.min(k.toLong + maxRated, nItems).toInt
-    val topRaw =
-      if (nItems <= collectMaxItems) {
-        lastKernel = "broadcast-heap"
-        topKBroadcast(spark, pDf, qDf, d, bias, kPrime, nItems.toInt)
-      } else {
-        lastKernel = "block-shuffle"
-        topKBlockShuffle(spark, pDf, qDf, d, bias, kPrime)
-      }
+    val topRaw = kernel(nItems) match {
+      case "block-shuffle" => topKBlockShuffle(spark, pDf, qDf, d, bias, kPrime)
+      case _ => topKBroadcast(spark, pDf, qDf, d, bias, kPrime, nItems.toInt)
+    }
     topRaw
       .join(dense.select(col("u"), col("i"), lit(1).as("__seen")), Seq("u", "i"), "left")
       .filter(col("__seen").isNull)
@@ -111,10 +106,11 @@ private[model] object MfServing {
   }
 
   /** Broadcast kernel: item matrix to every executor once, fused
-    * score-and-select over the user partitions. */
-  private def topKBroadcast(spark: SparkSession, pDf: DataFrame, qDf: DataFrame,
-                            d: Int, bias: Boolean, kPrime: Int,
-                            nItems: Int): DataFrame = {
+    * score-and-select over the user partitions. Returns (u, i, score):
+    * each user's best `kPrime` items, seen ones included. */
+  private[graft] def topKBroadcast(spark: SparkSession, pDf: DataFrame, qDf: DataFrame,
+                                   d: Int, bias: Boolean, kPrime: Int,
+                                   nItems: Int): DataFrame = {
     import spark.implicits._
     val qArr = new Array[Array[Float]](nItems)
     qDf.select(col("id").cast("int"), col("vec"))
@@ -145,9 +141,10 @@ private[model] object MfServing {
     * (user block × item block) task scores its cross product into
     * per-user bounded heaps; heaps merge by concat-sort-truncate under
     * the shared total order (associative + commutative, so the merge
-    * tree shape never changes the survivor set). */
-  private def topKBlockShuffle(spark: SparkSession, pDf: DataFrame, qDf: DataFrame,
-                               d: Int, bias: Boolean, kPrime: Int): DataFrame = {
+    * tree shape never changes the survivor set). Returns
+    * [[topKBroadcast]]'s rows. */
+  private[graft] def topKBlockShuffle(spark: SparkSession, pDf: DataFrame, qDf: DataFrame,
+                                      d: Int, bias: Boolean, kPrime: Int): DataFrame = {
     import spark.implicits._
     val ord = worstFirst
     val pRdd = pDf.select(col("id").cast("int"), col("vec"))

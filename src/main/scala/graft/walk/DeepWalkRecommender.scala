@@ -28,15 +28,17 @@ import org.apache.spark.sql.functions._
   * 0.05, min_count 1 (all-kept, as gensim min_count=1), workers =
   * local parallelism (`w2v_threads` remains an explicit alias).
   *
-  * A fold trains in the driver regime when its walks are
-  * class-sampling walks and its graph is small (see `train`): one Spark
-  * job collects the label edges, and relabel, adjacency, walks and
+  * One walk kernel per walk kind ([[RandomWalks.uniformStep]],
+  * [[RandomWalks.biasedStep]]) serves both regimes. A fold trains in the
+  * driver regime when its graph is small (see `train`): one Spark job
+  * collects the label edges, and relabel, adjacency, walks and
   * [[SkipGram.fitLocal]] run on driver arrays. The driver walks are
   * generated in (start, walk_idx) order, so `pin_order` is implied
   * there, and an unpinned run with `w2v_threads: 1` is bit-exact too.
   * Such a fold then recommends from its driver arrays ([[DriverFold]]).
-  * Other folds train in the distributed regime: Spark walks, then
-  * [[SkipGram.fitDistributed]] or MLlib Word2Vec.
+  * Other folds, and every `w2v_impl: distributed` or `mllib` fold, train
+  * in the distributed regime: Spark walks over the broadcast adjacency,
+  * then [[SkipGram.fitDistributed]] or MLlib Word2Vec.
   */
 class DeepWalkRecommender(cfg: Map[String, String] = Map.empty) extends EmbeddingServing {
   private def i(key: String, d: Int) = cfg.get(key).map(_.toInt).getOrElse(d)
@@ -56,9 +58,6 @@ class DeepWalkRecommender(cfg: Map[String, String] = Map.empty) extends Embeddin
                      propertyEdges: Option[DataFrame],
                      socialEdges: Option[DataFrame]): Recommender = {
     val impl = cfg.getOrElse("w2v_impl", "auto")
-    val aliasWalks = biased && cfg.get("walk_impl").contains("alias")
-    require(!(impl == "local" && aliasWalks),
-      "w2v_impl: local trains on driver walks; walk_impl: alias needs w2v_impl: distributed or mllib")
     // persist: train feeds the walk edges here plus the maxRated agg and
     // anti-join in a distributed fold's recommend() — without this the
     // (split-derived) lineage re-derives per consumer
@@ -83,11 +82,7 @@ class DeepWalkRecommender(cfg: Map[String, String] = Map.empty) extends Embeddin
     // past every size gate, `distributed`/`mllib` force the distributed
     // one, and `auto` trains on the driver when the label edges, the
     // adjacency and the SkipGram model and corpus all fit there
-    val onDriver = impl match {
-      case "local" => true
-      case "distributed" | "mllib" => false
-      case _ => !aliasWalks
-    }
+    val onDriver = impl != "distributed" && impl != "mllib"
     val bound = if (impl == "local") Long.MaxValue else KGraph.MaxDriverEdges
     val local = for {
       c @ Array(_, src, dst, _, _) <- if (!onDriver) None
@@ -155,15 +150,8 @@ class DeepWalkRecommender(cfg: Map[String, String] = Map.empty) extends Embeddin
     val starts = nodes.select(col("node_id").as("node"))
     val walksRaw =
       if (biased)
-        // walk_impl: alias — the extreme-scale per-edge-alias-table
-        // kernel (O(1) steps, shuffle-joined tables, nothing broadcast);
-        // default stays the class-sampling kernels the q42 golden pins
-        if (cfg.get("walk_impl").contains("alias"))
-          RandomWalks.biasedWalksAlias(spark, adj, starts, i("n_walks", 10), i("walk_len", 10),
-            f("p", 1.0), f("q", 1.0), seed)
-        else
-          RandomWalks.biasedWalks(spark, adj, starts, i("n_walks", 10), i("walk_len", 10),
-            f("p", 1.0), f("q", 1.0), seed)
+        RandomWalks.biasedWalks(spark, adj, starts, i("n_walks", 10), i("walk_len", 10),
+          f("p", 1.0), f("q", 1.0), seed)
       else
         RandomWalks.randomWalks(spark, adj, starts, i("n_walks", 10), i("walk_len", 10), seed)
     // pin_order: total-order the corpus by its unique (start, walk_idx)
@@ -264,9 +252,9 @@ object DeepWalkRecommender {
     * reference filters to the user's UNRATED items first, then runs kNN
     * with n_neighbors = k over that candidate set. Same here — one query
     * row and a pre-anti-joined item side reach [[CosineKnn.topK]], so
-    * every dispatch tier (fused/shuffle-combine/relational) scores a
-    * single user instead of ranking all users and slicing after (which
-    * is what filter-on-recommend costs at the opaque-RDD tiers, where no
+    * either kernel (fused or shuffle-combine) scores a single user
+    * instead of ranking all users and slicing after (which is what
+    * filter-on-recommend costs at these opaque-RDD kernels, where no
     * Catalyst pushdown can reach below the kernel). Row-identical to the
     * per-user slice of [[knnRecommend]]: the full path's
     * k' = maxRated + k guarantees ≥ k unrated survivors per user, and
@@ -279,7 +267,7 @@ object DeepWalkRecommender {
     val candidates = itemEmb.join(rated, Seq("id"), "left_anti")
     val nCand = candidates.count()
     val kk = if (allRecs) nCand.toInt else math.min(k.toLong, nCand).toInt
-    CosineKnn.topK(query, candidates, kk, knownItemCount = nCand, knownQueryCount = 1L)
+    CosineKnn.topK(query, candidates, kk, knownItemCount = nCand)
       .select(col("query_id").as("user_id"), col("item_id"), col("rank"))
   }
 }

@@ -19,14 +19,9 @@ import org.apache.spark.sql.functions._
   * step, seed) — deterministic under retries and any partitioning
   * (SURVEY §4.5) — so both regimes realize the same walks.
   *
-  * The biased class-sampling step costs O(degree) set algebra per
-  * extension; fine for the graph sizes the reference targets. The
-  * extreme-scale path is [[biasedWalksAlias]]: per-directed-edge
-  * Walker alias tables (the classic node2vec preprocessing) make every
-  * step O(1) — two hash draws and two array reads — at the cost of one
-  * O(Σ deg(cur)) distributed precompute, and the per-step join keys on
-  * (prev, cur) WITHOUT broadcasting, so neither the tables nor the
-  * adjacency ever need to fit on one executor.
+  * The biased step is the membership-test (class-sampling) kernel
+  * SURVEY M2 prescribes: O(degree) set algebra per extension, fine for
+  * the graph sizes the reference targets.
   */
 object RandomWalks {
 
@@ -40,9 +35,6 @@ object RandomWalks {
       // the same key
       .groupBy(col("src").as("node"))
       .agg(sort_array(collect_set("dst")).as("nbrs"))
-
-  private def hash01(cols: org.apache.spark.sql.Column*): org.apache.spark.sql.Column =
-    (pmod(xxhash64(cols: _*), lit(1000000007L)).cast("double") / 1000000007.0)
 
   // ---- step-function kernel ------------------------------------------
 
@@ -201,132 +193,4 @@ object RandomWalks {
   def biasedWalks(spark: SparkSession, adj: DataFrame, nodes: DataFrame,
                   nWalks: Int, walkLen: Int, p: Double, q: Double, seed: Long): DataFrame =
     localWalks(spark, adj, nodes, nWalks, walkLen, biasedStep(p, q, seed))
-
-  // ---- alias-table kernel (extreme-scale biased walks) ----------------
-
-  /** Walker alias construction over a weight vector: O(d) build, O(1)
-    * draw. Returns (prob, alias): draw slot j uniformly, take j with
-    * probability prob(j), else alias(j). Standard Vose/Walker method
-    * (public construction; same scheme as [[graft.walk.SkipGram]]'s
-    * negative sampler). */
-  private[graft] def buildAlias(w: Array[Double]): (Array[Double], Array[Int]) = {
-    val n = w.length
-    val sum = w.sum
-    // p=0 or q=0 would give 1/p = Infinity → all-NaN scaled weights →
-    // a silently UNIFORM table (every slot lands on the `large` stack),
-    // the opposite of the intended return-dominated distribution. The
-    // class-sampling step would diverge too (Inf draw mass); fail fast instead.
-    require(w.forall(v => java.lang.Double.isFinite(v) && v >= 0) &&
-      java.lang.Double.isFinite(sum) && sum > 0,
-      s"alias weights must be finite, non-negative, with positive mass (p/q must be > 0); got ${w.mkString(",")}")
-    val prob = new Array[Double](n)
-    val alias = new Array[Int](n)
-    val scaled = w.map(_ * n / sum)
-    val small = scala.collection.mutable.Stack[Int]()
-    val large = scala.collection.mutable.Stack[Int]()
-    // deterministic fill order (ascending index) keeps the tables — and
-    // therefore every downstream draw — reproducible across runs
-    var i = 0
-    while (i < n) { if (scaled(i) < 1.0) small.push(i) else large.push(i); i += 1 }
-    while (small.nonEmpty && large.nonEmpty) {
-      val s = small.pop(); val l = large.pop()
-      prob(s) = scaled(s); alias(s) = l
-      scaled(l) = scaled(l) - (1.0 - scaled(s))
-      if (scaled(l) < 1.0) small.push(l) else large.push(l)
-    }
-    while (large.nonEmpty) { val l = large.pop(); prob(l) = 1.0; alias(l) = l }
-    while (small.nonEmpty) { val s = small.pop(); prob(s) = 1.0; alias(s) = s }
-    (prob, alias)
-  }
-
-  /** Per-directed-edge alias tables for the node2vec transition
-    * π(next | prev, cur): for every edge (prev → cur), a Walker table
-    * over cur's neighbor list under the piecewise weights 1/p back,
-    * 1 to a common neighbor, 1/q otherwise (walker.py:148-155). Output
-    * (prev, cur, nbrs, prob, alias) stays a DataFrame — O(Σ deg(cur))
-    * rows×entries total, shuffled-joined per step, never collected or
-    * broadcast: this is what makes the kernel viable when the adjacency
-    * itself exceeds executor memory. */
-  private[graft] def edgeAliasTables(adj: DataFrame, p: Double, q: Double): DataFrame = {
-    val edges = adj.select(col("node").as("prev"), explode(col("nbrs")).as("cur"))
-    val curAdj = adj.select(col("node").as("cur"), col("nbrs"))
-    val prevAdj = adj.select(col("node").as("prev"), col("nbrs").as("prev_nbrs"))
-    val weighted = edges
-      .join(curAdj, Seq("cur"))
-      .join(prevAdj, Seq("prev"))
-      .withColumn("w", expr(
-        s"transform(nbrs, x -> CASE WHEN x = prev THEN ${1.0 / p}D " +
-          s"WHEN array_contains(prev_nbrs, x) THEN 1.0D ELSE ${1.0 / q}D END)"))
-      .select("prev", "cur", "nbrs", "w")
-    val buildUdf = udf { w: Seq[Double] =>
-      val (prob, alias) = buildAlias(w.toArray)
-      (prob.toSeq, alias.toSeq)
-    }
-    weighted
-      .withColumn("pa", buildUdf(col("w")))
-      .select(col("prev"), col("cur"), col("nbrs"),
-        col("pa._1").as("prob"), col("pa._2").as("alias"))
-  }
-
-  /** Second-order walks via precomputed per-edge alias tables — the
-    * extreme-scale biased kernel. Each step is O(1): slot = hash mod
-    * degree, coin = hash01, next = if coin < prob(slot) nbrs(slot) else
-    * nbrs(alias(slot)). Distribution-identical to [[biasedStep]]'s class
-    * sampling (same piecewise weights), but a DIFFERENT seeded draw
-    * sequence — walks are deterministic for a fixed seed yet not
-    * bit-equal to [[biasedWalks]]' output, so the default keeps the
-    * class-sampling step (the q42 golden pins it) and callers opt in
-    * where the per-step set algebra or the broadcast adjacency is the
-    * bottleneck. */
-  def biasedWalksAlias(spark: SparkSession, adj: DataFrame, nodes: DataFrame,
-                       nWalks: Int, walkLen: Int, p: Double, q: Double,
-                       seed: Long): DataFrame = {
-    val aliasDf = edgeAliasTables(adj, p, q)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var state = nodes.select(col("node").as("start"))
-      .repartition(spark.sparkContext.defaultParallelism)
-      .crossJoin(spark.range(nWalks).select(col("id").as("walk_idx")))
-      .withColumn("path", array(col("start")))
-      .withColumn("cur", col("start"))
-      .withColumn("prev", lit(null).cast("long"))
-    for (step <- 1 until walkLen) {
-      val r = hash01(col("start"), col("walk_idx"), lit(step), lit(seed))
-      val idx = pmod(xxhash64(col("start"), col("walk_idx"), lit(step), lit(seed + 1)), lit(1000000007L))
-      val stepped =
-        if (step == 1)
-          // no previous node yet: uniform over cur's neighbors (the same
-          // first-step rule as [[biasedStep]])
-          state.join(adj, state("cur") === adj("node"), "left")
-            .withColumn("nxt",
-              when(col("nbrs").isNotNull && size(col("nbrs")) > 0,
-                element_at(col("nbrs"),
-                  (idx % greatest(size(col("nbrs")), lit(1)).cast("long") + 1).cast("int"))))
-        else {
-          // shuffle join on the walk edge — deliberately NOT broadcast
-          val at = aliasDf.select(col("prev").as("a_prev"), col("cur").as("a_cur"),
-            col("nbrs"), col("prob"), col("alias"))
-          state.join(at,
-              state("prev") === at("a_prev") && state("cur") === at("a_cur"), "left")
-            .withColumn("slot", (idx % greatest(size(col("nbrs")), lit(1)).cast("long") + 1).cast("int"))
-            .withColumn("nxt",
-              when(col("nbrs").isNotNull && size(col("nbrs")) > 0,
-                when(r < element_at(col("prob"), col("slot")),
-                  element_at(col("nbrs"), col("slot")))
-                  .otherwise(element_at(col("nbrs"),
-                    element_at(col("alias"), col("slot")) + 1))))
-        }
-      state = stepped.select(col("start"), col("walk_idx"),
-        when(col("nxt").isNotNull, concat(col("path"), array(col("nxt"))))
-          .otherwise(col("path")).as("path"),
-        col("nxt").as("cur"),
-        when(col("nxt").isNotNull, col("cur")).otherwise(lit(null).cast("long")).as("prev"))
-      if (step % 4 == 0) state = state.localCheckpoint(eager = false)
-    }
-    // materialize before releasing the alias tables — the walk is done
-    // with them, and a kernel that leaks a persisted E×deg-sized table
-    // per invocation would accumulate storage across folds
-    val out = state.select("start", "walk_idx", "path").localCheckpoint(eager = true)
-    aliasDf.unpersist(blocking = false)
-    out
-  }
 }

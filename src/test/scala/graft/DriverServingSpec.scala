@@ -44,7 +44,7 @@ class DriverServingSpec extends AnyFunSuite {
     df.collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSeq.sortBy(r => (r._1, r._3))
 
   /** `knnRecommend`'s plan with the top-k kernel called directly: the
-    * fused one or the relational one. */
+    * fused one or the shuffle-combine one. */
   private def sparkRecs(fold: DriverFold, train: DataFrame, k: Int, allRecs: Boolean,
                         fused: Boolean): DataFrame = {
     val (users, items) = fold.tables(spark)
@@ -53,7 +53,7 @@ class DriverServingSpec extends AnyFunSuite {
     val kPrime = if (allRecs) nItems.toInt else math.min(maxRated + k, nItems).toInt
     val top =
       if (fused) CosineKnn.topKCompute(users, items, kPrime, excludeSelf = false)
-      else CosineKnn.topKRelational(users, items, kPrime, excludeSelf = false)
+      else CosineKnn.topKShuffleCombine(users, items, kPrime, excludeSelf = false)
     val ranked = top.withColumnRenamed("query_id", "user_id")
       .join(train, Seq("user_id", "item_id"), "left_anti")
       .withColumn("rank", row_number().over(
@@ -61,16 +61,16 @@ class DriverServingSpec extends AnyFunSuite {
     (if (allRecs) ranked else ranked.filter(col("rank") <= k)).select("user_id", "item_id", "rank")
   }
 
-  test("driver top-k equals CosineKnn.topK's relational and fused kernels row for row") {
+  test("driver top-k equals CosineKnn.topK's fused and shuffle-combine kernels row for row") {
     for ((seed, nUsers, nItems, k) <- Seq((1, 12, 30, 5), (2, 20, 9, 4), (3, 6, 40, 50));
          allRecs <- Seq(false, true)) {
       val (fold, train) = randomFold(seed, nUsers, nItems)
       val local = fold.recommend(spark, k, allRecs)
       assert(Shim.localRows(local).isDefined, "the driver path returns a local table")
-      val relational = sparkRecs(fold, train, k, allRecs, fused = false)
-      assert(local.schema == relational.schema)
+      val combined = sparkRecs(fold, train, k, allRecs, fused = false)
+      assert(local.schema == combined.schema)
       val got = rows(local)
-      assert(got == rows(relational), s"seed $seed allRecs $allRecs vs relational")
+      assert(got == rows(combined), s"seed $seed allRecs $allRecs vs shuffle-combine")
       assert(got == rows(sparkRecs(fold, train, k, allRecs, fused = true)), s"seed $seed allRecs $allRecs vs fused")
       // u0 rated every item; the zero-vector user u3 still gets a list
       assert(!got.exists(_._1 == "u0") && got.exists(_._1 == "u3"))

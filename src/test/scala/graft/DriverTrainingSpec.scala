@@ -128,13 +128,21 @@ class DriverTrainingSpec extends AnyFunSuite {
     train.unpersist()
   }
 
-  test("w2v_impl: local refuses walk_impl: alias before touching Spark") {
-    val rec = new DeepWalkRecommender(Map("biased" -> "true", "walk_impl" -> "alias",
-      "w2v_impl" -> "local"))
-    assert(JobWatch.jobs(spark) {
-      intercept[IllegalArgumentException](rec.train(spark, ratings, None, None))
-      ()
-    }.isEmpty)
+  test("w2v_impl: mllib trains a DeepWalk fold on MLlib Word2Vec: at most k unrated recs per train user") {
+    val k = 2
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val rec = new DeepWalkRecommender(Map("w2v_impl" -> "mllib", "n_walks" -> "4", "walk_len" -> "6",
+      "embedding_size" -> "8", "w2v_partitions" -> "1"))
+    // the distributed regime runs many jobs; the driver regime runs one
+    assert(JobWatch.jobs(spark)(rec.train(spark, ratings, Some(props), None)).size > 1)
+    val recs = rec.recommend(k).collect()
+      .map(r => (r.getAs[String]("user_id"), r.getAs[String]("item_id")))
+    val rated = ratings.collect().map(r => (r.getLong(0).toString, r.getLong(1).toString)).toSet
+    assert(recs.map(_._1).toSet == rated.map(_._1))
+    assert(recs.groupBy(_._1).values.forall(_.length <= k))
+    assert(recs.forall(r => !rated(r)))
+    rec.release()
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
   }
 
   private val cases: Seq[(String, () => Recommender, Option[org.apache.spark.sql.DataFrame])] = Seq(

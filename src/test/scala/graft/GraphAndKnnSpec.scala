@@ -80,37 +80,57 @@ class GraphAndKnnSpec extends AnyFunSuite {
     assert(out.map(_.getLong(1)).toSeq == Seq(3L, 2L))
   }
 
-  test("fused and relational topK kernels are bit-identical") {
+  test("fused and shuffle-combine topK kernels are bit-identical") {
     val vecs = (0 until 60).map { i =>
       (i.toLong, Seq(math.sin(i * 1.7), math.cos(i * 0.9), math.sin(i * 0.3) * 0.5))
     }.toDF("id", "vec")
-    // each kernel called directly; 60×60 pairs dispatch to the relational one
-    assert(CosineKnn.kernel(60, 60) == "relational")
+    // each kernel called directly; 60 items dispatch to the fused one
+    assert(CosineKnn.kernel(60) == "fused")
     val fused = CosineKnn.topKCompute(vecs, vecs, 4, excludeSelf = true)
       .orderBy("query_id", "rank").collect()
     val comb = CosineKnn.topKShuffleCombine(vecs, vecs, 4, excludeSelf = true)
       .orderBy("query_id", "rank").collect()
-    val rel = CosineKnn.topK(vecs, vecs, 4, excludeSelf = true)
+    val viaTopK = CosineKnn.topK(vecs, vecs, 4, excludeSelf = true)
       .orderBy("query_id", "rank").collect()
-    assert(fused.length == rel.length && comb.length == rel.length)
-    fused.zip(rel).zip(comb).foreach { case ((f, r), c) =>
-      assert(f.getLong(0) == r.getLong(0) && f.getLong(1) == r.getLong(1)
-        && f.getInt(3) == r.getInt(3))
-      assert(c.getLong(0) == r.getLong(0) && c.getLong(1) == r.getLong(1)
-        && c.getInt(3) == r.getInt(3))
-      assert(f.getDouble(2) == r.getDouble(2)) // exact, not approximate
-      assert(c.getDouble(2) == r.getDouble(2))
-    }
+    assert(comb.length == 60 * 4)
+    assert(fused.toSeq == comb.toSeq) // scores exact, not approximate
+    assert(viaTopK.toSeq == comb.toSeq)
   }
 
-  test("topK kernel bands: the collect bound at 1M items, the fused bound at 4M pairs") {
-    assert(CosineKnn.kernel(1000000L, 1L) == "relational")
-    assert(CosineKnn.kernel(1000000L, 4L) == "fused")
-    assert(CosineKnn.kernel(1000001L, 1L) == "shuffle-combine")
-    assert(CosineKnn.kernel(2000L, 2000L) == "fused")
-    assert(CosineKnn.kernel(1999L, 2001L) == "relational") // 3,999,999 pairs
-    // past the collect bound the query side is never counted
-    assert(CosineKnn.kernel(1000001L, sys.error("query count read")) == "shuffle-combine")
+  test("excludeSelf drops null-id pairs in both topK kernels; without it null ids rank") {
+    val vecs = Seq[(String, Seq[Double])](
+      ("a", Seq(1.0, 0.0)), ("b", Seq(0.6, 0.8)), (null, Seq(0.8, 0.6)), ("c", Seq(-1.0, 0.1))
+    ).toDF("id", "vec")
+    def pairs(df: org.apache.spark.sql.DataFrame) = df.orderBy("query_id", "rank").collect()
+      .map(r => (Option(r.getString(0)), Option(r.getString(1)), r.getDouble(2), r.getInt(3))).toSeq
+    val fused = pairs(CosineKnn.topKCompute(vecs, vecs, 2, excludeSelf = true))
+    assert(fused == pairs(CosineKnn.topKShuffleCombine(vecs, vecs, 2, excludeSelf = true)))
+    // a null id is never "self" and never "not self": its pairs leave
+    assert(fused.map(r => (r._1.get, r._2.get, r._4)) == Seq(
+      ("a", "b", 1), ("a", "c", 2), ("b", "a", 1), ("b", "c", 2), ("c", "b", 1), ("c", "a", 2)))
+    val kept = pairs(CosineKnn.topKCompute(vecs, vecs, 2, excludeSelf = false))
+    assert(kept == pairs(CosineKnn.topKShuffleCombine(vecs, vecs, 2, excludeSelf = false)))
+    assert(kept.filter(_._1.isEmpty).map(_._2) == Seq(None, Some("b")))
+    assert(kept.filter(_._1.contains("a")).map(_._2) == Seq(Some("a"), None))
+  }
+
+  test("both topK kernels break exact score ties by item_id in UTF-8 order, nulls first") {
+    // "～" (U+FF5E) sorts before "😀" in UTF-8 bytes, after it in UTF-16 units
+    val items = Seq[(String, Seq[Double])](
+      ("😀", Seq(1.0, 2.0)), ("～", Seq(1.0, 2.0)), (null, Seq(1.0, 2.0)), ("a", Seq(0.0, 1.0))
+    ).toDF("id", "vec")
+    val q = Seq[(String, Seq[Double])](("q", Seq(1.0, 2.0))).toDF("id", "vec")
+    def ranked(df: org.apache.spark.sql.DataFrame) =
+      df.orderBy("rank").collect().map(r => Option(r.getString(1))).toSeq
+    val fused = ranked(CosineKnn.topKCompute(q, items, 4, excludeSelf = false))
+    assert(fused == Seq(None, Some("～"), Some("😀"), Some("a")))
+    assert(ranked(CosineKnn.topKShuffleCombine(q, items, 4, excludeSelf = false)) == fused)
+  }
+
+  test("topK kernel bands: the collect bound at 1M items") {
+    assert(CosineKnn.kernel(0L) == "fused")
+    assert(CosineKnn.kernel(1000000L) == "fused")
+    assert(CosineKnn.kernel(1000001L) == "shuffle-combine")
   }
 
   test("topK rejects an id type outside long, int, string and double by name") {
@@ -202,7 +222,7 @@ class GraphAndKnnSpec extends AnyFunSuite {
     assert(approx == exact)
   }
 
-  test("hardNegatives: ceiling excludes near-dups, all three kernels agree") {
+  test("hardNegatives: ceiling excludes near-dups, both kernels agree") {
     // id 0/1 are near-duplicates (cos ≈ 0.99998 ≥ ceiling) — they must
     // never be served to each other; id 5 is a zero vector (sentinel -2,
     // always under the ceiling, ranks last)
@@ -211,29 +231,24 @@ class GraphAndKnnSpec extends AnyFunSuite {
       (2L, Seq(0.8, 0.6, 0.0)), (3L, Seq(0.0, 1.0, 0.0)),
       (4L, Seq(-1.0, 0.2, 0.0)), (5L, Seq(0.0, 0.0, 0.0))
     ).toDF("id", "vec")
-    val rel = CosineKnn.hardNegatives(vecs, vecs, 3, 0.95)
+    val got = CosineKnn.hardNegatives(vecs, vecs, 3, 0.95)
       .orderBy("query_id", "rank").collect()
-    assert(CosineKnn.kernel(6, 6) == "relational")
-    // query 0's neighbors: 1 excluded by ceiling, so 2 (0.8), 3 (0), 4 (< 0)
-    val q0 = rel.filter(_.getLong(0) == 0L)
-    assert(q0.map(_.getLong(1)).toSeq == Seq(2L, 3L, 4L))
-    assert(q0.forall(_.getDouble(2) < 0.95))
+    assert(CosineKnn.kernel(6) == "fused")
+    // query 0's neighbors: 1 excluded by ceiling, so 2 (0.8), 3 (0), 4 (< 0);
+    // the zero-vector query scores every item at -2 and ranks by id
+    assert(got.groupBy(_.getLong(0)).map { case (q, rs) => q -> rs.map(_.getLong(1)).toSeq } == Map(
+      0L -> Seq(2L, 3L, 4L), 1L -> Seq(2L, 3L, 4L), 2L -> Seq(1L, 0L, 3L),
+      3L -> Seq(2L, 4L, 1L), 4L -> Seq(3L, 2L, 1L), 5L -> Seq(0L, 1L, 2L)))
+    assert(got.forall(_.getDouble(2) < 0.95))
+    assert(got.filter(_.getLong(0) == 5L).forall(_.getDouble(2) == -2.0))
     // the near-dup pair is absent in BOTH directions
-    assert(!rel.exists(r => r.getLong(0) == 0L && r.getLong(1) == 1L))
-    assert(!rel.exists(r => r.getLong(0) == 1L && r.getLong(1) == 0L))
+    assert(!got.exists(r => r.getLong(0) == 0L && r.getLong(1) == 1L))
+    assert(!got.exists(r => r.getLong(0) == 1L && r.getLong(1) == 0L))
     val fused = CosineKnn.topKCompute(vecs, vecs, 3, excludeSelf = true, Some(0.95))
       .orderBy("query_id", "rank").collect()
     val comb = CosineKnn.topKShuffleCombine(vecs, vecs, 3, excludeSelf = true, Some(0.95))
       .orderBy("query_id", "rank").collect()
-    assert(fused.length == rel.length && comb.length == rel.length)
-    fused.zip(rel).zip(comb).foreach { case ((f, r), c) =>
-      assert(f.getLong(0) == r.getLong(0) && f.getLong(1) == r.getLong(1)
-        && f.getInt(3) == r.getInt(3))
-      assert(c.getLong(0) == r.getLong(0) && c.getLong(1) == r.getLong(1)
-        && c.getInt(3) == r.getInt(3))
-      assert(math.abs(f.getDouble(2) - r.getDouble(2)) < 1e-15)
-      assert(math.abs(c.getDouble(2) - r.getDouble(2)) < 1e-15)
-    }
+    assert(fused.toSeq == got.toSeq && comb.toSeq == got.toSeq)
   }
 
   test("hardNegatives above the collect gate takes the bounded-heap RDD kernel") {
@@ -242,7 +257,7 @@ class GraphAndKnnSpec extends AnyFunSuite {
     // shuffle-combine (ExistingRDD = the RDD kernel's output scan)
     val vecs = (0 until 30).map(i =>
       (i.toLong, Seq(math.sin(i * 1.3), math.cos(i * 0.7), 0.2))).toDF("id", "vec")
-    assert(CosineKnn.kernel(1000001L, 30L) == "shuffle-combine")
+    assert(CosineKnn.kernel(1000001L) == "shuffle-combine")
     val df = CosineKnn.topKShuffleCombine(vecs, vecs, 2, excludeSelf = true, Some(0.95))
     assert(df.queryExecution.executedPlan.toString.contains("ExistingRDD"))
   }

@@ -6,13 +6,14 @@ import graft.TestSpark
 
 /** Pins [[graft.model.MfServing.topKRecs]]'s size dispatch (the r11
   * verdict weak): the broadcast bounded-heap kernel and the
-  * never-collects block-shuffle kernel must produce IDENTICAL
-  * (user, item, rank) output — same float scoring order, same
-  * (score desc, item asc) tie-break — and the gate must route by item
-  * count exactly like [[graft.knn.CosineKnn.topK]]'s. */
+  * never-collects block-shuffle kernel, called directly, must produce
+  * IDENTICAL (user, item, score) candidates — same float scoring order,
+  * same (score desc, item asc) tie-break — and [[MfServing.kernel]] must
+  * route by item count like [[graft.knn.CosineKnn.kernel]]. */
 class MfServingSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
   import spark.implicits._
+  import org.apache.spark.sql.DataFrame
 
   private def fixture(nUsers: Int, nItems: Int, d: Int, bias: Boolean) = {
     // deterministic pseudo-random factors with heavy score ties:
@@ -30,53 +31,43 @@ class MfServingSpec extends AnyFunSuite {
     (p, q, dense, uIdx, iIdx)
   }
 
-  private def collect(df: org.apache.spark.sql.DataFrame) =
-    df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).sortBy(x => (x._1, x._3))
+  /** A kernel's (u, i, score) candidates, sorted. */
+  private def candidates(df: DataFrame): Seq[(Int, Int, Float)] =
+    df.collect().map(r => (r.getInt(0), r.getInt(1), r.getFloat(2))).sortBy(x => (x._1, x._2)).toSeq
 
   test("dispatch: small catalog takes broadcast-heap, large takes block-shuffle") {
-    val (p, q, dense, uIdx, iIdx) = fixture(6, 9, 4, bias = false)
-    MfServing.topKRecs(spark, p, q, 4, bias = false, dense, uIdx, iIdx, 3).count()
-    assert(MfServing.lastKernel == "broadcast-heap")
-    MfServing.topKRecs(spark, p, q, 4, bias = false, dense, uIdx, iIdx, 3,
-      collectMaxItems = 2L).count()
-    assert(MfServing.lastKernel == "block-shuffle")
+    assert(MfServing.kernel(9L) == "broadcast-heap")
+    assert(MfServing.kernel(2000000L) == "broadcast-heap")
+    assert(MfServing.kernel(2000001L) == "block-shuffle")
   }
 
   test("kernels are value-identical (no bias), ties decided by item id") {
-    val (p, q, dense, uIdx, iIdx) = fixture(10, 25, 4, bias = false)
-    val small = collect(MfServing.topKRecs(spark, p, q, 4, bias = false,
-      dense, uIdx, iIdx, 5))
-    val big = collect(MfServing.topKRecs(spark, p.repartition(3), q.repartition(4),
-      4, bias = false, dense, uIdx, iIdx, 5, collectMaxItems = 2L))
-    assert(MfServing.lastKernel == "block-shuffle")
-    assert(small.nonEmpty && small.sameElements(big))
+    val (p, q, _, _, _) = fixture(10, 25, 4, bias = false)
+    val small = candidates(MfServing.topKBroadcast(spark, p, q, 4, bias = false, 6, 25))
+    val big = candidates(MfServing.topKBlockShuffle(spark, p.repartition(3), q.repartition(4),
+      4, bias = false, 6))
+    assert(small.length == 10 * 6 && small == big)
   }
 
   test("kernels are value-identical with a trailing bias slot") {
-    val (p, q, dense, uIdx, iIdx) = fixture(8, 30, 3, bias = true)
-    val small = collect(MfServing.topKRecs(spark, p, q, 3, bias = true,
-      dense, uIdx, iIdx, 4))
-    val big = collect(MfServing.topKRecs(spark, p.repartition(5), q.repartition(7),
-      3, bias = true, dense, uIdx, iIdx, 4, collectMaxItems = 1L))
-    assert(small.nonEmpty && small.sameElements(big))
+    val (p, q, _, _, _) = fixture(8, 30, 3, bias = true)
+    val small = candidates(MfServing.topKBroadcast(spark, p, q, 3, bias = true, 7, 30))
+    val big = candidates(MfServing.topKBlockShuffle(spark, p.repartition(5), q.repartition(7),
+      3, bias = true, 7))
+    assert(small.length == 8 * 7 && small == big)
   }
 
-  test("block kernel honors knownItemCount routing and excludes seen pairs") {
+  test("topKRecs excludes seen pairs and ranks 1..k") {
     val (p, q, dense, uIdx, iIdx) = fixture(6, 12, 4, bias = false)
-    val out = MfServing.topKRecs(spark, p, q, 4, bias = false, dense, uIdx, iIdx, 3,
-      collectMaxItems = 5L, knownItemCount = 12L)
-    assert(MfServing.lastKernel == "block-shuffle")
+    val got = MfServing.topKRecs(spark, p, q, 4, bias = false, dense, uIdx, iIdx, 3,
+      knownItemCount = 12L).collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
     val seen = dense.collect().map(r => (r.getInt(0).toLong * 100, r.getInt(1).toLong * 100)).toSet
-    out.collect().foreach { r =>
-      assert(!seen((r.getLong(0), r.getLong(1))))
-      assert(r.getInt(2) >= 1 && r.getInt(2) <= 3)
-    }
+    assert(got.groupBy(_._1).size == 6)
+    assert(got.groupBy(_._1).values.forall(_.map(_._3).sorted.toSeq == Seq(1, 2, 3)))
+    got.foreach(r => assert(!seen((r._1, r._2))))
   }
 
-  test("BPR end-to-end recs are identical under a forced block-shuffle serve") {
-    // same training, both serve paths: recs() routes through the gate
-    // internally, so pin equality at the MfServing seam with the real
-    // trained factors instead
+  test("BPR trained factors: both kernels serve identical candidates") {
     val ratings = (for { u <- 0 until 8; i <- 0 until 15 if (u * i) % 4 != 1 }
       yield (u.toLong, i.toLong, ((u + i) % 5 + 1).toDouble))
       .toDF("user_id", "item_id", "rating")
@@ -84,11 +75,9 @@ class MfServingSpec extends AnyFunSuite {
     val nU = uIdx.count().toInt; val nI = iIdx.count().toInt
     val (pDf, qDf) = new BprMf(4, 2, 0.05, 0.01, 42L, pinOrder = true)
       .fitEmb(spark, dense, nU, nI)
-    val a = collect(MfServing.topKRecs(spark, pDf, qDf, 4, bias = true,
-      dense, uIdx, iIdx, 5))
-    val b = collect(MfServing.topKRecs(spark, pDf, qDf, 4, bias = true,
-      dense, uIdx, iIdx, 5, collectMaxItems = 1L))
-    assert(a.nonEmpty && a.sameElements(b))
+    val small = candidates(MfServing.topKBroadcast(spark, pDf, qDf, 4, bias = true, 9, nI))
+    val big = candidates(MfServing.topKBlockShuffle(spark, pDf, qDf, 4, bias = true, 9))
+    assert(small.length == nU * 9 && small == big)
     pos.unpersist(); uIdx.unpersist(); iIdx.unpersist()
   }
 }

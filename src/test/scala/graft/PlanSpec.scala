@@ -75,36 +75,21 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("TakeOrderedAndProject"))
   }
 
-  test("topK dispatch: small products relational, large fused, huge item sides shuffle-combine (never collect)") {
+  test("topK dispatch: item sides within the collect bound fused, huge item sides shuffle-combine (never collect)") {
     import spark.implicits._
     val emb = (1 to 50).map(i => (i.toLong, Seq.fill(4)(i * 0.1))).toDF("id", "vec")
     import graft.knn.CosineKnn
-    // 50×50 = 2500 pairs, under the fused bound → relational: the plan
-    // is a codegen'd join, NOT a driver collect + RDD scan
-    assert(CosineKnn.kernel(50, 50) == "relational")
+    // 50 items → fused: the item matrix is collected and broadcast, and
+    // the plan is the RDD-backed kernel's output scan
+    assert(CosineKnn.kernel(50) == "fused")
     val small = CosineKnn.topK(emb, emb, 3, excludeSelf = true)
-    assert(!small.queryExecution.executedPlan.toString.contains("ExistingRDD"))
-    // the fused band's kernel is the RDD-backed one
-    assert(CosineKnn.kernel(2000, 2000) == "fused")
-    val fused = CosineKnn.topKCompute(emb, emb, 3, excludeSelf = true)
-    assert(fused.queryExecution.executedPlan.toString.contains("ExistingRDD"))
+    assert(small.queryExecution.executedPlan.toString.contains("ExistingRDD"))
     // past the collect bound: neither a driver collect nor an N×M window
     // exchange — the map-side bounded-heap combine kernel runs
-    assert(CosineKnn.kernel(1000001L, 50) == "shuffle-combine")
+    assert(CosineKnn.kernel(1000001L) == "shuffle-combine")
     val gated = CosineKnn.topKShuffleCombine(emb, emb, 3, excludeSelf = true)
     assert(gated.orderBy("query_id", "rank").collect()
       .sameElements(small.orderBy("query_id", "rank").collect()))
-  }
-
-  test("topK relational fallback: no exchange between scoring join and ranking window") {
-    // the fallback path must keep the query-side hash distribution so
-    // the N×M scored rows are never reshuffled
-    import spark.implicits._
-    val emb = (1 to 40).map(i => (s"u$i", Array.fill(4)(i * 0.1))).toDF("id", "vec")
-    val plan = graft.knn.CosineKnn.topKRelational(emb, emb, 3, excludeSelf = true)
-      .queryExecution.executedPlan.toString
-    val afterJoin = plan.substring(0, plan.indexOf("BroadcastNestedLoopJoin"))
-    assert(!afterJoin.contains("Exchange hashpartitioning"))
   }
 
   test("ivfTopK: candidate join keys on list_id; no cartesian between queries and items") {
@@ -187,35 +172,6 @@ class PlanSpec extends AnyFunSuite {
     assert(p.contains("HashAggregate"))
     assert(p.contains("partial_count") || p.contains("partial_sum") || p.contains("Partial"),
       s"no partial aggregation before the gram exchange:\n$p")
-  }
-
-  test("alias-table walk kernel: edge join carries no forced broadcast — it degrades to a shuffle join when the tables outgrow the threshold") {
-    // the kernel's scale claim is that neither the adjacency nor the
-    // E×deg alias tables ever NEED to fit on one executor. Catalyst
-    // auto-broadcasting a small table is fine (and happens at test
-    // scale); what must never exist is a broadcast() hint that would
-    // force the alias side onto every executor at 100 TB. Turning the
-    // auto threshold off simulates "too big to broadcast" — the join
-    // must then plan as a shuffled equi-join.
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val prior = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try {
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val edges = (0L until 40L).map(i => (i, (i + 1) % 40)).toDF("src", "dst")
-      val adj = graft.walk.RandomWalks.adjacency(edges)
-      val aliasDf = graft.walk.RandomWalks.edgeAliasTables(adj, 0.5, 2.0)
-      val state = adj.select(col("node").as("start"))
-        .withColumn("cur", col("start")).withColumn("prev", col("start"))
-      val at = aliasDf.select(col("prev").as("a_prev"), col("cur").as("a_cur"), col("prob"))
-      val joined = state.join(at,
-        state("prev") === at("a_prev") && state("cur") === at("a_cur"), "left")
-      val p = joined.queryExecution.executedPlan.toString
-      assert(!p.contains("BroadcastHashJoin") && !p.contains("BroadcastNestedLoopJoin"),
-        s"alias join must not carry a forced broadcast:\n$p")
-      assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"),
-        s"alias join should degrade to a shuffled equi-join:\n$p")
-    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prior)
   }
 
   test("PQ family (q188/q190/q192): no cartesian product; LUT/codebook joins broadcast") {

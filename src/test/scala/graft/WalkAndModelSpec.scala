@@ -79,52 +79,6 @@ class WalkAndModelSpec extends AnyFunSuite {
     assert(returns >= 15, s"only $returns/20 returned with p=1e-4")
   }
 
-  test("alias-table biased kernel: table correctness, valid walks, determinism, p/q extremes (M2 scale path)") {
-    // (a) Walker alias construction reproduces the weight distribution
-    // exactly: Σ over slots of P(land on index i) == w(i)/Σw
-    val w = Array(0.5, 1.0, 3.0, 0.25)
-    val (prob, alias) = RandomWalks.buildAlias(w)
-    val mass = new Array[Double](w.length)
-    for (j <- w.indices) {
-      mass(j) += prob(j) / w.length
-      mass(alias(j)) += (1.0 - prob(j)) / w.length
-    }
-    val total = w.sum
-    for (i <- w.indices)
-      assert(math.abs(mass(i) - w(i) / total) < 1e-12, s"index $i: ${mass(i)} vs ${w(i) / total}")
-    // p=0 / q=0 weights (1/p = Infinity) must fail fast, not silently
-    // collapse to a uniform table
-    intercept[IllegalArgumentException] {
-      RandomWalks.buildAlias(Array(Double.PositiveInfinity, 1.0))
-    }
-    intercept[IllegalArgumentException] { RandomWalks.buildAlias(Array(0.0, 0.0)) }
-
-    // (b) walks only traverse real edges, full length, deterministic
-    // under input repartitioning
-    val edges = Seq((0L, 1L), (1L, 2L), (2L, 3L), (3L, 0L), (0L, 2L), (4L, 0L))
-      .toDF("src", "dst")
-    val adj = RandomWalks.adjacency(edges).cache()
-    val nodes = adj.select(col("node"))
-    val walks = RandomWalks.biasedWalksAlias(spark, adj, nodes, 3, 6, 0.5, 2.0, 7L)
-    val paths = walks.select("path").as[Seq[Long]].collect()
-    assert(paths.length == 5 * 3 && paths.forall(_.length == 6))
-    val edgeSet = edges.collect().map(r => (r.getLong(0), r.getLong(1)))
-      .flatMap { case (a, b) => Seq((a, b), (b, a)) }.toSet
-    paths.foreach(p => p.sliding(2).foreach { case Seq(a, b) => assert(edgeSet((a, b))) })
-    val walks2 = RandomWalks.biasedWalksAlias(spark, adj.repartition(5), nodes, 3, 6, 0.5, 2.0, 7L)
-    def canon(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2).toList)).toSet
-    assert(canon(walks) == canon(walks2))
-
-    // (c) the piecewise weights bite: on the path graph 1-2-3 with p
-    // tiny, step 3 overwhelmingly returns (same bar as the class kernel)
-    val line = RandomWalks.adjacency(Seq((1L, 2L), (2L, 3L)).toDF("src", "dst"))
-    val ping = RandomWalks.biasedWalksAlias(spark, line, Seq(2L).toDF("node"), 20, 4, 0.0001, 10000.0, 1L)
-      .select("path").as[Seq[Long]].collect()
-    val returns = ping.count(p => p.length >= 3 && p(2) == p(0))
-    assert(returns >= 15, s"only $returns/20 returned with p=1e-4")
-  }
-
   test("walk kernels replay the pinned hash-chain walks (uniform + biased)") {
     import org.apache.spark.sql.functions.col
     import graft.walk.RandomWalks
