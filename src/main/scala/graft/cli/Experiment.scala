@@ -205,6 +205,19 @@ object Experiment {
       .asInstanceOf[Cfg]
     val exp = sub(root, "experiment")
 
+    // evaluation config; every model and metric name is checked before
+    // any data loads, so a typo fails fast with the name
+    val eval = sub(exp, "evaluation")
+    val k = int(eval, "k", 5)
+    val relThr = dbl(eval, "relevance_threshold", 3.0)
+    val metricNames = Option(eval.get("metrics"))
+      .map(_.asInstanceOf[java.util.List[Object]].asScala.toSeq.map(_.toString))
+      .getOrElse(Seq("MAP"))
+    metricNames.foreach(mn => require(mn == "MAP" || mn == "nDCG", s"Metric $mn is not implemented."))
+    val registry = Recommenders.registry
+    list(exp, "models").map(str(_, "name")).foreach(mn => require(registry.contains(mn),
+      s"Model $mn is not implemented; known models: ${registry.keys.toSeq.sorted.mkString(", ")}."))
+
     // dataset: standardized typed-CSV paths (experiment.py:38 load(**cfg))
     val bundle = loadDataset(spark, sub(exp, "dataset"))
     var ratings = bundle.ratings
@@ -279,14 +292,6 @@ object Experiment {
       case None => folds
     }
 
-    // evaluation config
-    val eval = sub(exp, "evaluation")
-    val k = int(eval, "k", 5)
-    val relThr = dbl(eval, "relevance_threshold", 3.0)
-    val metricNames = Option(eval.get("metrics"))
-      .map(_.asInstanceOf[java.util.List[Object]].asScala.toSeq.map(_.toString))
-      .getOrElse(Seq("MAP"))
-
     // model loop (experiment.py:60-88)
     val rows = for {
       m <- list(exp, "models")
@@ -309,13 +314,11 @@ object Experiment {
           spark.sparkContext.setJobDescription(previous)
         }
       }
-      val rec = phase("train")(Recommenders.registry(modelName)(cfgMap)
+      val rec = phase("train")(registry(modelName)(cfgMap)
         .train(spark, train, propertyEdges, bundle.socialEdges))
       // recs is read once, by meansAtK: a lazy Spark ranking runs inside
       // the eval phase, a driver-built local table costs no job at all
       val recs = phase("recommend")(rec.recommend(k))
-      metricNames.foreach(mn => require(mn == "MAP" || mn == "nDCG",
-        s"Metric $mn is not implemented."))
       val mm = phase("eval")(Metrics.meansAtK(recs, testDf, k, relThr).first())
       val vals = metricNames.map {
         case "MAP" => "MAP" -> mm.getDouble(mm.fieldIndex("map"))

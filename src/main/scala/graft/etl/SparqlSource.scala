@@ -42,37 +42,40 @@ object SparqlSource {
     finally conn.disconnect()
   }
 
-  private val resultSchema = StructType(Seq(
-    StructField("item_id", StringType),
-    StructField("bindings", ArrayType(MapType(StringType, StringType)))))
-
-  /** Issue one SELECT per (item_id, query) row; decode the SPARQL JSON
-    * result's bindings into rows of (item_id, bindings: array<map>).
-    * Failures yield an empty binding list (worker.py swallows and
-    * continues — worker.py:18-31). */
-  def fetch(spark: SparkSession, queries: DataFrame, endpoint: String,
-            timeoutMs: Int = 180000, parallelism: Int = 8,
-            transport: Transport = httpTransport): DataFrame = {
+  /** The fan-out both fetches share: one `transport` call per
+    * (item_id, query) row over `parallelism` partitions, the body decoded
+    * by a per-partition `decoder` into the `value` column; a failed call
+    * or decode gives `failed` (worker.py swallows and continues —
+    * worker.py:18-31). */
+  private def fanOut(spark: SparkSession, queries: DataFrame, endpoint: String, timeoutMs: Int,
+                     parallelism: Int, transport: Transport, value: StructField,
+                     failed: Any)(decoder: () => String => Any): DataFrame = {
     val rows = queries.select(col("item_id").cast("string"), col("query"))
       .repartition(parallelism)
       .rdd.mapPartitions { it =>
-        val mapper = new ObjectMapper()
+        val decode = decoder()
         it.map { r =>
-          val (id, q) = (r.getString(0), r.getString(1))
-          val bindings: Seq[Map[String, String]] =
-            try {
-              val body = transport(endpoint, q, timeoutMs)
-              val tree = mapper.readTree(body)
-              tree.path("results").path("bindings").elements().asScala.map { b =>
-                b.fields().asScala.map(e =>
-                  e.getKey -> e.getValue.path("value").asText()).toMap
-              }.toSeq
-            } catch { case _: Exception => Seq.empty }
-          Row(id, bindings)
+          val v = try decode(transport(endpoint, r.getString(1), timeoutMs))
+            catch { case _: Exception => failed }
+          Row(r.getString(0), v)
         }
       }
-    spark.createDataFrame(rows, resultSchema)
+    spark.createDataFrame(rows, StructType(Seq(StructField("item_id", StringType), value)))
   }
+
+  /** Issue one SELECT per (item_id, query) row; decode the SPARQL JSON
+    * result's bindings into rows of (item_id, bindings: array<map>).
+    * Failures yield an empty binding list. */
+  def fetch(spark: SparkSession, queries: DataFrame, endpoint: String,
+            timeoutMs: Int = 180000, parallelism: Int = 8,
+            transport: Transport = httpTransport): DataFrame =
+    fanOut(spark, queries, endpoint, timeoutMs, parallelism, transport,
+      StructField("bindings", ArrayType(MapType(StringType, StringType))), Seq.empty) { () =>
+      val mapper = new ObjectMapper()
+      body => mapper.readTree(body).path("results").path("bindings").elements().asScala.map { b =>
+        b.fields().asScala.map(e => e.getKey -> e.getValue.path("value").asText()).toMap
+      }.toSeq
+    }
 
   /** S5: parse a SPARQL CSV-format response body, taking the FIRST data
     * row (movielens.py:165-178 `pd.read_csv(...).iloc[0]`). Minimal CSV
@@ -96,24 +99,11 @@ object SparqlSource {
   def fetchCsvRow(spark: SparkSession, queries: DataFrame, endpoint: String,
                   properties: Seq[String], timeoutMs: Int = 180000, parallelism: Int = 8,
                   transport: Transport = httpCsvTransport): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("item_id", StringType),
-      StructField("row", ArrayType(StringType))))
-    val rows = queries.select(col("item_id").cast("string"), col("query"))
-      .repartition(parallelism)
-      .rdd.mapPartitions { it =>
-        it.map { r =>
-          val vals: Seq[String] =
-            try {
-              firstCsvRow(transport(endpoint, r.getString(1), timeoutMs)) match {
-                case Some(m) => properties.map(p => m.get(p).filter(_.nonEmpty).orNull)
-                case None    => properties.map(_ => null)
-              }
-            } catch { case _: Exception => properties.map(_ => null) }
-          Row(r.getString(0), vals)
-        }
-      }
-    spark.createDataFrame(rows, schema)
+    val none = properties.map(_ => null: String)
+    fanOut(spark, queries, endpoint, timeoutMs, parallelism, transport,
+      StructField("row", ArrayType(StringType)), none) { () =>
+      body => firstCsvRow(body).fold(none)(m => properties.map(p => m.get(p).filter(_.nonEmpty).orNull))
+    }
   }
 
   /** J7 fuzzy top-1 disambiguation (movielens.py:118-131): for each

@@ -2,8 +2,8 @@ package graft.kge
 
 import graft.graph.KGraph
 import graft.model.Recommender
-import graft.walk.{DriverFold, EmbeddingServing}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.walk.{DriverGraph, EmbeddingServing}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** KGE-based recommender (SURVEY §2.8 M4-M6): export labeled triples,
@@ -19,15 +19,14 @@ import org.apache.spark.sql.functions._
   * translational trio's distance norm, reference default 1;
   * transE/model.py:24).
   *
-  * A fold whose labelled triples collect to the driver (at most
+  * The regime follows the fold's size alone ([[graft.walk.EmbeddingServing]]):
+  * a fold whose labelled triples collect to the driver (at most
   * [[KGraph.MaxDriverEdges]] rows) and whose model is at most
-  * `driver_max_params` floats (default [[KGraph.MaxDriverParams]])
-  * trains in the driver regime: one Spark job, then vocabulary,
-  * encoding, [[KgeTrainer.fitLocal]] and the embedding split-back on
-  * driver arrays, and `recommend` ranks on those arrays
-  * ([[graft.walk.DriverFold]]). Other folds train in the
-  * distributed regime: relabel joins and [[KgeTrainer.fitDistributed]],
-  * which keeps every embedding row in Spark.
+  * [[KGraph.MaxDriverParams]] floats trains in the driver regime: one
+  * Spark job, then [[KgeTrainer.fitLocal]] and the embedding split-back
+  * on driver arrays. Other folds train in the distributed regime:
+  * [[KgeTrainer.fitDistributed]], which keeps every embedding row in
+  * Spark.
   */
 class KgeRecommender(cfg: Map[String, String] = Map.empty) extends EmbeddingServing {
   private def i(key: String, d: Int) = cfg.get(key).map(_.toInt).getOrElse(d)
@@ -67,125 +66,65 @@ class KgeRecommender(cfg: Map[String, String] = Map.empty) extends EmbeddingServ
 
   protected def allRecs: Boolean = cfg.get("all_recs").contains("true")
 
-  // socialEdges are deliberately unused: the reference trains KGE on
-  // get_all_triples(), which emits only rating/is/has triples — social
-  // User–User edges never reach the KGE vocabulary (graph.py:79-109).
-  override def train(spark: SparkSession, trainRatings: DataFrame,
-                     propertyEdges: Option[DataFrame],
-                     socialEdges: Option[DataFrame]): Recommender = {
-    // train feeds triple export + both embedding sides here, then the
-    // maxRated agg and the anti-join in a distributed fold's recommend():
-    // persist once so the (often split-derived) lineage isn't re-derived
-    // per consumer — released in release(), mirroring PopularityRecommender
-    beginTrain(spark, trainRatings)
+  protected def ratingRelation: Option[Column] = Some(KGraph.ratingRelation(col("rating")))
 
-    // M5 triple export: `triples: all | ratings` — reference default
-    // "all" (transE/model.py:34): property edges fold into the vocabulary
-    // whenever the graph has them. Rating rows also carry the string
-    // user/item ids the embedding sides are keyed by.
-    val ratingRows = trainRatings.select(lit("rating").as("kind"),
-      KGraph.userLabel(col("user_id")).as("head"),
-      KGraph.ratingRelation(col("rating")).as("relation"),
-      KGraph.itemLabel(col("item_id")).as("tail"),
-      col("user_id").cast("string").as("user"), col("item_id").cast("string").as("item"))
-    val triples = (cfg.getOrElse("triples", "all"), propertyEdges) match {
-      case ("all", Some(p)) =>
-        ratingRows.unionByName(p.select(lit("property").as("kind"), col("src_label").as("head"),
-          col("relation"), col("dst_label").as("tail"),
-          lit(null).cast("string").as("user"), lit(null).cast("string").as("item")))
-      case _ => ratingRows
-    }
-
-    // scoring_fct_norm (transE/model.py:24): the translational trio
-    // defaults to L1 exactly as the reference's pykeen models do;
-    // other models ignore the norm (pykeen parity)
-    val fctNorm = i("scoring_fct_norm",
-      if (Set("transE", "transH", "transR")(model)) 1 else 2)
-    val trainer = new KgeTrainer(model, dim, i("epochs", 5), f("learning_rate", 0.05),
-      f("margin", 1.0), i("seed", 42).toLong, fctNorm = fctNorm,
-      pinOrder = cfg.get("pin_order").contains("true"))
-    val driverMaxParams = cfg.get("driver_max_params").map(_.toLong).getOrElse(KGraph.MaxDriverParams)
-
-    // a fold whose triples collect as labels and whose model fits the
-    // driver trains there start to finish; otherwise fully distributed
-    val local = for {
-      c <- KGraph.collectColumns(triples,
-        Seq("kind", "head", "relation", "tail", "user", "item"), KGraph.MaxDriverEdges)
-      entities = KGraph.localRelabel(c(1), c(3))
-      relations = KGraph.localRelabel(c(2))
-      if trainer.nParams(entities.length, relations.length) <= driverMaxParams
-    } yield (c, entities, relations)
-    local match {
-      case Some((c, entities, relations)) =>
-        trainDriver(trainer, c, entities, relations)
-      case None =>
-        trainDistributed(spark, trainer, trainRatings, triples)
-    }
-    this
-  }
+  // M5 triple export: `triples: all | ratings` — reference default "all"
+  // (transE/model.py:34): property edges fold into the vocabulary
+  // whenever the graph has them. socialEdges are deliberately unused:
+  // the reference trains KGE on get_all_triples(), which emits only
+  // rating/is/has triples — social User–User edges never reach the KGE
+  // vocabulary (graph.py:79-109).
+  protected def otherEdges(propertyEdges: Option[DataFrame],
+                           socialEdges: Option[DataFrame]): Seq[DataFrame] =
+    if (cfg.getOrElse("triples", "all") == "all") propertyEdges.toSeq else Nil
 
   private def dim: Int = i("embedding_dim", defaultDim) // reference defaults (model.py:23 per model)
 
-  /** The driver regime: encode, fit and split the embeddings back on
-    * driver arrays; `c` holds the collected (kind, head, relation, tail,
-    * user, item) columns. */
-  private def trainDriver(trainer: KgeTrainer, c: Array[Array[String]],
-                          entities: Array[String], relations: Array[String]): Unit = {
-    val entityIds = KGraph.localEncoder(entities)
-    val (ent, _) = trainer.fitLocal(entityIds(c(1)), KGraph.localEncoder(relations)(c(2)),
-      entityIds(c(3)), entities.length, relations.length, spark.sparkContext.defaultParallelism)
-    val isRating = c(0).map(_ == "rating")
-    val zeros = Array.fill(dim)(0.0)
+  // scoring_fct_norm (transE/model.py:24): the translational trio
+  // defaults to L1 exactly as the reference's pykeen models do; other
+  // models ignore the norm (pykeen parity)
+  private def trainer = new KgeTrainer(model, dim, i("epochs", 5), f("learning_rate", 0.05),
+    f("margin", 1.0), i("seed", 42).toLong,
+    fctNorm = i("scoring_fct_norm", if (Set("transE", "transH", "transR")(model)) 1 else 2),
+    pinOrder = cfg.get("pin_order").contains("true"))
 
-    // split back to user/item spaces: every distinct train id, joined to
-    // the real component (F13) of the entity whose label carries it, or
-    // zero-filled when none does (F14)
-    def side(prefix: String, ids: Array[String]): Seq[(String, Array[Double])] = {
-      val extract = KGraph.labelIdExtractor(prefix)
-      val vecs = entities.indices.filter(e => entities(e).startsWith(s"$prefix("))
-        .groupBy(e => extract(entities(e)))
-        .map { case (id, es) => id -> es.map(e => ent(e).iterator.take(dim).map(_.toDouble).toArray) }
-      ids.indices.filter(isRating).map(ids).distinct.flatMap { id =>
-        val found = if (id == null) None else vecs.get(id)
-        found.getOrElse(Seq(zeros)).map(id -> _)
+  /** The driver regime, within [[KGraph.MaxDriverParams]] model floats:
+    * [[KgeTrainer.fitLocal]], then the split-back: every distinct train
+    * id, with the real component (F13) of the entity whose label carries
+    * it, or zero-filled when none does (F14). */
+  protected def fitDriver(g: DriverGraph): Option[(Seq[(String, Array[Double])], Seq[(String, Array[Double])])] = {
+    val tr = trainer
+    if (tr.nParams(g.labels.length, g.relations.length) > KGraph.MaxDriverParams) None
+    else {
+      val (ent, _) = tr.fitLocal(g.src, g.rel, g.dst, g.labels.length, g.relations.length,
+        spark.sparkContext.defaultParallelism)
+      val zeros = Array.fill(dim)(0.0)
+      def side(prefix: String, ids: Array[String]): Seq[(String, Array[Double])] = {
+        val extract = KGraph.labelIdExtractor(prefix)
+        val vecs = g.labels.indices.filter(e => g.labels(e).startsWith(s"$prefix("))
+          .groupBy(e => extract(g.labels(e)))
+          .map { case (id, es) => id -> es.map(e => ent(e).iterator.take(dim).map(_.toDouble).toArray) }
+        ids.distinct.toSeq.flatMap { id =>
+          val found = if (id == null) None else vecs.get(id)
+          found.getOrElse(Seq(zeros)).map(id -> _)
+        }
       }
+      Some((side("User", g.trainUsers), side("Item", g.trainItems)))
     }
-    val rating = c(0).indices.filter(isRating).toArray
-    serveOnDriver(new DriverFold(side("User", c(4)), side("Item", c(5)), rating.map(c(4)), rating.map(c(5))))
   }
 
-  /** The distributed regime: relabel and encode with joins, then
-    * [[KgeTrainer.fitDistributed]]. */
-  private def trainDistributed(spark: SparkSession, trainer: KgeTrainer, trainRatings: DataFrame,
-                               labelled: DataFrame): Unit = {
-    val triples = labelled.select("head", "relation", "tail")
-    // entity/relation vocab: dense ids by canonical label (entity_to_id analogue)
-    val entities = KGraph.relabel(
-      triples.select(col("head").as("label")).union(triples.select(col("tail").as("label"))))
-      .cache()
-    val relations = KGraph.relabel(triples.select(col("relation").as("label"))).cache()
-    val nE = entities.count().toInt
-    val nR = relations.count().toInt
-
-    val encoded = triples
-      .join(entities.withColumnRenamed("label", "head"), Seq("head"))
-      .withColumnRenamed("node_id", "h")
-      .join(relations.withColumnRenamed("label", "relation"), Seq("relation"))
-      .withColumnRenamed("node_id", "r")
-      .join(entities.withColumnRenamed("label", "tail"), Seq("tail"))
-      .withColumnRenamed("node_id", "t")
-      .select("h", "r", "t")
-
-    val (entEmb, _) = trainer.fitDistributed(spark, encoded, nE, nR)
-
-    // embedding table: node_id -> real-component vector (F13)
+  /** The distributed regime: [[KgeTrainer.fitDistributed]], then the
+    * split-back by joins, zero-filling train ids without an entity. */
+  protected def fitDistributed(nodes: DataFrame, relations: DataFrame, edges: DataFrame,
+                               train: DataFrame): (DataFrame, DataFrame) = {
+    val (entEmb, _) = trainer.fitDistributed(spark,
+      edges.select(col("src").as("h"), col("rel").as("r"), col("dst").as("t")),
+      nodes.count().toInt, relations.count().toInt)
+    // embedding table: label -> real-component vector (F13)
     val embDf = entEmb
       .select(col("id").as("node_id"),
         expr(s"transform(slice(vec, 1, $dim), x -> cast(x as double))").as("vec"))
-      .join(entities, Seq("node_id"))
-
-    // split back to user/item spaces; zero-fill entities that never
-    // appeared in a training triple (F14)
+      .join(nodes, Seq("node_id"))
     def side(prefix: String, idsFromTrain: DataFrame): DataFrame =
       idsFromTrain.distinct()
         .join(embDf.filter(col("label").startsWith(s"$prefix("))
@@ -194,16 +133,9 @@ class KgeRecommender(cfg: Map[String, String] = Map.empty) extends EmbeddingServ
           Seq("id"), "left")
         .withColumn("vec", coalesce(col("vec"),
           expr(s"transform(sequence(1, $dim), x -> cast(0.0 as double))")))
-
-    userEmb = side("User", trainRatings.select(col("user_id").cast("string").as("id"))).cache()
-    itemEmb = side("Item", trainRatings.select(col("item_id").cast("string").as("id"))).cache()
-    // materialize the (small) embedding tables, then drop the vocab
-    // caches — they only feed the joins above
-    userEmb.count(); itemEmb.count()
-    entities.unpersist(blocking = false)
-    relations.unpersist(blocking = false)
+    (side("User", train.select(col("user_id").cast("string").as("id"))),
+      side("Item", train.select(col("item_id").cast("string").as("id"))))
   }
-
 }
 
 object KgeRecommender {

@@ -16,11 +16,12 @@ import scala.util.hashing.MurmurHash3
   * scoring functions, and the identical recommendation path (entity
   * embeddings -> cosine kNN).
   *
-  * Execution model: below `driver_max_params` floats the parameter
-  * arrays and the int-encoded triples live on the driver
-  * (`KgeTrainer.fitLocal`: full-batch gradients over per-core chunks,
-  * one SGD step per epoch, no Spark job); above it
-  * `KgeTrainer.fitDistributed` keeps parameters as DataFrame rows.
+  * Execution model: for a fold that collects to the driver and a model
+  * within `KGraph.MaxDriverParams` floats, the parameter arrays and the
+  * int-encoded triples live on the driver (`KgeTrainer.fitLocal`:
+  * full-batch gradients over per-core chunks, one SGD step per epoch, no
+  * Spark job); otherwise `KgeTrainer.fitDistributed` keeps parameters as
+  * DataFrame rows.
   * Negative sampling and the reference's internal 95/5 triples split
   * (`transE/model.py:163-174`) are seeded-hash deterministic.
   */
@@ -451,7 +452,7 @@ class KgeTrainer(val model: String, val dim: Int, val epochs: Int, val lr: Doubl
   }
 
   /** Floats the model holds for this vocabulary — the quantity the
-    * driver-vs-distributed gate compares with `driver_max_params`. */
+    * driver-vs-distributed gate compares with `KGraph.MaxDriverParams`. */
   def nParams(nEntities: Int, nRelations: Int): Long = {
     val (ed, rd) = KgeModels.dims(model, dim)
     nEntities.toLong * ed + nRelations.toLong * rd +

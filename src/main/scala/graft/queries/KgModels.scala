@@ -45,7 +45,7 @@ object KgModels {
         |  SELECT DISTINCT 'Item(' || CAST(item_id AS VARCHAR) || ')' AS label FROM ratings)""".stripMargin)),
 
     // M1-M3/M6: DeepWalk on a bounded subgraph. Fully pinned for the
-    // golden-parquet oracle: local SGNS with threads=1 (bit-exact for a
+    // golden-parquet oracle: driver-regime SGNS with threads=1 (bit-exact for a
     // fixed seed — SkipGram.scala:38-40) over a (start, walk_idx)-sorted
     // corpus (pin_order), so the output is partitioning- and
     // session-independent. No SQL engine can replay the fit itself; the
@@ -54,8 +54,7 @@ object KgModels {
       val train = trainRatings(s, dir).filter(col("user_id") < 200)
       val rec = new graft.walk.DeepWalkRecommender(Map(
         "n_walks" -> "3", "walk_len" -> "6", "embedding_size" -> "16",
-        "epochs" -> "1", "seed" -> "42", "w2v_impl" -> "local",
-        "w2v_threads" -> "1", "pin_order" -> "true"))
+        "epochs" -> "1", "seed" -> "42", "w2v_threads" -> "1", "pin_order" -> "true"))
         .train(s, train, None)
       // q07 pattern: materialize the output once, then release() the
       // recommender's userEmb/itemEmb/train caches — per-run cache

@@ -20,9 +20,9 @@ import org.apache.spark.sql.functions._
   * (type, hour) count exchange — and the lag window runs on that
   * skinny table (types × hours rows), so the low-cardinality window
   * key is harmless: the single-task sort the window implies is over
-  * thousands of rows, not the corpus ([[README]]'s window-trap rule
-  * is about windowing raw data; windowing an aggregate this small is
-  * the intended use).
+  * thousands of rows, not the corpus (a low-cardinality window key is
+  * a trap on raw data; windowing an aggregate this small is the
+  * intended use).
   */
 object Bursts {
 

@@ -5,7 +5,7 @@ import graft.knn.CosineKnn
 import graft.model.Recommender
 import org.apache.spark.ml.feature.Word2Vec
 import org.apache.spark.ml.functions.vector_to_array
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -29,14 +29,13 @@ import org.apache.spark.sql.functions._
   * local parallelism (`w2v_threads` remains an explicit alias).
   *
   * One walk kernel per walk kind ([[RandomWalks.uniformStep]],
-  * [[RandomWalks.biasedStep]]) serves both regimes. A fold trains in the
-  * driver regime when its graph is small (see `train`): one Spark job
-  * collects the label edges, and relabel, adjacency, walks and
-  * [[SkipGram.fitLocal]] run on driver arrays. The driver walks are
-  * generated in (start, walk_idx) order, so `pin_order` is implied
-  * there, and an unpinned run with `w2v_threads: 1` is bit-exact too.
-  * Such a fold then recommends from its driver arrays ([[DriverFold]]).
-  * Other folds, and every `w2v_impl: distributed` or `mllib` fold, train
+  * [[RandomWalks.biasedStep]]) serves both regimes, which follow the
+  * fold's size alone ([[EmbeddingServing]]). A small fold trains in the
+  * driver regime: one Spark job collects the label edges, and relabel,
+  * adjacency, walks and [[SkipGram.fitLocal]] run on driver arrays. The
+  * driver walks are generated in (start, walk_idx) order, so `pin_order`
+  * is implied there, and an unpinned run with `w2v_threads: 1` is
+  * bit-exact too. Other folds, and every `w2v_impl: mllib` fold, train
   * in the distributed regime: Spark walks over the broadcast adjacency,
   * then [[SkipGram.fitDistributed]] or MLlib Word2Vec.
   */
@@ -54,99 +53,70 @@ class DeepWalkRecommender(cfg: Map[String, String] = Map.empty) extends Embeddin
 
   protected def allRecs: Boolean = cfg.get("all_recs").contains("true")
 
-  override def train(spark: SparkSession, trainRatings: DataFrame,
-                     propertyEdges: Option[DataFrame],
-                     socialEdges: Option[DataFrame]): Recommender = {
-    val impl = cfg.getOrElse("w2v_impl", "auto")
-    // persist: train feeds the walk edges here plus the maxRated agg and
-    // anti-join in a distributed fold's recommend() — without this the
-    // (split-derived) lineage re-derives per consumer
-    beginTrain(spark, trainRatings)
-
-    // label-space edges: user-item rating edges, optional
-    // (src_label, dst_label) property edges, and optional User–User
-    // social links (graph.py:304-314) — the walk graph takes ALL edge
-    // kinds; adjacency() symmetrizes, matching the undirected nx.Graph.
-    // Rating rows also carry the string user/item ids recommend() drops
-    // as already rated.
-    val ratingEdges = trainRatings.select(lit("rating").as("kind"),
-      KGraph.userLabel(col("user_id")).as("src_label"),
-      KGraph.itemLabel(col("item_id")).as("dst_label"),
-      col("user_id").cast("string").as("user"), col("item_id").cast("string").as("item"))
-    val labelEdges = (propertyEdges.toSeq ++ socialEdges.toSeq)
-      .map(_.select(lit("edge").as("kind"), col("src_label"), col("dst_label"),
-        lit(null).cast("string").as("user"), lit(null).cast("string").as("item")))
-      .foldLeft(ratingEdges)(_ unionByName _)
-
-    // regime dispatch on `w2v_impl`: `local` forces the driver regime
-    // past every size gate, `distributed`/`mllib` force the distributed
-    // one, and `auto` trains on the driver when the label edges, the
-    // adjacency and the SkipGram model and corpus all fit there
-    val onDriver = impl != "distributed" && impl != "mllib"
-    val bound = if (impl == "local") Long.MaxValue else KGraph.MaxDriverEdges
-    val local = for {
-      c @ Array(_, src, dst, _, _) <- if (!onDriver) None
-        else KGraph.collectColumns(labelEdges, Seq("kind", "src_label", "dst_label", "user", "item"), bound)
-      labels = KGraph.localRelabel(src, dst)
-      encode = KGraph.localEncoder(labels)
-      adj = RandomWalks.driverAdjacency(labels.length, encode(src), encode(dst))
-      if impl == "local" || (labels.length + adj.iterator.map(_.length.toLong).sum <= bound &&
-        SkipGram.fitsDriver(labels.length, i("embedding_size", 64),
-          labels.length.toLong * i("n_walks", 10) * i("walk_len", 10)))
-    } yield (c, labels, adj)
-    local match {
-      case Some((c, labels, adj)) =>
-        val rating = c(0).indices.filter(r => c(0)(r) == "rating").toArray
-        trainDriver(labels, adj, rating.map(c(3)), rating.map(c(4)))
-      case None => trainDistributed(labelEdges.select("src_label", "dst_label"))
-    }
-    this
+  /** `w2v_impl`: `auto` (the default; the regime follows the fold's size)
+    * or `mllib` (stock MLlib Word2Vec, so always distributed). */
+  private val mllib: Boolean = cfg.getOrElse("w2v_impl", "auto") match {
+    case "auto" => false
+    case "mllib" => true
+    case other => throw new IllegalArgumentException(
+      s"w2v_impl '$other' is not one of: auto, mllib")
   }
+
+  override protected def hasDriverFit: Boolean = !mllib
+
+  protected def ratingRelation: Option[Column] = None
+
+  // the walk graph takes ALL edge kinds: rating edges, (src_label,
+  // dst_label) property edges and User–User social links
+  // (graph.py:304-314); adjacency symmetrizes, matching the undirected
+  // nx.Graph
+  protected def otherEdges(propertyEdges: Option[DataFrame],
+                           socialEdges: Option[DataFrame]): Seq[DataFrame] =
+    propertyEdges.toSeq ++ socialEdges.toSeq
 
   private def seed: Int = i("seed", 42)
   private def biased: Boolean = cfg.get("biased").contains("true")
 
-  /** The driver regime. Walks run from every node in (start, walk_idx)
-    * order — the corpus order `pin_order` gives the distributed regime — with
-    * the step functions of [[RandomWalks.randomWalks]] /
-    * [[RandomWalks.biasedWalks]], so the walks are theirs. */
-  private def trainDriver(labels: Array[String], adj: Array[Array[Long]],
-                          trainUsers: Array[String], trainItems: Array[String]): Unit = {
-    val stepFn =
-      if (biased) RandomWalks.biasedStep(f("p", 1.0), f("q", 1.0), seed)
-      else RandomWalks.uniformStep(seed)
-    val sentences = RandomWalks.driverWalks(adj, i("n_walks", 10), i("walk_len", 10), stepFn)
-      .map(_.map(_.toInt))
-    val vecs = SkipGram.fitLocal(sentences, labels.length,
-      dim = i("embedding_size", 64), window = i("window_size", 3),
-      epochs = i("epochs", 1), lr = f("learning_rate", 0.05),
-      negative = i("negative", 5), minCount = i("min_count", 1), seed = seed,
-      threads = i("w2v_threads", i("workers", spark.sparkContext.defaultParallelism)))
-    // ids stay strings: the reference schema types them string (§1.2)
-    def side(prefix: String): Seq[(String, Array[Double])] = {
-      val extract = KGraph.labelIdExtractor(prefix)
-      labels.indices
-        .filter(v => vecs(v) != null && labels(v).startsWith(s"$prefix("))
-        .map(v => extract(labels(v)) -> vecs(v).map(_.toDouble))
+  /** The driver regime, when the adjacency holds at most
+    * [[KGraph.MaxDriverEdges]] entries and [[SkipGram.fitsDriver]] holds.
+    * Walks run from every node in (start, walk_idx) order — the corpus
+    * order `pin_order` gives the distributed regime — with the step
+    * functions of [[RandomWalks.randomWalks]] / [[RandomWalks.biasedWalks]],
+    * so the walks are theirs. Nodes without a vector are dropped; users
+    * seen only in social edges keep theirs. */
+  protected def fitDriver(g: DriverGraph): Option[(Seq[(String, Array[Double])], Seq[(String, Array[Double])])] = {
+    val n = g.labels.length
+    val adj = RandomWalks.driverAdjacency(n, g.src, g.dst)
+    if (n + adj.iterator.map(_.length.toLong).sum > KGraph.MaxDriverEdges ||
+      !SkipGram.fitsDriver(n, i("embedding_size", 64), n.toLong * i("n_walks", 10) * i("walk_len", 10))) None
+    else {
+      val stepFn =
+        if (biased) RandomWalks.biasedStep(f("p", 1.0), f("q", 1.0), seed)
+        else RandomWalks.uniformStep(seed)
+      val sentences = RandomWalks.driverWalks(adj, i("n_walks", 10), i("walk_len", 10), stepFn)
+        .map(_.map(_.toInt))
+      val vecs = SkipGram.fitLocal(sentences, n,
+        dim = i("embedding_size", 64), window = i("window_size", 3),
+        epochs = i("epochs", 1), lr = f("learning_rate", 0.05),
+        negative = i("negative", 5), minCount = i("min_count", 1), seed = seed,
+        threads = i("w2v_threads", i("workers", spark.sparkContext.defaultParallelism)))
+      // ids stay strings: the reference schema types them string (§1.2)
+      def side(prefix: String): Seq[(String, Array[Double])] = {
+        val extract = KGraph.labelIdExtractor(prefix)
+        g.labels.indices
+          .filter(v => vecs(v) != null && g.labels(v).startsWith(s"$prefix("))
+          .map(v => extract(g.labels(v)) -> vecs(v).map(_.toDouble))
+      }
+      Some((side("User"), side("Item")))
     }
-    serveOnDriver(new DriverFold(side("User"), side("Item"), trainUsers, trainItems))
   }
 
-  /** The distributed regime: relabel and adjacency as DataFrames, walks
-    * by [[RandomWalks]], then [[SkipGram.fitDistributed]] or, with
+  /** The distributed regime: adjacency as a DataFrame, walks by
+    * [[RandomWalks]], then [[SkipGram.fitDistributed]] or, with
     * `w2v_impl: mllib`, MLlib Word2Vec. */
-  private def trainDistributed(labelEdges: DataFrame): Unit = {
-    val nodes = KGraph.relabel(
-      labelEdges.select(col("src_label").as("label"))
-        .union(labelEdges.select(col("dst_label").as("label"))))
-    val intEdges = labelEdges
-      .join(nodes.withColumnRenamed("label", "src_label"), Seq("src_label"))
-      .withColumnRenamed("node_id", "src")
-      .join(nodes.withColumnRenamed("label", "dst_label"), Seq("dst_label"))
-      .withColumnRenamed("node_id", "dst")
-      .select("src", "dst")
-
-    val adj = RandomWalks.adjacency(intEdges).cache()
+  protected def fitDistributed(nodes: DataFrame, relations: DataFrame, edges: DataFrame,
+                               train: DataFrame): (DataFrame, DataFrame) = {
+    val adj = RandomWalks.adjacency(edges).cache()
     val starts = nodes.select(col("node_id").as("node"))
     val walksRaw =
       if (biased)
@@ -165,11 +135,10 @@ class DeepWalkRecommender(cfg: Map[String, String] = Map.empty) extends Embeddin
     // the corpus stays an RDD: [[SkipGram.fitDistributed]] trains
     // partition replicas + token-weighted averaging — the unbounded-
     // corpus path (model stays driver-sized, as in MLlib); `mllib`
-    // keeps the stock MLlib Word2Vec for comparison
-    val nNodes = nodes.count()
+    // keeps the stock MLlib Word2Vec for comparison. Both fits are eager.
     val nodeVecs =
-      if (!cfg.get("w2v_impl").contains("mllib"))
-        SkipGram.fitDistributed(spark, walks, vocabSize = nNodes.toInt,
+      if (!mllib)
+        SkipGram.fitDistributed(spark, walks, vocabSize = nodes.count().toInt,
           dim = i("embedding_size", 64), window = i("window_size", 3),
           epochs = i("epochs", 1), lr = f("learning_rate", 0.05),
           negative = i("negative", 5), minCount = i("min_count", 1), seed = seed,
@@ -194,22 +163,15 @@ class DeepWalkRecommender(cfg: Map[String, String] = Map.empty) extends Embeddin
         model.getVectors
           .select(col("word").cast("long").as("node_id"), vector_to_array(col("vector")).as("vec"))
       }
+    // drop the walk working set so repeated trainings don't accumulate blocks
+    adj.unpersist(blocking = false)
 
     // J9 relabel join-back: embeddings keyed by original label
     val emb = nodeVecs.join(nodes, Seq("node_id"))
-    userEmb = emb.filter(col("label").startsWith("User("))
-      .select(regexp_extract(col("label"), "^User\\((.*)\\)$", 1).as("id"), col("vec"))
-      .cache()
-    itemEmb = emb.filter(col("label").startsWith("Item("))
-      .select(regexp_extract(col("label"), "^Item\\((.*)\\)$", 1).as("id"), col("vec"))
-      .cache()
-    // materialize the (small) embedding tables, then drop the walk
-    // working set so repeated trainings don't accumulate blocks
-    userEmb.count(); itemEmb.count()
-    adj.unpersist(blocking = false)
-    nodes.unpersist(blocking = false) // relabel returns it persisted
+    def side(prefix: String): DataFrame = emb.filter(col("label").startsWith(s"$prefix("))
+      .select(regexp_extract(col("label"), s"^$prefix\\((.*)\\)$$", 1).as("id"), col("vec"))
+    (side("User"), side("Item"))
   }
-
 }
 
 object DeepWalkRecommender {

@@ -23,7 +23,7 @@ class DriverServingSpec extends AnyFunSuite {
   /** Random embeddings with exact score ties (repeated vectors), zero
     * vectors, and ids whose UTF-16 order differs from their UTF-8 order;
     * user u0 rated every item, the others a random few. */
-  private def randomFold(seed: Int, nUsers: Int, nItems: Int): (DriverFold, DataFrame) = {
+  private def randomFold(seed: Int, nUsers: Int, nItems: Int): Fold = {
     val rnd = new scala.util.Random(seed)
     def vec() = Array.fill(6)(rnd.nextGaussian())
     val shared = vec()
@@ -36,18 +36,24 @@ class DriverServingSpec extends AnyFunSuite {
     }
     val pairs = itemIds.map("u0" -> _) ++ (1 until nUsers).flatMap(u =>
       rnd.shuffle(itemIds).take(rnd.nextInt(4)).map(s"u$u" -> _))
-    (new DriverFold(users, items, pairs.map(_._1).toArray, pairs.map(_._2).toArray),
-      pairs.toDF("user_id", "item_id"))
+    Fold(new DriverFold(users, items, pairs.map(_._1).toArray, pairs.map(_._2).toArray),
+      table(users), table(items), pairs.toDF("user_id", "item_id"))
   }
+
+  /** A driver fold and the same fold as Spark tables: the (id, vec)
+    * embeddings and the train pairs. */
+  private case class Fold(driver: DriverFold, users: DataFrame, items: DataFrame, train: DataFrame)
+
+  private def table(rows: Seq[(String, Array[Double])]): DataFrame =
+    rows.map { case (id, v) => (id, v.toSeq) }.toDF("id", "vec")
 
   private def rows(df: DataFrame): Seq[(String, String, Int)] =
     df.collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSeq.sortBy(r => (r._1, r._3))
 
   /** `knnRecommend`'s plan with the top-k kernel called directly: the
     * fused one or the shuffle-combine one. */
-  private def sparkRecs(fold: DriverFold, train: DataFrame, k: Int, allRecs: Boolean,
-                        fused: Boolean): DataFrame = {
-    val (users, items) = fold.tables(spark)
+  private def sparkRecs(fold: Fold, k: Int, allRecs: Boolean, fused: Boolean): DataFrame = {
+    val Fold(_, users, items, train) = fold
     val maxRated = train.groupBy("user_id").count().agg(max("count")).first().getLong(0)
     val nItems = items.count()
     val kPrime = if (allRecs) nItems.toInt else math.min(maxRated + k, nItems).toInt
@@ -64,14 +70,15 @@ class DriverServingSpec extends AnyFunSuite {
   test("driver top-k equals CosineKnn.topK's fused and shuffle-combine kernels row for row") {
     for ((seed, nUsers, nItems, k) <- Seq((1, 12, 30, 5), (2, 20, 9, 4), (3, 6, 40, 50));
          allRecs <- Seq(false, true)) {
-      val (fold, train) = randomFold(seed, nUsers, nItems)
-      val local = fold.recommend(spark, k, allRecs)
+      val fold = randomFold(seed, nUsers, nItems)
+      val train = fold.train
+      val local = fold.driver.recommend(spark, k, allRecs)
       assert(Shim.localRows(local).isDefined, "the driver path returns a local table")
-      val combined = sparkRecs(fold, train, k, allRecs, fused = false)
+      val combined = sparkRecs(fold, k, allRecs, fused = false)
       assert(local.schema == combined.schema)
       val got = rows(local)
       assert(got == rows(combined), s"seed $seed allRecs $allRecs vs shuffle-combine")
-      assert(got == rows(sparkRecs(fold, train, k, allRecs, fused = true)), s"seed $seed allRecs $allRecs vs fused")
+      assert(got == rows(sparkRecs(fold, k, allRecs, fused = true)), s"seed $seed allRecs $allRecs vs fused")
       // u0 rated every item; the zero-vector user u3 still gets a list
       assert(!got.exists(_._1 == "u0") && got.exists(_._1 == "u3"))
       if (allRecs) assert(got.count(_._1 == "u1") == nItems - train.filter($"user_id" === "u1").count())
@@ -182,9 +189,11 @@ class DriverServingSpec extends AnyFunSuite {
       assert(jobs.size <= 2, jobs)
       assert(Shim.localRows(recs).isDefined)
       assertClose(means, sparkMeans(recs, heldOut, 3, 3.0), name)
-      // the Spark path over the same fold's embedding tables ranks the same rows
-      val u = rec.recommendUser("1", 3)
-      assert(rows(u) == rows(recs).filter(_._1 == "1"))
+      // one user's recs come from the same driver arrays, without a job
+      var u: DataFrame = null
+      assert(JobWatch.jobs(spark) { u = rec.recommendUser("1", 3) }.isEmpty)
+      assert(Shim.localRows(u).isDefined)
+      assert(rows(u) == rows(recs).filter(_._1 == "1") && rows(u).nonEmpty)
       rec.release()
       Seq(train, heldOut).foreach(_.unpersist())
     }

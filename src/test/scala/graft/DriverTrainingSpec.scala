@@ -112,20 +112,27 @@ class DriverTrainingSpec extends AnyFunSuite {
     assert(fit() == fit())
   }
 
-  test("a KGE fold over driver_max_params trains in the distributed regime") {
+  test("a KGE fold through trainDistributed matches the driver's list lengths") {
     val train = ratings.repartition(3).persist()
     train.count()
-    def make(maxParams: String) = new KgeRecommender(Map("model" -> "transE",
-      "embedding_dim" -> "4", "epochs" -> "1", "driver_max_params" -> maxParams))
-    val rec = make("0")
+    def make() = new KgeRecommender(Map("model" -> "transE", "embedding_dim" -> "4", "epochs" -> "1"))
+    val rec = make()
     // fitDistributed runs jobs per epoch; the driver regime runs one
-    assert(JobWatch.jobs(spark)(rec.train(spark, train, None, None)).size > 1)
+    assert(JobWatch.jobs(spark)(rec.trainDistributed(spark, train)).size > 1)
     def lists(r: Recommender) = r.recommend(2).collect()
       .groupBy(_.getAs[String]("user_id")).map { case (u, rs) => u -> rs.length }
-    val driver = make("50000000").train(spark, train, None, None)
+    val driver = make().train(spark, train, None, None)
     assert(lists(rec) == lists(driver))
     Seq(rec, driver).foreach(_.release())
     train.unpersist()
+  }
+
+  test("w2v_impl accepts only auto and mllib; any other value names itself and the allowed set") {
+    assert(new DeepWalkRecommender(Map("w2v_impl" -> "auto")).name.nonEmpty)
+    for (bad <- Seq("local", "distributed", "mlib", "")) {
+      val e = intercept[IllegalArgumentException](new DeepWalkRecommender(Map("w2v_impl" -> bad)))
+      assert(e.getMessage.contains(s"'$bad'") && e.getMessage.contains("auto, mllib"), e.getMessage)
+    }
   }
 
   test("w2v_impl: mllib trains a DeepWalk fold on MLlib Word2Vec: at most k unrated recs per train user") {

@@ -138,4 +138,28 @@ class ExperimentRegistrySpec extends AnyFunSuite {
     assert(labels.forall(l => l == "outer" || l.matches("(popularity|transE) fold 1: (train|recommend|eval)")),
       s"unexpected job labels: ${labels.distinct}")
   }
+
+  test("an unknown model or metric name fails with that name before any Spark job") {
+    val tmp = java.nio.file.Files.createTempDirectory("bad_names")
+    graft.util.Scratch.deleteOnExit(tmp)
+    graft.schema.TypedCsv.write(Seq(("1", "1", 5.0), ("2", "1", 4.0)).toDF("user_id", "item_id", "rating"),
+      s"$tmp/rating.csv")
+    for ((model, metric, name) <- Seq(("transEE", "MAP", "transEE"), ("transE", "Recall", "Recall"))) {
+      java.nio.file.Files.writeString(java.nio.file.Path.of(s"$tmp/exp.yml"),
+        s"""experiment:
+           |  dataset: {ratings: $tmp/rating.csv}
+           |  split: {seed: 42, test: {method: random_by_ratio, p: 0.25, level: user}}
+           |  models:
+           |    - {name: popularity, parameters: {}}
+           |    - {name: $model, parameters: {embedding_dim: 4, epochs: 1}}
+           |  evaluation: {k: 3, metrics: [MAP, $metric]}
+           |""".stripMargin)
+      var err: Throwable = null
+      val jobs = JobWatch.jobs(spark) {
+        err = intercept[IllegalArgumentException](graft.cli.Experiment.run(spark, s"$tmp/exp.yml"))
+      }
+      assert(err.getMessage.contains(name), err.getMessage)
+      assert(jobs.isEmpty, jobs)
+    }
+  }
 }

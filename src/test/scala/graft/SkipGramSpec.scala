@@ -96,7 +96,7 @@ class SkipGramSpec extends AnyFunSuite {
     ).toDF("user_id", "item_id", "rating")
     val rec = new DeepWalkRecommender(Map(
       "n_walks" -> "10", "walk_len" -> "6", "embedding_size" -> "8",
-      "epochs" -> "2", "seed" -> "42", "w2v_impl" -> "local", "w2v_threads" -> "1"))
+      "epochs" -> "2", "seed" -> "42", "w2v_threads" -> "1"))
       .train(spark, train, None)
     val recs = rec.recommend(2)
     // nobody is recommended an item they already rated; ranks are 1..k
@@ -119,14 +119,15 @@ class SkipGramSpec extends AnyFunSuite {
       (1L, 10L, 5.0), (1L, 11L, 4.0), (2L, 10L, 5.0), (2L, 12L, 3.0),
       (3L, 11L, 4.0), (3L, 12L, 2.0), (4L, 10L, 1.0), (4L, 13L, 5.0)
     ).toDF("user_id", "item_id", "rating")
+    // each model in the driver regime (ranked on driver arrays) and in
+    // the distributed one (knnRecommendUser)
     val recs: Seq[graft.model.Recommender] = Seq(
-      new DeepWalkRecommender(Map(
+      () => new DeepWalkRecommender(Map(
         "n_walks" -> "6", "walk_len" -> "6", "embedding_size" -> "8",
-        "epochs" -> "2", "seed" -> "42", "w2v_impl" -> "local", "w2v_threads" -> "1"))
-        .train(spark, train, None),
-      new graft.kge.KgeRecommender(Map(
+        "epochs" -> "2", "seed" -> "42", "w2v_threads" -> "1")),
+      () => new graft.kge.KgeRecommender(Map(
         "model" -> "transE", "embedding_dim" -> "8", "epochs" -> "2", "seed" -> "42"))
-        .train(spark, train, None))
+    ).flatMap(make => Seq(make().train(spark, train), make().trainDistributed(spark, train)))
     for (rec <- recs; u <- Seq("2", "4")) {
       val slice = rec.recommend(2).filter($"user_id" === u)
         .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2))).toSet
@@ -149,8 +150,7 @@ class SkipGramSpec extends AnyFunSuite {
     ).toDF("user_id", "item_id", "rating")
     val cfg = Map(
       "n_walks" -> "4", "walk_len" -> "6", "embedding_size" -> "8",
-      "epochs" -> "2", "seed" -> "42", "w2v_impl" -> "local",
-      "w2v_threads" -> "1", "pin_order" -> "true")
+      "epochs" -> "2", "seed" -> "42", "w2v_threads" -> "1", "pin_order" -> "true")
     def run(in: org.apache.spark.sql.DataFrame) = {
       val rec = new DeepWalkRecommender(cfg).train(spark, in, None)
       val out = rec.recommend(3).select("user_id", "item_id", "rank")
@@ -167,15 +167,19 @@ class SkipGramSpec extends AnyFunSuite {
       (1L, 10L, 5.0), (1L, 11L, 4.0), (2L, 10L, 5.0), (2L, 12L, 3.0),
       (3L, 11L, 4.0), (3L, 12L, 2.0)
     ).toDF("user_id", "item_id", "rating")
-    val rec = new DeepWalkRecommender(Map(
+    def make() = new DeepWalkRecommender(Map(
       "n_walks" -> "5", "walk_len" -> "5", "embedding_size" -> "8",
-      "epochs" -> "1", "seed" -> "42", "w2v_impl" -> "distributed",
-      "w2v_partitions" -> "2"))
-      .train(spark, train, None)
+      "epochs" -> "1", "seed" -> "42", "w2v_partitions" -> "2"))
+    val rec = make().trainDistributed(spark, train)
     val recs = rec.recommend(2)
     assert(recs.count() > 0)
     assert(recs.join(train,
       recs("user_id") === train("user_id") && recs("item_id") === train("item_id")).count() == 0)
-    rec.release()
+    // the same fold in the driver regime gives every user a list as long
+    def lists(r: graft.model.Recommender) = r.recommend(2).collect()
+      .groupBy(_.getAs[String]("user_id")).map { case (u, rs) => u -> rs.length }
+    val driver = make().train(spark, train)
+    assert(lists(rec) == lists(driver))
+    Seq(rec, driver).foreach(_.release())
   }
 }
