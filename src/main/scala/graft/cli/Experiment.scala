@@ -1,6 +1,7 @@
 package graft.cli
 
 import graft.eval.Metrics
+import graft.graph.KGraph
 import graft.model.Recommenders
 import graft.prep.Preprocess
 import graft.report.Reporter
@@ -8,6 +9,7 @@ import graft.schema.TypedCsv
 import graft.split.EdgeSplits
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types.{StringType, StructField}
 import org.yaml.snakeyaml.Yaml
 import scala.jdk.CollectionConverters._
@@ -29,6 +31,9 @@ object Experiment {
     Option(m.get(k)).map(_.toString.toInt).getOrElse(d)
   private def dbl(m: Cfg, k: String, d: Double): Double =
     Option(m.get(k)).map(_.toString.toDouble).getOrElse(d)
+  /** A preprocess or model entry's `parameters`, empty when it has none. */
+  private def parameters(p: Cfg): Cfg =
+    Option(sub(p, "parameters")).getOrElse(new java.util.HashMap[String, Object]())
   private def list(m: Cfg, k: String): Seq[Cfg] =
     Option(m.get(k)).map(_.asInstanceOf[java.util.List[Object]].asScala.toSeq.map(_.asInstanceOf[Cfg]))
       .getOrElse(Seq.empty)
@@ -83,9 +88,19 @@ object Experiment {
                            socialEdges: Option[DataFrame])
 
   /** Graph assembly from the `dataset:` block (`Graph.build`,
-    * graph.py:28-35): items + user info + ratings + social links. */
-  def loadDataset(spark: SparkSession, ds: Cfg): DatasetBundle = {
-    import graft.graph.KGraph
+    * graph.py:28-35): items + user info + ratings + social links.
+    *
+    * The driver gate: a validated rating table of at most
+    * [[KGraph.MaxDriverEdges]] rows comes to the driver in one bounded
+    * collect and is returned as a local table with the same schema. The
+    * operators of the experiment spine (binarize, k-core, the splits,
+    * popularity, MAP/nDCG) then take their driver forms, which start no
+    * Spark job (`Shim.localRows`). A larger table stays a Spark plan. */
+  def loadDataset(spark: SparkSession, ds: Cfg): DatasetBundle =
+    loadDataset(spark, ds, KGraph.MaxDriverEdges)
+
+  /** [[loadDataset]] with the driver bound `maxDriverRows`. */
+  private[graft] def loadDataset(spark: SparkSession, ds: Cfg, maxDriverRows: Long): DatasetBundle = {
     val ratingsRaw = TypedCsv.read(spark, cfgPath(ds, "ratings").getOrElse(
         sys.error("dataset.ratings is required")))
       .withColumnRenamed("timestamp", "ts")
@@ -132,6 +147,8 @@ object Experiment {
     // J4 endpoint validation when dims are present (graph.py:293-302)
     for (u <- users) ratings = ratings.join(u.select("user_id"), Seq("user_id"), "left_semi")
     for (i <- items) ratings = ratings.join(i.select("item_id"), Seq("item_id"), "left_semi")
+    ratings = KGraph.collectRows(ratings, maxDriverRows).fold(ratings)(rows =>
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), ratings.schema))
 
     // property edges, four sources into one channel:
     // item extra_features + map-match columns + enriched-table columns
@@ -198,15 +215,62 @@ object Experiment {
     d
   }
 
+  /** Every Spark job `body` starts carries `label` as its description,
+    * and the caller's own description comes back afterwards. Returns
+    * `body`'s value and its seconds. */
+  private def labelled[T](spark: SparkSession, label: String)(body: => T): (T, Double) = {
+    val previous = spark.sparkContext.getLocalProperty("spark.job.description")
+    spark.sparkContext.setJobDescription(label)
+    val t0 = System.nanoTime()
+    try (body, (System.nanoTime() - t0) / 1e9)
+    finally spark.sparkContext.setJobDescription(previous)
+  }
+
+  /** The preprocess list, checked before any data loads: every method
+    * name and k-core target. */
+  private def checkPreprocess(steps: Seq[Cfg]): Unit = steps.foreach { p =>
+    str(p, "method") match {
+      case "binarize" =>
+      case "filter_kcore" => Preprocess.kcoreKey(str(parameters(p), "target", "user"))
+      case other => throw new IllegalArgumentException(s"Preprocessing method $other is not implemented.")
+    }
+  }
+
+  /** A test or validation split entry, checked before any data loads:
+    * its method, `p` in (0,1) for the ratio methods, k >= 2 for k_fold,
+    * the level and fixed_timestamp's `timestamp`. */
+  private def checkSplit(c: Cfg, defaultMethod: String): Unit = {
+    def level(): Unit = EdgeSplits.partitionedByUser(str(c, "level", "user"))
+    str(c, "method", defaultMethod) match {
+      case "k_fold" =>
+        val k = int(c, "k", 2)
+        require(k >= 2, s"k must be >= 2, got $k")
+        level()
+      case "random_by_ratio" | "timestamp_by_ratio" =>
+        val p = dbl(c, "p", 0.2)
+        require(p > 0 && p < 1, s"p must be in (0,1), got $p")
+        level()
+      case "fixed_timestamp" =>
+        require(Option(str(c, "timestamp")).exists(_.toLongOption.isDefined),
+          s"fixed_timestamp needs an integer timestamp, got ${str(c, "timestamp")}")
+      case other => throw new IllegalArgumentException(s"Invalid split method $other")
+    }
+  }
+
   /** Parse + run; returns the report DataFrame (also written to the
     * configured report file). */
-  def run(spark: SparkSession, configPath: String): DataFrame = {
+  def run(spark: SparkSession, configPath: String): DataFrame =
+    run(spark, configPath, KGraph.MaxDriverEdges)
+
+  /** [[run]] with the load gate's bound `maxDriverRows`: 0 keeps a small
+    * experiment's ratings a Spark plan, so its spine runs the Spark forms. */
+  private[graft] def run(spark: SparkSession, configPath: String, maxDriverRows: Long): DataFrame = {
     val root = new Yaml().load(new java.io.FileInputStream(configPath))
       .asInstanceOf[Cfg]
     val exp = sub(root, "experiment")
 
-    // evaluation config; every model and metric name is checked before
-    // any data loads, so a typo fails fast with the name
+    // the whole config is checked before any data loads, so a typo in a
+    // model, metric, preprocess or split entry fails fast with the name
     val eval = sub(exp, "evaluation")
     val k = int(eval, "k", 5)
     val relThr = dbl(eval, "relevance_threshold", 3.0)
@@ -217,102 +281,110 @@ object Experiment {
     val registry = Recommenders.registry
     list(exp, "models").map(str(_, "name")).foreach(mn => require(registry.contains(mn),
       s"Model $mn is not implemented; known models: ${registry.keys.toSeq.sorted.mkString(", ")}."))
-
-    // dataset: standardized typed-CSV paths (experiment.py:38 load(**cfg))
-    val bundle = loadDataset(spark, sub(exp, "dataset"))
-    var ratings = bundle.ratings
-    val propertyEdges = bundle.propertyEdges
-
-    val kcoreCaches = new graft.prep.KCoreCaches
-    var ranKCore = false
-    for (p <- list(exp, "preprocess")) {
-      val params = sub(p, "parameters")
-      str(p, "method") match {
-        case "binarize" => ratings = Preprocess.binarize(ratings, dbl(params, "threshold", 3.0))
-        case "filter_kcore" =>
-          ratings = Preprocess.filterKCore(ratings,
-            int(params, "k", 2), str(params, "target", "user"),
-            int(params, "iterations", 1), kcoreCaches)
-          ranKCore = true
-        case other => throw new IllegalArgumentException(
-          s"Preprocessing method $other is not implemented.")
-      }
-    }
-    ratings = ratings.cache()
-    // k-core leaves its kill-set caches live inside the lineage
-    // (caller-owned contract): materialize the preprocessed ratings once,
-    // then drop the loop caches before the fold runs
-    if (ranKCore) { ratings.count(); kcoreCaches.release() }
-
-    // split config (edge_splitter.py:28-73)
+    val preprocess = list(exp, "preprocess")
+    checkPreprocess(preprocess)
+    // split config (edge_splitter.py:28-73); the optional nested
+    // validation split (dataloader.py:32-40) accepts any splitter method
+    // (default random_by_ratio), k_fold-on-k_fold rejected with the
+    // reference's error
     val split = sub(exp, "split")
     val seed = int(split, "seed", 42).toLong
     val test = sub(split, "test")
+    val validation = Option(split.get("validation")).map(_.asInstanceOf[Cfg])
+    checkSplit(test, null)
+    validation.foreach { vc =>
+      checkSplit(vc, "random_by_ratio")
+      if (str(test, "method") == "k_fold" && str(vc, "method", "random_by_ratio") == "k_fold")
+        throw new IllegalArgumentException("Validation split does not support k_fold method.")
+    }
+
+    // load, preprocess and split each run under an "experiment: <stage>"
+    // job description; their seconds go to the report's <stage>_s column
+    val stageSecs = scala.collection.mutable.LinkedHashMap.empty[String, Double]
+    def stage[T](name: String)(body: => T): T = {
+      val (out, secs) = labelled(spark, s"experiment: $name")(body)
+      stageSecs(name) = secs
+      out
+    }
+
+    // dataset: standardized typed-CSV paths (experiment.py:38 load(**cfg));
+    // a small rating table leaves load as a local table
+    val bundle = stage("load")(loadDataset(spark, sub(exp, "dataset"), maxDriverRows))
+    val propertyEdges = bundle.propertyEdges
+
+    val ratings = stage("preprocess") {
+      val kcoreCaches = new graft.prep.KCoreCaches
+      val prepped = preprocess.foldLeft(bundle.ratings) { (r, p) =>
+        val ps = parameters(p)
+        str(p, "method") match {
+          case "binarize" => Preprocess.binarize(r, dbl(ps, "threshold", 3.0))
+          case "filter_kcore" => Preprocess.filterKCore(r,
+            int(ps, "k", 2), str(ps, "target", "user"),
+            int(ps, "iterations", 1), kcoreCaches)
+        }
+      }
+      // k-core leaves its kill-set caches live inside a Spark lineage
+      // (caller-owned contract): materialize the preprocessed ratings
+      // once, then drop the loop caches before the fold runs. A local
+      // table is materialized already.
+      if (!Shim.isLocal(prepped)) {
+        prepped.cache()
+        if (preprocess.exists(p => str(p, "method") == "filter_kcore")) {
+          prepped.count(); kcoreCaches.release()
+        }
+      }
+      prepped
+    }
+
     val splitCaches = scala.collection.mutable.Buffer.empty[DataFrame]
     // one splitter application — shared by the test split and the nested
     // validation split, which accepts the SAME method surface and seed
     // (dataloader.py:23-40 constructs a second EdgeSplitter(G_train,
-    // seed=seed) and dispatches split_config['validation'] through it)
-    def applySplit(df: DataFrame, c: Cfg, defaultMethod: String): Seq[(DataFrame, DataFrame)] =
+    // seed=seed) and dispatches split_config['validation'] through it).
+    // A local input splits on the driver, here; a Spark one stays lazy.
+    def applySplit(df: DataFrame, c: Cfg, defaultMethod: String): Seq[(DataFrame, DataFrame)] = {
+      def trainTest(a: DataFrame) =
+        Seq((a.filter(!col("is_test")).drop("is_test"), a.filter(col("is_test")).drop("is_test")))
       str(c, "method", defaultMethod) match {
         case "k_fold" =>
           val k = int(c, "k", 2)
-          val assigned = EdgeSplits.kFoldRandom(df, k, str(c, "level", "user"), seed).cache()
-          splitCaches += assigned
+          val assigned = EdgeSplits.kFoldRandom(df, k, str(c, "level", "user"), seed)
+          if (!Shim.isLocal(assigned)) splitCaches += assigned.cache()
           (1 to k).map(i => (assigned.filter(col("fold") =!= i).drop("fold"),
             assigned.filter(col("fold") === i).drop("fold")))
         case "random_by_ratio" =>
-          val a = EdgeSplits.randomByRatio(df, dbl(c, "p", 0.2), str(c, "level", "user"), seed)
-          Seq((a.filter(!col("is_test")).drop("is_test"), a.filter(col("is_test")).drop("is_test")))
+          trainTest(EdgeSplits.randomByRatio(df, dbl(c, "p", 0.2), str(c, "level", "user"), seed))
         case "timestamp_by_ratio" =>
-          val a = EdgeSplits.timestampByRatio(df, dbl(c, "p", 0.2), str(c, "level", "user"))
-          Seq((a.filter(!col("is_test")).drop("is_test"), a.filter(col("is_test")).drop("is_test")))
+          trainTest(EdgeSplits.timestampByRatio(df, dbl(c, "p", 0.2), str(c, "level", "user")))
         case "fixed_timestamp" =>
-          val a = EdgeSplits.fixedTimestamp(df, str(c, "timestamp").toLong)
-          Seq((a.filter(!col("is_test")).drop("is_test"), a.filter(col("is_test")).drop("is_test")))
+          trainTest(EdgeSplits.fixedTimestamp(df, str(c, "timestamp").toLong))
         case other => throw new IllegalArgumentException(s"Invalid split method $other")
       }
-    val folds: Seq[(DataFrame, DataFrame)] = applySplit(ratings, test, null)
-
-    // optional nested validation split (dataloader.py:32-40): carve a
-    // validation set out of each fold's train part with the same engine —
-    // any splitter method (default random_by_ratio), k_fold-on-k_fold
-    // rejected with the reference's error
-    val foldsWithVal: Seq[(DataFrame, DataFrame)] = Option(split.get("validation")) match {
-      case Some(v) =>
-        val vc = v.asInstanceOf[Cfg]
-        if (str(test, "method") == "k_fold" && str(vc, "method", "random_by_ratio") == "k_fold")
-          throw new IllegalArgumentException("Validation split does not support k_fold method.")
-        folds.map { case (train, tst) =>
-          // .last mirrors the reference's generator loop, whose final
-          // iteration's G_train is what reaches training
-          val (carved, _) = applySplit(train, vc, "random_by_ratio").last
-          (carved, tst)
-        }
-      case None => folds
+    }
+    val (nFolds, foldsWithVal) = stage("split") {
+      val folds = applySplit(ratings, test, null)
+      // .last mirrors the reference's generator loop, whose final
+      // iteration's G_train is what reaches training
+      (folds.size, validation.fold(folds)(vc => folds.map { case (train, tst) =>
+        (applySplit(train, vc, "random_by_ratio").last._1, tst)
+      }))
     }
 
     // model loop (experiment.py:60-88)
     val rows = for {
       m <- list(exp, "models")
       modelName = str(m, "name")
-      params = Option(sub(m, "parameters")).getOrElse(new java.util.HashMap[String, Object]())
-      cfgMap = params.asScala.map { case (kk, v) => kk -> v.toString }.toMap
+      cfgMap = parameters(m).asScala.map { case (kk, v) => kk -> v.toString }.toMap
       ((train, testDf), foldIdx) <- foldsWithVal.zipWithIndex
     } yield {
       val t0 = System.nanoTime()
       val phaseSecs = scala.collection.mutable.ArrayBuffer.empty[Double]
       // every Spark job of a phase is labelled "<model> fold <i>: <phase>";
-      // the caller's own job description comes back afterwards. The
-      // phase's seconds go to the report's fold-<i>_<phase>_s column.
+      // the phase's seconds go to the report's fold-<i>_<phase>_s column
       def phase[T](name: String)(body: => T): T = {
-        val previous = spark.sparkContext.getLocalProperty("spark.job.description")
-        spark.sparkContext.setJobDescription(s"$modelName fold ${foldIdx + 1}: $name")
-        val p0 = System.nanoTime()
-        try body finally {
-          phaseSecs += (System.nanoTime() - p0) / 1e9
-          spark.sparkContext.setJobDescription(previous)
-        }
+        val (out, secs) = labelled(spark, s"$modelName fold ${foldIdx + 1}: $name")(body)
+        phaseSecs += secs
+        out
       }
       val rec = phase("train")(registry(modelName)(cfgMap)
         .train(spark, train, propertyEdges, bundle.socialEdges))
@@ -336,19 +408,24 @@ object Experiment {
     // the metric rows above are local Scala values — the run's shared
     // caches (preprocessed ratings, fold assignment) are dead weight for
     // the report and must not outlive the experiment in a long session
-    ratings.unpersist(blocking = false)
+    if (!Shim.isLocal(ratings)) ratings.unpersist(blocking = false)
     splitCaches.foreach(_.unpersist(blocking = false))
 
     val dedupedRows = dedupLastWins(rows)
 
     // mean±std report (experiment.py:93-106, report.py:31-63): the
-    // metric and execution_time pivots side by side, then the per-phase
-    // seconds of each fold (fold-<i>_train_s, _recommend_s, _eval_s)
+    // metric and execution_time pivots side by side, then the load,
+    // preprocess and split seconds (load_s, preprocess_s, split_s), then
+    // the per-phase seconds of each fold (fold-<i>_train_s, _recommend_s,
+    // _eval_s)
     val withStats = metricNames.map(mn => s"$mn@$k") :+ "execution_time"
-    val report = Reporter.pivotTable(spark, StructField("model", StringType),
+    val pivot = Reporter.pivotTable(spark, StructField("model", StringType),
       withStats.map(_ -> true) ++ Seq("train_s", "recommend_s", "eval_s").map(_ -> false),
       dedupedRows.map { case (model, fold, vals, times) => (model, fold, vals.map(_._2) ++ times) },
-      folds.size)
+      nFolds)
+    val (summary, foldPhases) = pivot.columns.toSeq.span(_ != "fold-1_train_s")
+    val report = pivot.select(summary.map(col) ++
+      stageSecs.map { case (name, secs) => lit(secs).as(s"${name}_s") } ++ foldPhases.map(col): _*)
     val timeReport = report.select(report.columns.toSeq
       .filter(c => c == "model" || c.contains("execution_time")).map(col): _*)
 
@@ -356,7 +433,7 @@ object Experiment {
       // the FILE takes the reference's artifact shape (fold-major, no
       // execution_time columns, hold-out collapse — report.py:31-63);
       // the returned DataFrame keeps the full layout for callers
-      Reporter.writeCsv(Reporter.referenceArtifact(report, metricNames, k, folds.size), f)
+      Reporter.writeCsv(Reporter.referenceArtifact(report, metricNames, k, nFolds), f)
     }
     // separate execution-times CSV with the machine spec folded into the
     // model name (experiment.py:108-113, report.py:86-101)

@@ -132,7 +132,8 @@ object Metrics {
     * whose top-k rows, and the relevant test rows, are each within
     * [[KGraph.MaxDriverEdges]] rows, the means are computed on the
     * driver ([[driverMeans]]): recs are read where they are, the test
-    * rows come back in one bounded collect, and the result is a local
+    * rows are read in place when the test frame is local too and come
+    * back in one bounded collect otherwise, and the result is a local
     * table. Other inputs take the Spark plan, where both means ride a
     * single join tree and one exchange over the recommendations; lazy
     * recs are never collected, so their ranking runs once. */

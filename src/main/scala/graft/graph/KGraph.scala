@@ -2,6 +2,7 @@ package graft.graph
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
 
 /** The heterogeneous user-item-property graph as two immutable
   * DataFrames, replacing the reference's mutable `Graph(nx.Graph)`
@@ -133,7 +134,8 @@ object KGraph {
     * to at most `maxRows`, a second job fetches the partitions that went
     * over their share; an evenly partitioned frame needs one job. Equal
     * labels share one String instance per partition, so a task ships
-    * each distinct label once. */
+    * each distinct label once. A local table (`Shim.localRows`) is read
+    * in place, without a job. */
   def collectColumns(df: DataFrame, cols: Seq[String], maxRows: Long): Option[Array[Array[String]]] = {
     val width = cols.size
     collectBounded(df.select(cols.map(col): _*), maxRows) { it =>
@@ -160,7 +162,13 @@ object KGraph {
 
   /** Each partition's rows packed by `pack`, or None past `maxRows` rows
     * in all: the bounded scan behind [[collectColumns]]. */
-  private def collectBounded[P](df: DataFrame, maxRows: Long)(pack: Iterator[Row] => P): Option[Seq[P]] = {
+  private def collectBounded[P](df: DataFrame, maxRows: Long)(pack: Iterator[Row] => P): Option[Seq[P]] =
+    Shim.localRows(df) match {
+      case Some(local) => if (local.size > maxRows) None else Some(Seq(pack(local.iterator)))
+      case None => collectScan(df, maxRows)(pack)
+    }
+
+  private def collectScan[P](df: DataFrame, maxRows: Long)(pack: Iterator[Row] => P): Option[Seq[P]] = {
     val rows = df.rdd
     val share = maxRows / math.max(1, rows.getNumPartitions)
     // (rows seen, packed rows): nothing is packed past `keep` rows, and

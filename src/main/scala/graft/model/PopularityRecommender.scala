@@ -1,8 +1,10 @@
 package graft.model
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Non-personalized baseline: recommend the globally most-rated items
   * the user has not yet rated. Not present in the reference model zoo,
@@ -25,7 +27,12 @@ class PopularityRecommender(cfg: Map[String, String] = Map.empty) extends Recomm
   override def train(spark: SparkSession, trainRatings: DataFrame,
                      propertyEdges: Option[DataFrame],
                      socialEdges: Option[DataFrame]): Recommender = {
-    this.train = trainRatings
+    // the Spark plan reads train three times (popularity, degree bound,
+    // anti-join): materialize once instead of re-deriving the upstream
+    // join+agg. A local table is on the driver already.
+    this.train =
+      if (Shim.isLocal(trainRatings)) trainRatings
+      else trainRatings.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     this
   }
 
@@ -33,17 +40,20 @@ class PopularityRecommender(cfg: Map[String, String] = Map.empty) extends Recomm
     PopularityRecommender.recommend(train, k, allRecs = cfg.get("all_recs").contains("true"))
 
   override def release(): Unit =
-    if (train != null) train.unpersist(blocking = false)
+    if (train != null && !Shim.isLocal(train)) train.unpersist(blocking = false)
 }
 
 object PopularityRecommender {
   /** (user_id, item_id, rank) of the top-k most popular unrated items.
     * `allRecs`: rank every unrated item (no candidate bound, no cutoff) —
-    * deep_walk_based/model.py:75-86's all_recs mode. */
-  def recommend(trainRaw: DataFrame, k: Int, allRecs: Boolean = false): DataFrame = {
-    // train is read three times (popularity, degree bound, anti-join):
-    // materialize once instead of re-deriving the upstream join+agg
-    val train = trainRaw.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    * deep_walk_based/model.py:75-86's all_recs mode. A local `train`
+    * (`Shim.localRows`) is ranked on the driver into a local table of
+    * the same rows. The caller's frame is never persisted. */
+  def recommend(train: DataFrame, k: Int, allRecs: Boolean = false): DataFrame =
+    Shim.localRows(train.select("user_id", "item_id"))
+      .fold(sparkRecommend(train, k, allRecs))(localRecommend(train, _, k, allRecs))
+
+  private def sparkRecommend(train: DataFrame, k: Int, allRecs: Boolean): DataFrame = {
     val pop = train.groupBy("item_id").agg(count(lit(1)).as("cnt"))
     // max #items any single user rated — bounds candidates exactly like
     // the reference bounds kNN n_neighbors (deep_walk_based/model.py:137-149)
@@ -62,5 +72,32 @@ object PopularityRecommender {
         row_number().over(Window.partitionBy("user_id").orderBy(col("cnt").desc, col("item_id"))))
     (if (allRecs) ranked else ranked.filter(col("rank") <= k))
       .select("user_id", "item_id", "rank")
+  }
+
+  /** [[sparkRecommend]] on the driver over the (user_id, item_id) rows:
+    * items by count descending, then by id in Spark's order; the first
+    * maxRated + k of them are every user's candidates (the null user
+    * included), minus the user's rated items (a null id rates nothing,
+    * as in the anti-join), ranked 1..k. */
+  private def localRecommend(train: DataFrame, rows: Seq[Row], k: Int, allRecs: Boolean): DataFrame = {
+    val spark = train.sparkSession
+    val itemField = train.schema("item_id")
+    val pop = rows.groupBy(_.get(1)).map { case (item, rs) => Row(item, rs.size.toLong) }.toSeq
+    val byPopularity = Shim.localRows(spark.createDataFrame(java.util.Arrays.asList(pop: _*),
+        StructType(Seq(itemField, StructField("cnt", LongType, nullable = false))))
+      .orderBy(col("cnt").desc, col("item_id"))).get.map(_.get(0))
+    val byUser = rows.groupBy(_.get(0))
+    val maxRated = byUser.valuesIterator.map(_.size.toLong).maxOption.getOrElse(0L)
+    val cand = if (allRecs) byPopularity else byPopularity.take(math.min(maxRated + k, Int.MaxValue.toLong).toInt)
+    val out = new java.util.ArrayList[Row]()
+    byUser.foreach { case (user, rs) =>
+      val rated = if (user == null) Set.empty[Any] else rs.map(_.get(1)).filter(_ != null).toSet
+      val unrated = cand.iterator.filter(item => item == null || !rated(item))
+      (if (allRecs) unrated else unrated.take(k)).zipWithIndex.foreach { case (item, rank) =>
+        out.add(Row(user, item, rank + 1))
+      }
+    }
+    spark.createDataFrame(out, StructType(Seq(train.schema("user_id"), itemField,
+      StructField("rank", IntegerType, nullable = false))))
   }
 }

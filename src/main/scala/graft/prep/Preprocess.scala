@@ -2,6 +2,7 @@ package graft.prep
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.storage.StorageLevel
 
 /** Graph preprocessing operators mirroring the reference's
@@ -10,11 +11,13 @@ import org.apache.spark.storage.StorageLevel
 object Preprocess {
 
   /** Binarize ratings: `rating >= threshold -> 1.0 else 0.0`
-    * (methods.py:17-26). Pure column expression — codegen'd, no shuffle. */
+    * (methods.py:17-26). Pure column expression — codegen'd, no shuffle.
+    * A local input gets its rows back as a local table, the expression
+    * evaluated on the driver. */
   def binarize(ratings: DataFrame, threshold: Double): DataFrame =
-    ratings.withColumn(
+    Shim.localTable(ratings.withColumn(
       "rating",
-      when(col("rating") >= threshold, 1.0).otherwise(0.0))
+      when(col("rating") >= threshold, 1.0).otherwise(0.0)))
 
   /** Reference k-core (methods.py:28-47): for up to `iterations` rounds,
     * compute per-target degree on a SNAPSHOT of the current edge set,
@@ -59,14 +62,40 @@ object Preprocess {
     * prior pass's anti-join from the caller-cached base scan instead —
     * one cached-scan + small broadcast anti-joins per pass, cheaper than
     * a columnar cache build of the full edge set per round.
+    *
+    * A local input (`Shim.localRows`) runs the same rounds on the driver
+    * and returns a local table, with no job and nothing tracked in
+    * `caches`: each round counts the current rows per key, and a key
+    * under `k` loses its rows, except that a null key is never removed
+    * (it joins nothing in the `left_anti` join).
     */
   def filterKCore(ratings: DataFrame, k: Int, target: String,
                   iterations: Int = 1, caches: KCoreCaches): DataFrame = {
-    val key = target match {
-      case "user" => "user_id"
-      case "item" => "item_id"
-      case other  => throw new IllegalArgumentException(s"k-core target must be user|item, got $other")
+    val key = kcoreKey(target)
+    Shim.localRows(ratings).fold(sparkKCore(ratings, k, key, iterations, caches)) { rows =>
+      val ix = ratings.schema.fieldIndex(key)
+      var cur = rows
+      var it = 0
+      var converged = false
+      while (it < iterations && !converged) {
+        val kill = cur.groupBy(_.get(ix)).collect { case (v, rs) if rs.size < k => v }.toSet
+        if (kill.isEmpty) converged = true
+        else cur = cur.filter(r => r.isNullAt(ix) || !kill(r.get(ix)))
+        it += 1
+      }
+      ratings.sparkSession.createDataFrame(java.util.Arrays.asList(cur: _*), ratings.schema)
     }
+  }
+
+  /** The key column of a k-core `target`: user | item. */
+  private[graft] def kcoreKey(target: String): String = target match {
+    case "user" => "user_id"
+    case "item" => "item_id"
+    case other  => throw new IllegalArgumentException(s"k-core target must be user|item, got $other")
+  }
+
+  private def sparkKCore(ratings: DataFrame, k: Int, key: String, iterations: Int,
+                         caches: KCoreCaches): DataFrame = {
     var cur = ratings
     var curDerived = false // produced by a prior round of this loop, not yet persisted
     var it = 0

@@ -1,8 +1,10 @@
 package graft.split
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
+import org.apache.spark.sql.types.{BooleanType, IntegerType, StructField}
 
 /** The four rating-edge split strategies of the reference's
   * `framework/dataloader/edge_splitter/edge_splitter.py`, re-expressed
@@ -16,6 +18,13 @@ import org.apache.spark.sql.functions._
   * — a pure function of the edge, stable across retries, partitionings
   * and cluster sizes (SURVEY §4.5). Oracle tests may instead pass an
   * explicit deterministic `orderKey` so DuckDB can replay the split.
+  *
+  * The user-facing splits ([[randomByRatio]], [[timestampByRatio]],
+  * [[fixedTimestamp]], [[kFoldRandom]]) take a local input
+  * (`Shim.localRows`) to a local table of the same rows and flags: the
+  * order key is evaluated as the Spark expression over the rows, rows
+  * sort in Spark's order (UTF-8 strings, nulls first), and the flag
+  * comes from each row's position in its user (or in all rows) — no job.
   */
 object EdgeSplits {
 
@@ -28,12 +37,18 @@ object EdgeSplits {
   def portableHash(seed: Long): Column =
     md5(concat_ws("|", col("user_id"), col("item_id"), lit(seed)))
 
+  /** Whether a split `level` ranks within each user (user) or over all
+    * rows (global). */
+  private[graft] def partitionedByUser(level: String): Boolean = level match {
+    case "user"   => true
+    case "global" => false
+    case other    => throw new IllegalArgumentException(s"level must be user|global, got $other")
+  }
+
   private def rankWindows(level: String, orderKey: Seq[Column]) = {
-    val part = level match {
-      case "user"   => Window.partitionBy("user_id")
-      case "global" => Window.partitionBy() // exactness over scale; see scaladoc below
-      case other    => throw new IllegalArgumentException(s"level must be user|global, got $other")
-    }
+    val part =
+      if (partitionedByUser(level)) Window.partitionBy("user_id")
+      else Window.partitionBy() // exactness over scale; see scaladoc below
     (part.orderBy(orderKey: _*), part)
   }
 
@@ -67,8 +82,9 @@ object EdgeSplits {
     * oracle replays. */
   def randomByRatio(ratings: DataFrame, p: Double, level: String, seed: Long): DataFrame = {
     val key = Seq(edgeHash(seed), col("item_id"))
-    if (level == "global") byRatioGlobalScalable(ratings, p, key, longBucket(edgeHash(seed)))
-    else byRatio(ratings, p, level, key)
+    localByRatio(ratings, p, level, key).getOrElse(
+      if (level == "global") byRatioGlobalScalable(ratings, p, key, longBucket(edgeHash(seed)))
+      else byRatio(ratings, p, level, key))
   }
 
   /** W3 `timestamp_by_ratio`: most recent ceil(n*p) edges are test
@@ -82,14 +98,55 @@ object EdgeSplits {
     * the naive per-task sort, never worse than the monolithic window. */
   def timestampByRatio(ratings: DataFrame, p: Double, level: String): DataFrame = {
     val key = Seq(col("ts"), col("item_id"), col("user_id"))
-    if (level == "global") {
-      val mm = ratings.agg(min("ts"), max("ts")).head
-      if (mm.isNullAt(0) || mm.getLong(0) == mm.getLong(1))
-        byRatio(ratings, p, level, key) // empty or single-instant input: degenerate anyway
-      else
-        byRatioGlobalScalable(ratings, p, key,
-          width_bucket(col("ts"), lit(mm.getLong(0)), lit(mm.getLong(1)), lit(1022)))
-    } else byRatio(ratings, p, level, key)
+    localByRatio(ratings, p, level, key).getOrElse {
+      if (level == "global") {
+        val mm = ratings.agg(min("ts"), max("ts")).head
+        if (mm.isNullAt(0) || mm.getLong(0) == mm.getLong(1))
+          byRatio(ratings, p, level, key) // empty or single-instant input: degenerate anyway
+        else
+          byRatioGlobalScalable(ratings, p, key,
+            width_bucket(col("ts"), lit(mm.getLong(0)), lit(mm.getLong(1)), lit(1022)))
+      } else byRatio(ratings, p, level, key)
+    }
+  }
+
+  /** The local form of a ratio split: the last ceil(n·p) rows in
+    * `orderKey` order are test; None when `ratings` is not local. */
+  private def localByRatio(ratings: DataFrame, p: Double, level: String,
+                           orderKey: Seq[Column]): Option[DataFrame] = {
+    require(p > 0 && p < 1, s"p must be in (0,1), got $p")
+    localRanked(ratings, level, orderKey, StructField("is_test", BooleanType, nullable = false)) {
+      (rn, n) => rn > n - math.ceil(n * p).toLong
+    }
+  }
+
+  /** `ratings`' rows sorted by `orderKey` in Spark's order, within each
+    * user at level user, each with `flag(rn, n)` appended as `field`:
+    * `rn` is the row's 1-based position in its group and `n` the group's
+    * size, as `row_number()` and `count` over the split's window give
+    * them. None when `ratings` is not local. */
+  private def localRanked(ratings: DataFrame, level: String, orderKey: Seq[Column],
+                          field: StructField)(flag: (Long, Long) => Any): Option[DataFrame] = {
+    val byUser = partitionedByUser(level)
+    if (!Shim.isLocal(ratings)) return None
+    val keys = orderKey.indices.map(i => s"__order$i")
+    val sorted = ratings.select(col("*") +: orderKey.zip(keys).map { case (c, k) => c.as(k) }: _*)
+      .orderBy(((if (byUser) Seq(col("user_id")) else Nil) ++ keys.map(col)): _*)
+      .drop(keys: _*)
+    Shim.localRows(sorted).map { rows =>
+      val u = ratings.schema.fieldIndex("user_id")
+      val out = new java.util.ArrayList[Row](rows.size)
+      var start = 0
+      while (start < rows.size) {
+        var end = start + 1
+        if (byUser) while (end < rows.size && rows(end).get(u) == rows(start).get(u)) end += 1
+        else end = rows.size
+        val n = (end - start).toLong
+        for (i <- start until end) out.add(Row.fromSeq(rows(i).toSeq :+ flag(i - start + 1L, n)))
+        start = end
+      }
+      ratings.sparkSession.createDataFrame(out, ratings.schema.add(field))
+    }
   }
 
   /** Scale-path variant of the global ratio split: threshold the ordering
@@ -163,7 +220,7 @@ object EdgeSplits {
   /** W4 `fixed_timestamp`: test = edges with ts strictly greater than t
     * (edge_splitter.py:52-60). No shuffle at all — a pushed-down filter. */
   def fixedTimestamp(ratings: DataFrame, t: Long): DataFrame =
-    ratings.withColumn("is_test", col("ts") > t)
+    Shim.localTable(ratings.withColumn("is_test", col("ts") > t))
 
   /** Purged (embargoed) temporal split — the time-series-ML leakage
     * guard (de Prado 2018 §7): rows inside `(t, t + embargoMs]` are
@@ -191,8 +248,15 @@ object EdgeSplits {
     * `level = "global"` routes through [[kFoldGlobalScalable]]
     * (spec-pinned ntile-equal) — see [[randomByRatio]]. */
   def kFoldRandom(ratings: DataFrame, k: Int, level: String, seed: Long): DataFrame = {
+    require(k >= 2, s"k must be >= 2, got $k")
     val key = Seq(edgeHash(seed), col("item_id"))
-    if (level == "global") kFoldGlobalScalable(ratings, k, key, longBucket(edgeHash(seed)))
-    else kFold(ratings, k, level, key)
+    // ntile(k): with q = n div k and r = n mod k, the first r folds hold
+    // q + 1 rows ([[kFoldGlobalScalable]]'s formula)
+    localRanked(ratings, level, key, StructField("fold", IntegerType, nullable = false)) { (rn, n) =>
+      val (q, r) = (n / k, n % k)
+      (if (rn <= r * (q + 1)) (rn - 1) / (q + 1) + 1 else r + (rn - r * (q + 1) - 1) / q + 1).toInt
+    }.getOrElse(
+      if (level == "global") kFoldGlobalScalable(ratings, k, key, longBucket(edgeHash(seed)))
+      else kFold(ratings, k, level, key))
   }
 }

@@ -5,6 +5,7 @@ import graft.knn.CosineKnn
 import graft.model.Recommender
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -150,8 +151,10 @@ private[graft] trait EmbeddingServing extends Recommender {
     // persist: train feeds the label edges here, then a distributed
     // fold's maxRated agg and anti-join; without it the (split-derived)
     // lineage re-derives per consumer. Released in release(), or as soon
-    // as a driver fold has collected it.
-    trainDf = train.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // as a driver fold has collected it. A local table is on the driver
+    // already: persisting it would only make the collect build a cache.
+    trainDf = if (Shim.isLocal(train)) train
+      else train.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val relation = ratingRelation.map(_ => "relation").toSeq
     val ratingEdges = train.select(Seq(lit("rating").as("kind"),
       KGraph.userLabel(col("user_id")).as("src_label"), KGraph.itemLabel(col("item_id")).as("dst_label"),
@@ -172,7 +175,7 @@ private[graft] trait EmbeddingServing extends Recommender {
     onDriver match {
       case Some(fold) =>
         driver = fold
-        trainDf.unpersist(blocking = false)
+        release()
         trainDf = null
       case None => fitSpark(edges.select(("src_label" +: relation :+ "dst_label").map(col): _*), relation.nonEmpty)
     }
@@ -220,5 +223,6 @@ private[graft] trait EmbeddingServing extends Recommender {
     else DeepWalkRecommender.knnRecommendUser(trainDf, userEmb, itemEmb, user, k, allRecs)
 
   override def release(): Unit =
-    Seq(trainDf, userEmb, itemEmb).filter(_ != null).foreach(_.unpersist(blocking = false))
+    Seq(trainDf, userEmb, itemEmb).filter(df => df != null && !Shim.isLocal(df))
+      .foreach(_.unpersist(blocking = false))
 }

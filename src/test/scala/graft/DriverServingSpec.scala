@@ -136,12 +136,15 @@ class DriverServingSpec extends AnyFunSuite {
   test("driver meansAtK on local recs reads them without a job; no qualifying user gives nulls") {
     val local = spark.createDataFrame(java.util.List.of(Row("1", "10", 1), Row("1", "12", 2)),
       DriverFold.recsSchema).persist()
-    val t = testDf.persist()
+    val t = testDf.repartition(2).persist()
     t.count()
     var means: Row = null
     val jobs = JobWatch.jobs(spark) { means = Metrics.meansAtK(local, t, 5, 4.0).first() }
     assert(jobs.size == 1, jobs) // the relevant test rows
     assertClose(means, sparkMeans(local, t, 5, 4.0), "local recs")
+    // a local test frame (toDF's projection over its rows) is read in place
+    assert(JobWatch.jobs(spark) { means = Metrics.meansAtK(local, testDf, 5, 4.0).first() }.isEmpty)
+    assertClose(means, sparkMeans(local, t, 5, 4.0), "local recs, local test rows")
     val none = Metrics.meansAtK(local, t, 5, 9.0).first()
     assert(none.isNullAt(0) && none.isNullAt(1))
     Seq(local, t).foreach(_.unpersist())

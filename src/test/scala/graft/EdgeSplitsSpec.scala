@@ -146,9 +146,10 @@ class EdgeSplitsSpec extends AnyFunSuite {
     // Closes the r10 verdict weak: randomByRatio / kFoldRandom /
     // timestampByRatio at level=global — the exact functions
     // cli/Experiment.applySplit calls — must never plan an
-    // empty-partition window over rating rows.
+    // empty-partition window over rating rows. The input is a Spark
+    // plan: a local table takes the driver forms (DriverSpineSpec).
     import org.apache.spark.sql.execution.window.WindowExec
-    val r = mkRatings(300, 5)
+    val r = mkRatings(300, 5).repartition(3)
     val paths = Seq(
       "random_by_ratio" -> EdgeSplits.randomByRatio(r, 0.2, "global", 42),
       "k_fold" -> EdgeSplits.kFoldRandom(r, 5, "global", 42),

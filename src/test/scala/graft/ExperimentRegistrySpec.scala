@@ -121,22 +121,35 @@ class ExperimentRegistrySpec extends AnyFunSuite {
          |  evaluation: {k: 3, relevance_threshold: 3, metrics: [MAP]}
          |""".stripMargin)
     val sc = spark.sparkContext
-    var after: String = null
-    val labels = JobWatch.descriptions(spark) {
-      sc.setJobDescription("outer")
-      graft.cli.Experiment.run(spark, s"$tmp/exp.yml")
-      after = sc.getLocalProperty("spark.job.description")
+    /** The job labels of one run with load gate bound `maxDriverRows`. */
+    def labelsOf(maxDriverRows: Long): Seq[String] = {
+      var after: String = null
+      val labels = JobWatch.descriptions(spark) {
+        sc.setJobDescription("outer")
+        graft.cli.Experiment.run(spark, s"$tmp/exp.yml", maxDriverRows)
+        after = sc.getLocalProperty("spark.job.description")
+      }
+      assert(after == "outer", "the caller's job description was not restored")
+      // jobs outside the load, preprocess and split stages and the fold
+      // phases keep the caller's description
+      assert(labels.forall(l => l == "outer" || l.matches("experiment: (load|preprocess|split)") ||
+        l.matches("(popularity|transE) fold 1: (train|recommend|eval)")), s"unexpected job labels: ${labels.distinct}")
+      labels
     }
-    assert(after == "outer", "the caller's job description was not restored")
-    // transE trains in the driver regime: one train job, one eval job
-    // (its relevant test rows), and none for its driver-built recs
+    // the driver regime: the ratings leave load as a local table, and
+    // neither fold starts a job (popularity ranks on the driver, transE
+    // trains on the local rows, MAP/nDCG read both in place)
+    val driver = labelsOf(graft.graph.KGraph.MaxDriverEdges)
+    assert(driver.contains("experiment: load"), driver)
+    assert(!driver.exists(_.contains(" fold 1: ")), s"a driver-regime fold started a job: $driver")
+    // the Spark spine, through the private bound: popularity ranks and
+    // evaluates as Spark jobs; transE still trains and ranks on the
+    // driver (one train job, one eval job for its relevant test rows)
+    val labels = labelsOf(0)
     for ((m, phase) <- Seq("popularity" -> "recommend", "popularity" -> "eval",
       "transE" -> "train", "transE" -> "eval"))
       assert(labels.contains(s"$m fold 1: $phase"), s"no job labelled '$m fold 1: $phase' in $labels")
     assert(!labels.contains("transE fold 1: recommend"), s"a driver-regime recommend started a job: $labels")
-    // jobs outside the fold loop keep the caller's description
-    assert(labels.forall(l => l == "outer" || l.matches("(popularity|transE) fold 1: (train|recommend|eval)")),
-      s"unexpected job labels: ${labels.distinct}")
   }
 
   test("an unknown model or metric name fails with that name before any Spark job") {
@@ -144,11 +157,32 @@ class ExperimentRegistrySpec extends AnyFunSuite {
     graft.util.Scratch.deleteOnExit(tmp)
     graft.schema.TypedCsv.write(Seq(("1", "1", 5.0), ("2", "1", 4.0)).toDF("user_id", "item_id", "rating"),
       s"$tmp/rating.csv")
-    for ((model, metric, name) <- Seq(("transEE", "MAP", "transEE"), ("transE", "Recall", "Recall"))) {
+    val okPrep = "[{method: binarize, parameters: {threshold: 4}}]"
+    val okSplit = "{seed: 42, test: {method: random_by_ratio, p: 0.25, level: user}}"
+    // (model, metric, preprocess, split, the name the error must carry):
+    // a bad entry anywhere in the config fails before the data loads,
+    // also a typo in the second preprocess entry
+    val cases = Seq(
+      ("transEE", "MAP", okPrep, okSplit, "transEE"),
+      ("transE", "Recall", okPrep, okSplit, "Recall"),
+      ("transE", "MAP", "[{method: binarize}, {method: filter_kcor, parameters: {k: 2}}]", okSplit, "filter_kcor"),
+      ("transE", "MAP", "[{method: filter_kcore, parameters: {k: 2, target: usr}}]", okSplit, "usr"),
+      ("transE", "MAP", okPrep, "{seed: 42, test: {method: random_by_ration, p: 0.25}}", "random_by_ration"),
+      ("transE", "MAP", okPrep, "{seed: 42, test: {method: timestamp_by_ratio, p: 1.5}}", "1.5"),
+      ("transE", "MAP", okPrep, "{seed: 42, test: {method: k_fold, k: 3, level: users}}", "users"),
+      ("transE", "MAP", okPrep,
+        "{seed: 42, test: {method: k_fold, k: 2}, validation: {method: timestamp_by_rato}}", "timestamp_by_rato"),
+      ("transE", "MAP", okPrep,
+        "{seed: 42, test: {method: fixed_timestamp, timestamp: 9}, validation: {p: 0.0}}", "0.0"),
+      ("transE", "MAP", okPrep,
+        "{seed: 42, test: {method: k_fold, k: 2}, validation: {method: k_fold, k: 2}}",
+        "Validation split does not support k_fold method."))
+    for ((model, metric, prep, split, name) <- cases) {
       java.nio.file.Files.writeString(java.nio.file.Path.of(s"$tmp/exp.yml"),
         s"""experiment:
            |  dataset: {ratings: $tmp/rating.csv}
-           |  split: {seed: 42, test: {method: random_by_ratio, p: 0.25, level: user}}
+           |  preprocess: $prep
+           |  split: $split
            |  models:
            |    - {name: popularity, parameters: {}}
            |    - {name: $model, parameters: {embedding_dim: 4, epochs: 1}}
@@ -159,7 +193,7 @@ class ExperimentRegistrySpec extends AnyFunSuite {
         err = intercept[IllegalArgumentException](graft.cli.Experiment.run(spark, s"$tmp/exp.yml"))
       }
       assert(err.getMessage.contains(name), err.getMessage)
-      assert(jobs.isEmpty, jobs)
+      assert(jobs.isEmpty, s"$name: $jobs")
     }
   }
 }
