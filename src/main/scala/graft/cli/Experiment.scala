@@ -87,17 +87,35 @@ object Experiment {
                            items: Option[DataFrame], propertyEdges: Option[DataFrame],
                            socialEdges: Option[DataFrame])
 
+  /** Most validated ratings [[loadDataset]] returns as a local table.
+    *
+    * Measured with perfbench etl-kcore (convert/map/enrich, binarize, 4
+    * k-core passes, a timestamp split with a random validation split,
+    * popularity) on a 4-core host with a 7 GB driver heap: `experiment_s`
+    * at `--trace 0`, driver spine vs Spark spine, by input ratings: 90k
+    * 19.6 vs 26.0 s (medians of 10 pairs); 200k 23.9, 29.1 vs 28.7,
+    * 32.8 s; 360k 30.4, 30.9 vs 31.8, 35.3 s; 600k 45.9, 45.1 vs 39.1,
+    * 47.2 s; 1M 60.5, 57.3 vs 48.8, 51.7 s. The driver spine wins every
+    * pair up to 360k, with a lower peak RSS (3.5-3.7 vs 4.9-5.0 GB at
+    * 360k); at 600k it wins one pair of two, and at 1M it loses both,
+    * where its sorts and groupings over `Row`s cost more than the Spark
+    * plans' jobs. The bound sits under the largest size it always won;
+    * no size between 360k and 600k was measured. */
+  val MaxDriverRatings: Long = 300000L
+
   /** Graph assembly from the `dataset:` block (`Graph.build`,
     * graph.py:28-35): items + user info + ratings + social links.
     *
     * The driver gate: a validated rating table of at most
-    * [[KGraph.MaxDriverEdges]] rows comes to the driver in one bounded
+    * [[MaxDriverRatings]] rows comes to the driver in one bounded
     * collect and is returned as a local table with the same schema. The
     * operators of the experiment spine (binarize, k-core, the splits,
     * popularity, MAP/nDCG) then take their driver forms, which start no
-    * Spark job (`Shim.localRows`). A larger table stays a Spark plan. */
+    * Spark job (`Shim.localRows`). A larger table stays a Spark plan and
+    * comes back persisted, filled by the gate's own scan; the caller
+    * unpersists it when done. */
   def loadDataset(spark: SparkSession, ds: Cfg): DatasetBundle =
-    loadDataset(spark, ds, KGraph.MaxDriverEdges)
+    loadDataset(spark, ds, MaxDriverRatings)
 
   /** [[loadDataset]] with the driver bound `maxDriverRows`. */
   private[graft] def loadDataset(spark: SparkSession, ds: Cfg, maxDriverRows: Long): DatasetBundle = {
@@ -147,8 +165,15 @@ object Experiment {
     // J4 endpoint validation when dims are present (graph.py:293-302)
     for (u <- users) ratings = ratings.join(u.select("user_id"), Seq("user_id"), "left_semi")
     for (i <- items) ratings = ratings.join(i.select("item_id"), Seq("item_id"), "left_semi")
-    ratings = KGraph.collectRows(ratings, maxDriverRows).fold(ratings)(rows =>
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), ratings.schema))
+    // the gate's scan reads every row; persisted, that read also fills
+    // the cache a table over the bound is read from afterwards
+    ratings = ratings.cache()
+    ratings = KGraph.collectRows(ratings, maxDriverRows) match {
+      case Some(rows) =>
+        ratings.unpersist(blocking = false)
+        spark.createDataFrame(java.util.Arrays.asList(rows: _*), ratings.schema)
+      case None => ratings
+    }
 
     // property edges, four sources into one channel:
     // item extra_features + map-match columns + enriched-table columns
@@ -237,30 +262,20 @@ object Experiment {
   }
 
   /** A test or validation split entry, checked before any data loads:
-    * its method, `p` in (0,1) for the ratio methods, k >= 2 for k_fold,
-    * the level and fixed_timestamp's `timestamp`. */
+    * its method and arguments ([[EdgeSplits.checkSplit]]) and
+    * fixed_timestamp's integer `timestamp`. */
   private def checkSplit(c: Cfg, defaultMethod: String): Unit = {
-    def level(): Unit = EdgeSplits.partitionedByUser(str(c, "level", "user"))
-    str(c, "method", defaultMethod) match {
-      case "k_fold" =>
-        val k = int(c, "k", 2)
-        require(k >= 2, s"k must be >= 2, got $k")
-        level()
-      case "random_by_ratio" | "timestamp_by_ratio" =>
-        val p = dbl(c, "p", 0.2)
-        require(p > 0 && p < 1, s"p must be in (0,1), got $p")
-        level()
-      case "fixed_timestamp" =>
-        require(Option(str(c, "timestamp")).exists(_.toLongOption.isDefined),
-          s"fixed_timestamp needs an integer timestamp, got ${str(c, "timestamp")}")
-      case other => throw new IllegalArgumentException(s"Invalid split method $other")
-    }
+    val method = str(c, "method", defaultMethod)
+    EdgeSplits.checkSplit(method, dbl(c, "p", 0.2), int(c, "k", 2), str(c, "level", "user"))
+    if (method == "fixed_timestamp")
+      require(Option(str(c, "timestamp")).exists(_.toLongOption.isDefined),
+        s"fixed_timestamp needs an integer timestamp, got ${str(c, "timestamp")}")
   }
 
   /** Parse + run; returns the report DataFrame (also written to the
     * configured report file). */
   def run(spark: SparkSession, configPath: String): DataFrame =
-    run(spark, configPath, KGraph.MaxDriverEdges)
+    run(spark, configPath, MaxDriverRatings)
 
   /** [[run]] with the load gate's bound `maxDriverRows`: 0 keeps a small
     * experiment's ratings a Spark plan, so its spine runs the Spark forms. */
@@ -326,8 +341,9 @@ object Experiment {
       // k-core leaves its kill-set caches live inside a Spark lineage
       // (caller-owned contract): materialize the preprocessed ratings
       // once, then drop the loop caches before the fold runs. A local
-      // table is materialized already.
-      if (!Shim.isLocal(prepped)) {
+      // table is materialized already, and so is the persisted table
+      // load returns when nothing is preprocessed.
+      if (!Shim.isLocal(prepped) && preprocess.nonEmpty) {
         prepped.cache()
         if (preprocess.exists(p => str(p, "method") == "filter_kcore")) {
           prepped.count(); kcoreCaches.release()
@@ -358,7 +374,6 @@ object Experiment {
           trainTest(EdgeSplits.timestampByRatio(df, dbl(c, "p", 0.2), str(c, "level", "user")))
         case "fixed_timestamp" =>
           trainTest(EdgeSplits.fixedTimestamp(df, str(c, "timestamp").toLong))
-        case other => throw new IllegalArgumentException(s"Invalid split method $other")
       }
     }
     val (nFolds, foldsWithVal) = stage("split") {
@@ -370,13 +385,34 @@ object Experiment {
       }))
     }
 
+    // a model that does not read local tables gets its fold as cached
+    // Spark frames over an RDD, built once per fold on first use. On 90k
+    // ratings and 4 cores, ALS, implicit ALS, BPR and Item2Vec took
+    // 1.5-1.8x their Spark-spine fold time over the local tables, and as
+    // long over a cached repartition of them; over these copies their
+    // median fold time is 16% under to 2% over the Spark spine's
+    val sparkFolds = scala.collection.mutable.Map.empty[Int, (DataFrame, DataFrame)]
+    def sparkFold(i: Int): (DataFrame, DataFrame) = sparkFolds.getOrElseUpdate(i, {
+      val Seq(train, test) = Seq(foldsWithVal(i)._1, foldsWithVal(i)._2).map { df =>
+        Shim.localRows(df).fold(df) { rows =>
+          val c = spark.createDataFrame(
+            spark.sparkContext.parallelize(rows, spark.sparkContext.defaultParallelism), df.schema).cache()
+          splitCaches += c
+          c
+        }
+      }
+      (train, test)
+    })
+
     // model loop (experiment.py:60-88)
     val rows = for {
       m <- list(exp, "models")
       modelName = str(m, "name")
       cfgMap = parameters(m).asScala.map { case (kk, v) => kk -> v.toString }.toMap
-      ((train, testDf), foldIdx) <- foldsWithVal.zipWithIndex
+      (localFold, foldIdx) <- foldsWithVal.zipWithIndex
     } yield {
+      val model = registry(modelName)(cfgMap)
+      val (train, testDf) = if (model.readsLocalTables) localFold else sparkFold(foldIdx)
       val t0 = System.nanoTime()
       val phaseSecs = scala.collection.mutable.ArrayBuffer.empty[Double]
       // every Spark job of a phase is labelled "<model> fold <i>: <phase>";
@@ -386,8 +422,7 @@ object Experiment {
         phaseSecs += secs
         out
       }
-      val rec = phase("train")(registry(modelName)(cfgMap)
-        .train(spark, train, propertyEdges, bundle.socialEdges))
+      val rec = phase("train")(model.train(spark, train, propertyEdges, bundle.socialEdges))
       // recs is read once, by meansAtK: a lazy Spark ranking runs inside
       // the eval phase, a driver-built local table costs no job at all
       val recs = phase("recommend")(rec.recommend(k))
@@ -408,7 +443,7 @@ object Experiment {
     // the metric rows above are local Scala values — the run's shared
     // caches (preprocessed ratings, fold assignment) are dead weight for
     // the report and must not outlive the experiment in a long session
-    if (!Shim.isLocal(ratings)) ratings.unpersist(blocking = false)
+    for (r <- Seq(bundle.ratings, ratings) if !Shim.isLocal(r)) r.unpersist(blocking = false)
     splitCaches.foreach(_.unpersist(blocking = false))
 
     val dedupedRows = dedupLastWins(rows)

@@ -21,6 +21,7 @@ import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructTyp
   */
 class PopularityRecommender(cfg: Map[String, String] = Map.empty) extends Recommender {
   override def name: String = "popularity"
+  override def readsLocalTables: Boolean = true
 
   private var train: DataFrame = _
 

@@ -39,11 +39,28 @@ object EdgeSplits {
 
   /** Whether a split `level` ranks within each user (user) or over all
     * rows (global). */
-  private[graft] def partitionedByUser(level: String): Boolean = level match {
+  private def partitionedByUser(level: String): Boolean = level match {
     case "user"   => true
     case "global" => false
     case other    => throw new IllegalArgumentException(s"level must be user|global, got $other")
   }
+
+  /** The one check of a split's arguments (edge_splitter.py:36-37,
+    * 63-64): `method` names one of the four strategies, a ratio split's
+    * `p` is in (0,1), a k-fold's `k` is at least 2, and the `level` of
+    * either is user or global. Each public split calls it on entry; the
+    * experiment calls it on its config before any data loads. */
+  def checkSplit(method: String, p: Double = 0.2, k: Int = 2, level: String = "user"): Unit =
+    method match {
+      case "random_by_ratio" | "timestamp_by_ratio" =>
+        require(p > 0 && p < 1, s"p must be in (0,1), got $p")
+        partitionedByUser(level)
+      case "k_fold" =>
+        require(k >= 2, s"k must be >= 2, got $k")
+        partitionedByUser(level)
+      case "fixed_timestamp" =>
+      case other => throw new IllegalArgumentException(s"Invalid split method $other")
+    }
 
   private def rankWindows(level: String, orderKey: Seq[Column]) = {
     val part =
@@ -64,7 +81,7 @@ object EdgeSplits {
     * cut position is acceptable.
     */
   def byRatio(ratings: DataFrame, p: Double, level: String, orderKey: Seq[Column]): DataFrame = {
-    require(p > 0 && p < 1, s"p must be in (0,1), got $p") // edge_splitter.py:36-37
+    checkSplit("random_by_ratio", p = p, level = level) // any order: both ratio methods check alike
     val (rankW, countW) = rankWindows(level, orderKey)
     ratings
       .withColumn("__rn", row_number().over(rankW))
@@ -81,6 +98,7 @@ object EdgeSplits {
     * task. The naive window form remains reachable via [[byRatio]] for
     * oracle replays. */
   def randomByRatio(ratings: DataFrame, p: Double, level: String, seed: Long): DataFrame = {
+    checkSplit("random_by_ratio", p = p, level = level)
     val key = Seq(edgeHash(seed), col("item_id"))
     localByRatio(ratings, p, level, key).getOrElse(
       if (level == "global") byRatioGlobalScalable(ratings, p, key, longBucket(edgeHash(seed)))
@@ -97,6 +115,7 @@ object EdgeSplits {
     * skewed if events concentrate; worst case one bucket degrades to
     * the naive per-task sort, never worse than the monolithic window. */
   def timestampByRatio(ratings: DataFrame, p: Double, level: String): DataFrame = {
+    checkSplit("timestamp_by_ratio", p = p, level = level)
     val key = Seq(col("ts"), col("item_id"), col("user_id"))
     localByRatio(ratings, p, level, key).getOrElse {
       if (level == "global") {
@@ -113,12 +132,10 @@ object EdgeSplits {
   /** The local form of a ratio split: the last ceil(n·p) rows in
     * `orderKey` order are test; None when `ratings` is not local. */
   private def localByRatio(ratings: DataFrame, p: Double, level: String,
-                           orderKey: Seq[Column]): Option[DataFrame] = {
-    require(p > 0 && p < 1, s"p must be in (0,1), got $p")
+                           orderKey: Seq[Column]): Option[DataFrame] =
     localRanked(ratings, level, orderKey, StructField("is_test", BooleanType, nullable = false)) {
       (rn, n) => rn > n - math.ceil(n * p).toLong
     }
-  }
 
   /** `ratings`' rows sorted by `orderKey` in Spark's order, within each
     * user at level user, each with `flag(rn, n)` appended as `field`:
@@ -182,7 +199,7 @@ object EdgeSplits {
     * deterministic: the flag stays a pure function of the edge. */
   def byRatioGlobalScalable(ratings: DataFrame, p: Double,
                             orderKey: Seq[Column], bucket: Column): DataFrame = {
-    require(p > 0 && p < 1, s"p must be in (0,1), got $p")
+    checkSplit("random_by_ratio", p = p, level = "global")
     withGlobalRank(ratings, orderKey, bucket)
       .withColumn("is_test", col("__rn") > col("__N") - ceil(col("__N") * p))
       .drop("__rn", "__N")
@@ -196,7 +213,7 @@ object EdgeSplits {
     * q = 0, so k > N degrades exactly like ntile (one row per fold). */
   def kFoldGlobalScalable(ratings: DataFrame, k: Int,
                           orderKey: Seq[Column], bucket: Column): DataFrame = {
-    require(k >= 2, s"k must be >= 2, got $k")
+    checkSplit("k_fold", k = k, level = "global")
     withGlobalRank(ratings, orderKey, bucket)
       .withColumn("__q", expr(s"__N div $k"))
       .withColumn("__r", col("__N") % k)
@@ -239,7 +256,7 @@ object EdgeSplits {
     * Returns a `fold` column in 1..k; fold i test = (fold === i).
     */
   def kFold(ratings: DataFrame, k: Int, level: String, orderKey: Seq[Column]): DataFrame = {
-    require(k >= 2, s"k must be >= 2, got $k") // edge_splitter.py:63-64
+    checkSplit("k_fold", k = k, level = level)
     val (rankW, _) = rankWindows(level, orderKey)
     ratings.withColumn("fold", ntile(k).over(rankW))
   }
@@ -248,7 +265,7 @@ object EdgeSplits {
     * `level = "global"` routes through [[kFoldGlobalScalable]]
     * (spec-pinned ntile-equal) — see [[randomByRatio]]. */
   def kFoldRandom(ratings: DataFrame, k: Int, level: String, seed: Long): DataFrame = {
-    require(k >= 2, s"k must be >= 2, got $k")
+    checkSplit("k_fold", k = k, level = level)
     val key = Seq(edgeHash(seed), col("item_id"))
     // ntile(k): with q = n div k and r = n mod k, the first r folds hold
     // q + 1 rows ([[kFoldGlobalScalable]]'s formula)

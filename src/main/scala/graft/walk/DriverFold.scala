@@ -117,6 +117,8 @@ private[graft] trait EmbeddingServing extends Recommender {
   /** False for a model with no driver fit: its folds skip the collect. */
   protected def hasDriverFit: Boolean = true
 
+  override def readsLocalTables: Boolean = hasDriverFit
+
   /** The driver fit and split-back: (user, item) embedding rows, or None
     * when the model is over its driver size gate. */
   protected def fitDriver(g: DriverGraph): Option[(Seq[(String, Array[Double])], Seq[(String, Array[Double])])]

@@ -156,7 +156,8 @@ class DriverSpineSpec extends AnyFunSuite {
 
   /** The etl-kcore shape: binarize, 4 k-core passes, a timestamp test
     * split with a random validation split, popularity. */
-  private def etlKcoreConfig(dir: java.nio.file.Path): String = {
+  private def etlKcoreConfig(dir: java.nio.file.Path,
+                             models: String = "{name: popularity, parameters: {}}"): String = {
     val rnd = new scala.util.Random(11)
     val csv = new StringBuilder("user_id::string,item_id::string,rating::number,timestamp::number\n")
     for (u <- 1 to 60; i <- 1 to 40 if rnd.nextDouble() < 0.5 - (i % 5) * 0.08)
@@ -176,8 +177,7 @@ class DriverSpineSpec extends AnyFunSuite {
          |    seed: 42
          |    test: {method: timestamp_by_ratio, p: 0.2, level: user}
          |    validation: {method: random_by_ratio, p: 0.1, level: user}
-         |  models:
-         |    - {name: popularity, parameters: {}}
+         |  models: [$models]
          |  evaluation: {k: 10, relevance_threshold: 1, metrics: [MAP, nDCG]}
          |""".stripMargin)
     cfg.toString
@@ -207,5 +207,47 @@ class DriverSpineSpec extends AnyFunSuite {
     val labels = JobWatch.descriptions(spark) { viaSpark = graft.cli.Experiment.run(spark, cfg, maxDriverRows = 0) }
     assert(labels.contains("experiment: preprocess") && labels.contains("popularity fold 1: eval"), labels.distinct)
     assert(values(graft.cli.Experiment.run(spark, cfg)) == values(viaSpark))
+  }
+  test("a model that does not read local tables gets its local fold as cached Spark frames") {
+    val reads = Seq("popularity", "transE", "deepwalk", "node2vec", "als", "als_implicit", "bpr", "item2vec")
+      .map(m => m -> graft.model.Recommenders.registry(m)(Map.empty).readsLocalTables).toMap
+    assert(reads == Map("popularity" -> true, "transE" -> true, "deepwalk" -> true, "node2vec" -> true,
+      "als" -> false, "als_implicit" -> false, "bpr" -> false, "item2vec" -> false), reads)
+    assert(!graft.model.Recommenders.registry("deepwalk")(Map("w2v_impl" -> "mllib")).readsLocalTables)
+    val tmp = java.nio.file.Files.createTempDirectory("spine_models")
+    graft.util.Scratch.deleteOnExit(tmp)
+    val cfg = etlKcoreConfig(tmp, "{name: popularity, parameters: {}}, " +
+      "{name: bpr, parameters: {embedding_dim: 4, epochs: 2, min_rating: 1, pin_order: true}}, " +
+      "{name: als, parameters: {embedding_dim: 4, iters: 2, pin_order: true}}")
+    def values(report: DataFrame): Seq[Row] = {
+      val kept = report.columns.toSeq.filterNot(c => c.contains("execution_time") || c.endsWith("_s"))
+      report.select(kept.map(col): _*).orderBy("model").collect().toSeq
+    }
+    var gated: Seq[Row] = null
+    val labels = JobWatch.descriptions(spark) { gated = values(graft.cli.Experiment.run(spark, cfg)) }
+    // popularity still starts no job; BPR and ALS fit on Spark frames
+    assert(!labels.exists(_.startsWith("popularity fold")), labels.distinct)
+    assert(Seq("bpr", "als").forall(m => labels.exists(_.startsWith(s"$m fold 1: "))), labels.distinct)
+    assert(gated.size == 3 && gated == values(graft.cli.Experiment.run(spark, cfg, maxDriverRows = 0)))
+  }
+
+  test("over the load gate the ratings come back persisted, filled by the gate's own scan") {
+    val tmp = java.nio.file.Files.createTempDirectory("spine_gate")
+    graft.util.Scratch.deleteOnExit(tmp)
+    etlKcoreConfig(tmp)
+    val ds = new java.util.HashMap[String, Object]()
+    ds.put("ratings", tmp.resolve("rating.csv").toString)
+    val under = graft.cli.Experiment.loadDataset(spark, ds, maxDriverRows = 1L << 20)
+    assert(Shim.isLocal(under.ratings))
+    val sc = spark.sparkContext
+    val cachedBefore = sc.getRDDStorageInfo.map(_.id).toSet
+    val over = graft.cli.Experiment.loadDataset(spark, ds, maxDriverRows = 10)
+    assert(!Shim.isLocal(over.ratings) && over.ratings.storageLevel != StorageLevel.NONE)
+    // every partition is cached before anything reads the frame again
+    val filled = sc.getRDDStorageInfo.filterNot(i => cachedBefore(i.id))
+    assert(filled.length == 1 && filled.head.numCachedPartitions == filled.head.numPartitions,
+      filled.map(i => s"${i.name} ${i.numCachedPartitions}/${i.numPartitions}").mkString(", "))
+    assert(sorted(over.ratings) == sorted(under.ratings))
+    over.ratings.unpersist(blocking = true)
   }
 }

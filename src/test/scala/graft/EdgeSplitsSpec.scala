@@ -195,4 +195,31 @@ class EdgeSplitsSpec extends AnyFunSuite {
       EdgeSplits.fixedTimestampPurged(r, 1, -1)
     }
   }
+  test("checkSplit is the one argument check: every public split rejects what it rejects") {
+    val spark2 = spark
+    import spark2.implicits._
+    // a local table, and the same rows as a Spark plan
+    val local = Seq((1L, 1L, 5.0, 1L), (1L, 2L, 4.0, 2L)).toDF("user_id", "item_id", "rating", "ts")
+    val r = local.repartition(2)
+    val key = Seq(EdgeSplits.edgeHash(42), col("item_id"))
+    val bucket = EdgeSplits.longBucket(EdgeSplits.edgeHash(42))
+    // (the call, the text its error must carry); a local input fails the
+    // same way as a Spark one, before either form runs
+    val cases: Seq[(() => Any, String)] = Seq(
+      (() => EdgeSplits.checkSplit("random_by_ration"), "Invalid split method random_by_ration"),
+      (() => EdgeSplits.checkSplit("k_fold", k = 1), "k must be >= 2, got 1"),
+      (() => EdgeSplits.checkSplit("timestamp_by_ratio", p = 1.0), "p must be in (0,1), got 1.0"),
+      (() => EdgeSplits.checkSplit("random_by_ratio", level = "users"), "level must be user|global, got users"),
+      (() => EdgeSplits.randomByRatio(r, 0.0, "user", 42), "p must be in (0,1), got 0.0"),
+      (() => EdgeSplits.randomByRatio(local, 1.5, "global", 42), "p must be in (0,1), got 1.5"),
+      (() => EdgeSplits.timestampByRatio(r, 0.2, "item"), "level must be user|global, got item"),
+      (() => EdgeSplits.byRatio(r, -0.1, "user", key), "p must be in (0,1), got -0.1"),
+      (() => EdgeSplits.byRatioGlobalScalable(r, 1.0, key, bucket), "p must be in (0,1), got 1.0"),
+      (() => EdgeSplits.kFold(r, 1, "user", key), "k must be >= 2, got 1"),
+      (() => EdgeSplits.kFoldRandom(local, 0, "user", 42), "k must be >= 2, got 0"),
+      (() => EdgeSplits.kFoldGlobalScalable(r, 1, key, bucket), "k must be >= 2, got 1"))
+    for ((call, msg) <- cases)
+      assert(intercept[IllegalArgumentException](call()).getMessage.contains(msg), msg)
+    EdgeSplits.checkSplit("fixed_timestamp", p = 7.0, k = 0, level = "none") // no p, k or level
+  }
 }

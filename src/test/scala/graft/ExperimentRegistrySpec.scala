@@ -139,7 +139,7 @@ class ExperimentRegistrySpec extends AnyFunSuite {
     // the driver regime: the ratings leave load as a local table, and
     // neither fold starts a job (popularity ranks on the driver, transE
     // trains on the local rows, MAP/nDCG read both in place)
-    val driver = labelsOf(graft.graph.KGraph.MaxDriverEdges)
+    val driver = labelsOf(graft.cli.Experiment.MaxDriverRatings)
     assert(driver.contains("experiment: load"), driver)
     assert(!driver.exists(_.contains(" fold 1: ")), s"a driver-regime fold started a job: $driver")
     // the Spark spine, through the private bound: popularity ranks and
