@@ -111,9 +111,9 @@ object Experiment {
     * collect and is returned as a local table with the same schema. The
     * operators of the experiment spine (binarize, k-core, the splits,
     * popularity, MAP/nDCG) then take their driver forms, which start no
-    * Spark job (`Shim.localRows`). A larger table stays a Spark plan and
-    * comes back persisted, filled by the gate's own scan; the caller
-    * unpersists it when done. */
+    * Spark job (`Shim.localRows`). A larger table stays a Spark plan, over
+    * the rows of the gate's own scan: its jobs skip the stages that read
+    * and aggregate the CSV. */
   def loadDataset(spark: SparkSession, ds: Cfg): DatasetBundle =
     loadDataset(spark, ds, MaxDriverRatings)
 
@@ -165,14 +165,12 @@ object Experiment {
     // J4 endpoint validation when dims are present (graph.py:293-302)
     for (u <- users) ratings = ratings.join(u.select("user_id"), Seq("user_id"), "left_semi")
     for (i <- items) ratings = ratings.join(i.select("item_id"), Seq("item_id"), "left_semi")
-    // the gate's scan reads every row; persisted, that read also fills
-    // the cache a table over the bound is read from afterwards
-    ratings = ratings.cache()
+    // the gate's scan reads every row. A table over the bound goes on as
+    // a frame over the scan's own RDD (`Dataset.rdd`, one per Dataset),
+    // whose shuffle output later jobs reuse instead of reading the CSV
     ratings = KGraph.collectRows(ratings, maxDriverRows) match {
-      case Some(rows) =>
-        ratings.unpersist(blocking = false)
-        spark.createDataFrame(java.util.Arrays.asList(rows: _*), ratings.schema)
-      case None => ratings
+      case Some(rows) => spark.createDataFrame(java.util.Arrays.asList(rows: _*), ratings.schema)
+      case None => spark.createDataFrame(ratings.rdd, ratings.schema)
     }
 
     // property edges, four sources into one channel:
@@ -341,9 +339,8 @@ object Experiment {
       // k-core leaves its kill-set caches live inside a Spark lineage
       // (caller-owned contract): materialize the preprocessed ratings
       // once, then drop the loop caches before the fold runs. A local
-      // table is materialized already, and so is the persisted table
-      // load returns when nothing is preprocessed.
-      if (!Shim.isLocal(prepped) && preprocess.nonEmpty) {
+      // table is materialized already.
+      if (!Shim.isLocal(prepped)) {
         prepped.cache()
         if (preprocess.exists(p => str(p, "method") == "filter_kcore")) {
           prepped.count(); kcoreCaches.release()
@@ -443,7 +440,7 @@ object Experiment {
     // the metric rows above are local Scala values — the run's shared
     // caches (preprocessed ratings, fold assignment) are dead weight for
     // the report and must not outlive the experiment in a long session
-    for (r <- Seq(bundle.ratings, ratings) if !Shim.isLocal(r)) r.unpersist(blocking = false)
+    if (!Shim.isLocal(ratings)) ratings.unpersist(blocking = false)
     splitCaches.foreach(_.unpersist(blocking = false))
 
     val dedupedRows = dedupLastWins(rows)

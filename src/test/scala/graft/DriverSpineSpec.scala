@@ -231,7 +231,7 @@ class DriverSpineSpec extends AnyFunSuite {
     assert(gated.size == 3 && gated == values(graft.cli.Experiment.run(spark, cfg, maxDriverRows = 0)))
   }
 
-  test("over the load gate the ratings come back persisted, filled by the gate's own scan") {
+  test("over the load gate the ratings go on over the gate scan's rows, without reading the CSV again") {
     val tmp = java.nio.file.Files.createTempDirectory("spine_gate")
     graft.util.Scratch.deleteOnExit(tmp)
     etlKcoreConfig(tmp)
@@ -239,15 +239,22 @@ class DriverSpineSpec extends AnyFunSuite {
     ds.put("ratings", tmp.resolve("rating.csv").toString)
     val under = graft.cli.Experiment.loadDataset(spark, ds, maxDriverRows = 1L << 20)
     assert(Shim.isLocal(under.ratings))
-    val sc = spark.sparkContext
-    val cachedBefore = sc.getRDDStorageInfo.map(_.id).toSet
     val over = graft.cli.Experiment.loadDataset(spark, ds, maxDriverRows = 10)
-    assert(!Shim.isLocal(over.ratings) && over.ratings.storageLevel != StorageLevel.NONE)
-    // every partition is cached before anything reads the frame again
-    val filled = sc.getRDDStorageInfo.filterNot(i => cachedBefore(i.id))
-    assert(filled.length == 1 && filled.head.numCachedPartitions == filled.head.numPartitions,
-      filled.map(i => s"${i.name} ${i.numCachedPartitions}/${i.numPartitions}").mkString(", "))
-    assert(sorted(over.ratings) == sorted(under.ratings))
-    over.ratings.unpersist(blocking = true)
+    assert(!Shim.isLocal(over.ratings))
+    // the RDDs of every stage the next read submits: the scan's stages,
+    // the CSV read among them, are skipped
+    val rdds = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        e.stageInfo.rddInfos.foreach(i => rdds.add(i.name))
+    }
+    // JobWatch returns once every earlier event reached the listeners
+    var got: Seq[String] = null
+    spark.sparkContext.addSparkListener(listener)
+    try JobWatch.jobs(spark) { got = sorted(over.ratings) }
+    finally spark.sparkContext.removeSparkListener(listener)
+    assert(got == sorted(under.ratings))
+    assert(!rdds.isEmpty && !rdds.toArray.exists(_.toString.contains("FileScan")), rdds)
   }
+
 }
