@@ -2,7 +2,7 @@ package graft.cli
 
 import graft.etl.{Datasets, SparqlSource}
 import graft.schema.TypedCsv
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's `data_integration.py` CLI (lines 11-47): per-dataset
@@ -10,11 +10,14 @@ import org.apache.spark.sql.functions._
   * (item.csv / user.csv / rating.csv / social.csv / map.csv /
   * enriched.csv — dataset.py:25-31).
   *
-  * The reference fans per-item SPARQL queries over a thread pool; here
-  * the query table is a DataFrame and the fan-out is executor
-  * parallelism ([[SparqlSource.fetch]]), so a map job over 10M items is
-  * just a wider cluster — no driver queue. Transport is injectable for
-  * fixture-replayed tests (no network in CI).
+  * The reference fans per-item SPARQL queries over a pool of `n_workers`
+  * threads; here the query table is a DataFrame split into `-w`
+  * partitions, and each task keeps [[SparqlSource.InFlight]] requests in
+  * flight ([[SparqlSource.fetchBestUri]], [[SparqlSource.fetchCsvRow]]),
+  * so the default `-w 1` still overlaps that many requests. The CSV
+  * writer's `coalesce(1)` runs the partitions in one task, one after
+  * another. Transport is injectable for fixture-replayed tests (no
+  * network in CI).
   */
 object DataIntegration {
 
@@ -86,30 +89,23 @@ object DataIntegration {
 
   /** map_URIs (dataset.py:225-241): per-item typed SPARQL query ->
     * candidate URIs -> fuzzy top-1 disambiguation against the expected
-    * `dbr:` URI -> (item_id, URI) with unmatched items kept as nulls. */
+    * `dbr:` URI -> (item_id, URI), unmatched items kept as nulls. One
+    * windowed pass ([[SparqlSource.fetchBestUri]]) resolves each row
+    * where its response lands: thefuzz compares candidate URI strings
+    * against the expected URI (movielens.py:126-131). */
   def mapItems(spark: SparkSession, ds: Datasets.DatasetDef, items: DataFrame,
                endpoint: String, parallelism: Int,
                transport: SparqlSource.Transport): DataFrame = {
     val queries = ds.mapQueries(items).getOrElse(
       throw new UnsupportedOperationException(s"${ds.name} has no entity-linking step"))
-    val responses = SparqlSource.fetch(spark, queries.select("item_id", "query"),
-      endpoint, parallelism = parallelism, transport = transport)
-    val candidates = responses
-      .select(col("item_id"), explode(col("bindings")).as("b"))
-      .select(col("item_id"), col("b")(ds.bindingVar).as("uri"))
-      .join(queries.select(col("item_id").cast("string").as("item_id"), col("expected")), Seq("item_id"))
-      // thefuzz compares candidate URI strings against the expected URI
-      // (movielens.py:126-131) — the URI itself is the match label
-      .withColumn("candidate_label", col("uri"))
-    val best = SparqlSource.disambiguate(candidates)
-    items.select(col("item_id").cast("string").as("item_id"))
-      .join(best.select(col("item_id"), col("uri").as("URI")), Seq("item_id"), "left")
+    SparqlSource.fetchBestUri(spark, queries, endpoint, ds.bindingVar,
+      parallelism = parallelism, transport = transport)
   }
 
   /** enrich_data (dataset.py:243-262): one enrich query per MATCHED URI
-    * (CSV return format), first data row parsed into per-property
-    * columns; list-valued properties arrive "::"-concatenated and are
-    * split to string_list (S5 + A4). */
+    * (CSV return format) through the same windowed pass, first data row
+    * parsed into per-property columns; list-valued properties arrive
+    * "::"-concatenated and are split to string_list (S5 + A4). */
   def enrichItems(spark: SparkSession, ds: Datasets.DatasetDef, dfMap: DataFrame,
                   endpoint: String, parallelism: Int,
                   transport: SparqlSource.Transport): DataFrame = {

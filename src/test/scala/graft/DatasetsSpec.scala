@@ -162,7 +162,7 @@ class DatasetsSpec extends AnyFunSuite {
     // enrich fixture: SPARQL CSV with ::-concatenated lists
     val enrichBody =
       "abstract,producer,distributor,writer,cinematography,subject,starring,director\n" +
-      "\"A 1995 film\",\"P1::P2\",\"\",\"W1\",\"\",\"Cat1::Cat2\",\"S1\",\"D1\"\n"
+      "\"A 1995 film, by Pixar\",\"P1::P2\",\"\",\"W1\",\"\",\"Cat1::Cat2\",\"S1\",\"D1\"\n"
     val report = DataIntegration.run(spark, "ml-100k", in.toString, out.toString,
       convertItem = true, convertUser = true, convertRating = true,
       mapUris = true, enrichData = true,
@@ -178,7 +178,7 @@ class DatasetsSpec extends AnyFunSuite {
     assert(mapped.getString(1) == "http://dbpedia.org/resource/Toy_Story")
     val enriched = graft.schema.TypedCsv.read(spark, s"$out/enriched.csv").first()
     assert(enriched.getSeq[String](enriched.fieldIndex("producer")) == Seq("P1", "P2"))
-    assert(enriched.getAs[String]("abstract") == "A 1995 film")
+    assert(enriched.getAs[String]("abstract") == "A 1995 film, by Pixar")
   }
 
   test("map_URIs queries each item once, and its report counts match map.csv") {

@@ -168,13 +168,13 @@ class TextAndEtlSpec extends AnyFunSuite {
     assert(out(4L).isNullAt(1) && out(4L).getLong(2) == 1L && out(4L).getDouble(3) == 1.0)
   }
 
-  test("SPARQL source replays fixtures through the executor-side transport (S4)") {
+  test("SPARQL source resolves each fixture response to its row's URI in the windowed pass (S4)") {
     val fixture: SparqlSource.Transport = (_, q, _) =>
       s"""{"results":{"bindings":[{"uri":{"value":"http://dbpedia.org/resource/$q"},"label":{"value":"Label $q"}}]}}"""
-    val queries = Seq(("1", "Heat"), ("2", "Fargo")).toDF("item_id", "query")
-    val out = SparqlSource.fetch(spark, queries, "http://fixture", transport = fixture)
-      .select($"item_id", expr("bindings[0]['uri']").as("uri")).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val queries = Seq(("1", "Heat", "http://dbpedia.org/resource/Heat"),
+      ("2", "Fargo", "http://dbpedia.org/resource/Fargo")).toDF("item_id", "query", "expected")
+    val out = SparqlSource.fetchBestUri(spark, queries, "http://fixture", "uri", transport = fixture)
+      .collect().map(r => r.getString(0) -> r.getString(1)).toMap
     assert(out == Map("1" -> "http://dbpedia.org/resource/Heat",
       "2" -> "http://dbpedia.org/resource/Fargo"))
   }
@@ -244,6 +244,16 @@ class TextAndEtlSpec extends AnyFunSuite {
   test("firstCsvRow takes the first data row (S5, movielens.py:165-178)") {
     val row = SparqlSource.firstCsvRow("a,b\n1,2\n3,4\n")
     assert(row.contains(Map("a" -> "1", "b" -> "2")))
+  }
+
+  test("firstCsvRow reads RFC 4180 quoting: commas, doubled quotes and line breaks in a value (S5)") {
+    val body = "\"abstract\",\"producer\",\"director\"\r\n" +
+      "\"A film, by X. It was \"\"big\"\"\nin 1995.\",\"P1::P2\",\"\"\r\n" +
+      "\"second\",\"row\",\"x\"\r\n"
+    val row = SparqlSource.firstCsvRow(body)
+    assert(row.contains(Map("abstract" -> "A film, by X. It was \"big\"\nin 1995.",
+      "producer" -> "P1::P2", "director" -> "")))
+    assert(SparqlSource.firstCsvRow("abstract,producer\n").isEmpty)
   }
 
   test("group-concat enrichment aggregation (A4)") {
