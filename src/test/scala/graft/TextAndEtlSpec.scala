@@ -168,7 +168,7 @@ class TextAndEtlSpec extends AnyFunSuite {
     assert(out(4L).isNullAt(1) && out(4L).getLong(2) == 1L && out(4L).getDouble(3) == 1.0)
   }
 
-  test("SPARQL source resolves each fixture response to its row's URI in the windowed pass (S4)") {
+  test("SPARQL source replays fixtures through the executor-side transport (S4)") {
     val fixture: SparqlSource.Transport = (_, q, _) =>
       s"""{"results":{"bindings":[{"uri":{"value":"http://dbpedia.org/resource/$q"},"label":{"value":"Label $q"}}]}}"""
     val queries = Seq(("1", "Heat", "http://dbpedia.org/resource/Heat"),
