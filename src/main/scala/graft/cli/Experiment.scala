@@ -7,10 +7,12 @@ import graft.prep.Preprocess
 import graft.report.Reporter
 import graft.schema.TypedCsv
 import graft.split.EdgeSplits
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.Shim
-import org.apache.spark.sql.types.{StringType, StructField}
+import org.apache.spark.sql.graftshim.{LocalCsv, Shim}
+import org.apache.spark.sql.types.{DataType, DoubleType, StringType, StructField}
+import org.apache.spark.unsafe.types.UTF8String
 import org.yaml.snakeyaml.Yaml
 import scala.jdk.CollectionConverters._
 
@@ -103,12 +105,116 @@ object Experiment {
     * no size between 360k and 600k was measured. */
   val MaxDriverRatings: Long = 300000L
 
+  /** Input bytes per rating of the workload [[MaxDriverRatings]] was
+    * measured on: perfbench etl-kcore's experiment inputs (seed 1001,
+    * 90k ratings) are 2,401,052 bytes of `rating.csv`, `item.csv` and
+    * `map.csv` part files, 26.7 bytes per rating (`rating.csv` alone
+    * 25.8). */
+  private val BytesPerRating: Long = 27L
+
+  /** Most input bytes [[loadDataset]] reads on the driver:
+    * [[MaxDriverRatings]] ratings of [[BytesPerRating]] bytes each, the
+    * summed size of every file the dataset names (ratings, item and user
+    * dims, `map.csv`, the enriched table, social links). Under it the
+    * whole load runs on the driver and starts no Spark job: each CSV is
+    * read by [[TypedCsv.readLocal]], and the dedup, the endpoint
+    * validation, `remove_unmatched`, the property edges and the social
+    * links take their driver forms. A larger input, or one that is not a
+    * file or a directory of files, is read by Spark as before.
+    *
+    * Measured on perfbench etl-kcore inputs (seeds 5001-5003, 4 cores),
+    * `Experiment.run` in a fresh JVM, then twice more in it, driver load
+    * against Spark load with the same row gate, two JVMs a side, `load_s`
+    * and the call's wall seconds:
+    *  - 200k ratings, 5.39 MB: cold load 4.4-5.0 s against 7.6-8.4 s (call
+    *    8.3-9.6 s against 11.2-12.9 s); warm load 1.7-2.2 s both ways.
+    *  - 270k ratings, 7.29 MB: cold load 5.7-8.0 s against 9.2-9.3 s (call
+    *    11.8-14.9 s against 15.2-15.5 s); warm load 2.5-3.7 s against
+    *    2.0-2.3 s, so a warm driver load loses up to 1.5 s here.
+    *  - 360k ratings, 9.76 MB, over this bound: the validated ratings pass
+    *    the row gate too, and the driver-read table goes on as a Spark
+    *    frame over driver rows; cold call 22.6-23.6 s against 19.4-21.0 s,
+    *    warm 8.9-11.7 s against 5.4-6.5 s.
+    * No size between 270k and 360k was measured. */
+  val MaxDriverBytes: Long = MaxDriverRatings * BytesPerRating
+
+  /** Whether the inputs at `paths` are read on the driver under the row
+    * bound `maxDriverRows`: each is a file or a directory of files
+    * (`LocalCsv.files`, which [[TypedCsv.readLocal]] reads), and their
+    * bytes sum to at most `maxDriverRows` ratings' worth
+    * ([[MaxDriverBytes]] at [[MaxDriverRatings]]). Lists, reads nothing. */
+  private[graft] def readsOnDriver(spark: SparkSession, paths: Seq[String], maxDriverRows: Long): Boolean = {
+    val bound = maxDriverRows * BytesPerRating
+    paths.iterator.map(LocalCsv.files(spark, _).map(_.map(_.getLen).sum))
+      .foldLeft(Option(0L))((sum, bytes) => for (s <- sum; b <- bytes if s + b <= bound) yield s + b)
+      .isDefined
+  }
+
+  /** Duplicate (user, item) edges: last-wins in nx, whose deterministic
+    * analogue here is the max rating and the max ts (0 without a ts
+    * column). A local table is grouped on the driver into a local table
+    * with the aggregate's schema: keys compare by `Shim.groupKey`, a max
+    * skips nulls and ranks NaN above every number, as Spark's `max`
+    * does. */
+  private[graft] def dedupRatings(raw: DataFrame): DataFrame = {
+    val hasTs = raw.columns.contains("ts")
+    val viaSpark = raw.groupBy("user_id", "item_id")
+      .agg(max("rating").as("rating"), (if (hasTs) max("ts") else lit(0L)).as("ts"))
+    val maxima = (Seq("rating") ++ (if (hasTs) Seq("ts") else Nil)).map(c => greater(raw.schema(c).dataType))
+    val local = for {
+      rows <- Shim.localRows(raw.select((Seq("user_id", "item_id", "rating") ++
+        (if (hasTs) Seq("ts") else Nil)).map(col): _*)) if maxima.forall(_.isDefined)
+    } yield {
+      // (user, item, maxima) by grouping key; a group's keys as Spark
+      // outputs them, -0.0 as 0.0
+      val groups = scala.collection.mutable.LinkedHashMap.empty[(Any, Any), Array[Any]]
+      def normalized(v: Any): Any = v match { case d: Double if d == 0.0 => 0.0; case other => other }
+      rows.foreach { r =>
+        val group = groups.getOrElseUpdate((Shim.groupKey(r.get(0)), Shim.groupKey(r.get(1))),
+          Array[Any](normalized(r.get(0)), normalized(r.get(1))) ++ maxima.map(_ => null))
+        maxima.indices.foreach { m =>
+          val (v, best) = (r.get(2 + m), group(2 + m))
+          if (v != null && (best == null || maxima(m).get(v, best))) group(2 + m) = v
+        }
+      }
+      groups.valuesIterator.map(g => Row.fromSeq(g.toSeq ++ (if (hasTs) Nil else Seq(0L)))).toSeq
+    }
+    local.fold(viaSpark)(rows => raw.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), viaSpark.schema))
+  }
+
+  /** Spark's `>` over the types a typed CSV gives a rating or ts column,
+    * number and string: NaN above every double, strings by their UTF-8
+    * bytes. */
+  private def greater(dataType: DataType): Option[(Any, Any) => Boolean] = dataType match {
+    case DoubleType => Some((a, b) => SQLOrderingUtil.compareDoubles(a.asInstanceOf[Double], b.asInstanceOf[Double]) > 0)
+    case StringType => Some((a, b) =>
+      UTF8String.fromString(a.asInstanceOf[String]).compareTo(UTF8String.fromString(b.asInstanceOf[String])) > 0)
+    case _ => None
+  }
+
+  /** The `remove_unmatched` filter (graph.py:222-230): the item ids
+    * whose `map.csv` row has a non-null URI, to semi-join the items with.
+    * With remove_unmatched set the reference hard-fails (KeyError on
+    * df_item['URI']) when the map file lacks a URI column, so this fails
+    * fast the same way rather than guess a match column. A semi join
+    * ignores duplicate keys on its right, so the ids are not made
+    * distinct. */
+  private[graft] def matchedItems(map: DataFrame): DataFrame = {
+    require(map.columns.contains("URI"),
+      s"enrich map file has no 'URI' column (found: ${map.columns.mkString(", ")}); " +
+        "remove_unmatched filters on non-null URI (graph.py:226-227)")
+    map.filter(col("URI").isNotNull).select("item_id")
+  }
+
   /** Graph assembly from the `dataset:` block (`Graph.build`,
     * graph.py:28-35): items + user info + ratings + social links.
     *
-    * The driver gate: a validated rating table of at most
-    * [[MaxDriverRatings]] rows comes to the driver in one bounded
-    * collect and is returned as a local table with the same schema. The
+    * Two driver gates. Input files of at most [[MaxDriverBytes]] in all
+    * are read and assembled on the driver ([[readsOnDriver]]): no Spark
+    * job, and every returned table is a local table. Otherwise Spark
+    * reads them, and a validated rating table of at most
+    * [[MaxDriverRatings]] rows comes to the driver in one bounded collect
+    * and is returned as a local table with the same schema. The
     * operators of the experiment spine (binarize, k-core, the splits,
     * popularity, MAP/nDCG) then take their driver forms, which start no
     * Spark job (`Shim.localRows`). A larger table stays a Spark plan, over
@@ -117,54 +223,49 @@ object Experiment {
   def loadDataset(spark: SparkSession, ds: Cfg): DatasetBundle =
     loadDataset(spark, ds, MaxDriverRatings)
 
-  /** [[loadDataset]] with the driver bound `maxDriverRows`. */
+  /** [[loadDataset]] with the driver bound `maxDriverRows`, in ratings:
+    * the byte gate is `maxDriverRows` ratings' worth of input. */
   private[graft] def loadDataset(spark: SparkSession, ds: Cfg, maxDriverRows: Long): DatasetBundle = {
-    val ratingsRaw = TypedCsv.read(spark, cfgPath(ds, "ratings").getOrElse(
-        sys.error("dataset.ratings is required")))
+    val ratingsPath = cfgPath(ds, "ratings").getOrElse(sys.error("dataset.ratings is required"))
+    // the enrich block: the shipped reference configs key the enriched
+    // table as `enrich_path` (config_files/test.yml:15) and list
+    // `properties` as plain column names; the README shows `{type: ...}`
+    // maps. Both are accepted, plus this repo's earlier
+    // `enriched_path`/`path` aliases
+    val enrichCfg = Option(sub(ds, "enrich"))
+    val mapPath = for { e <- enrichCfg; p <- Option(str(e, "map_path")) } yield p
+    val enrichPath = for { e <- enrichCfg; p <- Option(str(e, "enrich_path",
+      str(e, "enriched_path", str(e, "path")))) } yield p
+    val onDriver = readsOnDriver(spark, ratingsPath +: Seq(cfgPath(ds, "user"), cfgPath(ds, "item"),
+      mapPath, enrichPath, cfgPath(ds, "social")).flatten, maxDriverRows)
+    val read: String => DataFrame =
+      if (onDriver) TypedCsv.readLocal(spark, _) else TypedCsv.read(spark, _)
+
+    val ratingsRaw = read(ratingsPath)
       .withColumnRenamed("timestamp", "ts")
       .withColumn("rating", col("rating").cast("double"))
-    val users = cfgPath(ds, "user").map(TypedCsv.read(spark, _))
-    val itemsRaw = cfgPath(ds, "item").map(TypedCsv.read(spark, _))
+    val users = cfgPath(ds, "user").map(read)
+    val itemsRaw = cfgPath(ds, "item").map(read)
 
     // enrich block (graph.py:222-230): `map.csv` left-merges its match
     // columns (URI, ...) into the item table — matched items gain an
     // Item -has-> Property(value, col) edge per non-id map column — and
     // `remove_unmatched: true` drops UNmatched items from the graph
     // entirely, which cascades into the rating-edge validation below
-    // (exactly as dropping the item node does in nx). The shipped
-    // reference configs key the enriched table as `enrich_path`
-    // (config_files/test.yml:15) and list `properties` as plain column
-    // names; the README shows `{type: ...}` maps — both are accepted,
-    // plus this repo's earlier `enriched_path`/`path` aliases.
-    val enrichCfg = Option(sub(ds, "enrich"))
-    val mapDf = for { e <- enrichCfg; p <- Option(str(e, "map_path")) }
-      yield TypedCsv.read(spark, p)
+    // (exactly as dropping the item node does in nx). Without
+    // remove_unmatched the reference never touches URI
+    val mapDf = mapPath.map(read)
     val removeUnmatched =
       enrichCfg.exists(e => str(e, "remove_unmatched", "false").toBoolean)
-    // match predicate: non-null URI (graph.py:226-227). With
-    // remove_unmatched set the reference hard-fails (KeyError on
-    // df_item['URI']) when the map file lacks a URI column — fail fast
-    // the same way rather than silently guessing a match column and
-    // filtering the item set on the wrong thing. Without
-    // remove_unmatched the reference never touches URI, so no matched
-    // set is needed at all.
-    val matchedIds = if (removeUnmatched) mapDf.map { m =>
-      require(m.columns.contains("URI"),
-        s"enrich map file has no 'URI' column (found: ${m.columns.mkString(", ")}); " +
-          "remove_unmatched filters on non-null URI (graph.py:226-227)")
-      m.filter(col("URI").isNotNull).select("item_id").distinct()
-    } else None
-    val items = (itemsRaw, matchedIds) match {
-      case (Some(i), Some(mm)) => Some(i.join(mm, Seq("item_id"), "left_semi"))
+    val matched = if (removeUnmatched) mapDf.map(matchedItems) else None
+    val items = (itemsRaw, matched) match {
+      case (Some(i), Some(mm)) => Some(Shim.keyJoin(i, mm, "item_id", "left_semi"))
       case _ => itemsRaw
     }
-    // duplicate (user,item) edges: last-wins in nx — deterministic analogue max
-    var ratings = ratingsRaw.groupBy("user_id", "item_id")
-      .agg(max("rating").as("rating"),
-        (if (ratingsRaw.columns.contains("ts")) max("ts") else lit(0L)).as("ts"))
+    var ratings = dedupRatings(ratingsRaw)
     // J4 endpoint validation when dims are present (graph.py:293-302)
-    for (u <- users) ratings = ratings.join(u.select("user_id"), Seq("user_id"), "left_semi")
-    for (i <- items) ratings = ratings.join(i.select("item_id"), Seq("item_id"), "left_semi")
+    for (u <- users) ratings = Shim.keyJoin(ratings, u.select("user_id"), "user_id", "left_semi")
+    for (i <- items) ratings = Shim.keyJoin(ratings, i.select("item_id"), "item_id", "left_semi")
     // the gate's scan reads every row. A table over the bound goes on as
     // a frame over the scan's own RDD (`Dataset.rdd`, one per Dataset),
     // whose shuffle output later jobs reuse instead of reading the CSV
@@ -183,18 +284,17 @@ object Experiment {
     val itemFeatureEdges = items.flatMap(i =>
       propertyEdgesFrom(i, "item_id", isUser = false, features(ds, "item")))
     val mapEdges: Option[DataFrame] = mapDf.flatMap { m =>
-      val base = items.map(i => i.select("item_id").join(m, Seq("item_id"), "left")).getOrElse(m)
+      val base = items.map(i => Shim.keyJoin(i.select("item_id"), m, "item_id", "left")).getOrElse(m)
       propertyEdgesFrom(base, "item_id", isUser = false,
         m.columns.filterNot(_ == "item_id").toSeq)
     }
     val enrichEdges: Option[DataFrame] = for {
       enrich <- enrichCfg
-      path <- Option(str(enrich, "enrich_path",
-        str(enrich, "enriched_path", str(enrich, "path"))))
+      path <- enrichPath
       edges <- {
-        val enriched0 = TypedCsv.read(spark, path)
+        val enriched0 = read(path)
         val enriched = items.map(i =>
-          enriched0.join(i.select("item_id"), Seq("item_id"), "left_semi")).getOrElse(enriched0)
+          Shim.keyJoin(enriched0, i.select("item_id"), "item_id", "left_semi")).getOrElse(enriched0)
         propertyEdgesFrom(enriched, "item_id", isUser = false, propertyNames(enrich))
       }
     } yield edges
@@ -204,11 +304,11 @@ object Experiment {
       .flatten.reduceOption(_ unionByName _)
 
     // social links (graph.py:304-314): User–User edges, both endpoints
-    // validated against the known-user set
+    // validated against the known-user set (a semi join ignores duplicate
+    // keys, so the raters are not made distinct)
     val socialEdges = cfgPath(ds, "social").map { p =>
-      val pairs = TypedCsv.read(spark, p)
-      val known = users.map(_.select("user_id"))
-        .getOrElse(ratings.select("user_id").distinct())
+      val pairs = read(p)
+      val known = users.getOrElse(ratings).select("user_id")
       graft.etl.Converters.socialLinks(pairs, known)
         .select(
           KGraph.userLabel(col("user1")).as("src_label"),
@@ -275,10 +375,11 @@ object Experiment {
   def run(spark: SparkSession, configPath: String): DataFrame =
     run(spark, configPath, MaxDriverRatings)
 
-  /** [[run]] with the load gate's bound `maxDriverRows`: 0 keeps a small
-    * experiment's ratings a Spark plan, so its spine runs the Spark forms. */
+  /** [[run]] with the load gates' bound `maxDriverRows`: 0 has Spark read
+    * a small experiment's inputs and keeps its ratings a Spark plan, so
+    * its spine runs the Spark forms. */
   private[graft] def run(spark: SparkSession, configPath: String, maxDriverRows: Long): DataFrame = {
-    val root = new Yaml().load(new java.io.FileInputStream(configPath))
+    val root = scala.util.Using.resource(new java.io.FileInputStream(configPath))(new Yaml().load[Object](_))
       .asInstanceOf[Cfg]
     val exp = sub(root, "experiment")
 

@@ -2,6 +2,7 @@ package graft.report
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.LocalCsv
 import org.apache.spark.sql.types.{DoubleType, StructField, StructType}
 import scala.jdk.CollectionConverters._
 
@@ -73,9 +74,14 @@ object Reporter {
   }
 
   /** CSV sink matching the reference's writer (S6, report.py:25-29):
-    * single header file per report. */
+    * single header file per report. A report that is a local table, as
+    * `pivotTable` builds it, is written on the driver without a Spark job
+    * by Spark's own CSV generator (`LocalCsv.write`), into the layout
+    * Spark's writer leaves: a directory of one `part-00000-*.csv` and
+    * `_SUCCESS`. Any other frame is written by Spark. */
   def writeCsv(report: DataFrame, path: String): Unit =
-    report.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
+    if (!LocalCsv.write(report, path))
+      report.coalesce(1).write.mode("overwrite").option("header", "true").csv(path)
 
   /** Project the wide in-memory report onto the reference's CSV artifact
     * shape (report.py:31-63): FOLD-major metric columns then per-metric

@@ -2,6 +2,7 @@ package graft.schema
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.LocalCsv
 import org.apache.spark.sql.types._
 
 /** The reference's only schema mechanism (S1): CSV headers carry a type
@@ -24,8 +25,26 @@ object TypedCsv {
 
   /** Read a typed-header CSV; returns a DataFrame with plain column
     * names and Spark-native types. */
-  def read(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.option("header", "true").csv(path)
+  def read(spark: SparkSession, path: String): DataFrame =
+    typed(spark.read.option("header", "true").csv(path))
+
+  /** [[read]] on the driver, with no Spark job: the file or directory of
+    * files at `path` is parsed by Spark's own CSV classes
+    * (`LocalCsv.read`) into a local table of strings, under the same
+    * typed casts. Returns that local table; the casts are evaluated when a
+    * column is read (`Shim.localRows`), as Spark's optimizer folds them,
+    * so a bad cell throws what [[read]]'s job throws, and only when a step
+    * reads its column. Throws when `path` is not a file or a directory of
+    * files (`LocalCsv.files`). */
+  def readLocal(spark: SparkSession, path: String): DataFrame = {
+    val files = LocalCsv.files(spark, path).getOrElse(throw new IllegalArgumentException(
+      s"$path is not a file or a directory of files"))
+    typed(LocalCsv.read(spark, files))
+  }
+
+  /** The typed view of a header CSV read as strings: each
+    * `name::type` column cast to its type under its plain name. */
+  private def typed(raw: DataFrame): DataFrame = {
     val cols = raw.columns.map { c =>
       c.split(Sep, -1) match {
         case Array(name, "string")      => col(raw.schema(c).name).cast(StringType).as(name)

@@ -13,9 +13,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The experiment spine's driver forms: binarize, k-core, the four
   * splits and popularity over a local table must give the rows of their
-  * Spark forms over the same rows as a Spark plan, without a job; and a
-  * small experiment, gated to local tables at load, must start jobs only
-  * in load and report what its Spark spine reports. */
+  * Spark forms over the same rows as a Spark plan, without a job, and so
+  * must the load's dedup, joins, property edges and social links; and a
+  * small experiment, read and assembled on the driver, must start no job
+  * and report what its Spark spine reports. */
 class DriverSpineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
@@ -72,6 +73,110 @@ class DriverSpineSpec extends AnyFunSuite {
     for (df <- Seq(r.groupBy("user_id").count(), r.repartition(2).filter(col("ts") > 3),
       r.sortWithinPartitions("ts"), r.withColumn("x", rand(1))))
       assert(!Shim.isLocal(df) && Shim.localRows(df).isEmpty, df.queryExecution.analyzed)
+  }
+
+  test("localRows reads a Union of local chains in child order, as collect() returns it") {
+    val a = ratings(StringType, 8)
+    val b = ratings(StringType, 9).filter(col("ts") > 10)
+    for (df <- Seq(a.union(b),
+      a.select("item_id", "user_id").unionByName(b.select("user_id", "item_id")),
+      a.union(b).union(b.orderBy(col("ts").desc, col("user_id"), col("item_id"))).withColumn("x", col("rating") * 2))) {
+      var rows: Option[Seq[Row]] = None
+      assert(JobWatch.jobs(spark) { rows = Shim.localRows(df) }.isEmpty, df.queryExecution.analyzed)
+      assert(rows.get == df.collect().toSeq, df.queryExecution.analyzed)
+    }
+    // one child that is not a local chain makes the union non-local
+    val partly = a.union(b.limit(5))
+    assert(!Shim.isLocal(partly) && Shim.localRows(partly).isEmpty)
+    // the embedding recommenders' label-edge union: rating edges over the
+    // local train rows, then the local property edges
+    val props = graft.graph.KGraph.propertyEdges(
+      spark.createDataFrame(java.util.Arrays.asList(Row("i1", "a"), Row("i2", null)),
+        StructType(Seq(StructField("item_id", StringType), StructField("genre", StringType)))),
+      "item_id", isUser = false, Seq("genre")).get
+    val edges = a.select(graft.graph.KGraph.userLabel(col("user_id")).as("src_label"), lit("rating").as("relation"),
+      graft.graph.KGraph.itemLabel(col("item_id")).as("dst_label")).unionByName(props)
+    var rows: Option[Seq[Row]] = None
+    assert(JobWatch.jobs(spark) { rows = Shim.localRows(edges) }.isEmpty)
+    assert(rows.get == edges.collect().toSeq)
+  }
+
+  /** Rows keyed by `idType` ids with nulls, duplicates, and for doubles
+    * -0.0, 0.0 and NaN, which Spark's joins and groupings treat as
+    * equal keys. */
+  private def keyed(idType: DataType, n: Int, seed: Int, other: (String, DataType)*): DataFrame = {
+    val rnd = new scala.util.Random(seed)
+    def id(i: Int): Any = if (i % 11 == 0) null else idType match {
+      case DoubleType => i % 7 match { case 0 => -0.0; case 1 => 0.0; case 2 => Double.NaN; case _ => (i % 9).toDouble }
+      case LongType => (i % 9).toLong
+      case _ => Seq("a", "b～", "c😀", "d", "e", "f", "g", "h", "i")(i % 9)
+    }
+    val rows = (0 until n).map(i => Row.fromSeq(id(rnd.nextInt(60)) +: other.map {
+      case (_, DoubleType) => if (rnd.nextInt(10) == 0) null else if (rnd.nextInt(15) == 0) Double.NaN else (1 + rnd.nextInt(5)).toDouble
+      case (_, StringType) => if (rnd.nextInt(10) == 0) null else s"v${rnd.nextInt(4)}"
+      case (_, _) => Array("x", "y").take(rnd.nextInt(3)).toSeq
+    }))
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(StructField("k", idType) +: other.map { case (c, t) => StructField(c, t) }))
+  }
+
+  test("load: the (user, item) max dedup, driver form == Spark form") {
+    for (t <- idTypes) {
+      val r = ratings(t, 10)
+      // duplicate edges with other ratings and timestamps, NaN among them
+      val dup = r.withColumn("rating", when(col("ts") % 3 === 0, lit(Double.NaN)).otherwise(col("rating") + 1))
+        .withColumn("ts", col("ts") - 5)
+      for (raw <- Seq(Shim.localTable(r.union(dup).withColumn("ts", col("ts").cast("double"))),
+        Shim.localTable(r.union(dup).drop("ts"))))
+        assertSame(graft.cli.Experiment.dedupRatings(raw), graft.cli.Experiment.dedupRatings(onSpark(raw)),
+          s"$t ${raw.columns.mkString(",")}")
+    }
+    // -0.0/0.0 and NaN keys group as Spark groups them
+    val k = keyed(DoubleType, 200, 11, "rating" -> DoubleType, "ts" -> StringType)
+    val raw = k.select(col("k").as("user_id"), (col("k") * 2).as("item_id"), col("rating"), col("ts"))
+    assertSame(graft.cli.Experiment.dedupRatings(raw), graft.cli.Experiment.dedupRatings(onSpark(raw)), "double keys")
+  }
+
+  test("load: keyJoin left_semi and left, driver form == Spark form") {
+    for (t <- Seq(StringType, LongType, DoubleType); how <- Seq("left_semi", "left")) {
+      // the key is not the first column: a USING join moves it first
+      val l = keyed(t, 120, 12, "a" -> StringType).select(col("a"), col("k"))
+      val r = keyed(t, 40, 13, "b" -> DoubleType, "c" -> ArrayType(StringType))
+      assertSame(Shim.keyJoin(l, r, "k", how), Shim.keyJoin(onSpark(l), onSpark(r), "k", how), s"$t $how")
+    }
+    // keys of two types: Spark's join, with its coercion
+    val mixed = Shim.keyJoin(keyed(StringType, 10, 1), keyed(LongType, 10, 2), "k", "left_semi")
+    assert(!Shim.isLocal(mixed))
+  }
+
+  test("load: endpoint validation, remove_unmatched, property edges and social links, driver form == Spark form") {
+    val e = graft.cli.Experiment
+    val r = ratings(StringType, 14)
+    // known users with duplicates and a null
+    val known = r.filter(col("ts") % 2 === 0).select("user_id")
+    val users = Shim.localTable(known.union(known))
+    val items = Shim.localTable(r.select(col("item_id"), concat(col("item_id"), lit("x")).as("title"))
+      .filter(col("ts") > 3).union(r.select(col("item_id"), lit(null).cast("string"))))
+    val map = r.select(col("item_id"), when(col("ts") % 4 =!= 0, concat(lit("dbr:"), col("item_id"))).as("URI"),
+      col("rating").as("score"))
+    assertSame(Shim.keyJoin(r, users, "user_id", "left_semi"),
+      Shim.keyJoin(onSpark(r), onSpark(users), "user_id", "left_semi"), "endpoint validation")
+    val kept = Shim.keyJoin(items, e.matchedItems(map), "item_id", "left_semi")
+    assertSame(kept, Shim.keyJoin(onSpark(items), e.matchedItems(onSpark(map)), "item_id", "left_semi"), "remove_unmatched")
+    // property edges: a string, a number and a string_list column with
+    // null and empty lists and empty values, off an item table and a
+    // left-joined map table
+    val enriched = Shim.localTable(r.select(col("item_id"),
+      when(col("ts") % 5 =!= 0, split(concat_ws("::", col("user_id"), lit(""), col("item_id")), "::")).as("subject"),
+      when(col("ts") % 3 =!= 0, col("user_id")).otherwise(lit("")).as("director"), col("rating").as("score")))
+    for ((df, cols) <- Seq((enriched, Seq("subject", "director", "score", "missing")),
+      (Shim.keyJoin(kept.select("item_id"), map, "item_id", "left"), Seq("URI", "score"))))
+      assertSame(graft.graph.KGraph.propertyEdges(df, "item_id", isUser = false, cols).get,
+        graft.graph.KGraph.propertyEdges(onSpark(df), "item_id", isUser = false, cols).get, cols.mkString(","))
+    val pairs = r.select(col("user_id").as("user1"), col("item_id").as("user2"))
+      .union(r.select(col("user_id").as("user1"), col("user_id").as("user2")))
+    assertSame(graft.etl.Converters.socialLinks(pairs, users.union(users)),
+      graft.etl.Converters.socialLinks(onSpark(pairs), onSpark(users).union(onSpark(users))), "social links")
   }
 
   test("binarize: driver form == Spark form") {
@@ -155,18 +260,22 @@ class DriverSpineSpec extends AnyFunSuite {
   }
 
   /** The etl-kcore shape: binarize, 4 k-core passes, a timestamp test
-    * split with a random validation split, popularity. */
+    * split with a random validation split, popularity. With `itemPad`,
+    * an item table of every item with a `blurb` of that many characters. */
   private def etlKcoreConfig(dir: java.nio.file.Path,
-                             models: String = "{name: popularity, parameters: {}}"): String = {
+                             models: String = "{name: popularity, parameters: {}}", itemPad: Int = 0): String = {
     val rnd = new scala.util.Random(11)
     val csv = new StringBuilder("user_id::string,item_id::string,rating::number,timestamp::number\n")
     for (u <- 1 to 60; i <- 1 to 40 if rnd.nextDouble() < 0.5 - (i % 5) * 0.08)
       csv.append(s"u$u,i$i${if (i % 3 == 0) "～" else ""},${1 + rnd.nextInt(5)},${rnd.nextInt(1000)}\n")
     java.nio.file.Files.writeString(dir.resolve("rating.csv"), csv.toString)
+    if (itemPad > 0) java.nio.file.Files.writeString(dir.resolve("item.csv"), "item_id::string,blurb::string\n" +
+      (1 to 40).map(i => s"i$i${if (i % 3 == 0) "～" else ""},${"x" * itemPad}\n").mkString)
+    val item = if (itemPad > 0) s", item: ${dir.resolve("item.csv")}" else ""
     val cfg = dir.resolve("exp.yml")
     java.nio.file.Files.writeString(cfg,
       s"""experiment:
-         |  dataset: {ratings: ${dir.resolve("rating.csv")}}
+         |  dataset: {ratings: ${dir.resolve("rating.csv")}$item}
          |  preprocess:
          |    - {method: binarize, parameters: {threshold: 4}}
          |    - {method: filter_kcore, parameters: {k: 6, target: user, iterations: 2}}
@@ -183,12 +292,30 @@ class DriverSpineSpec extends AnyFunSuite {
     cfg.toString
   }
 
-  test("an etl-kcore-shaped experiment starts jobs only in load, and reports load/preprocess/split seconds") {
+  test("an etl-kcore-shaped experiment starts no Spark job, and reports load/preprocess/split seconds") {
     val tmp = java.nio.file.Files.createTempDirectory("spine_jobs")
     graft.util.Scratch.deleteOnExit(tmp)
     val cfg = etlKcoreConfig(tmp)
     var report: DataFrame = null
     val labels = JobWatch.descriptions(spark) { report = graft.cli.Experiment.run(spark, cfg) }
+    assert(labels.isEmpty, labels.distinct)
+    val row = report.collect().head
+    for (c <- Seq("load_s", "preprocess_s", "split_s")) assert(row.getDouble(row.fieldIndex(c)) >= 0.0, c)
+    assert(row.getDouble(row.fieldIndex("MAP@10_mean")) > 0.0)
+  }
+
+  test("an etl-kcore-shaped experiment starts jobs only in load, and reports load/preprocess/split seconds") {
+    // inputs over the byte gate whose validated ratings are within the
+    // row gate: Spark reads them, the ratings leave load as a local table,
+    // and the spine starts no job
+    val tmp = java.nio.file.Files.createTempDirectory("spine_row_gate")
+    graft.util.Scratch.deleteOnExit(tmp)
+    val cfg = etlKcoreConfig(tmp, itemPad = 4000)
+    val rows = 5000L
+    val inputs = Seq("rating.csv", "item.csv").map(f => tmp.resolve(f).toString)
+    assert(!graft.cli.Experiment.readsOnDriver(spark, inputs, rows))
+    var report: DataFrame = null
+    val labels = JobWatch.descriptions(spark) { report = graft.cli.Experiment.run(spark, cfg, maxDriverRows = rows) }
     assert(labels.nonEmpty && labels.forall(_ == "experiment: load"), labels.distinct)
     val row = report.collect().head
     for (c <- Seq("load_s", "preprocess_s", "split_s")) assert(row.getDouble(row.fieldIndex(c)) >= 0.0, c)

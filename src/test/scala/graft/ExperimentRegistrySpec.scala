@@ -119,6 +119,7 @@ class ExperimentRegistrySpec extends AnyFunSuite {
          |    - {name: popularity, parameters: {}}
          |    - {name: transE, parameters: {embedding_dim: 4, epochs: 1, seed: 42}}
          |  evaluation: {k: 3, relevance_threshold: 3, metrics: [MAP]}
+         |  report: {file: $tmp/report.csv}
          |""".stripMargin)
     val sc = spark.sparkContext
     /** The job labels of one run with load gate bound `maxDriverRows`. */
@@ -130,21 +131,22 @@ class ExperimentRegistrySpec extends AnyFunSuite {
         after = sc.getLocalProperty("spark.job.description")
       }
       assert(after == "outer", "the caller's job description was not restored")
-      // jobs outside the load, preprocess and split stages and the fold
-      // phases keep the caller's description
-      assert(labels.forall(l => l == "outer" || l.matches("experiment: (load|preprocess|split)") ||
+      // every job carries the description of its experiment stage or
+      // fold phase, none the caller's
+      assert(labels.forall(l => l.matches("experiment: (load|preprocess|split)") ||
         l.matches("(popularity|transE) fold 1: (train|recommend|eval)")), s"unexpected job labels: ${labels.distinct}")
       labels
     }
-    // the driver regime: the ratings leave load as a local table, and
-    // neither fold starts a job (popularity ranks on the driver, transE
-    // trains on the local rows, MAP/nDCG read both in place)
+    // the driver regime: the inputs are read on the driver, neither fold
+    // starts a job (popularity ranks on the driver, transE trains on the
+    // local rows, MAP/nDCG read both in place), and the report, a local
+    // table, is written on the driver
     val driver = labelsOf(graft.cli.Experiment.MaxDriverRatings)
-    assert(driver.contains("experiment: load"), driver)
-    assert(!driver.exists(_.contains(" fold 1: ")), s"a driver-regime fold started a job: $driver")
+    assert(driver.isEmpty, s"a driver-regime experiment started a job: $driver")
     // the Spark spine, through the private bound: popularity ranks and
     // evaluates as Spark jobs; transE still trains and ranks on the
-    // driver (one train job, one eval job for its relevant test rows)
+    // driver (one train job, one eval job for its relevant test rows);
+    // the report is still a local table, written without a job
     val labels = labelsOf(0)
     for ((m, phase) <- Seq("popularity" -> "recommend", "popularity" -> "eval",
       "transE" -> "train", "transE" -> "eval"))
