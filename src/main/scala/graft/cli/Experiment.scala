@@ -132,8 +132,9 @@ object Experiment {
     *    11.8-14.9 s against 15.2-15.5 s); warm load 2.5-3.7 s against
     *    2.0-2.3 s, so a warm driver load loses up to 1.5 s here.
     *  - 360k ratings, 9.76 MB, over this bound: the validated ratings pass
-    *    the row gate too, and the driver-read table goes on as a Spark
-    *    frame over driver rows; cold call 22.6-23.6 s against 19.4-21.0 s,
+    *    the row gate too, and the driver-read table went on (before a
+    *    driver read kept its ratings local) as a Spark frame over driver
+    *    rows; cold call 22.6-23.6 s against 19.4-21.0 s,
     *    warm 8.9-11.7 s against 5.4-6.5 s.
     * No size between 270k and 360k was measured. */
   val MaxDriverBytes: Long = MaxDriverRatings * BytesPerRating
@@ -211,7 +212,8 @@ object Experiment {
     *
     * Two driver gates. Input files of at most [[MaxDriverBytes]] in all
     * are read and assembled on the driver ([[readsOnDriver]]): no Spark
-    * job, and every returned table is a local table. Otherwise Spark
+    * job, and every returned table is a local table, the ratings folded
+    * once into one however many rows they hold. Otherwise Spark
     * reads them, and a validated rating table of at most
     * [[MaxDriverRatings]] rows comes to the driver in one bounded collect
     * and is returned as a local table with the same schema. The
@@ -266,13 +268,17 @@ object Experiment {
     // J4 endpoint validation when dims are present (graph.py:293-302)
     for (u <- users) ratings = Shim.keyJoin(ratings, u.select("user_id"), "user_id", "left_semi")
     for (i <- items) ratings = Shim.keyJoin(ratings, i.select("item_id"), "item_id", "left_semi")
-    // the gate's scan reads every row. A table over the bound goes on as
-    // a frame over the scan's own RDD (`Dataset.rdd`, one per Dataset),
-    // whose shuffle output later jobs reuse instead of reading the CSV
-    ratings = KGraph.collectRows(ratings, maxDriverRows) match {
-      case Some(rows) => spark.createDataFrame(java.util.Arrays.asList(rows: _*), ratings.schema)
-      case None => spark.createDataFrame(ratings.rdd, ratings.schema)
-    }
+    // a driver read's chain is folded once into one local table, however
+    // many rows it holds. After a Spark read the row gate's scan reads
+    // every row; a table over the bound goes on as a frame over the
+    // scan's own RDD (`Dataset.rdd`, one per Dataset), whose shuffle
+    // output later jobs reuse instead of reading the CSV
+    ratings =
+      if (Shim.isLocal(ratings)) Shim.localTable(ratings)
+      else KGraph.collectRows(ratings, maxDriverRows) match {
+        case Some(rows) => spark.createDataFrame(java.util.Arrays.asList(rows: _*), ratings.schema)
+        case None => spark.createDataFrame(ratings.rdd, ratings.schema)
+      }
 
     // property edges, four sources into one channel:
     // item extra_features + map-match columns + enriched-table columns

@@ -68,12 +68,6 @@ object Converters {
     (dim, facts.join(dim, Seq(naturalKey)))
   }
 
-  /** Yelp-shaped JSONL: attributes kept where value == 'True' (P9,
-    * yelp.py:82-93); list-ish CSV-in-string fields split. */
-  def yelpAttributes(business: DataFrame): DataFrame =
-    business.withColumn("attributes",
-      expr("map_keys(map_filter(attributes, (k, v) -> v = 'True'))"))
-
   /** lastfm social links (lastfm.py:35): (user1, user2) pairs, both
     * endpoints validated against known users via semi-joins (J4). Over
     * local tables the semi-joins run on the driver (`Shim.keyJoin`). */

@@ -247,14 +247,4 @@ object KGraph {
     edges
       .join(users.select("user_id"), Seq("user_id"), "left_semi")
       .join(items.select("item_id"), Seq("item_id"), "left_semi")
-
-  /** Graph cardinality report (graph.py:37-44). */
-  def info(nodes: DataFrame, edges: DataFrame): DataFrame = {
-    val n = nodes.agg(
-      count(lit(1)).as("n_nodes"),
-      count(when(col("label").startsWith("User("), 1)).as("n_users"),
-      count(when(col("label").startsWith("Item("), 1)).as("n_items"),
-      count(when(col("label").startsWith("Property("), 1)).as("n_properties"))
-    n.crossJoin(edges.agg(count(lit(1)).as("n_edges")))
-  }
 }

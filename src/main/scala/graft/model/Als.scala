@@ -1,37 +1,46 @@
 package graft.model
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
 import scala.util.hashing.MurmurHash3
 
-/** Explicit-feedback Alternating Least Squares matrix factorization
-  * (Koren/Bell/Volinsky 2009; Zhou et al. 2008 weighted-λ variant) —
-  * the second member of the MF family next to [[BprMf]]'s implicit
-  * pairwise model, plugged into the same registry (`als`).
+/** Alternating Least Squares matrix factorization, one solver for
+  * explicit feedback (Koren/Bell/Volinsky 2009; Zhou et al. 2008
+  * weighted-λ, registry `als`) and implicit feedback (Hu, Koren &
+  * Volinsky 2008, [[AlsImplicit]], registry `als_implicit`) — the MF
+  * family next to [[BprMf]]'s pairwise model.
   *
-  * Each sweep solves EXACT per-row normal equations: for user u,
-  * `(Σ_{i∈I_u} q_i q_iᵀ + λ·|I_u|·I) p_u = Σ r_ui q_i` (weighted-λ
-  * regularization), then symmetrically for items — no learning rate,
-  * convergence in a handful of sweeps, and the solve itself is a
-  * deterministic d×d Gaussian elimination. Same two-tier execution
-  * model as [[graft.kge.KgeTrainer]]/[[BprMf]]:
+  * Each sweep solves EXACT per-row normal equations, for users then
+  * symmetrically for items — no learning rate, convergence in a handful
+  * of sweeps, and the solve itself is a deterministic d×d Gaussian
+  * elimination. HKV write implicit ALS as explicit ALS plus confidence
+  * weights plus one YᵀY gram shared by every row, so the two differ only
+  * in their [[Als.Objective]]: how an observation enters its row's
+  * normal equations, whether the gram joins them, and the ridge. The
+  * sweeps below are written once and take it as a value. Same two-tier
+  * execution model as [[graft.kge.KgeTrainer]]/[[BprMf]]:
   *
   *  - DRIVER TIER ([[fit]]): factors on the driver; each half-sweep
-  *    broadcasts the fixed side, accumulates per-row (A, b) sparse
-  *    maps in mapPartitions, treeReduces, and solves on the driver.
-  *    `pinOrder` sorts the triplets onto one partition → bit-exact
-  *    across sessions (the q164 golden).
+  *    broadcasts the fixed side, accumulates per-row normal equations in
+  *    mapPartitions, treeReduces, and solves on the driver; the gram is
+  *    summed over the fixed side in index order. `pinOrder` sorts the
+  *    triplets onto one partition → bit-exact across sessions (the q164
+  *    and q168 goldens).
   *  - DISTRIBUTED TIER ([[fitDistributed]]): factor rows in
-  *    DataFrames; gather-join, per-partition combined (A, b)
-  *    accumulation, reduce per row, solve in the update map,
-  *    localCheckpoint per half-sweep.
+  *    DataFrames; gather-join, per-partition combined accumulation,
+  *    reduce per row, solve in the update map, localCheckpoint per
+  *    half-sweep; the gram is a treeAggregate of d(d+1)/2 doubles.
   *
-  * Both tiers share [[Als.accumulate]]/[[Als.solve]], so divergence
-  * can only be wiring (the seam-pinned parity spec's point).
+  * Both tiers share [[Als.Objective]] and [[Als.solve]], so divergence
+  * can only be wiring (the seam-pinned parity specs' point).
   */
 class Als(val dim: Int, val iters: Int, val lambda: Double, val seed: Long,
-          val pinOrder: Boolean = false) extends Serializable {
+          val pinOrder: Boolean = false, val objective: Als.Objective = Als.Explicit)
+    extends MfTrainer {
+
+  def nParams(nUsers: Int, nItems: Int): Long = (nUsers.toLong + nItems.toLong) * dim
 
   /** Driver-path item-factor init (users start at zero and are solved
     * in the first half-sweep). TEST SEAM paired with [[initItemTable]]. */
@@ -52,36 +61,28 @@ class Als(val dim: Int, val iters: Int, val lambda: Double, val seed: Long,
     val data = (if (pinOrder) dataRaw.sortBy(identity, numPartitions = 1)
                 else dataRaw).persist()
     data.count()
-    val d = dim; val lam = lambda
+    val d = dim; val lam = lambda; val obj = objective
     def halfSweep(fixed: Array[Array[Float]], byUserSide: Boolean, nRows: Int): Array[Array[Float]] = {
+      // the gram summed in index order: deterministic on the driver tier
+      val gram = if (!obj.withGram) None
+        else Some(fixed.foldLeft(new Array[Double](d * (d + 1) / 2)) { (g, v) =>
+          Als.gramAdd(d, v, g); g })
       val bc = spark.sparkContext.broadcast(fixed)
       val acc = data.mapPartitions { it =>
         val f = bc.value
-        val m = mutable.HashMap.empty[Int, (Array[Double], Array[Double], Array[Long])]
+        val m = mutable.HashMap.empty[Int, Als.NormalEq]
         it.foreach { case (u, i, r) =>
           val (key, vec) = if (byUserSide) (u, f(i)) else (i, f(u))
-          val e = m.getOrElseUpdate(key,
-            (new Array[Double](d * (d + 1) / 2), new Array[Double](d), new Array[Long](1)))
-          Als.accumulate(d, vec, r, e._1, e._2); e._3(0) += 1
+          m.getOrElseUpdate(key, new Als.NormalEq(d)).observe(obj, vec, r)
         }
         Iterator.single(m)
       }.treeReduce { (a, b) =>
-        b.foreach { case (k, (ab, bb, nb)) =>
-          a.get(k) match {
-            case Some((aa, ba, na)) =>
-              var i = 0; while (i < ab.length) { aa(i) += ab(i); i += 1 }
-              i = 0; while (i < bb.length) { ba(i) += bb(i); i += 1 }
-              na(0) += nb(0)
-            case None => a.update(k, (ab, bb, nb))
-          }
-        }
+        b.foreach { case (k, eb) => a.get(k).fold(a.update(k, eb))(_.add(eb)) }
         a
       }
       bc.destroy()
       val out = Array.fill(nRows)(new Array[Float](d))
-      acc.foreach { case (k, (aTri, b, n)) =>
-        out(k) = Als.solve(d, aTri, b, lam * n(0))
-      }
+      acc.foreach { case (k, e) => out(k) = e.solve(obj, lam, gram) }
       out
     }
     for (_ <- 0 until iters) {
@@ -110,7 +111,7 @@ class Als(val dim: Int, val iters: Int, val lambda: Double, val seed: Long,
   def fitDistributed(spark: SparkSession, ratings: DataFrame,
                      nUsers: Int, nItems: Int): (DataFrame, DataFrame) = {
     import spark.implicits._
-    val d = dim; val lam = lambda
+    val d = dim; val lam = lambda; val obj = objective
     var q = initItemTable(spark, nItems).persist()
     q.count()
     var p: DataFrame = null
@@ -119,6 +120,12 @@ class Als(val dim: Int, val iters: Int, val lambda: Double, val seed: Long,
       .persist()
     data.count()
     def halfSweep(fixed: DataFrame, byUserSide: Boolean): DataFrame = {
+      val bcGram: Option[Broadcast[Array[Double]]] =
+        if (!obj.withGram) None
+        else Some(spark.sparkContext.broadcast(fixed.select("vec").as[Array[Float]].rdd
+          .treeAggregate(new Array[Double](d * (d + 1) / 2))(
+            (g, v) => { Als.gramAdd(d, v, g); g },
+            (x, y) => { var i = 0; while (i < x.length) { x(i) += y(i); i += 1 }; x })))
       val fixedKey = if (byUserSide) "i" else "u"
       val outKey = if (byUserSide) "u" else "i"
       // the join's output is partitioned by the FIXED side's key, so
@@ -131,24 +138,23 @@ class Als(val dim: Int, val iters: Int, val lambda: Double, val seed: Long,
         .join(fixed.select(col("id").as(fixedKey), col("vec").as("fv")), Seq(fixedKey))
         .select(col(outKey).as("key"), col("fv"), col("r"))
         .repartition(col("key"))
-      gathered.as[(Int, Array[Float], Double)]
+      val solved = gathered.as[(Int, Array[Float], Double)]
         .rdd.mapPartitions { it =>
-          val m = mutable.HashMap.empty[Int, (Array[Double], Array[Double], Array[Long])]
+          val m = mutable.HashMap.empty[Int, Als.NormalEq]
           it.foreach { case (key, vec, r) =>
-            val e = m.getOrElseUpdate(key,
-              (new Array[Double](d * (d + 1) / 2), new Array[Double](d), new Array[Long](1)))
-            Als.accumulate(d, vec, r, e._1, e._2); e._3(0) += 1
+            m.getOrElseUpdate(key, new Als.NormalEq(d)).observe(obj, vec, r)
           }
           m.iterator
         }
-        .reduceByKey { (a, b) =>
-          var i = 0; while (i < a._1.length) { a._1(i) += b._1(i); i += 1 }
-          i = 0; while (i < a._2.length) { a._2(i) += b._2(i); i += 1 }
-          a._3(0) += b._3(0); a
-        }
-        .map { case (k, (aTri, bv, n)) => (k, Als.solve(d, aTri, bv, lam * n(0))) }
+        .reduceByKey(_.add(_))
+        .map { case (k, e) => (k, e.solve(obj, lam, bcGram.map(_.value))) }
         .toDF("id", "vec")
         .localCheckpoint(true)
+      // the eager localCheckpoint above is the consuming action — the
+      // gram broadcast is dead past it; without this, 2 retained
+      // broadcasts per iteration accumulate until session GC
+      bcGram.foreach(_.destroy())
+      solved
     }
     for (_ <- 0 until iters) {
       val newP = halfSweep(q, byUserSide = true)
@@ -162,40 +168,95 @@ class Als(val dim: Int, val iters: Int, val lambda: Double, val seed: Long,
     (p, q)
   }
 
-  /** Dispatch by parameter count, like the other trainers. */
-  def fitEmb(spark: SparkSession, ratings: DataFrame, nUsers: Int, nItems: Int):
-      (DataFrame, DataFrame) = {
-    val nParams = (nUsers.toLong + nItems.toLong) * dim
-    if (nParams <= graft.graph.KGraph.MaxDriverParams) {
-      val (p, q) = fit(spark, ratings, nUsers, nItems)
-      def wrap(arr: Array[Array[Float]]): DataFrame = {
-        import org.apache.spark.sql.types._
-        val rows = spark.sparkContext
-          .parallelize(arr.toIndexedSeq.zipWithIndex,
-            math.max(1, spark.sparkContext.defaultParallelism))
-          .map { case (v, id) => org.apache.spark.sql.Row(id, v.toIndexedSeq) }
-        spark.createDataFrame(rows, StructType(Seq(
-          StructField("id", IntegerType, nullable = false),
-          StructField("vec", ArrayType(FloatType, containsNull = false)))))
-      }
-      (wrap(p), wrap(q))
-    } else fitDistributed(spark, ratings, nUsers, nItems)
+  /** End-to-end recommendations over a rating frame: every (user, item)
+    * pair with a non-null rating is one observation at its max rating
+    * (max, not sum, so the aggregate is order-deterministic). A pair
+    * whose ratings are all null is no observation but stays seen, so it
+    * is never recommended. [[MfServing]] dense ids + size-gated
+    * dot-product serving, seen items excluded. */
+  def recs(spark: SparkSession, ratings: DataFrame, k: Int): DataFrame = {
+    val (pos, uIdx, iIdx, _) = MfServing.denseIds(ratings, Double.NegativeInfinity)
+    val nUsers = uIdx.count().toInt
+    val nItems = iIdx.count().toInt
+    val dense = ratings.join(uIdx, Seq("user_id")).join(iIdx, Seq("item_id"))
+      .groupBy("u", "i").agg(max("rating").as("r"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val (pDf, qDf) = MfServing.fitEmb(spark, this, dense.filter(col("r").isNotNull), nUsers, nItems)
+    val out = MfServing.topKRecs(spark, pDf, qDf, dim, bias = false,
+        dense.select("u", "i"), uIdx, iIdx, k, knownItemCount = nItems)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    out.count()
+    Seq(pos, uIdx, iIdx, dense).foreach(_.unpersist(blocking = false))
+    out
   }
 }
 
 object Als {
 
-  /** Add one observation to a row's normal equations: upper-triangle
-    * `A += v vᵀ` (row-major packed) and `b += r·v`. Doubles — the
-    * accumulation both tiers share. */
-  private[model] def accumulate(d: Int, v: Array[Float], r: Double,
-                                aTri: Array[Double], b: Array[Double]): Unit = {
+  /** What an ALS objective adds to the shared sweep: how one observation
+    * `(v, r)` enters its row's packed normal equations, whether the
+    * fixed side's gram `YᵀY` is added to every row, and the ridge. Passed
+    * into the sweeps' closures as a value, never through the trainer. */
+  trait Objective extends Serializable {
+    def accumulate(d: Int, v: Array[Float], r: Double, aTri: Array[Double], b: Array[Double]): Unit
+    def withGram: Boolean
+    /** The ridge of a row with `n` observations. */
+    def ridge(lambda: Double, n: Long): Double
+  }
+
+  /** Explicit feedback: for user u,
+    * `(Σ_{i∈I_u} q_i q_iᵀ + λ·|I_u|·I) p_u = Σ r_ui q_i` (weighted-λ
+    * regularization). */
+  case object Explicit extends Objective {
+    /** Upper-triangle `A += v vᵀ` (row-major packed) and `b += r·v`:
+      * A's products in float, every sum in double. */
+    def accumulate(d: Int, v: Array[Float], r: Double,
+                   aTri: Array[Double], b: Array[Double]): Unit = {
+      var idx = 0; var i = 0
+      while (i < d) {
+        val vi = v(i)
+        var j = i
+        while (j < d) { aTri(idx) += vi * v(j); idx += 1; j += 1 }
+        b(i) += r * vi
+        i += 1
+      }
+    }
+    def withGram: Boolean = false
+    def ridge(lambda: Double, n: Long): Double = lambda * n
+  }
+
+  /** One row's normal equations: packed upper-triangle A, b, and the
+    * number of observations in them. */
+  private[model] final class NormalEq(d: Int) extends Serializable {
+    val a = new Array[Double](d * (d + 1) / 2)
+    val b = new Array[Double](d)
+    var n = 0L
+
+    def observe(obj: Objective, v: Array[Float], r: Double): Unit = {
+      obj.accumulate(d, v, r, a, b); n += 1
+    }
+
+    def add(o: NormalEq): NormalEq = {
+      var i = 0; while (i < a.length) { a(i) += o.a(i); i += 1 }
+      i = 0; while (i < b.length) { b(i) += o.b(i); i += 1 }
+      n += o.n
+      this
+    }
+
+    /** The row's factor: `(A [+ gram] + ridge·I) x = b`. Consumes A. */
+    def solve(obj: Objective, lambda: Double, gram: Option[Array[Double]]): Array[Float] = {
+      gram.foreach { g => var i = 0; while (i < a.length) { a(i) += g(i); i += 1 } }
+      Als.solve(d, a, b, obj.ridge(lambda, n))
+    }
+  }
+
+  /** `g += v vᵀ` (packed upper triangle) — the per-half-sweep gram. */
+  private[model] def gramAdd(d: Int, v: Array[Float], g: Array[Double]): Unit = {
     var idx = 0; var i = 0
     while (i < d) {
-      val vi = v(i)
+      val vi = v(i).toDouble
       var j = i
-      while (j < d) { aTri(idx) += vi * v(j); idx += 1; j += 1 }
-      b(i) += r * vi
+      while (j < d) { g(idx) += vi * v(j); idx += 1; j += 1 }
       i += 1
     }
   }
@@ -251,58 +312,8 @@ object Als {
     x.map(_.toFloat)
   }
 
-  /** End-to-end ALS recommendations over a rating frame: ALL rated
-    * pairs train (explicit feedback), [[MfServing]] dense ids +
-    * dot-product serving, seen items excluded. */
+  /** Explicit-feedback ALS recommendations: `recs` of an [[Als]]. */
   def recs(spark: SparkSession, ratings: DataFrame, dim: Int, iters: Int,
-           lambda: Double, seed: Long, k: Int, pinOrder: Boolean = false): DataFrame = {
-    val (pos, uIdx, iIdx, _) = MfServing.denseIds(ratings, Double.NegativeInfinity)
-    val nUsers = uIdx.count().toInt
-    val nItems = iIdx.count().toInt
-    val dense = ratings.join(uIdx, Seq("user_id")).join(iIdx, Seq("item_id"))
-      .groupBy("u", "i").agg(max("rating").as("r"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (pDf, qDf) = new Als(dim, iters, lambda, seed, pinOrder)
-      .fitEmb(spark, dense, nUsers, nItems)
-    val out = MfServing.topKRecs(spark, pDf, qDf, dim, bias = false,
-        dense.select("u", "i"), uIdx, iIdx, k, knownItemCount = nItems)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    pos.unpersist(blocking = false)
-    uIdx.unpersist(blocking = false)
-    iIdx.unpersist(blocking = false)
-    dense.unpersist(blocking = false)
-    out
-  }
-}
-
-/** [[Recommender]] adapter: registry name `als`. Config keys:
-  * `embedding_dim`, `iters`, `lambda`, `seed`, `pin_order`. */
-class AlsRecommender(cfg: Map[String, String]) extends Recommender {
-  val name = "als"
-  private var sparkRef: SparkSession = _
-  private var trainRef: DataFrame = _
-  private var served: Option[DataFrame] = None
-
-  def train(spark: SparkSession, trainRatings: DataFrame,
-            propertyEdges: Option[DataFrame] = None,
-            socialEdges: Option[DataFrame] = None): Recommender = {
-    sparkRef = spark; trainRef = trainRatings; this
-  }
-
-  def recommend(k: Int): DataFrame = {
-    val out = Als.recs(sparkRef, trainRef,
-      dim = cfg.getOrElse("embedding_dim", "16").toInt,
-      iters = cfg.getOrElse("iters", "5").toInt,
-      lambda = cfg.getOrElse("lambda", "0.1").toDouble,
-      seed = cfg.getOrElse("seed", "42").toLong,
-      k = k,
-      pinOrder = cfg.getOrElse("pin_order", "false").toBoolean)
-    served = Some(out)
-    out
-  }
-
-  override def release(): Unit = {
-    served.foreach(_.unpersist(blocking = false)); served = None
-  }
+           lambda: Double, seed: Long, k: Int, pinOrder: Boolean = false): DataFrame =
+    new Als(dim, iters, lambda, seed, pinOrder).recs(spark, ratings, k)
 }

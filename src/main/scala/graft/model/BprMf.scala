@@ -32,8 +32,8 @@ import scala.util.hashing.MurmurHash3
   *    left-join-updates the tables with localCheckpoint lineage
   *    truncation. Init/negatives use order-free per-element hashes
   *    (retry-safe) — the RNG deviation DEVIATIONS #5 already covers.
-  *  - [[fitEmb]] dispatches on total parameter count, like the KGE
-  *    regime gate in [[graft.kge.KgeRecommender]].
+  *  - [[MfServing.fitEmb]] picks the tier by total parameter count,
+  *    like the KGE regime gate in [[graft.kge.KgeRecommender]].
   *
   * Negative sampling collisions (j happens to be a positive, or j = i)
   * are kept, not resampled — a pure function of (u, i, epoch) is what
@@ -41,7 +41,9 @@ import scala.util.hashing.MurmurHash3
   * a (near-)zero pairwise gradient, the classic bounded-bias tradeoff.
   */
 class BprMf(val dim: Int, val epochs: Int, val lr: Double, val reg: Double,
-            val seed: Long, val pinOrder: Boolean = false) extends Serializable {
+            val seed: Long, val pinOrder: Boolean = false) extends MfTrainer {
+
+  def nParams(nUsers: Int, nItems: Int): Long = nUsers.toLong * dim + nItems.toLong * (dim + 1)
 
   /** Driver-path init: sequential seeded RNG (the layout the q162
     * golden pins). TEST SEAM — the parity spec overrides this and
@@ -212,28 +214,6 @@ class BprMf(val dim: Int, val epochs: Int, val lr: Double, val reg: Double,
     data.unpersist()
     (p, q)
   }
-
-  /** Factor tables as DataFrames `(id: int, vec: array<float>)`:
-    * driver tier up to [[graft.graph.KGraph.MaxDriverParams]] total
-    * floats, distributed above — the dispatch serving paths call. */
-  def fitEmb(spark: SparkSession, positives: DataFrame, nUsers: Int, nItems: Int):
-      (DataFrame, DataFrame) = {
-    val nParams = nUsers.toLong * dim + nItems.toLong * (dim + 1)
-    if (nParams <= graft.graph.KGraph.MaxDriverParams) {
-      val (p, q) = fit(spark, positives, nUsers, nItems)
-      def wrap(arr: Array[Array[Float]]): DataFrame = {
-        import org.apache.spark.sql.types._
-        val rows = spark.sparkContext
-          .parallelize(arr.toIndexedSeq.zipWithIndex,
-            math.max(1, spark.sparkContext.defaultParallelism))
-          .map { case (v, id) => org.apache.spark.sql.Row(id, v.toIndexedSeq) }
-        spark.createDataFrame(rows, StructType(Seq(
-          StructField("id", IntegerType, nullable = false),
-          StructField("vec", ArrayType(FloatType, containsNull = false)))))
-      }
-      (wrap(p), wrap(q))
-    } else fitDistributed(spark, positives, nUsers, nItems)
-  }
 }
 
 object BprMf {
@@ -261,8 +241,8 @@ object BprMf {
 
   /** End-to-end BPR recommendations over a rating frame: implicit
     * positives at `rating ≥ minRating`, [[graft.util.DenseIndex]] ids
-    * (decomposed — no single-partition window), fitEmb-dispatched
-    * training, then dot+bias serving: per-user top-(k + maxRated)
+    * (decomposed — no single-partition window), [[MfServing.fitEmb]]-
+    * dispatched training, then dot+bias serving: per-user top-(k + maxRated)
     * against the broadcast item matrix (a bounded per-partition heap,
     * the [[graft.walk.DeepWalkRecommender]] k' trick), seen items
     * anti-joined away, final rank ≤ k. Serving is size-gated inside
@@ -277,8 +257,8 @@ object BprMf {
     val (pos, uIdx, iIdx, dense) = MfServing.denseIds(ratings, minRating)
     val nUsers = uIdx.count().toInt
     val nItems = iIdx.count().toInt
-    val (pDf, qDf) = new BprMf(dim, epochs, lr, reg, seed, pinOrder)
-      .fitEmb(spark, dense, nUsers, nItems)
+    val (pDf, qDf) = MfServing.fitEmb(spark, new BprMf(dim, epochs, lr, reg, seed, pinOrder),
+      dense, nUsers, nItems)
     val out = MfServing.topKRecs(spark, pDf, qDf, dim, bias = true,
         dense, uIdx, iIdx, k, knownItemCount = nItems)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -287,40 +267,5 @@ object BprMf {
     uIdx.unpersist(blocking = false)
     iIdx.unpersist(blocking = false)
     out
-  }
-}
-
-/** [[Recommender]] adapter so BPR plugs into the Experiment registry
-  * (the reference's model2class.py extension point) as `bpr`. Config
-  * keys: `embedding_dim`, `epochs`, `lr`, `reg`, `seed`,
-  * `min_rating`, `pin_order`. */
-class BprRecommender(cfg: Map[String, String]) extends Recommender {
-  val name = "bpr"
-  private var sparkRef: SparkSession = _
-  private var trainRef: DataFrame = _
-  private var served: Option[DataFrame] = None
-
-  def train(spark: SparkSession, trainRatings: DataFrame,
-            propertyEdges: Option[DataFrame] = None,
-            socialEdges: Option[DataFrame] = None): Recommender = {
-    sparkRef = spark; trainRef = trainRatings; this
-  }
-
-  def recommend(k: Int): DataFrame = {
-    val out = BprMf.recs(sparkRef, trainRef,
-      minRating = cfg.getOrElse("min_rating", "4.0").toDouble,
-      dim = cfg.getOrElse("embedding_dim", "16").toInt,
-      epochs = cfg.getOrElse("epochs", "5").toInt,
-      lr = cfg.getOrElse("lr", "0.05").toDouble,
-      reg = cfg.getOrElse("reg", "0.01").toDouble,
-      seed = cfg.getOrElse("seed", "42").toLong,
-      k = k,
-      pinOrder = cfg.getOrElse("pin_order", "false").toBoolean)
-    served = Some(out)
-    out
-  }
-
-  override def release(): Unit = {
-    served.foreach(_.unpersist(blocking = false)); served = None
   }
 }

@@ -79,38 +79,3 @@ object Item2Vec {
     out
   }
 }
-
-/** [[Recommender]] adapter: registry name `item2vec`. Config keys:
-  * `embedding_dim`, `window`, `epochs`, `lr`, `negative`,
-  * `min_rating`, `seed`, `pin_order`. */
-class Item2VecRecommender(cfg: Map[String, String]) extends Recommender {
-  val name = "item2vec"
-  private var sparkRef: SparkSession = _
-  private var trainRef: DataFrame = _
-  private var served: Option[DataFrame] = None
-
-  def train(spark: SparkSession, trainRatings: DataFrame,
-            propertyEdges: Option[DataFrame] = None,
-            socialEdges: Option[DataFrame] = None): Recommender = {
-    sparkRef = spark; trainRef = trainRatings; this
-  }
-
-  def recommend(k: Int): DataFrame = {
-    val out = Item2Vec.recs(sparkRef, trainRef,
-      minRating = cfg.getOrElse("min_rating", "4.0").toDouble,
-      dim = cfg.getOrElse("embedding_dim", "32").toInt,
-      window = cfg.getOrElse("window", "100").toInt,
-      epochs = cfg.getOrElse("epochs", "3").toInt,
-      lr = cfg.getOrElse("lr", "0.025").toDouble,
-      negative = cfg.getOrElse("negative", "5").toInt,
-      seed = cfg.getOrElse("seed", "42").toLong,
-      k = k,
-      pinOrder = cfg.getOrElse("pin_order", "false").toBoolean)
-    served = Some(out)
-    out
-  }
-
-  override def release(): Unit = {
-    served.foreach(_.unpersist(blocking = false)); served = None
-  }
-}

@@ -5,14 +5,33 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import scala.collection.mutable
 
-/** Shared dot-product serving for the matrix-factorization family
-  * ([[BprMf]], [[Als]], [[AlsImplicit]]): score every (user, item) as
-  * `p·q (+ bias)`, keep a bounded per-user heap of size `k + maxRated`
-  * (the [[graft.walk.DeepWalkRecommender]] k' trick guarantees ≥ k
-  * unseen survivors), anti-join the seen pairs, rank ≤ k.
+/** A matrix-factorization trainer as [[MfServing.fitEmb]] sees it: its
+  * parameter count and its two fits over `(u, i[, r])` dense ids, the
+  * driver fit returning (P, Q) arrays indexed by id. */
+trait MfTrainer extends Serializable {
+  def nParams(nUsers: Int, nItems: Int): Long
+  def fit(spark: SparkSession, ratings: DataFrame, nUsers: Int, nItems: Int):
+      (Array[Array[Float]], Array[Array[Float]])
+  def fitDistributed(spark: SparkSession, ratings: DataFrame, nUsers: Int, nItems: Int):
+      (DataFrame, DataFrame)
+}
+
+/** The matrix-factorization family's shared plumbing ([[BprMf]],
+  * [[Als]] under either objective, [[AlsImplicit]]): one factor-table
+  * dispatch and one dot-product serving.
   *
-  * [[kernel]] picks one of two value-identical kernels from the item
-  * count (MfServingSpec pins bit-equality by calling both directly):
+  * [[fitEmb]] turns a [[MfTrainer]]'s fit into factor tables
+  * `(id: int, vec: array<float>)`: up to
+  * [[graft.graph.KGraph.MaxDriverParams]] model floats the driver fit's
+  * arrays, wrapped, else the distributed fit's own tables. A model gives
+  * only its parameter count and its two fits.
+  *
+  * [[topKRecs]] scores every (user, item) as `p·q (+ bias)`, keeps a
+  * bounded per-user heap of size `k + maxRated` (the
+  * [[graft.walk.DeepWalkRecommender]] k' trick guarantees ≥ k unseen
+  * survivors), anti-joins the seen pairs and ranks ≤ k. [[kernel]]
+  * picks one of two value-identical kernels from the item count
+  * (MfServingSpec pins bit-equality by calling both directly):
   *
   *  - item catalogs up to 2M rows (≈ 136 MB at d=16 floats):
   *    [[topKBroadcast]] collects and broadcasts the item matrix,
@@ -42,6 +61,28 @@ private[model] object MfServing {
     * or "block-shuffle". */
   private[graft] def kernel(nItems: Long): String =
     if (nItems <= CollectMaxItems) "broadcast-heap" else "block-shuffle"
+
+  /** Factor tables `(id: int, vec: array<float>)` of `trainer` fit on
+    * `ratings`: the driver fit within [[graft.graph.KGraph.MaxDriverParams]]
+    * model floats, the distributed fit above. */
+  def fitEmb(spark: SparkSession, trainer: MfTrainer, ratings: DataFrame,
+             nUsers: Int, nItems: Int): (DataFrame, DataFrame) =
+    if (trainer.nParams(nUsers, nItems) > graft.graph.KGraph.MaxDriverParams)
+      trainer.fitDistributed(spark, ratings, nUsers, nItems)
+    else {
+      val (p, q) = trainer.fit(spark, ratings, nUsers, nItems)
+      def wrap(arr: Array[Array[Float]]): DataFrame = {
+        import org.apache.spark.sql.types._
+        val rows = spark.sparkContext
+          .parallelize(arr.toIndexedSeq.zipWithIndex,
+            math.max(1, spark.sparkContext.defaultParallelism))
+          .map { case (v, id) => org.apache.spark.sql.Row(id, v.toIndexedSeq) }
+        spark.createDataFrame(rows, StructType(Seq(
+          StructField("id", IntegerType, nullable = false),
+          StructField("vec", ArrayType(FloatType, containsNull = false)))))
+      }
+      (wrap(p), wrap(q))
+    }
 
   /** @param pDf     user factors (id, vec)
     * @param qDf     item factors (id, vec) under dense ids 0..nItems-1

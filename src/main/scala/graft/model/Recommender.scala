@@ -55,14 +55,78 @@ trait Recommender {
   def release(): Unit = ()
 }
 
+/** The registry adapter of a model whose recommendations are one call
+  * over the train frame (the MF family and item2vec): `train` remembers
+  * the frame, `recommend` computes `recs(spark, train, k)` (persisted by
+  * the model), and `release` unpersists it. */
+class FrameRecommender(val name: String, recs: (SparkSession, DataFrame, Int) => DataFrame)
+    extends Recommender {
+  private var sparkRef: SparkSession = _
+  private var trainRef: DataFrame = _
+  private var served: Option[DataFrame] = None
+
+  def train(spark: SparkSession, trainRatings: DataFrame,
+            propertyEdges: Option[DataFrame] = None,
+            socialEdges: Option[DataFrame] = None): Recommender = {
+    sparkRef = spark; trainRef = trainRatings; this
+  }
+
+  def recommend(k: Int): DataFrame = {
+    val out = recs(sparkRef, trainRef, k)
+    served = Some(out)
+    out
+  }
+
+  override def release(): Unit = {
+    served.foreach(_.unpersist(blocking = false)); served = None
+  }
+}
+
 object Recommenders {
+  type Factory = Map[String, String] => Recommender
+
   /** name -> factory, mirroring model2class.py. Config is a flat
-    * string map (the YAML `parameters` block). */
-  def registry: Map[String, Map[String, String] => Recommender] = Map(
+    * string map (the YAML `parameters` block); each entry reads its own
+    * keys, with their defaults. */
+  def registry: Map[String, Factory] = Map[String, Factory](
     "popularity" -> (cfg => new PopularityRecommender(cfg)),
-    "bpr" -> (cfg => new BprRecommender(cfg)),
-    "als" -> (cfg => new AlsRecommender(cfg)),
-    "als_implicit" -> (cfg => new AlsImplicitRecommender(cfg)),
-    "item2vec" -> (cfg => new Item2VecRecommender(cfg))
+    "bpr" -> (cfg => new FrameRecommender("bpr", (spark, train, k) =>
+      BprMf.recs(spark, train,
+        minRating = cfg.getOrElse("min_rating", "4.0").toDouble,
+        dim = cfg.getOrElse("embedding_dim", "16").toInt,
+        epochs = cfg.getOrElse("epochs", "5").toInt,
+        lr = cfg.getOrElse("lr", "0.05").toDouble,
+        reg = cfg.getOrElse("reg", "0.01").toDouble,
+        seed = cfg.getOrElse("seed", "42").toLong,
+        k = k,
+        pinOrder = cfg.getOrElse("pin_order", "false").toBoolean))),
+    "als" -> (cfg => new FrameRecommender("als", (spark, train, k) =>
+      Als.recs(spark, train,
+        dim = cfg.getOrElse("embedding_dim", "16").toInt,
+        iters = cfg.getOrElse("iters", "5").toInt,
+        lambda = cfg.getOrElse("lambda", "0.1").toDouble,
+        seed = cfg.getOrElse("seed", "42").toLong,
+        k = k,
+        pinOrder = cfg.getOrElse("pin_order", "false").toBoolean))),
+    "als_implicit" -> (cfg => new FrameRecommender("als_implicit", (spark, train, k) =>
+      AlsImplicit.recs(spark, train,
+        dim = cfg.getOrElse("embedding_dim", "16").toInt,
+        iters = cfg.getOrElse("iters", "5").toInt,
+        lambda = cfg.getOrElse("lambda", "0.1").toDouble,
+        alpha = cfg.getOrElse("alpha", "40.0").toDouble,
+        seed = cfg.getOrElse("seed", "42").toLong,
+        k = k,
+        pinOrder = cfg.getOrElse("pin_order", "false").toBoolean))),
+    "item2vec" -> (cfg => new FrameRecommender("item2vec", (spark, train, k) =>
+      Item2Vec.recs(spark, train,
+        minRating = cfg.getOrElse("min_rating", "4.0").toDouble,
+        dim = cfg.getOrElse("embedding_dim", "32").toInt,
+        window = cfg.getOrElse("window", "100").toInt,
+        epochs = cfg.getOrElse("epochs", "3").toInt,
+        lr = cfg.getOrElse("lr", "0.025").toDouble,
+        negative = cfg.getOrElse("negative", "5").toInt,
+        seed = cfg.getOrElse("seed", "42").toLong,
+        k = k,
+        pinOrder = cfg.getOrElse("pin_order", "false").toBoolean)))
   ) ++ graft.walk.DeepWalkRecommender.registry ++ graft.kge.KgeRecommender.registry
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.model.Als
+import graft.model.{Als, AlsImplicit}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -85,6 +85,29 @@ class AlsSpec extends AnyFunSuite {
     out.foreach { case (u, i, rk) =>
       assert(rk >= 1 && rk <= 3)
       assert(!seen((u, i)), s"recommended rated item $i to $u")
+    }
+  }
+
+  test("a pair whose only ratings are null is no observation and is never recommended") {
+    val rated = for { u <- 0 until 8; i <- 0 until 12 if (u + i) % 3 != 0 }
+      yield (u.toLong, i.toLong, Option(((u * i) % 5 + 1).toDouble))
+    // user 0 and item 0 have other ratings, (0, 0) only a null one; (1, 0)
+    // has a null rating next to a number
+    val clean = rated.toDF("user_id", "item_id", "rating")
+    val withNull = (rated ++ Seq((0L, 0L, None), (1L, 0L, None))).toDF("user_id", "item_id", "rating")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
+    for ((name, recs) <- Seq[(String, (org.apache.spark.sql.DataFrame, Int) => org.apache.spark.sql.DataFrame)](
+        "als" -> ((df, k) => Als.recs(spark, df, dim = 3, iters = 3, lambda = 0.1, seed = 42L, k = k,
+          pinOrder = true)),
+        "als_implicit" -> ((df, k) => AlsImplicit.recs(spark, df, dim = 3, iters = 3, lambda = 0.1,
+          alpha = 20.0, seed = 42L, k = k, pinOrder = true)))) {
+      val got = rows(recs(withNull, 3))
+      // the same fit as without the null rows; user 0's list skips item 0
+      val ref = rows(recs(clean, 4))
+      val user0 = ref.filter(r => r._1 == 0L && r._2 != 0L).sortBy(_._3).take(3)
+        .zipWithIndex.map { case ((u, i, _), j) => (u, i, j + 1) }
+      assert(got.sorted == (ref.filter(r => r._1 != 0L && r._3 <= 3) ++ user0).sorted, name)
     }
   }
 }

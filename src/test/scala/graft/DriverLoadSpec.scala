@@ -270,4 +270,27 @@ class DriverLoadSpec extends AnyFunSuite {
     assert(sorted(under.propertyEdges.get.collect().toSeq) == sorted(over.propertyEdges.get.collect().toSeq))
     assert(sorted(under.items.get.collect().toSeq) == sorted(over.items.get.collect().toSeq))
   }
+
+  test("a driver read over the row gate keeps its ratings one local table") {
+    val dir = tempDir("row_gate")
+    // 400 short rating rows: the byte gate of 200 ratings (5,400 bytes)
+    // passes, while the rows exceed the row gate
+    val csv = new StringBuilder("user_id::string,item_id::string,rating::number\n")
+    for (u <- 1 to 20; i <- 1 to 20) csv.append(s"$u,$i,${(u + i) % 5 + 1}\n")
+    val path = write(dir.resolve("rating.csv"), csv.toString)
+    val ds = new java.util.HashMap[String, Object]()
+    ds.put("ratings", path)
+    assert(Experiment.readsOnDriver(spark, Seq(path), 200))
+    var bundle: Experiment.DatasetBundle = null
+    assert(JobWatch.jobs(spark) { bundle = Experiment.loadDataset(spark, ds, 200) }.isEmpty)
+    // folded once: the ratings are one LocalRelation
+    assert(bundle.ratings.queryExecution.analyzed
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    val local = Shim.localRows(bundle.ratings).get
+    assert(local.size == 400)
+    val viaSpark = Experiment.loadDataset(spark, ds, 0).ratings
+    assert(!Shim.isLocal(viaSpark))
+    assert(bundle.ratings.schema == viaSpark.schema)
+    assert(sorted(local) == sorted(viaSpark.collect().toSeq))
+  }
 }

@@ -73,8 +73,8 @@ class MfServingSpec extends AnyFunSuite {
       .toDF("user_id", "item_id", "rating")
     val (pos, uIdx, iIdx, dense) = MfServing.denseIds(ratings, 1.0)
     val nU = uIdx.count().toInt; val nI = iIdx.count().toInt
-    val (pDf, qDf) = new BprMf(4, 2, 0.05, 0.01, 42L, pinOrder = true)
-      .fitEmb(spark, dense, nU, nI)
+    val (pDf, qDf) = MfServing.fitEmb(spark, new BprMf(4, 2, 0.05, 0.01, 42L, pinOrder = true),
+      dense, nU, nI)
     val small = candidates(MfServing.topKBroadcast(spark, pDf, qDf, 4, bias = true, 9, nI))
     val big = candidates(MfServing.topKBlockShuffle(spark, pDf, qDf, 4, bias = true, 9))
     assert(small.length == nU * 9 && small == big)
