@@ -7,12 +7,10 @@ import graft.prep.Preprocess
 import graft.report.Reporter
 import graft.schema.TypedCsv
 import graft.split.EdgeSplits
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.{LocalCsv, Shim}
-import org.apache.spark.sql.types.{DataType, DoubleType, StringType, StructField}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.{StringType, StructField}
 import org.yaml.snakeyaml.Yaml
 import scala.jdk.CollectionConverters._
 
@@ -74,14 +72,6 @@ object Experiment {
       case _ => Seq.empty
     }
 
-  /** Entity-column -> Property-edge explosion (`_add_node_property`,
-    * graph.py:246-257) — hoisted to [[graft.graph.KGraph.propertyEdges]]
-    * so the q174 oracle gates the exact construction this loader feeds
-    * into `triples: all` training. */
-  private def propertyEdgesFrom(df: DataFrame, idCol: String, isUser: Boolean,
-                                cols: Seq[String]): Option[DataFrame] =
-    graft.graph.KGraph.propertyEdges(df, idCol, isUser, cols)
-
   /** The loaded dataset: validated rating edges, optional dims, and the
     * two edge channels models consume (property edges feed the KG
     * triples; social edges feed only the walk graph). */
@@ -119,8 +109,9 @@ object Experiment {
     * whole load runs on the driver and starts no Spark job: each CSV is
     * read by [[TypedCsv.readLocal]], and the dedup, the endpoint
     * validation, `remove_unmatched`, the property edges and the social
-    * links take their driver forms. A larger input, or one that is not a
-    * file or a directory of files, is read by Spark as before.
+    * links are Spark plans over local tables, folded on the driver where
+    * they are read (`Shim.localTable`). A larger input, or one that is not
+    * a file or a directory of files, is read by Spark as before.
     *
     * Measured on perfbench etl-kcore inputs (seeds 5001-5003, 4 cores),
     * `Experiment.run` in a fresh JVM, then twice more in it, driver load
@@ -153,45 +144,10 @@ object Experiment {
 
   /** Duplicate (user, item) edges: last-wins in nx, whose deterministic
     * analogue here is the max rating and the max ts (0 without a ts
-    * column). A local table is grouped on the driver into a local table
-    * with the aggregate's schema: keys compare by `Shim.groupKey`, a max
-    * skips nulls and ranks NaN above every number, as Spark's `max`
-    * does. */
-  private[graft] def dedupRatings(raw: DataFrame): DataFrame = {
-    val hasTs = raw.columns.contains("ts")
-    val viaSpark = raw.groupBy("user_id", "item_id")
-      .agg(max("rating").as("rating"), (if (hasTs) max("ts") else lit(0L)).as("ts"))
-    val maxima = (Seq("rating") ++ (if (hasTs) Seq("ts") else Nil)).map(c => greater(raw.schema(c).dataType))
-    val local = for {
-      rows <- Shim.localRows(raw.select((Seq("user_id", "item_id", "rating") ++
-        (if (hasTs) Seq("ts") else Nil)).map(col): _*)) if maxima.forall(_.isDefined)
-    } yield {
-      // (user, item, maxima) by grouping key; a group's keys as Spark
-      // outputs them, -0.0 as 0.0
-      val groups = scala.collection.mutable.LinkedHashMap.empty[(Any, Any), Array[Any]]
-      def normalized(v: Any): Any = v match { case d: Double if d == 0.0 => 0.0; case other => other }
-      rows.foreach { r =>
-        val group = groups.getOrElseUpdate((Shim.groupKey(r.get(0)), Shim.groupKey(r.get(1))),
-          Array[Any](normalized(r.get(0)), normalized(r.get(1))) ++ maxima.map(_ => null))
-        maxima.indices.foreach { m =>
-          val (v, best) = (r.get(2 + m), group(2 + m))
-          if (v != null && (best == null || maxima(m).get(v, best))) group(2 + m) = v
-        }
-      }
-      groups.valuesIterator.map(g => Row.fromSeq(g.toSeq ++ (if (hasTs) Nil else Seq(0L)))).toSeq
-    }
-    local.fold(viaSpark)(rows => raw.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), viaSpark.schema))
-  }
-
-  /** Spark's `>` over the types a typed CSV gives a rating or ts column,
-    * number and string: NaN above every double, strings by their UTF-8
-    * bytes. */
-  private def greater(dataType: DataType): Option[(Any, Any) => Boolean] = dataType match {
-    case DoubleType => Some((a, b) => SQLOrderingUtil.compareDoubles(a.asInstanceOf[Double], b.asInstanceOf[Double]) > 0)
-    case StringType => Some((a, b) =>
-      UTF8String.fromString(a.asInstanceOf[String]).compareTo(UTF8String.fromString(b.asInstanceOf[String])) > 0)
-    case _ => None
-  }
+    * column). */
+  private[graft] def dedupRatings(raw: DataFrame): DataFrame =
+    raw.groupBy("user_id", "item_id")
+      .agg(max("rating").as("rating"), (if (raw.columns.contains("ts")) max("ts") else lit(0L)).as("ts"))
 
   /** The `remove_unmatched` filter (graph.py:222-230): the item ids
     * whose `map.csv` row has a non-null URI, to semi-join the items with.
@@ -218,10 +174,10 @@ object Experiment {
     * [[MaxDriverRatings]] rows comes to the driver in one bounded collect
     * and is returned as a local table with the same schema. The
     * operators of the experiment spine (binarize, k-core, the splits,
-    * popularity, MAP/nDCG) then take their driver forms, which start no
-    * Spark job (`Shim.localRows`). A larger table stays a Spark plan, over
-    * the rows of the gate's own scan: its jobs skip the stages that read
-    * and aggregate the CSV. */
+    * popularity, MAP/nDCG) then run on the driver, which starts no Spark
+    * job (`Shim.localTable`). A larger table stays a Spark plan, over the
+    * rows of the gate's own scan: its jobs skip the stages that read and
+    * aggregate the CSV. */
   def loadDataset(spark: SparkSession, ds: Cfg): DatasetBundle =
     loadDataset(spark, ds, MaxDriverRatings)
 
@@ -261,13 +217,13 @@ object Experiment {
       enrichCfg.exists(e => str(e, "remove_unmatched", "false").toBoolean)
     val matched = if (removeUnmatched) mapDf.map(matchedItems) else None
     val items = (itemsRaw, matched) match {
-      case (Some(i), Some(mm)) => Some(Shim.keyJoin(i, mm, "item_id", "left_semi"))
+      case (Some(i), Some(mm)) => Some(i.join(mm, Seq("item_id"), "left_semi"))
       case _ => itemsRaw
     }
     var ratings = dedupRatings(ratingsRaw)
     // J4 endpoint validation when dims are present (graph.py:293-302)
-    for (u <- users) ratings = Shim.keyJoin(ratings, u.select("user_id"), "user_id", "left_semi")
-    for (i <- items) ratings = Shim.keyJoin(ratings, i.select("item_id"), "item_id", "left_semi")
+    for (u <- users) ratings = ratings.join(u.select("user_id"), Seq("user_id"), "left_semi")
+    for (i <- items) ratings = ratings.join(i.select("item_id"), Seq("item_id"), "left_semi")
     // a driver read's chain is folded once into one local table, however
     // many rows it holds. After a Spark read the row gate's scan reads
     // every row; a table over the bound goes on as a frame over the
@@ -288,10 +244,10 @@ object Experiment {
     // remove_unmatched-filtered) item set, mirroring the reference's
     // left-merge onto df_item
     val itemFeatureEdges = items.flatMap(i =>
-      propertyEdgesFrom(i, "item_id", isUser = false, features(ds, "item")))
+      KGraph.propertyEdges(i, "item_id", isUser = false, features(ds, "item")))
     val mapEdges: Option[DataFrame] = mapDf.flatMap { m =>
-      val base = items.map(i => Shim.keyJoin(i.select("item_id"), m, "item_id", "left")).getOrElse(m)
-      propertyEdgesFrom(base, "item_id", isUser = false,
+      val base = items.map(_.select("item_id").join(m, Seq("item_id"), "left")).getOrElse(m)
+      KGraph.propertyEdges(base, "item_id", isUser = false,
         m.columns.filterNot(_ == "item_id").toSeq)
     }
     val enrichEdges: Option[DataFrame] = for {
@@ -300,12 +256,12 @@ object Experiment {
       edges <- {
         val enriched0 = read(path)
         val enriched = items.map(i =>
-          Shim.keyJoin(enriched0, i.select("item_id"), "item_id", "left_semi")).getOrElse(enriched0)
-        propertyEdgesFrom(enriched, "item_id", isUser = false, propertyNames(enrich))
+          enriched0.join(i.select("item_id"), Seq("item_id"), "left_semi")).getOrElse(enriched0)
+        KGraph.propertyEdges(enriched, "item_id", isUser = false, propertyNames(enrich))
       }
     } yield edges
     val userFeatureEdges = users.flatMap(u =>
-      propertyEdgesFrom(u, "user_id", isUser = true, features(ds, "user")))
+      KGraph.propertyEdges(u, "user_id", isUser = true, features(ds, "user")))
     val propertyEdges = Seq(itemFeatureEdges, mapEdges, enrichEdges, userFeatureEdges)
       .flatten.reduceOption(_ unionByName _)
 
@@ -519,10 +475,14 @@ object Experiment {
       val (train, testDf) = if (model.readsLocalTables) localFold else sparkFold(foldIdx)
       val t0 = System.nanoTime()
       val phaseSecs = scala.collection.mutable.ArrayBuffer.empty[Double]
-      // every Spark job of a phase is labelled "<model> fold <i>: <phase>";
+      // every Spark job of a phase is labelled "<model> fold <i>: <phase>",
+      // and so is a failure inside it, with the original as its cause;
       // the phase's seconds go to the report's fold-<i>_<phase>_s column
       def phase[T](name: String)(body: => T): T = {
-        val (out, secs) = labelled(spark, s"$modelName fold ${foldIdx + 1}: $name")(body)
+        val label = s"$modelName fold ${foldIdx + 1}: $name"
+        val (out, secs) =
+          try labelled(spark, label)(body)
+          catch { case scala.util.control.NonFatal(e) => throw new RuntimeException(label, e) }
         phaseSecs += secs
         out
       }
@@ -530,7 +490,7 @@ object Experiment {
       // recs is read once, by meansAtK: a lazy Spark ranking runs inside
       // the eval phase, a driver-built local table costs no job at all
       val recs = phase("recommend")(rec.recommend(k))
-      val mm = phase("eval")(Metrics.meansAtK(recs, testDf, k, relThr).first())
+      val mm = phase("eval")(Shim.first(Metrics.meansAtK(recs, testDf, k, relThr)))
       val vals = metricNames.map {
         case "MAP" => "MAP" -> mm.getDouble(mm.fieldIndex("map"))
         case "nDCG" => "nDCG" -> mm.getDouble(mm.fieldIndex("ndcg"))

@@ -3,7 +3,6 @@ package graft.etl
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.Shim
 
 /** Data-integration converters (SURVEY §2.1 S2/S3, §2.7 F1-F7): raw
   * dataset scans to the standardized item/user/rating/social schema.
@@ -69,10 +68,8 @@ object Converters {
   }
 
   /** lastfm social links (lastfm.py:35): (user1, user2) pairs, both
-    * endpoints validated against known users via semi-joins (J4). Over
-    * local tables the semi-joins run on the driver (`Shim.keyJoin`). */
+    * endpoints validated against known users via semi-joins (J4). */
   def socialLinks(pairs: DataFrame, users: DataFrame): DataFrame =
-    Seq("user1", "user2").foldLeft(pairs) { (p, end) =>
-      Shim.keyJoin(p, users.select(col("user_id").as(end)), end, "left_semi")
-    }
+    pairs.join(users.select(col("user_id").as("user1")), Seq("user1"), "left_semi")
+      .join(users.select(col("user_id").as("user2")), Seq("user2"), "left_semi")
 }

@@ -131,24 +131,36 @@ object Metrics {
     * When `recs` is a local table (a driver-regime fold's recommend)
     * whose top-k rows, and the relevant test rows, are each within
     * [[KGraph.MaxDriverEdges]] rows, the means are computed on the
-    * driver ([[driverMeans]]): recs are read where they are, the test
-    * rows are read in place when the test frame is local too and come
-    * back in one bounded collect otherwise, and the result is a local
-    * table. Other inputs take the Spark plan, where both means ride a
-    * single join tree and one exchange over the recommendations; lazy
-    * recs are never collected, so their ranking runs once. */
+    * driver, into a local table: by [[driverMeans]] when the ids of
+    * `recs` and `test` are strings or integers of one type, and otherwise
+    * by the Spark plan folded there (`Shim.localTable`). The test rows are
+    * read in place when the test frame is local too and come back in one
+    * bounded collect otherwise. Either way the users are averaged in a
+    * fixed order, so a result does not depend on partitioning. Other
+    * inputs take the Spark plan, where both means ride a single join tree
+    * and one exchange over the recommendations; lazy recs are never
+    * collected, so their ranking runs once. */
   def meansAtK(recs: DataFrame, test: DataFrame, k: Int, relevanceThreshold: Double): DataFrame =
     meansAtK(recs, test, k, relevanceThreshold, KGraph.MaxDriverEdges)
 
   /** [[meansAtK]] with the driver bound `maxDriverRows`. */
   private[graft] def meansAtK(recs: DataFrame, test: DataFrame, k: Int, relevanceThreshold: Double,
                               maxDriverRows: Long): DataFrame =
-    driverMeans(recs, test, k, relevanceThreshold, maxDriverRows).getOrElse(
-      perUserAtK(recs, test, k, relevanceThreshold)
-        .agg(avg("ap").as("map"), avg("ndcg").as("ndcg")))
+    driverMeans(recs, test, k, relevanceThreshold, maxDriverRows).getOrElse {
+      def means(r: DataFrame, t: DataFrame): DataFrame =
+        perUserAtK(r, t, k, relevanceThreshold).agg(avg("ap").as("map"), avg("ndcg").as("ndcg"))
+      val rel = relevant(test, relevanceThreshold)
+      val onDriver =
+        if (!Shim.isLocal(recs)) None
+        else if (Shim.isLocal(rel)) Some(Shim.localTable(rel))
+        else KGraph.collectRows(rel, maxDriverRows)
+          .map(rows => recs.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), rel.schema))
+      onDriver.fold(means(recs, test))(r => Shim.localTable(means(recs, r)))
+    }
 
-  /** [[perUserAtK]]'s semantics on driver rows, averaged; None when
-    * `recs` is not a local table, the key types differ between `recs`
+  /** [[perUserAtK]]'s semantics on driver rows, averaged, kept because
+    * the folded plan costs several times its time on a small fold; None
+    * when `recs` is not a local table, the key types differ between `recs`
     * and `test` (the Spark join would cast them) or an input is over
     * `maxRows` rows. A rec row joins each relevant row of its (user,
     * item); an item's first rec row by rank keeps the hit; cum_hits

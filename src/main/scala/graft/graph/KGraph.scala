@@ -66,15 +66,12 @@ object KGraph {
     * CLI's enrich/extra_features channels feed into KGE `triples: all`
     * training — q174 puts it under the oracle gate.
     *
-    * Over a local table the result is a local table: the explode runs on
-    * the driver, and the label expressions fold as Spark evaluates them.
-    *
     * @return None when none of `cols` exist on `df` */
   def propertyEdges(df: DataFrame, idCol: String, isUser: Boolean,
                     cols: Seq[String]): Option[DataFrame] =
     cols.filter(df.columns.contains).map { f =>
       val vals = df.schema(f).dataType match {
-        case _: org.apache.spark.sql.types.ArrayType => exploded(df, idCol, f)
+        case _: org.apache.spark.sql.types.ArrayType => df.select(col(idCol), explode(col(f)).as("v"))
         case _ => df.select(col(idCol), col(f).cast("string").as("v"))
       }
       vals.filter(col("v").isNotNull && col("v") =!= "")
@@ -83,16 +80,6 @@ object KGraph {
           lit(if (isUser) "is" else "has").as("relation"),
           propertyLabel(col("v"), f).as("dst_label"))
     }.reduceOption(_ unionByName _)
-
-  /** `df.select(col(idCol), explode(col(f)).as("v"))`; over a local
-    * table the explode runs here, into a local table of that schema. */
-  private def exploded(df: DataFrame, idCol: String, f: String): DataFrame = {
-    val viaSpark = df.select(col(idCol), explode(col(f)).as("v"))
-    Shim.localRows(df.select(col(idCol), col(f))).fold(viaSpark) { rows =>
-      val out = rows.flatMap(r => if (r.isNullAt(1)) Nil else r.getSeq[Any](1).map(v => Row(r.get(0), v)))
-      df.sparkSession.createDataFrame(java.util.Arrays.asList(out: _*), viaSpark.schema)
-    }
-  }
 
   /** Bijective node-label -> dense-int relabeling, the Spark analogue of
     * `convert_node_labels_to_integer` (graph.py:168-191). Deterministic:

@@ -43,9 +43,10 @@ trait Recommender {
     recommend(k).filter(org.apache.spark.sql.functions.col("user_id") ===
       org.apache.spark.sql.functions.lit(user))
 
-  /** Whether `train` reads a local train table (`Shim.localRows`) in
-    * place, on the driver. The experiment hands a model that does not a
-    * cached Spark copy of a local fold instead. */
+  /** Whether `train` reads a local train table in place, on the driver
+    * (`Shim.localRows`, which folds the table's plan there). The
+    * experiment hands a model that does not a cached Spark copy of a
+    * local fold instead. */
   def readsLocalTables: Boolean = false
 
   /** Release any persisted training state (embedding tables, vocab

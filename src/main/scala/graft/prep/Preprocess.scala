@@ -63,39 +63,17 @@ object Preprocess {
     * one cached-scan + small broadcast anti-joins per pass, cheaper than
     * a columnar cache build of the full edge set per round.
     *
-    * A local input (`Shim.localRows`) runs the same rounds on the driver
-    * and returns a local table, with no job and nothing tracked in
-    * `caches`: each round counts the current rows per key, and a key
-    * under `k` loses its rows, except that a null key is never removed
-    * (it joins nothing in the `left_anti` join).
+    * Over a local table (`Shim.isLocal`) the same rounds run on the
+    * driver: where a round would persist, it folds (`Shim.localTable`),
+    * so no round starts a job, and the result comes back as one local
+    * table. Tracking a local table in `caches` holds nothing.
     */
   def filterKCore(ratings: DataFrame, k: Int, target: String,
                   iterations: Int = 1, caches: KCoreCaches): DataFrame = {
     val key = kcoreKey(target)
-    Shim.localRows(ratings).fold(sparkKCore(ratings, k, key, iterations, caches)) { rows =>
-      val ix = ratings.schema.fieldIndex(key)
-      var cur = rows
-      var it = 0
-      var converged = false
-      while (it < iterations && !converged) {
-        val kill = cur.groupBy(_.get(ix)).collect { case (v, rs) if rs.size < k => v }.toSet
-        if (kill.isEmpty) converged = true
-        else cur = cur.filter(r => r.isNullAt(ix) || !kill(r.get(ix)))
-        it += 1
-      }
-      ratings.sparkSession.createDataFrame(java.util.Arrays.asList(cur: _*), ratings.schema)
-    }
-  }
-
-  /** The key column of a k-core `target`: user | item. */
-  private[graft] def kcoreKey(target: String): String = target match {
-    case "user" => "user_id"
-    case "item" => "item_id"
-    case other  => throw new IllegalArgumentException(s"k-core target must be user|item, got $other")
-  }
-
-  private def sparkKCore(ratings: DataFrame, k: Int, key: String, iterations: Int,
-                         caches: KCoreCaches): DataFrame = {
+    // computed once: folded on the driver when local, else persisted
+    def once(df: DataFrame): DataFrame =
+      if (Shim.isLocal(df)) Shim.localTable(df) else df.persist(StorageLevel.MEMORY_AND_DISK)
     var cur = ratings
     var curDerived = false // produced by a prior round of this loop, not yet persisted
     var it = 0
@@ -105,13 +83,12 @@ object Preprocess {
         // the previous round's survivors are about to be scanned by this
         // round's kill-agg AND by whatever consumes the next round's
         // result — persist now so they're computed exactly once.
-        cur.persist(StorageLevel.MEMORY_AND_DISK)
+        cur = once(cur)
         caches.track(cur)
         curDerived = false
       }
-      val kill = cur.groupBy(key).count().filter(col("count") < k).select(key)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      if (kill.count() == 0L) { converged = true; kill.unpersist() }
+      val kill = once(cur.groupBy(key).count().filter(col("count") < k).select(key))
+      if (Shim.count(kill) == 0L) { converged = true; kill.unpersist() }
       else {
         cur = cur.join(kill, Seq(key), "left_anti")
         curDerived = true
@@ -123,7 +100,14 @@ object Preprocess {
     // persisted survivors: hand that cache to the caller (untrack) so
     // release() can't evict the result out from under them.
     if (converged && (cur ne ratings)) caches.untrack(cur)
-    cur
+    Shim.localTable(cur)
+  }
+
+  /** The key column of a k-core `target`: user | item. */
+  private[graft] def kcoreKey(target: String): String = target match {
+    case "user" => "user_id"
+    case "item" => "item_id"
+    case other  => throw new IllegalArgumentException(s"k-core target must be user|item, got $other")
   }
 }
 

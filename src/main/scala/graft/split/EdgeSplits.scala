@@ -1,10 +1,9 @@
 package graft.split
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shim
-import org.apache.spark.sql.types.{BooleanType, IntegerType, StructField}
 
 /** The four rating-edge split strategies of the reference's
   * `framework/dataloader/edge_splitter/edge_splitter.py`, re-expressed
@@ -20,11 +19,10 @@ import org.apache.spark.sql.types.{BooleanType, IntegerType, StructField}
   * explicit deterministic `orderKey` so DuckDB can replay the split.
   *
   * The user-facing splits ([[randomByRatio]], [[timestampByRatio]],
-  * [[fixedTimestamp]], [[kFoldRandom]]) take a local input
-  * (`Shim.localRows`) to a local table of the same rows and flags: the
-  * order key is evaluated as the Spark expression over the rows, rows
-  * sort in Spark's order (UTF-8 strings, nulls first), and the flag
-  * comes from each row's position in its user (or in all rows) — no job.
+  * [[fixedTimestamp]], [[kFoldRandom]]) fold their plan on the driver
+  * when the input is a local table (`Shim.localTable`), into a local
+  * table of the same rows and flags, sorted as the split's last window
+  * sorts them — no job.
   */
 object EdgeSplits {
 
@@ -100,7 +98,7 @@ object EdgeSplits {
   def randomByRatio(ratings: DataFrame, p: Double, level: String, seed: Long): DataFrame = {
     checkSplit("random_by_ratio", p = p, level = level)
     val key = Seq(edgeHash(seed), col("item_id"))
-    localByRatio(ratings, p, level, key).getOrElse(
+    Shim.localTable(
       if (level == "global") byRatioGlobalScalable(ratings, p, key, longBucket(edgeHash(seed)))
       else byRatio(ratings, p, level, key))
   }
@@ -111,59 +109,22 @@ object EdgeSplits {
     *
     * `level = "global"` decomposes the global rank over uniform
     * `width_bucket` ranges of ts (min/max via one skinny aggregate —
-    * an eager action at plan-build time). Uniform time buckets can be
+    * an eager action at plan-build time, read on the driver over a local
+    * table). Uniform time buckets can be
     * skewed if events concentrate; worst case one bucket degrades to
     * the naive per-task sort, never worse than the monolithic window. */
   def timestampByRatio(ratings: DataFrame, p: Double, level: String): DataFrame = {
     checkSplit("timestamp_by_ratio", p = p, level = level)
     val key = Seq(col("ts"), col("item_id"), col("user_id"))
-    localByRatio(ratings, p, level, key).getOrElse {
+    Shim.localTable(
       if (level == "global") {
-        val mm = ratings.agg(min("ts"), max("ts")).head
+        val mm = Shim.first(ratings.agg(min("ts"), max("ts")))
         if (mm.isNullAt(0) || mm.getLong(0) == mm.getLong(1))
           byRatio(ratings, p, level, key) // empty or single-instant input: degenerate anyway
         else
           byRatioGlobalScalable(ratings, p, key,
             width_bucket(col("ts"), lit(mm.getLong(0)), lit(mm.getLong(1)), lit(1022)))
-      } else byRatio(ratings, p, level, key)
-    }
-  }
-
-  /** The local form of a ratio split: the last ceil(n·p) rows in
-    * `orderKey` order are test; None when `ratings` is not local. */
-  private def localByRatio(ratings: DataFrame, p: Double, level: String,
-                           orderKey: Seq[Column]): Option[DataFrame] =
-    localRanked(ratings, level, orderKey, StructField("is_test", BooleanType, nullable = false)) {
-      (rn, n) => rn > n - math.ceil(n * p).toLong
-    }
-
-  /** `ratings`' rows sorted by `orderKey` in Spark's order, within each
-    * user at level user, each with `flag(rn, n)` appended as `field`:
-    * `rn` is the row's 1-based position in its group and `n` the group's
-    * size, as `row_number()` and `count` over the split's window give
-    * them. None when `ratings` is not local. */
-  private def localRanked(ratings: DataFrame, level: String, orderKey: Seq[Column],
-                          field: StructField)(flag: (Long, Long) => Any): Option[DataFrame] = {
-    val byUser = partitionedByUser(level)
-    if (!Shim.isLocal(ratings)) return None
-    val keys = orderKey.indices.map(i => s"__order$i")
-    val sorted = ratings.select(col("*") +: orderKey.zip(keys).map { case (c, k) => c.as(k) }: _*)
-      .orderBy(((if (byUser) Seq(col("user_id")) else Nil) ++ keys.map(col)): _*)
-      .drop(keys: _*)
-    Shim.localRows(sorted).map { rows =>
-      val u = ratings.schema.fieldIndex("user_id")
-      val out = new java.util.ArrayList[Row](rows.size)
-      var start = 0
-      while (start < rows.size) {
-        var end = start + 1
-        if (byUser) while (end < rows.size && rows(end).get(u) == rows(start).get(u)) end += 1
-        else end = rows.size
-        val n = (end - start).toLong
-        for (i <- start until end) out.add(Row.fromSeq(rows(i).toSeq :+ flag(i - start + 1L, n)))
-        start = end
-      }
-      ratings.sparkSession.createDataFrame(out, ratings.schema.add(field))
-    }
+      } else byRatio(ratings, p, level, key))
   }
 
   /** Scale-path variant of the global ratio split: threshold the ordering
@@ -267,12 +228,7 @@ object EdgeSplits {
   def kFoldRandom(ratings: DataFrame, k: Int, level: String, seed: Long): DataFrame = {
     checkSplit("k_fold", k = k, level = level)
     val key = Seq(edgeHash(seed), col("item_id"))
-    // ntile(k): with q = n div k and r = n mod k, the first r folds hold
-    // q + 1 rows ([[kFoldGlobalScalable]]'s formula)
-    localRanked(ratings, level, key, StructField("fold", IntegerType, nullable = false)) { (rn, n) =>
-      val (q, r) = (n / k, n % k)
-      (if (rn <= r * (q + 1)) (rn - 1) / (q + 1) + 1 else r + (rn - r * (q + 1) - 1) / q + 1).toInt
-    }.getOrElse(
+    Shim.localTable(
       if (level == "global") kFoldGlobalScalable(ratings, k, key, longBucket(edgeHash(seed)))
       else kFold(ratings, k, level, key))
   }

@@ -7,7 +7,6 @@ import org.apache.spark.paths.SparkPath
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.csv.{CSVHeaderChecker, CSVOptions, UnivocityGenerator, UnivocityParser}
-import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
@@ -84,7 +83,7 @@ object LocalCsv {
       // the parser reuses its row object
       CSVDataSource(options).readFile(hadoopConf, file, parser, header, schema).map(_.copy())
     }
-    Dataset.ofRows(castToImpl(spark), LocalRelation(DataTypeUtils.toAttributes(schema), rows))
+    Dataset.ofRows(castToImpl(spark), Shim.relation(DataTypeUtils.toAttributes(schema), rows))
   }
 
   /** `df.coalesce(1).write.mode("overwrite").option("header", "true")

@@ -160,13 +160,20 @@ class DriverServingSpec extends AnyFunSuite {
   }
 
   test("over-bound or mistyped meansAtK inputs take the Spark path with the same rows") {
+    // relevant rows of a Spark test frame over the bound are not
+    // collected: Spark runs the plan
     for (bound <- Seq(0L, 5L)) {
-      val means = Metrics.meansAtK(recs, testDf, 5, 4.0, maxDriverRows = bound)
+      val means = Metrics.meansAtK(recs, testDf.repartition(2), 5, 4.0, maxDriverRows = bound)
       assert(Shim.localRows(means).isEmpty, s"bound $bound")
       assertClose(means.first(), sparkMeans(recs, testDf, 5, 4.0), s"bound $bound")
     }
+    // local test rows are on the driver already: no bound applies
+    assert(Shim.localRows(Metrics.meansAtK(recs, testDf, 5, 4.0, maxDriverRows = 0)).isDefined)
+    // keys of two types fold as Spark's join casts them
     val longIds = testDf.withColumn("user_id", col("user_id").cast("long"))
-    assert(Shim.localRows(Metrics.meansAtK(recs, longIds, 5, 4.0)).isEmpty)
+    val mixed = Metrics.meansAtK(recs, longIds, 5, 4.0)
+    assert(Shim.localRows(mixed).isDefined)
+    assertClose(mixed.first(), sparkMeans(recs, longIds, 5, 4.0), "long test ids")
   }
 
   private val ratings = (for (u <- 1 to 12; i <- 1 to 9 if (u * 7 + i) % 3 != 0)

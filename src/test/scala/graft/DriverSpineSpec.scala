@@ -5,30 +5,38 @@ import graft.model.PopularityRecommender
 import graft.prep.{KCoreCaches, Preprocess}
 import graft.split.EdgeSplits
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shim
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
-/** The experiment spine's driver forms: binarize, k-core, the four
-  * splits and popularity over a local table must give the rows of their
-  * Spark forms over the same rows as a Spark plan, without a job, and so
-  * must the load's dedup, joins, property edges and social links; and a
-  * small experiment, read and assembled on the driver, must start no job
-  * and report what its Spark spine reports. */
+/** The experiment spine folded on the driver: binarize, k-core, the
+  * four splits and popularity over a local table must give the rows of
+  * their Spark plans over the same rows as a Spark plan, without a job,
+  * and so must the load's dedup, joins, property edges and social links
+  * and each plan shape the executor runs; and a small experiment, read
+  * and assembled on the driver, must start no job and report what its
+  * Spark spine reports. */
 class DriverSpineSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   /** ~300 ratings of 30 users × 25 items with ties in ts and in item
     * counts, plus rows with a null user, a null item or both. String ids
     * mix `～` (U+FF5E) and `😀` (U+1F600), whose UTF-8 order differs from
-    * their UTF-16 order. Returns the local table. */
+    * their UTF-16 order. Double ids 0 to 3 are -0.0, 0.0 and two NaNs of
+    * different bits, which Spark's groupings and joins take as two keys.
+    * Returns the local table. */
   private def ratings(idType: DataType, seed: Int): DataFrame = {
     val rnd = new scala.util.Random(seed)
     def id(prefix: String, n: Int): Any = idType match {
       case IntegerType => n
       case LongType    => n.toLong + (1L << 40)
+      case DoubleType  => n match {
+        case 0 => -0.0; case 1 => 0.0; case 2 => Double.NaN
+        case 3 => java.lang.Double.longBitsToDouble(0x7ff8000000000123L); case _ => n.toDouble
+      }
       case _           => n % 3 match { case 0 => s"$prefix$n～"; case 1 => s"$prefix$n😀"; case _ => s"$prefix$n" }
     }
     val rows = (for (u <- 0 until 30; i <- 0 until 25 if rnd.nextDouble() < 0.4)
@@ -40,9 +48,9 @@ class DriverSpineSpec extends AnyFunSuite {
       StructField("rating", DoubleType), StructField("ts", LongType))))
   }
 
-  private val idTypes = Seq(IntegerType, LongType, StringType)
+  private val idTypes = Seq(IntegerType, LongType, StringType, DoubleType)
 
-  /** The same rows as a Spark plan: no driver form applies to it. */
+  /** The same rows as a Spark plan: it is not local. */
   private def onSpark(df: DataFrame): DataFrame = df.repartition(3)
 
   private def sorted(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
@@ -68,11 +76,13 @@ class DriverSpineSpec extends AnyFunSuite {
     assert(JobWatch.jobs(spark) { rows = Shim.localRows(chain) }.isEmpty)
     assert(rows.get == chain.collect().toSeq) // the Sort's order too
     chain.unpersist()
-    // a Spark operator, a local sort or a nondeterministic expression
+    // a repartition, a local sort or a nondeterministic expression
     // anywhere in the chain makes a frame non-local
-    for (df <- Seq(r.groupBy("user_id").count(), r.repartition(2).filter(col("ts") > 3),
+    for (df <- Seq(r.repartition(2).filter(col("ts") > 3),
       r.sortWithinPartitions("ts"), r.withColumn("x", rand(1))))
       assert(!Shim.isLocal(df) && Shim.localRows(df).isEmpty, df.queryExecution.analyzed)
+    // an aggregate over a local table is local, with its Spark plan's rows
+    assertSame(r.groupBy("user_id").count(), onSpark(r).groupBy("user_id").count(), "groupBy count")
   }
 
   test("localRows reads a Union of local chains in child order, as collect() returns it") {
@@ -85,9 +95,12 @@ class DriverSpineSpec extends AnyFunSuite {
       assert(JobWatch.jobs(spark) { rows = Shim.localRows(df) }.isEmpty, df.queryExecution.analyzed)
       assert(rows.get == df.collect().toSeq, df.queryExecution.analyzed)
     }
-    // one child that is not a local chain makes the union non-local
-    val partly = a.union(b.limit(5))
+    // one child that is not a local table makes the union non-local
+    val partly = a.union(b.repartition(2))
     assert(!Shim.isLocal(partly) && Shim.localRows(partly).isEmpty)
+    // a limit over a local table is local, with its Spark plan's rows
+    val limited = a.union(b.limit(5))
+    assert(Shim.localRows(limited).get == limited.collect().toSeq)
     // the embedding recommenders' label-edge union: rating edges over the
     // local train rows, then the local property edges
     val props = graft.graph.KGraph.propertyEdges(
@@ -142,11 +155,11 @@ class DriverSpineSpec extends AnyFunSuite {
       // the key is not the first column: a USING join moves it first
       val l = keyed(t, 120, 12, "a" -> StringType).select(col("a"), col("k"))
       val r = keyed(t, 40, 13, "b" -> DoubleType, "c" -> ArrayType(StringType))
-      assertSame(Shim.keyJoin(l, r, "k", how), Shim.keyJoin(onSpark(l), onSpark(r), "k", how), s"$t $how")
+      assertSame(l.join(r, Seq("k"), how), onSpark(l).join(onSpark(r), Seq("k"), how), s"$t $how")
     }
-    // keys of two types: Spark's join, with its coercion
-    val mixed = Shim.keyJoin(keyed(StringType, 10, 1), keyed(LongType, 10, 2), "k", "left_semi")
-    assert(!Shim.isLocal(mixed))
+    // keys of two types: Spark's join, with its coercion, folds as well
+    val (s, n) = (keyed(LongType, 10, 1).select(col("k").cast("string").as("k")), keyed(LongType, 10, 2))
+    assertSame(s.join(n, Seq("k"), "left_semi"), onSpark(s).join(onSpark(n), Seq("k"), "left_semi"), "mixed key types")
   }
 
   test("load: endpoint validation, remove_unmatched, property edges and social links, driver form == Spark form") {
@@ -159,10 +172,10 @@ class DriverSpineSpec extends AnyFunSuite {
       .filter(col("ts") > 3).union(r.select(col("item_id"), lit(null).cast("string"))))
     val map = r.select(col("item_id"), when(col("ts") % 4 =!= 0, concat(lit("dbr:"), col("item_id"))).as("URI"),
       col("rating").as("score"))
-    assertSame(Shim.keyJoin(r, users, "user_id", "left_semi"),
-      Shim.keyJoin(onSpark(r), onSpark(users), "user_id", "left_semi"), "endpoint validation")
-    val kept = Shim.keyJoin(items, e.matchedItems(map), "item_id", "left_semi")
-    assertSame(kept, Shim.keyJoin(onSpark(items), e.matchedItems(onSpark(map)), "item_id", "left_semi"), "remove_unmatched")
+    assertSame(r.join(users, Seq("user_id"), "left_semi"),
+      onSpark(r).join(onSpark(users), Seq("user_id"), "left_semi"), "endpoint validation")
+    val kept = items.join(e.matchedItems(map), Seq("item_id"), "left_semi")
+    assertSame(kept, onSpark(items).join(e.matchedItems(onSpark(map)), Seq("item_id"), "left_semi"), "remove_unmatched")
     // property edges: a string, a number and a string_list column with
     // null and empty lists and empty values, off an item table and a
     // left-joined map table
@@ -170,7 +183,7 @@ class DriverSpineSpec extends AnyFunSuite {
       when(col("ts") % 5 =!= 0, split(concat_ws("::", col("user_id"), lit(""), col("item_id")), "::")).as("subject"),
       when(col("ts") % 3 =!= 0, col("user_id")).otherwise(lit("")).as("director"), col("rating").as("score")))
     for ((df, cols) <- Seq((enriched, Seq("subject", "director", "score", "missing")),
-      (Shim.keyJoin(kept.select("item_id"), map, "item_id", "left"), Seq("URI", "score"))))
+      (kept.select("item_id").join(map, Seq("item_id"), "left"), Seq("URI", "score"))))
       assertSame(graft.graph.KGraph.propertyEdges(df, "item_id", isUser = false, cols).get,
         graft.graph.KGraph.propertyEdges(onSpark(df), "item_id", isUser = false, cols).get, cols.mkString(","))
     val pairs = r.select(col("user_id").as("user1"), col("item_id").as("user2"))
@@ -205,7 +218,10 @@ class DriverSpineSpec extends AnyFunSuite {
 
   test("splits: every method and level, driver form == Spark form") {
     for (t <- idTypes; level <- Seq("user", "global")) {
-      val r = ratings(t, 4)
+      // the experiment splits deduplicated edges: with double ids, -0.0
+      // and 0.0 (or two NaNs) make two rows of one edge, which tie in the
+      // split order, where Spark's row number follows the shuffle's order
+      val r = if (t == DoubleType) graft.cli.Experiment.dedupRatings(ratings(t, 4)) else ratings(t, 4)
       val s = onSpark(r)
       for (p <- Seq(0.2, 0.5)) {
         assertSame(EdgeSplits.randomByRatio(r, p, level, 42), EdgeSplits.randomByRatio(s, p, level, 42),
@@ -248,15 +264,54 @@ class DriverSpineSpec extends AnyFunSuite {
     assert(train.storageLevel == StorageLevel.NONE)
   }
 
-  test("meansAtK over local recs and a local test frame starts no job") {
-    val r = ratings(StringType, 7)
+  /** MAP/nDCG of popularity over a random split of `ratings(idType, 7)`,
+    * folded on the driver with no job, equal to the Spark plan's within
+    * 1e-12. */
+  private def assertMeansFold(idType: DataType): Unit = {
+    val r = ratings(idType, 7)
     val a = EdgeSplits.randomByRatio(r, 0.3, "user", 42)
     val (train, test) = (a.filter(!col("is_test")).drop("is_test"), a.filter(col("is_test")).drop("is_test"))
     val recs = PopularityRecommender.recommend(train, 5)
     var means: Row = null
-    assert(JobWatch.jobs(spark) { means = Metrics.meansAtK(recs, test, 5, 3.0).first() }.isEmpty)
+    assert(JobWatch.jobs(spark) { means = Metrics.meansAtK(recs, test, 5, 3.0).first() }.isEmpty, idType)
     val want = Metrics.perUserAtK(onSpark(recs), onSpark(test), 5, 3.0).agg(avg("ap"), avg("ndcg")).first()
-    for (c <- 0 to 1) assert(math.abs(means.getDouble(c) - want.getDouble(c)) < 1e-12, s"$means vs $want")
+    for (c <- 0 to 1) assert(math.abs(means.getDouble(c) - want.getDouble(c)) < 1e-12, s"$idType: $means vs $want")
+  }
+
+  test("meansAtK over local recs and a local test frame starts no job") {
+    assertMeansFold(StringType)
+  }
+
+  test("meansAtK over local recs and a local test frame with double ids starts no job") {
+    assertMeansFold(DoubleType)
+  }
+
+  test("newly folded shapes: an empty global aggregate, a left join with unmatched rows, " +
+    "a RANGE sum with ties, a cross join") {
+    val r = ratings(StringType, 15)
+    // a global aggregate over no rows: one row, count 0, avg null
+    val none = (df: DataFrame) => df.filter(col("ts") < 0)
+      .agg(count(lit(1)).as("n"), avg("rating").as("mean"), sum("ts").as("total"), max("user_id").as("last"))
+    assertSame(none(r), none(onSpark(r)), "empty global aggregate")
+    assert(Shim.localRows(none(r)).get == Seq(Row(0L, null, null, null)))
+    // a left join whose unmatched rows take nulls
+    val latest = (df: DataFrame) => df.join(df.filter(col("ts") % 3 === 0).groupBy("user_id")
+      .agg(max("ts").as("latest")), Seq("user_id"), "left")
+    assertSame(latest(r), latest(onSpark(r)), "left join")
+    assert(Shim.localRows(latest(r)).get.exists(_.isNullAt(4)))
+    // RANGE frames over ties in the order key, and a whole-partition count
+    val running = (df: DataFrame) => df
+      .withColumn("by_ts", sum("rating").over(Window.partitionBy("user_id").orderBy("ts")))
+      .withColumn("by_rating", count(lit(1)).over(Window.orderBy("rating")))
+      .withColumn("n", count(lit(1)).over(Window.partitionBy("item_id")))
+    assertSame(running(r), running(onSpark(r)), "RANGE sum with ties")
+    // a cross join
+    val crossed = (df: DataFrame) => df.select("user_id").distinct().crossJoin(df.filter(col("ts") < 3).select("item_id"))
+    assertSame(crossed(r), crossed(onSpark(r)), "cross join")
+    // other aggregates and window functions stay Spark plans
+    for (df <- Seq(r.groupBy("user_id").agg(collect_list("item_id")),
+      r.withColumn("prev", lag("ts", 1).over(Window.partitionBy("user_id").orderBy("ts")))))
+      assert(!Shim.isLocal(df) && Shim.localRows(df).isEmpty, df.queryExecution.analyzed)
   }
 
   /** The etl-kcore shape: binarize, 4 k-core passes, a timestamp test

@@ -147,7 +147,8 @@ class EdgeSplitsSpec extends AnyFunSuite {
     // timestampByRatio at level=global — the exact functions
     // cli/Experiment.applySplit calls — must never plan an
     // empty-partition window over rating rows. The input is a Spark
-    // plan: a local table takes the driver forms (DriverSpineSpec).
+    // plan: over a local table the same plans fold on the driver
+    // (DriverSpineSpec).
     import org.apache.spark.sql.execution.window.WindowExec
     val r = mkRatings(300, 5).repartition(3)
     val paths = Seq(

@@ -154,6 +154,27 @@ class ExperimentRegistrySpec extends AnyFunSuite {
     assert(!labels.contains("transE fold 1: recommend"), s"a driver-regime recommend started a job: $labels")
   }
 
+  test("a failure inside a fold phase surfaces as '<model> fold <i>: <phase>' with its cause") {
+    val tmp = java.nio.file.Files.createTempDirectory("fold_failure")
+    graft.util.Scratch.deleteOnExit(tmp)
+    graft.schema.TypedCsv.write(Seq(("1", "1", 5.0), ("1", "2", 4.0), ("2", "1", 3.0), ("2", "2", 5.0))
+      .toDF("user_id", "item_id", "rating"), s"$tmp/rating.csv")
+    // a non-numeric embedding_dim passes the config check and is first
+    // read when transE builds its trainer
+    java.nio.file.Files.writeString(java.nio.file.Path.of(s"$tmp/exp.yml"),
+      s"""experiment:
+         |  dataset: {ratings: $tmp/rating.csv}
+         |  split: {seed: 42, test: {method: random_by_ratio, p: 0.5, level: user}}
+         |  models:
+         |    - {name: popularity, parameters: {}}
+         |    - {name: transE, parameters: {embedding_dim: x, epochs: 1}}
+         |  evaluation: {k: 3, metrics: [MAP]}
+         |""".stripMargin)
+    val err = intercept[RuntimeException](graft.cli.Experiment.run(spark, s"$tmp/exp.yml"))
+    assert(err.getMessage == "transE fold 1: train", err)
+    assert(err.getCause.isInstanceOf[NumberFormatException], err.getCause)
+  }
+
   test("an unknown model or metric name fails with that name before any Spark job") {
     val tmp = java.nio.file.Files.createTempDirectory("bad_names")
     graft.util.Scratch.deleteOnExit(tmp)
