@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shim
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** MAP@k and nDCG@k as distributed DataFrame aggregations, mirroring
   * `framework/evaluator/metrics/map.py` and `ndcg.py` plus the shared
@@ -130,59 +130,50 @@ object Metrics {
     *
     * When `recs` is a local table (a driver-regime fold's recommend)
     * whose top-k rows, and the relevant test rows, are each within
-    * [[KGraph.MaxDriverEdges]] rows, the means are computed on the
-    * driver, into a local table: by [[driverMeans]] when the ids of
-    * `recs` and `test` are strings or integers of one type, and otherwise
-    * by the Spark plan folded there (`Shim.localTable`). The test rows are
-    * read in place when the test frame is local too and come back in one
-    * bounded collect otherwise. Either way the users are averaged in a
-    * fixed order, so a result does not depend on partitioning. Other
-    * inputs take the Spark plan, where both means ride a single join tree
-    * and one exchange over the recommendations; lazy recs are never
-    * collected, so their ranking runs once. */
+    * [[KGraph.MaxDriverEdges]] rows, and whose ids are of one type of
+    * `Shim.KeyTypes` with the test frame's, the means are computed on the
+    * driver ([[driverMeans]]): recs are read where they are, the test
+    * rows are read in place when the test frame is local too and come
+    * back in one bounded collect otherwise, and the result is a local
+    * table. Other inputs take the Spark plan, where both means ride a
+    * single join tree and one exchange over the recommendations; lazy
+    * recs are never collected, so their ranking runs once. */
   def meansAtK(recs: DataFrame, test: DataFrame, k: Int, relevanceThreshold: Double): DataFrame =
     meansAtK(recs, test, k, relevanceThreshold, KGraph.MaxDriverEdges)
 
   /** [[meansAtK]] with the driver bound `maxDriverRows`. */
   private[graft] def meansAtK(recs: DataFrame, test: DataFrame, k: Int, relevanceThreshold: Double,
                               maxDriverRows: Long): DataFrame =
-    driverMeans(recs, test, k, relevanceThreshold, maxDriverRows).getOrElse {
-      def means(r: DataFrame, t: DataFrame): DataFrame =
-        perUserAtK(r, t, k, relevanceThreshold).agg(avg("ap").as("map"), avg("ndcg").as("ndcg"))
-      val rel = relevant(test, relevanceThreshold)
-      val onDriver =
-        if (!Shim.isLocal(recs)) None
-        else if (Shim.isLocal(rel)) Some(Shim.localTable(rel))
-        else KGraph.collectRows(rel, maxDriverRows)
-          .map(rows => recs.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), rel.schema))
-      onDriver.fold(means(recs, test))(r => Shim.localTable(means(recs, r)))
-    }
+    driverMeans(recs, test, k, relevanceThreshold, maxDriverRows).getOrElse(
+      perUserAtK(recs, test, k, relevanceThreshold)
+        .agg(avg("ap").as("map"), avg("ndcg").as("ndcg")))
 
-  /** [[perUserAtK]]'s semantics on driver rows, averaged, kept because
-    * the folded plan costs several times its time on a small fold; None
-    * when `recs` is not a local table, the key types differ between `recs`
-    * and `test` (the Spark join would cast them) or an input is over
-    * `maxRows` rows. A rec row joins each relevant row of its (user,
-    * item); an item's first rec row by rank keeps the hit; cum_hits
-    * counts the hits at ranks up to the row's own (the window's RANGE
-    * frame); DCG sums every joined row; IDCG takes the k best relevant
-    * ratings. Users are averaged in a fixed order, so a result does not
-    * depend on partitioning. */
+  /** [[perUserAtK]]'s semantics on driver rows, averaged; None when
+    * `recs` is not a local table, the key types differ between `recs`
+    * and `test` (the Spark join would cast them) or are not
+    * `Shim.KeyTypes`, or an input is over `maxRows` rows. Ids group as
+    * Spark groups them (`Shim.keyValue`). A rec row joins each relevant
+    * row of its (user, item); an item's first rec row by rank keeps the
+    * hit; cum_hits counts the hits at ranks up to the row's own (the
+    * window's RANGE frame); DCG sums every joined row; IDCG takes the k
+    * best relevant ratings. Users are averaged in a fixed order, so a
+    * result does not depend on partitioning. */
   private def driverMeans(recs: DataFrame, test: DataFrame, k: Int, relevanceThreshold: Double,
                           maxRows: Long): Option[DataFrame] = {
     val keyTypes = Seq("user_id", "item_id").forall { c =>
       val t = recs.schema(c).dataType
-      t == test.schema(c).dataType && Seq(StringType, IntegerType, LongType).contains(t)
+      t == test.schema(c).dataType && Shim.KeyTypes(t)
     }
     val rankType = Seq(IntegerType, LongType).contains(recs.schema("rank").dataType)
     val Seq(u, i, r) = Seq("user_id", "item_id", "rank").map(recs.schema.fieldIndex)
     for {
       rows <- Shim.localRows(recs) if keyTypes && rankType
       top = rows.filter(row => !row.isNullAt(r) && row.getAs[Number](r).longValue <= k)
-        .map(row => Row(row.get(u), row.get(i), row.get(r)))
+        .map(row => Row(Shim.keyValue(row.get(u)), Shim.keyValue(row.get(i)), row.get(r)))
       if top.size <= maxRows
-      rel <- KGraph.collectRows(relevant(test, relevanceThreshold)
+      relRows <- KGraph.collectRows(relevant(test, relevanceThreshold)
         .select(col("user_id"), col("item_id"), col("rating").cast("double")), maxRows)
+      rel = relRows.map(row => Row(Shim.keyValue(row.get(0)), Shim.keyValue(row.get(1)), row.get(2)))
     } yield {
       // null users join nothing; (user, ap, ndcg) per qualifying user
       val relByUser = rel.toSeq.filter(!_.isNullAt(0)).groupBy(_.get(0))

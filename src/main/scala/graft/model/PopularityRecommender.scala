@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftshim.Shim
-import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 
 /** Non-personalized baseline: recommend the globally most-rated items
   * the user has not yet rated. Not present in the reference model zoo,
@@ -48,14 +48,12 @@ object PopularityRecommender {
   /** (user_id, item_id, rank) of the top-k most popular unrated items.
     * `allRecs`: rank every unrated item (no candidate bound, no cutoff) —
     * deep_walk_based/model.py:75-86's all_recs mode. A local `train`
-    * (`Shim.isLocal`) is ranked on the driver into a local table of the
-    * same rows: by [[localRecommend]] when its ids are strings or
-    * integers, whose Java equality is Spark's, and otherwise by the Spark
-    * plan folded there (`Shim.localTable`). The caller's frame is never
-    * persisted. */
+    * (`Shim.localRows`) whose ids are of `Shim.KeyTypes` is ranked on the
+    * driver into a local table of the same rows; any other `train` takes
+    * the Spark plan. The caller's frame is never persisted. */
   def recommend(train: DataFrame, k: Int, allRecs: Boolean = false): DataFrame =
     Some(train.select("user_id", "item_id"))
-      .filter(_.schema.forall(f => Seq(StringType, IntegerType, LongType).contains(f.dataType)))
+      .filter(_.schema.forall(f => Shim.KeyTypes(f.dataType)))
       .flatMap(Shim.localRows)
       .fold(sparkRecommend(train, k, allRecs))(localRecommend(train, _, k, allRecs))
 
@@ -63,8 +61,8 @@ object PopularityRecommender {
     val pop = train.groupBy("item_id").agg(count(lit(1)).as("cnt"))
     // max #items any single user rated — bounds candidates exactly like
     // the reference bounds kNN n_neighbors (deep_walk_based/model.py:137-149)
-    val maxRated = Shim.first(train.groupBy("user_id").agg(count(lit(1)).as("c"))
-      .agg(max("c"))).getLong(0)
+    val maxRated = train.groupBy("user_id").agg(count(lit(1)).as("c"))
+      .agg(max("c")).first().getLong(0)
     // orderBy+limit plans as TakeOrderedAndProject (parallel partial
     // top-N per partition), not the single-task unpartitioned
     // row_number window it replaces — same rows, same order semantics
@@ -76,24 +74,24 @@ object PopularityRecommender {
       .join(train.select("user_id", "item_id"), Seq("user_id", "item_id"), "left_anti")
       .withColumn("rank",
         row_number().over(Window.partitionBy("user_id").orderBy(col("cnt").desc, col("item_id"))))
-    Shim.localTable((if (allRecs) ranked else ranked.filter(col("rank") <= k))
-      .select("user_id", "item_id", "rank"))
+    (if (allRecs) ranked else ranked.filter(col("rank") <= k))
+      .select("user_id", "item_id", "rank")
   }
 
   /** [[sparkRecommend]] on the driver over the (user_id, item_id) rows,
-    * kept because the folded Spark plan costs several times its time on a
-    * small fold (see CHANGES.md):
+    * their ids grouped as Spark groups them (`Shim.keyValue`):
     * items by count descending, then by id in Spark's order; the first
     * maxRated + k of them are every user's candidates (the null user
     * included), minus the user's rated items (a null id rates nothing,
     * as in the anti-join), ranked 1..k. */
-  private def localRecommend(train: DataFrame, rows: Seq[Row], k: Int, allRecs: Boolean): DataFrame = {
+  private def localRecommend(train: DataFrame, trainRows: Seq[Row], k: Int, allRecs: Boolean): DataFrame = {
     val spark = train.sparkSession
     val itemField = train.schema("item_id")
+    val rows = trainRows.map(r => Row(Shim.keyValue(r.get(0)), Shim.keyValue(r.get(1))))
     val pop = rows.groupBy(_.get(1)).map { case (item, rs) => Row(item, rs.size.toLong) }.toSeq
     val byPopularity = Shim.localRows(spark.createDataFrame(java.util.Arrays.asList(pop: _*),
         StructType(Seq(itemField, StructField("cnt", LongType, nullable = false))))
-      .orderBy(col("cnt").desc, col("item_id"))).get.map(_.get(0))
+      .orderBy(col("cnt").desc, col("item_id"))).get.map(r => Shim.keyValue(r.get(0)))
     val byUser = rows.groupBy(_.get(0))
     val maxRated = byUser.valuesIterator.map(_.size.toLong).maxOption.getOrElse(0L)
     val cand = if (allRecs) byPopularity else byPopularity.take(math.min(maxRated + k, Int.MaxValue.toLong).toInt)

@@ -2,22 +2,23 @@ package org.apache.spark.sql.graftshim
 
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeReference, AttributeSet,
-  BindReferences, CurrentRow, Explode, Expression, GenericInternalRow, InterpretedOrdering, JoinedRow, Literal, NTile,
-  RangeFrame, RowFrame, RowNumber, SizeBasedWindowFunction, SortOrder, SpecifiedWindowFrame, UnboundedFollowing,
-  UnboundedPreceding, Unevaluable, WindowExpression, WindowFrame, WindowSpecDefinition}
-import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, DeclarativeAggregate,
-  Max, Min, NoOp, Sum}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Ascending, Attribute, AttributeReference, BindReferences,
+  CurrentRow, Explode, Expression, GenericInternalRow, InterpretedOrdering, JoinedRow, Literal, NTile, RowFrame,
+  RowNumber, SizeBasedWindowFunction, SortOrder, SpecifiedWindowFrame, UnboundedFollowing, UnboundedPreceding,
+  Unevaluable, WindowExpression, WindowFrame, WindowSpecDefinition}
+import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, DeclarativeAggregate, Max, Min,
+  NoOp, Sum}
 import org.apache.spark.sql.catalyst.optimizer.{CollapseProject, ColumnPruning, NormalizeFloatingNumbers,
   RemoveNoopOperators, ReplaceExpressions}
 import org.apache.spark.sql.catalyst.planning.{ExtractEquiJoinKeys, PhysicalAggregation}
-import org.apache.spark.sql.catalyst.plans.{Cross, Inner, JoinType, LeftAnti, LeftOuter, LeftSemi}
-import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Deduplicate, Filter, Generate, Join, Limit,
-  LocalRelation, LogicalPlan, Project, ResolvedHint, Sort, Union, Window}
+import org.apache.spark.sql.catalyst.plans.{Inner, JoinType, LeftAnti, LeftOuter, LeftSemi}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Generate, Join, LocalRelation, LogicalPlan,
+  Project, ResolvedHint, Sort, Union, Window}
 import org.apache.spark.sql.catalyst.rules.RuleExecutor
 import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 import org.apache.spark.sql.classic.ClassicConversions.castToImpl
-import org.apache.spark.sql.types.{AtomicType, BinaryType, DataType, IntegralType, NullType, StringType}
+import org.apache.spark.sql.types.{AtomicType, BinaryType, DataType, DoubleType, IntegerType, IntegralType, LongType,
+  NullType, StringType}
 import scala.collection.immutable.AbstractSeq
 import scala.collection.mutable.ArrayBuffer
 
@@ -34,29 +35,29 @@ import scala.collection.mutable.ArrayBuffer
   * without a job, by Spark's own expressions (interpreted) over Spark's
   * internal rows:
   *  - Project, Filter, global Sort (stable) and Union (children in order);
-  *  - a Limit;
-  *  - Aggregate: grouping plus count, sum, max, min and avg without
-  *    DISTINCT or FILTER, run by their initial, update and evaluate
-  *    expressions; groups come out in ascending order of their keys, as a
+  *  - Aggregate: grouping plus count, sum, max and min without DISTINCT
+  *    or FILTER, run by their initial, update and evaluate expressions;
+  *    groups come out in ascending order of their keys, as a
   *    one-partition sort aggregate gives them, and a global aggregate
-  *    gives one row also over no rows. `distinct()` (a Deduplicate over
-  *    every column) is an Aggregate over every column;
-  *  - Join: inner, cross, left outer, left semi and left anti, on the
-  *    equi-keys `ExtractEquiJoinKeys` finds plus the residual condition:
-  *    each left row in order, followed by its matches in right order; a
-  *    null key matches nothing;
+  *    gives one row also over no rows;
+  *  - Join: inner, left outer, left semi and left anti, on the equi-keys
+  *    `ExtractEquiJoinKeys` finds plus the residual condition: each left
+  *    row in order, followed by its matches in right order; a null key
+  *    matches nothing;
   *  - Window: row_number, ntile, count and sum over the whole partition,
-  *    over ROWS or RANGE from UNBOUNDED PRECEDING to CURRENT ROW (RANGE
-  *    takes the row's peers too), or over ROWS from UNBOUNDED PRECEDING to
-  *    -1; rows come out sorted by the partition keys, then the order,
-  *    stably, as `WindowExec` gives them in one partition;
+  *    over ROWS from UNBOUNDED PRECEDING to CURRENT ROW, or to -1; rows
+  *    come out sorted by the partition keys, then the order, stably, as
+  *    `WindowExec` gives them in one partition;
   *  - Generate of explode (not outer), and a resolved hint, which
   *    changes nothing.
   * Grouping, partition and join keys compare as Spark's
   * `NormalizeFloatingNumbers` makes them compare (-0.0 is 0.0, every NaN
   * one NaN), and a grouping key comes out normalized. Deterministic
   * expressions only, and keys of atomic types with binary equality. Any
-  * other plan is no local table: Spark runs it.
+  * other plan is no local table: Spark runs it. These are the nodes the
+  * plans of the load, binarize, k-core and the splits hold; popularity
+  * and MAP/nDCG rank and average a local table by their own driver forms,
+  * which group ids as [[keyValue]].
   *
   * The plan is first pruned as Spark's optimizer prunes a scan's plan
   * (`ColumnPruning`, `CollapseProject`), so a column the frame does not
@@ -112,6 +113,22 @@ object Shim {
     * query execution either. */
   def first(df: DataFrame): Row = localRows(df).fold(df.first())(_.head)
 
+  /** The id types of the driver forms of popularity and MAP/nDCG: types
+    * whose values, as [[keyValue]] gives them, Scala's `==` compares as
+    * Spark's groupings and equi-joins compare them. */
+  val KeyTypes: Set[DataType] = Set(StringType, IntegerType, LongType, DoubleType)
+
+  /** A key value as Spark's groupings and equi-joins normalize it
+    * (`NormalizeFloatingNumbers`): -0.0 is 0.0, and every NaN is one NaN,
+    * one boxed instance, which Scala's `==` (true on one reference before
+    * it compares numbers) takes as equal to itself. */
+  def keyValue(v: Any): Any = v match {
+    case d: Double => if (d == 0.0) 0.0 else if (d.isNaN) NaN else d
+    case other => other
+  }
+
+  private val NaN: Any = Double.NaN
+
   /** Whether `df` is a local table: the plan is checked, nothing is
     * evaluated. True exactly when [[localRows]] reads it. */
   def isLocal(df: DataFrame): Boolean = compile(prepared(df)).isDefined
@@ -153,12 +170,9 @@ object Shim {
         val sorting = ordering(order, child.output)
         () => rows().sorted(sorting)
       }
-    case Limit(Literal(n: Int, _), child) => compile(child).map(rows => () => rows().take(n))
     case u: Union =>
       val parts = u.children.map(compile)
       if (parts.exists(_.isEmpty)) None else Some(() => parts.flatMap(_.get()).toIndexedSeq)
-    case Deduplicate(keys, child) if AttributeSet(keys) == child.outputSet =>
-      compile(Aggregate(child.output, child.output, child, None))
     case a: Aggregate => aggregate(a)
     case j: Join => join(j)
     case w: Window => window(w)
@@ -257,7 +271,7 @@ object Shim {
 
   private def declarative(ae: AggregateExpression): Option[DeclarativeAggregate] =
     Some(ae.aggregateFunction).filter(_ => !ae.isDistinct && ae.filter.isEmpty).collect {
-      case f @ (_: Count | _: Sum | _: Max | _: Min | _: Average) if f.children.forall(scalar) =>
+      case f @ (_: Count | _: Sum | _: Max | _: Min) if f.children.forall(scalar) =>
         f.asInstanceOf[DeclarativeAggregate]
     }
 
@@ -288,67 +302,56 @@ object Shim {
     case _ => None
   }
 
-  private def join(j: Join): Option[() => Rows] = {
-    val (joinType, leftKeys, rightKeys, residual) = j match {
-      case ExtractEquiJoinKeys(t, lk, rk, other, _, _, _, _) => (t, lk, rk, other)
-      case _ => (j.joinType, Nil, Nil, j.condition)
-    }
-    val runs = Set[JoinType](Inner, Cross, LeftOuter, LeftSemi, LeftAnti)
-    if (!runs(joinType) || !(leftKeys ++ rightKeys ++ residual).forall(scalar) ||
-      !leftKeys.forall(k => hashable(k.dataType))) None
-    else for (left <- compile(j.left); right <- compile(j.right)) yield {
-      val leftKey = evaluator(normalized(leftKeys), j.left.output)
-      val rightKey = evaluator(normalized(rightKeys), j.right.output)
-      val condition = residual.map(bind(_, j.left.output ++ j.right.output))
-      val concat = concatenation((j.left.output ++ j.right.output).map(_.dataType))
-      val nulls = new GenericInternalRow(j.right.output.size)
-      val joined = new JoinedRow
-      () => {
-        val byKey = new java.util.HashMap[AnyRef, ArrayBuffer[InternalRow]]()
-        right().foreach { r =>
-          val k = rightKey(r)
-          if (!k.contains(null)) byKey.computeIfAbsent(hashKey(k), _ => ArrayBuffer.empty) += r
-        }
-        val out = ArrayBuffer.empty[InternalRow]
-        left().foreach { l =>
-          val k = leftKey(l)
-          val candidates = if (k.contains(null)) ArrayBuffer.empty[InternalRow]
-            else byKey.getOrDefault(hashKey(k), ArrayBuffer.empty)
-          val matches = condition.fold(candidates)(c => candidates.filter(r => c.eval(joined(l, r)).asInstanceOf[Boolean]))
-          joinType match {
-            case LeftSemi => if (matches.nonEmpty) out += l
-            case LeftAnti => if (matches.isEmpty) out += l
-            case LeftOuter if matches.isEmpty => out += concat(l, nulls)
-            case _ => matches.foreach(m => out += concat(l, m))
+  private def join(j: Join): Option[() => Rows] = j match {
+    case ExtractEquiJoinKeys(joinType, leftKeys, rightKeys, residual, _, _, _, _)
+        if Set[JoinType](Inner, LeftOuter, LeftSemi, LeftAnti)(joinType) &&
+          (leftKeys ++ rightKeys ++ residual).forall(scalar) && leftKeys.forall(k => hashable(k.dataType)) =>
+      for (left <- compile(j.left); right <- compile(j.right)) yield {
+        val leftKey = evaluator(normalized(leftKeys), j.left.output)
+        val rightKey = evaluator(normalized(rightKeys), j.right.output)
+        val condition = residual.map(bind(_, j.left.output ++ j.right.output))
+        val concat = concatenation((j.left.output ++ j.right.output).map(_.dataType))
+        val nulls = new GenericInternalRow(j.right.output.size)
+        val joined = new JoinedRow
+        () => {
+          val byKey = new java.util.HashMap[AnyRef, ArrayBuffer[InternalRow]]()
+          right().foreach { r =>
+            val k = rightKey(r)
+            if (!k.contains(null)) byKey.computeIfAbsent(hashKey(k), _ => ArrayBuffer.empty) += r
           }
+          val out = ArrayBuffer.empty[InternalRow]
+          left().foreach { l =>
+            val k = leftKey(l)
+            val candidates = if (k.contains(null)) ArrayBuffer.empty[InternalRow]
+              else byKey.getOrDefault(hashKey(k), ArrayBuffer.empty)
+            val matches = condition.fold(candidates)(c => candidates.filter(r => c.eval(joined(l, r)).asInstanceOf[Boolean]))
+            joinType match {
+              case LeftSemi => if (matches.nonEmpty) out += l
+              case LeftAnti => if (matches.isEmpty) out += l
+              case LeftOuter if matches.isEmpty => out += concat(l, nulls)
+              case _ => matches.foreach(m => out += concat(l, m))
+            }
+          }
+          out.toIndexedSeq
         }
-        out.toIndexedSeq
       }
-    }
-  }
-
-  /** Where the frame of row `i` of a sorted partition ends, exclusive,
-    * given that rows before `done` are in the buffer already; None for a
-    * frame the executor does not run. Every frame starts at the
-    * partition's first row. */
-  private type FrameEnd = (Rows, Int, Int) => Int
-
-  private def frameEnd(f: WindowFrame, byOrder: InterpretedOrdering): Option[FrameEnd] = f match {
-    case SpecifiedWindowFrame(_, UnboundedPreceding, UnboundedFollowing) => Some((p, _, _) => p.size)
-    case SpecifiedWindowFrame(RowFrame, UnboundedPreceding, CurrentRow) => Some((_, i, _) => i + 1)
-    case SpecifiedWindowFrame(RowFrame, UnboundedPreceding, Literal(v: Number, _: IntegralType))
-        if v.longValue == -1L => Some((_, i, _) => i)
-    // RANGE: the row's peers too, found once per peer group
-    case SpecifiedWindowFrame(RangeFrame, UnboundedPreceding, CurrentRow) => Some { (p, i, done) =>
-      var end = math.max(i + 1, done)
-      while (end < p.size && byOrder.compare(p(end), p(i)) == 0) end += 1
-      end
-    }
     case _ => None
   }
 
-  private def windowFunction(e: Expression, byOrder: InterpretedOrdering): Option[(DeclarativeAggregate, FrameEnd)] =
-    e match {
+  /** Where the frame of row `i` of a partition of `size` rows ends,
+    * exclusive, given `(size, i)`; None for a frame the executor does not
+    * run. Every frame starts at the partition's first row. */
+  private type FrameEnd = (Int, Int) => Int
+
+  private def frameEnd(f: WindowFrame): Option[FrameEnd] = f match {
+    case SpecifiedWindowFrame(_, UnboundedPreceding, UnboundedFollowing) => Some((size, _) => size)
+    case SpecifiedWindowFrame(RowFrame, UnboundedPreceding, CurrentRow) => Some((_, i) => i + 1)
+    case SpecifiedWindowFrame(RowFrame, UnboundedPreceding, Literal(v: Number, _: IntegralType))
+        if v.longValue == -1L => Some((_, i) => i)
+    case _ => None
+  }
+
+  private def windowFunction(e: Expression): Option[(DeclarativeAggregate, FrameEnd)] = e match {
     case Alias(WindowExpression(f, WindowSpecDefinition(_, _, spec)), _) =>
       val function = f match {
         case ae: AggregateExpression => declarative(ae).filter(d => d.isInstanceOf[Count] || d.isInstanceOf[Sum])
@@ -356,17 +359,17 @@ object Shim {
         case nt: NTile => Some(nt)
         case _ => None
       }
-      for (d <- function; end <- frameEnd(spec, byOrder)) yield (d, end)
+      for (d <- function; end <- frameEnd(spec)) yield (d, end)
     case _ => None
   }
 
   private def window(w: Window): Option[() => Rows] = {
-    val byOrder = ordering(w.orderSpec, w.child.output)
-    val functions = w.windowExpressions.map(windowFunction(_, byOrder))
+    val functions = w.windowExpressions.map(windowFunction)
     if (functions.exists(_.isEmpty) || !w.partitionSpec.forall(p => scalar(p) && hashable(p.dataType)) ||
       !w.orderSpec.forall(o => scalar(o.child))) None
     else compile(w.child).map { rows =>
       val input = w.child.output
+      val byOrder = ordering(w.orderSpec, input)
       val keyOf = evaluator(normalized(w.partitionSpec), input)
       val keys = w.partitionSpec.zipWithIndex.map { case (p, i) => AttributeReference(s"key$i", p.dataType)() }
       val keyOrder = ordering(keys.map(SortOrder(_, Ascending)), keys)
@@ -399,7 +402,7 @@ object Shim {
     var buffer = b.init(partition.size)
     var done = 0
     Array.tabulate[Any](partition.size) { i =>
-      val end = frameEnd(partition, i, done)
+      val end = frameEnd(partition.size, i)
       while (done < end) { buffer = b.update(buffer, partition(done)); done += 1 }
       b.result(buffer)(0)
     }

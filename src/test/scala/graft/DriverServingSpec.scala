@@ -160,20 +160,29 @@ class DriverServingSpec extends AnyFunSuite {
   }
 
   test("over-bound or mistyped meansAtK inputs take the Spark path with the same rows") {
-    // relevant rows of a Spark test frame over the bound are not
-    // collected: Spark runs the plan
     for (bound <- Seq(0L, 5L)) {
-      val means = Metrics.meansAtK(recs, testDf.repartition(2), 5, 4.0, maxDriverRows = bound)
+      val means = Metrics.meansAtK(recs, testDf, 5, 4.0, maxDriverRows = bound)
       assert(Shim.localRows(means).isEmpty, s"bound $bound")
       assertClose(means.first(), sparkMeans(recs, testDf, 5, 4.0), s"bound $bound")
     }
-    // local test rows are on the driver already: no bound applies
-    assert(Shim.localRows(Metrics.meansAtK(recs, testDf, 5, 4.0, maxDriverRows = 0)).isDefined)
-    // keys of two types fold as Spark's join casts them
     val longIds = testDf.withColumn("user_id", col("user_id").cast("long"))
     val mixed = Metrics.meansAtK(recs, longIds, 5, 4.0)
-    assert(Shim.localRows(mixed).isDefined)
+    assert(Shim.localRows(mixed).isEmpty)
     assertClose(mixed.first(), sparkMeans(recs, longIds, 5, 4.0), "long test ids")
+  }
+
+  test("local recs over a Spark test frame past the bound: one collect attempt, then the Spark plan") {
+    val local = spark.createDataFrame(java.util.List.of(Row("1", "10", 1), Row("1", "12", 2)),
+      DriverFold.recsSchema)
+    val t = testDf.repartition(2).persist()
+    t.count()
+    var means: DataFrame = null
+    // 2 top-k rows are within the bound, the 7 relevant test rows are not
+    val jobs = JobWatch.jobs(spark) { means = Metrics.meansAtK(local, t, 5, 4.0, maxDriverRows = 2) }
+    assert(jobs.size == 1, jobs)
+    assert(Shim.localRows(means).isEmpty)
+    assertClose(means.first(), sparkMeans(local, t, 5, 4.0), "over-bound test rows")
+    t.unpersist()
   }
 
   private val ratings = (for (u <- 1 to 12; i <- 1 to 9 if (u * 7 + i) % 3 != 0)
